@@ -1665,26 +1665,22 @@ def q_etl_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import uuid as _uuid
 
-    from ..sources.manifest_table import commit_append, read_version
+    from ..sources.manifest_table import commit_appends, read_version
 
     table = _sink_dir(f"orders_timetravel_{_uuid.uuid4().hex[:8]}")
     o = load(spark, sf_dir, "orders")
     lit_ts = lambda s: F.lit(s).cast("timestamp_ntz")  # noqa: E731
-    commit_append(
-        o.filter(F.col("o_orderdate") < lit_ts("1997-01-01 00:00:00")),
-        table,
-        ["o_orderdate"],
-    )
-    v2 = commit_append(
-        o.filter(
-            (F.col("o_orderdate") >= lit_ts("1997-01-01 00:00:00"))
-            & (F.col("o_orderdate") < lit_ts("1999-01-01 00:00:00"))
-        ),
-        table,
-        ["o_orderdate"],
-    )
-    commit_append(
-        o.filter(F.col("o_orderdate") >= lit_ts("1999-01-01 00:00:00")),
+    # three independent appends: staged concurrently, published in
+    # order, so v2 is still the second commit
+    _, v2, _ = commit_appends(
+        [
+            o.filter(F.col("o_orderdate") < lit_ts("1997-01-01 00:00:00")),
+            o.filter(
+                (F.col("o_orderdate") >= lit_ts("1997-01-01 00:00:00"))
+                & (F.col("o_orderdate") < lit_ts("1999-01-01 00:00:00"))
+            ),
+            o.filter(F.col("o_orderdate") >= lit_ts("1999-01-01 00:00:00")),
+        ],
         table,
         ["o_orderdate"],
     )
@@ -1741,21 +1737,19 @@ def q_scan_files_pruned_by_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import uuid as _uuid
 
-    from ..sources.manifest_table import commit_append, prune_files
+    from ..sources.manifest_table import commit_appends, prune_files
 
     table = _sink_dir(f"orders_fileskip_{_uuid.uuid4().hex[:8]}")
     o = load(spark, sf_dir, "orders").withColumn(
         "yr", F.year("o_orderdate")
     )
-    years = [r.yr for r in o.select("yr").distinct().collect()]
-    version = 0
-    for yr in sorted(years):
-        version = commit_append(
-            o.filter(F.col("yr") == yr).drop("yr").repartition(1),
-            table,
-            ["o_orderdate"],
-            op=f"append_y{yr}",
-        )
+    years = sorted(r.yr for r in o.select("yr").distinct().collect())
+    version = commit_appends(
+        [o.filter(F.col("yr") == yr).drop("yr").repartition(1) for yr in years],
+        table,
+        ["o_orderdate"],
+        [f"append_y{yr}" for yr in years],
+    )[-1]
     files, total = prune_files(
         table,
         version,
@@ -2456,7 +2450,7 @@ def q_etl_optimize_binpack(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid as _uuid
 
     from ..sources.manifest_table import (
-        commit_append,
+        commit_appends,
         commit_delete,
         commit_optimize_binpack,
         read_manifest,
@@ -2471,33 +2465,19 @@ def q_etl_optimize_binpack(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     k = F.col("o_orderkey")
     big = o.filter(k % 5 < 3)  # ~60% in one big file
-    commit_append(big.repartition(1), table, ["o_orderdate"], op="bulk")
-    # Trickle: 8 small files. The 8 appends are independent writers, so
-    # overlap them (guide §2.6 — concurrent driver jobs back-fill idle
-    # executors); commit_append's win-the-next-version OCC retry makes
-    # racing appends commute, and nothing downstream reads version
-    # ORDER — the graded properties fold over the final live set.
-    from concurrent.futures import ThreadPoolExecutor
-
-    # Job descriptions are only thread-scoped under pinned-thread mode
-    # (ADVICE r15): in non-pinned deployments the pool's threads share
-    # py4j JVM threads and local properties bleed across racing jobs —
-    # label only when PYSPARK_PIN_THREAD is on (the 4.x default).
-    _pinned = os.environ.get("PYSPARK_PIN_THREAD", "true").lower() == "true"
-
-    def _trickle(i: int) -> int:
-        if _pinned:
-            spark.sparkContext.setJobDescription(f"binpack trickle {i}")
-        return commit_append(
-            o.filter((k % 5 >= 3) & (k % 8 == i)).repartition(1),
-            table,
-            ["o_orderdate"],
-            op=f"trickle_{i}",
-        )
-
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        list(pool.map(_trickle, range(8)))
-    spark.sparkContext.setJobDescription(None)
+    # one bulk file, then a trickle of 8 small files: independent
+    # appends, staged concurrently (guide §2.6 — concurrent jobs back-fill
+    # idle executors) and published in order
+    commit_appends(
+        [big.repartition(1)]
+        + [
+            o.filter((k % 5 >= 3) & (k % 8 == i)).repartition(1)
+            for i in range(8)
+        ],
+        table,
+        ["o_orderdate"],
+        ["bulk"] + [f"trickle_{i}" for i in range(8)],
+    )
     doomed = read_version_with_pos(spark, table).filter(k % 101 == 0)
     v_d = commit_delete(spark, table, doomed.select("file_path", "row_index"))
     m0 = read_manifest(table, v_d)
@@ -3550,7 +3530,7 @@ def q_etl_manifest_delete_equality(spark: SparkSession, sf_dir: str) -> DataFram
     import uuid as _uuid
 
     from ..sources.manifest_table import (
-        commit_append,
+        commit_appends,
         commit_delete_equality,
         commit_replace,
         read_manifest,
@@ -3566,22 +3546,14 @@ def q_etl_manifest_delete_equality(spark: SparkSession, sf_dir: str) -> DataFram
         r.yr
         for r in o.select(F.year("o_orderdate").alias("yr")).distinct().collect()
     )
-    # Round-16 (guide §2.6, the binpack precedent): the per-year appends
-    # are independent OCC writers and nothing downstream reads version
-    # ORDER (the no-rewrite check compares the same run's v vs v_del
-    # live sets, which equality deletes never touch) — overlap them.
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _one_year(yr: int) -> int:
-        return commit_append(
-            o.filter(F.year("o_orderdate") == yr).repartition(2),
-            table,
-            ["o_orderdate"],
-            op=f"append_y{yr}",
-        )
-
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        v = max(pool.map(_one_year, years))
+    # the per-year appends are independent: staged concurrently,
+    # published in order
+    v = commit_appends(
+        [o.filter(F.year("o_orderdate") == yr).repartition(2) for yr in years],
+        table,
+        ["o_orderdate"],
+        [f"append_y{yr}" for yr in years],
+    )[-1]
     # blind commit: the doomed-key set comes from the caller, not from
     # scanning the table (values-proportional, zero data reads)
     doomed_keys = o.filter(F.col("o_orderkey") % 131 == 0).select("o_orderkey")
@@ -4195,7 +4167,7 @@ def q_etl_manifest_merge_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid as _uuid
 
     from ..sources.manifest_table import (
-        commit_append,
+        commit_appends,
         commit_merge_mor,
         current_version,
         read_manifest,
@@ -4207,14 +4179,15 @@ def q_etl_manifest_merge_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_orderdate", "o_orderpriority", "o_totalprice"
     )
     cut = F.lit("1997-01-01").cast("timestamp_ntz")
-    v = 0
-    for half, flt in [
-        ("old", F.col("o_orderdate") < cut),
-        ("new", F.col("o_orderdate") >= cut),
-    ]:
-        v = commit_append(
-            o.filter(flt).repartition(2), table, ["o_orderdate"], op=f"append_{half}"
-        )
+    v = commit_appends(
+        [
+            o.filter(F.col("o_orderdate") < cut).repartition(2),
+            o.filter(F.col("o_orderdate") >= cut).repartition(2),
+        ],
+        table,
+        ["o_orderdate"],
+        ["append_old", "append_new"],
+    )[-1]
     price_t = dict(o.dtypes)["o_totalprice"]
     k = F.col("o_orderkey")
     upd = o.filter((k % 151 == 0) & (k % 173 != 0)).select(
@@ -5438,6 +5411,7 @@ def q_scan_manifest_files_distributed(spark: SparkSession, sf_dir: str) -> DataF
     from ..sources.manifest_table import (
         _read_raw,
         commit_append,
+        commit_appends,
         commit_optimize_binpack,
         current_version,
         files_table,
@@ -5451,22 +5425,14 @@ def q_scan_manifest_files_distributed(spark: SparkSession, sf_dir: str) -> DataF
     statuses = sorted(
         r.o_orderstatus for r in o.select("o_orderstatus").distinct().collect()
     )
-    # Round-16 (guide §2.6, the q_etl_optimize_binpack precedent): the
-    # per-status appends are independent writers — commit_append's OCC
-    # retry makes them commute, and nothing downstream reads version
-    # order (the listing folds the live set). Overlap them so each
-    # append's task tail back-fills the others' idle cores.
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _one_status(s: str) -> int:
-        return commit_append(
-            o.filter(F.col("o_orderstatus") == s).repartition(2),
-            table,
-            ["o_orderkey"],
-        )
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        list(pool.map(_one_status, statuses))
+    # the per-status appends are independent: staged concurrently so
+    # each append's task tail back-fills the others' idle cores,
+    # published in order
+    commit_appends(
+        [o.filter(F.col("o_orderstatus") == s).repartition(2) for s in statuses],
+        table,
+        ["o_orderkey"],
+    )
     commit_optimize_binpack(spark, table, ["o_orderkey"], target_rows=10**9)
     commit_append(
         o.filter(F.col("o_orderkey") % 97 == 0).repartition(1),

@@ -73,10 +73,13 @@ def query(key: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
 #: produced the r13 off-by-one): r6:15 / r8:50 / r9:50 / r10:50 /
 #: r11:50 / r12:50 / r13:50, 12 never-checked (round-13 post-freeze).
 #:
-#: ROUND-15 WINDOW (this list) = the tool's emitted plan: all 38
-#: round-14 post-freeze keys first (never-checked > stale-green — the
-#: v3 table-format / governance / Python-DS-4.1 / MLlib-trio family),
-#: then the 12 OLDEST r8-stale keys (38 + 12 = 50).
+#: CURRENT WINDOW (this list): rotated in round 15 and unchanged since,
+#: so rounds 16 onward graded the same 50 keys. It is the tool's plan
+#: at that rotation: all 38 round-14 post-freeze keys first
+#: (never-checked > stale-green — the v3 table-format / governance /
+#: Python-DS-4.1 / MLlib-trio family), then the 12 OLDEST r8-stale keys
+#: (38 + 12 = 50). The next rotation replaces it with the tool's fresh
+#: plan.
 #: Keep test_driver_window_rotation in sync.
 _DRIVER_WINDOW = [
     "q_etl_schema_default_values",  # never-checked
@@ -132,7 +135,7 @@ _DRIVER_WINDOW = [
 ]
 
 #: Keys added AFTER the current round's window was frozen. Append any
-#: round-14 additions here as they register; they head the ROUND-15
+#: additions here as they register; they head the next rotation's
 #: window (never-checked > stale-green), padded per
 #: ``tools/driver_staleness.py``'s emitted plan.
 _POST_WINDOW_ADDITIONS: list[str] = [

@@ -36,6 +36,17 @@ capabilities a raw parquet directory cannot offer:
   both win: the loser gets ``CommitConflictError`` and retries against
   the advanced snapshot (automatic for appends, which commute; an
   ``expected_base`` pin or a losing REPLACE surfaces the conflict);
+* **stage concurrently, publish in order** — a commit's cost is its
+  Spark write job, not its metadata, so ``commit_appends`` lands the
+  data files of a batch of independent appends as CONCURRENT jobs (one
+  per frame, on min(frames, defaultParallelism) threads that inherit
+  the caller's job group and tags), then publishes one version per
+  frame serially, in input order, through the same OCC loop as
+  ``commit_append`` — versions, ops, file lists, stats, seqs and row
+  ids equal the serial loop's. Validation runs before anything stages,
+  and a raise anywhere unlinks every staged file no manifest
+  references. ``commit_update_mor`` stages its replacement rows and
+  its position vector the same way;
 * **additive schema evolution** — every manifest records the committed
   table schema; ``read_version`` pins it on the scan, so files written
   before a column existed null-fill it (reader-schema resolution, the
@@ -53,6 +64,7 @@ from __future__ import annotations
 
 import datetime
 import decimal
+import functools
 import glob
 import json
 import math
@@ -349,42 +361,140 @@ def _stage_files(
 
     os.makedirs(_data_dir(table_dir), exist_ok=True)
     staging = os.path.join(table_dir, f"_staging_{uuid.uuid4().hex[:8]}")
-    df.write.mode("overwrite").parquet(staging)
     entries = []
-    for f in sorted(glob.glob(os.path.join(staging, "*.parquet"))):
-        # ONE footer parse per file (round-15: this loop used to open
-        # the footer four times — zero-row check, rows, schema, stats —
-        # a 4× metadata-read tax on every commit of every manifest key).
-        pf = pq.ParquetFile(f)
-        md = pf.metadata
-        # Spark emits zero-row part files for empty partitions; a real
-        # format never registers them (they carry no stats and would
-        # defeat every files_with_stats == n_files exactness check).
-        if md.num_rows == 0:
-            continue
-        dest = os.path.join(_data_dir(table_dir), f"{uuid.uuid4().hex}.parquet")
-        schema_names = pf.schema_arrow.names
-        pf.close()
-        os.rename(f, dest)
-        entry = {
-            "path": dest,
-            "rows": md.num_rows,
-            "stats": _file_stats_from_meta(md, stat_cols),
-        }
-        if "__row_id" in schema_names:
-            # lineage-materializing rewrite (compact_with_lineage):
-            # row ids live IN the file; no fresh allocation for it
-            entry["lineage_in_file"] = True
-        blooms = {
-            c: b
-            for c in (bloom_cols or [])
-            if (b := _file_bloom(dest, c)) is not None
-        }
-        if blooms:
-            entry["bloom"] = blooms
-        entries.append(entry)
-    shutil.rmtree(staging, ignore_errors=True)  # _SUCCESS/.crc leftovers
+    try:
+        df.write.mode("overwrite").parquet(staging)
+        for f in sorted(glob.glob(os.path.join(staging, "*.parquet"))):
+            # ONE footer parse per file (round-15: this loop used to open
+            # the footer four times — zero-row check, rows, schema, stats —
+            # a 4× metadata-read tax on every commit of every manifest key).
+            pf = pq.ParquetFile(f)
+            md = pf.metadata
+            # Spark emits zero-row part files for empty partitions; a real
+            # format never registers them (they carry no stats and would
+            # defeat every files_with_stats == n_files exactness check).
+            if md.num_rows == 0:
+                continue
+            dest = os.path.join(_data_dir(table_dir), f"{uuid.uuid4().hex}.parquet")
+            schema_names = pf.schema_arrow.names
+            pf.close()
+            os.rename(f, dest)
+            entry = {
+                "path": dest,
+                "rows": md.num_rows,
+                "stats": _file_stats_from_meta(md, stat_cols),
+            }
+            entries.append(entry)
+            if "__row_id" in schema_names:
+                # lineage-materializing rewrite (compact_with_lineage):
+                # row ids live IN the file; no fresh allocation for it
+                entry["lineage_in_file"] = True
+            blooms = {
+                c: b
+                for c in (bloom_cols or [])
+                if (b := _file_bloom(dest, c)) is not None
+            }
+            if blooms:
+                entry["bloom"] = blooms
+    except BaseException:
+        _unlink_entries(entries)
+        raise
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)  # _SUCCESS/.crc leftovers
     return entries
+
+
+def _stage_delete_vector(positions: DataFrame, table_dir: str) -> list[dict]:
+    """Land the (file_path, row_index) identities of ``positions`` as
+    one position-delete parquet under ``_deletes/`` (invisible until a
+    commit references it); returns its manifest entries."""
+    import pyarrow.parquet as pq
+
+    os.makedirs(_deletes_dir(table_dir), exist_ok=True)
+    staging = os.path.join(table_dir, f"_staging_{uuid.uuid4().hex[:8]}")
+    entries = []
+    try:
+        (
+            positions.select("file_path", "row_index")
+            .coalesce(1)
+            .write.mode("overwrite")
+            .parquet(staging)
+        )
+        for f in sorted(glob.glob(os.path.join(staging, "*.parquet"))):
+            n = pq.ParquetFile(f).metadata.num_rows
+            if n == 0:
+                continue
+            dest = os.path.join(
+                _deletes_dir(table_dir), f"{uuid.uuid4().hex}.parquet"
+            )
+            os.rename(f, dest)
+            entries.append({"path": dest, "rows": n})
+    except BaseException:
+        _unlink_entries(entries)
+        raise
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)
+    return entries
+
+
+def _unlink_entries(entries: list[dict]) -> None:
+    """Delete staged files that no manifest references (best effort)."""
+    for e in entries:
+        try:
+            os.unlink(e["path"])
+        except OSError:
+            pass
+
+
+def _run_staging_jobs(spark: SparkSession, tasks: list) -> list[list[dict]]:
+    """Run independent staging writes as CONCURRENT Spark jobs and
+    return their manifest entries in input order.
+
+    Each write is its own Spark job, and a small staging job leaves most
+    cores idle while the caller waits on it, so independent writes share
+    the scheduler instead of queueing. Every thread runs under the
+    caller's job group, description and tags
+    (``inheritable_thread_target``), so each job stays attributed to the
+    caller. The pool joins before anything is decided: if any task
+    raised, the files of every task that did land are unlinked and the
+    first error in input order propagates.
+
+    Without pinned threads (``PYSPARK_PIN_THREAD=false``) Python threads
+    share JVM threads and their job properties, so the tasks run one
+    after another in the caller's thread instead."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from py4j.clientserver import ClientServer
+    from pyspark import SparkContext, inheritable_thread_target
+
+    if len(tasks) == 1 or not isinstance(SparkContext._gateway, ClientServer):
+        results = []
+        try:
+            for task in tasks:
+                results.append(task())
+        except BaseException:
+            for r in results:
+                _unlink_entries(r)
+            raise
+        return results
+
+    futures = []
+    workers = min(len(tasks), spark.sparkContext.defaultParallelism)
+    try:
+        with ThreadPoolExecutor(max_workers=workers) as pool:
+            for task in tasks:
+                # wrapped HERE, on the caller's thread: the wrapper
+                # captures the properties and tags when it is created
+                futures.append(
+                    pool.submit(inheritable_thread_target(spark)(task))
+                )
+        # the pool has joined: every future is settled
+        return [f.result() for f in futures]
+    except BaseException:
+        for f in futures:
+            if f.done() and not f.cancelled() and f.exception() is None:
+                _unlink_entries(f.result())
+        raise
 
 
 def _publish(
@@ -720,53 +830,113 @@ def commit_append(
     are validated BEFORE any parquet lands in data/, and a raise out of
     the commit deletes whatever was staged — a rejected commit must not
     orphan unreferenced data files (an external retry would otherwise
-    stage a second copy and only a vacuum would reclaim the first)."""
+    stage a second copy and only a vacuum would reclaim the first).
+
+    The one-frame call of ``commit_appends``."""
+    return commit_appends(
+        [df], table_dir, stat_cols, [op], expected_base, retry_conflicts,
+        bloom_cols,
+    )[0]
+
+
+def commit_appends(
+    frames: list[DataFrame],
+    table_dir: str,
+    stat_cols: list[str],
+    ops: list[str] | None = None,
+    expected_base: int | None = None,
+    retry_conflicts: bool = True,
+    bloom_cols: list[str] | None = None,
+) -> list[int]:
+    """A batch of independent appends: one version per frame, published
+    in input order with ``ops[i]`` (default "append"); returns the
+    versions. The manifests equal those of ``commit_append`` called on
+    each frame in turn — only the staging overlaps: every frame's data
+    files land as its own concurrent Spark job before the first publish.
+
+    Every frame is validated (chained schema merge, constraints) before
+    anything stages. ``expected_base`` pins the base of the FIRST
+    publish; frame i then publishes on ``expected_base + i``. A raise
+    anywhere — validation, a staging job, a lost pin — unlinks every
+    staged file not yet published; versions published before the raise
+    stay, exactly as in the serial loop."""
+    ops = list(ops) if ops is not None else ["append"] * len(frames)
+    if len(ops) != len(frames):
+        raise ValueError(f"{len(frames)} frames but {len(ops)} ops")
+    if not frames:
+        return []
     prev0 = current_version(table_dir)
     if expected_base is not None and prev0 != expected_base:
         raise CommitConflictError(
             f"expected base version {expected_base}, table is at {prev0}"
         )
     prev_meta0 = read_manifest_meta(table_dir, prev0) if prev0 else {}
-    _merged_schema(prev_meta0.get("schema"), df)  # reject before staging
-    _validate_constraints(df, prev_meta0.get("constraints") or {})
-    new = _stage_files(df, table_dir, stat_cols, bloom_cols)
+    schema = prev_meta0.get("schema")
+    for df in frames:  # reject before staging
+        schema = _merged_schema(schema, df)
+        _validate_constraints(df, prev_meta0.get("constraints") or {})
+    staged = _run_staging_jobs(
+        frames[0].sparkSession,
+        [
+            functools.partial(_stage_files, df, table_dir, stat_cols, bloom_cols)
+            for df in frames
+        ],
+    )
+    versions = []
     try:
-        while True:
-            prev = current_version(table_dir)
-            if expected_base is not None and prev != expected_base:
-                raise CommitConflictError(
-                    f"expected base version {expected_base}, table is at {prev}"
-                )
-            # metadata-only read: validating an append needs the prev
-            # SCHEMA/CONSTRAINTS and snapshot-level fields, never the
-            # O(live) file list — files_add lets _publish write a delta
-            # segment with O(new files) work (the 100-TB commit path)
-            prev_meta = read_manifest_meta(table_dir, prev) if prev else {}
-            schema = _merged_schema(prev_meta.get("schema"), df)
-            try:
-                # delete vectors and a declared partition spec carry
-                # forward: appended files are unaffected by existing
-                # position deletes, and files without a recorded
-                # partition value are simply never partition-skipped
-                return _publish(
-                    table_dir, prev + 1, op, None, schema,
-                    deletes=prev_meta.get("deletes"),
-                    partition_spec=prev_meta.get("partition_spec"),
-                    eq_deletes=prev_meta.get("eq_deletes"),
-                    defaults=prev_meta.get("defaults"),
-                    constraints=prev_meta.get("constraints"),
-                    files_add=new,
-                )
-            except CommitConflictError:
-                if expected_base is not None or not retry_conflicts:
-                    raise
+        for i, (df, new, op) in enumerate(zip(frames, staged, ops)):
+            base = None if expected_base is None else expected_base + i
+            versions.append(
+                _publish_append(table_dir, df, new, op, base, retry_conflicts)
+            )
     except BaseException:
-        for f in new:  # staged but never referenced by any manifest
-            try:
-                os.unlink(f["path"])
-            except OSError:
-                pass
+        for new in staged[len(versions):]:  # staged, never referenced
+            _unlink_entries(new)
         raise
+    return versions
+
+
+def _publish_append(
+    table_dir: str,
+    df: DataFrame,
+    new: list[dict],
+    op: str,
+    expected_base: int | None,
+    retry_conflicts: bool,
+) -> int:
+    """The OCC publish loop of one append: link the next version as the
+    current live set plus the staged ``new`` entries, re-merging onto
+    an advanced snapshot after a lost race unless the base is pinned
+    or retries are off."""
+    while True:
+        prev = current_version(table_dir)
+        if expected_base is not None and prev != expected_base:
+            raise CommitConflictError(
+                f"expected base version {expected_base}, table is at {prev}"
+            )
+        # metadata-only read: validating an append needs the prev
+        # SCHEMA/CONSTRAINTS and snapshot-level fields, never the
+        # O(live) file list — files_add lets _publish write a delta
+        # segment with O(new files) work (the 100-TB commit path)
+        prev_meta = read_manifest_meta(table_dir, prev) if prev else {}
+        schema = _merged_schema(prev_meta.get("schema"), df)
+        try:
+            # delete vectors and a declared partition spec carry
+            # forward: appended files are unaffected by existing
+            # position deletes, and files without a recorded
+            # partition value are simply never partition-skipped
+            return _publish(
+                table_dir, prev + 1, op, None, schema,
+                deletes=prev_meta.get("deletes"),
+                partition_spec=prev_meta.get("partition_spec"),
+                eq_deletes=prev_meta.get("eq_deletes"),
+                defaults=prev_meta.get("defaults"),
+                constraints=prev_meta.get("constraints"),
+                files_add=new,
+            )
+        except CommitConflictError:
+            if expected_base is not None or not retry_conflicts:
+                raise
 
 
 def commit_replace(
@@ -1050,31 +1220,12 @@ def commit_delete(
     resurrect masked rows). That exactness is what lets ``table_stats``
     keep answering COUNT from metadata alone: live rows = footer sum −
     delete-vector sum."""
-    import pyarrow.parquet as pq
-
     prev = current_version(table_dir)
     if not prev:
         raise ValueError("cannot delete from an empty table")
     prev_manifest = read_manifest(table_dir, prev)
-    os.makedirs(_deletes_dir(table_dir), exist_ok=True)
-    staging = os.path.join(table_dir, f"_staging_{uuid.uuid4().hex[:8]}")
-    (
-        positions.select("file_path", "row_index")
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(staging)
-    )
-    entries = []
+    entries = _stage_delete_vector(positions, table_dir)
     try:
-        for f in sorted(glob.glob(os.path.join(staging, "*.parquet"))):
-            n = pq.ParquetFile(f).metadata.num_rows
-            if n == 0:
-                continue
-            dest = os.path.join(
-                _deletes_dir(table_dir), f"{uuid.uuid4().hex}.parquet"
-            )
-            os.rename(f, dest)
-            entries.append({"path": dest, "rows": n})
         deletes = list(prev_manifest.get("deletes", [])) + entries
         return _publish(
             table_dir,
@@ -1089,14 +1240,8 @@ def commit_delete(
             constraints=prev_manifest.get("constraints"),
         )
     except BaseException:
-        for e in entries:
-            try:
-                os.unlink(e["path"])
-            except OSError:
-                pass
+        _unlink_entries(entries)
         raise
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
 
 
 def diff_files(table_dir: str, v_from: int, v_to: int) -> list[str]:
@@ -1588,11 +1733,7 @@ def commit_append_partitioned(
             except CommitConflictError:
                 continue
     except BaseException:
-        for e in entries:
-            try:
-                os.unlink(e["path"])
-            except OSError:
-                pass
+        _unlink_entries(entries)
         raise
     finally:
         shutil.rmtree(staging, ignore_errors=True)
@@ -1967,11 +2108,7 @@ def commit_delete_equality(
             constraints=prev_manifest.get("constraints"),
         )
     except BaseException:
-        for e in entries:
-            try:
-                os.unlink(e["path"])
-            except OSError:
-                pass
+        _unlink_entries(entries)
         raise
 
 
@@ -2232,11 +2369,7 @@ def commit_append_to_ref(
             set_ref(table_dir, ref, v)
             return v
     except BaseException:
-        for f in new:
-            try:
-                os.unlink(f["path"])
-            except OSError:
-                pass
+        _unlink_entries(new)
         raise
 
 
@@ -2391,11 +2524,7 @@ def compact_with_lineage(
             prev_m.get("schema"),
         )
     except BaseException:
-        for f in new:
-            try:
-                os.unlink(f["path"])
-            except OSError:
-                pass
+        _unlink_entries(new)
         raise
 
 
@@ -2500,11 +2629,7 @@ def commit_optimize_binpack(
             constraints=m.get("constraints"),
         )
     except BaseException:
-        for e in new_entries:
-            try:
-                os.unlink(e["path"])
-            except OSError:
-                pass
+        _unlink_entries(new_entries)
         raise
 
 
@@ -3003,9 +3128,8 @@ def commit_update_mor(
     the trade is the same broadcast anti-join at read that all
     merge-on-read masks pay until compaction. ``positions`` identifies
     the doomed old versions (from ``read_version_with_pos``); ``df_new``
-    carries the replacement rows."""
-    import pyarrow.parquet as pq
-
+    carries the replacement rows. The two are independent writes, so
+    they stage as concurrent Spark jobs."""
     prev = current_version(table_dir)
     if not prev:
         raise ValueError("cannot update an empty table")
@@ -3013,26 +3137,14 @@ def commit_update_mor(
     _merged_schema(prev_manifest.get("schema"), df_new)  # reject early
     # replacement/new rows of a MoR UPDATE/MERGE satisfy the same gate
     _validate_constraints(df_new, prev_manifest.get("constraints") or {})
-    new_files = _stage_files(df_new, table_dir, stat_cols)
-    os.makedirs(_deletes_dir(table_dir), exist_ok=True)
-    staging = os.path.join(table_dir, f"_staging_{uuid.uuid4().hex[:8]}")
-    (
-        positions.select("file_path", "row_index")
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(staging)
+    new_files, dv_entries = _run_staging_jobs(
+        spark,
+        [
+            functools.partial(_stage_files, df_new, table_dir, stat_cols),
+            functools.partial(_stage_delete_vector, positions, table_dir),
+        ],
     )
-    dv_entries = []
     try:
-        for f in sorted(glob.glob(os.path.join(staging, "*.parquet"))):
-            n = pq.ParquetFile(f).metadata.num_rows
-            if n == 0:
-                continue
-            dest = os.path.join(
-                _deletes_dir(table_dir), f"{uuid.uuid4().hex}.parquet"
-            )
-            os.rename(f, dest)
-            dv_entries.append({"path": dest, "rows": n})
         schema = _merged_schema(prev_manifest.get("schema"), df_new)
         return _publish(
             table_dir,
@@ -3047,14 +3159,8 @@ def commit_update_mor(
             constraints=prev_manifest.get("constraints"),
         )
     except BaseException:
-        for e in new_files + dv_entries:
-            try:
-                os.unlink(e["path"])
-            except OSError:
-                pass
+        _unlink_entries(new_files + dv_entries)
         raise
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
 
 
 def commit_merge_mor(

@@ -2753,10 +2753,11 @@ def test_manifest_table_stats_files_with_rows(spark, tmp_path):
 
 
 def test_manifest_rejected_commit_stages_nothing(spark, tmp_path):
-    """A commit rejected for a stale base pin or an illegal schema
-    change must leave data/ byte-identical — staging before validation
-    orphaned parquet files that only a vacuum could reclaim, and an
-    external retry staged a second copy (ADVICE r12)."""
+    """A commit rejected for a stale base pin, an illegal schema change
+    or a failed staging write must leave data/ byte-identical — staging
+    before validation orphaned parquet files that only a vacuum could
+    reclaim, and an external retry staged a second copy (ADVICE r12).
+    A batch append is held to the same rule across all its frames."""
     import glob as _glob
     import os as _os
 
@@ -2765,6 +2766,8 @@ def test_manifest_rejected_commit_stages_nothing(spark, tmp_path):
     from t_mobile_data_fnt_etl_pipeline_aws_spark.sources.manifest_table import (
         CommitConflictError,
         commit_append,
+        commit_appends,
+        current_version,
     )
 
     table = str(tmp_path / "noorphans")
@@ -2789,6 +2792,100 @@ def test_manifest_rejected_commit_stages_nothing(spark, tmp_path):
             ["k"],
         )
     assert set(_glob.glob(_os.path.join(table, "data", "*"))) == data_files
+
+    # a batch validates every frame before staging any: an illegal type
+    # change in the 2nd frame stages and publishes nothing
+    ok = spark.createDataFrame([(3, "c")], "k long, s string")
+    with _pytest.raises(ValueError, match="type change"):
+        commit_appends(
+            [ok, spark.createDataFrame([("oops", "b")], "k string, s string")],
+            table,
+            ["k"],
+        )
+    assert set(_glob.glob(_os.path.join(table, "data", "*"))) == data_files
+    assert current_version(table) == 1
+
+    # a staging write that raises in one frame: the files the other
+    # frames staged are unlinked and no version is published
+    boom = spark.range(4).selectExpr(
+        "CASE WHEN id = 2 THEN raise_error('staging boom') ELSE id END AS k",
+        "'x' AS s",
+    )
+    with _pytest.raises(Exception, match="staging boom"):
+        commit_appends([ok, boom, ok], table, ["k"])
+    assert set(_glob.glob(_os.path.join(table, "data", "*"))) == data_files
+    assert not _glob.glob(_os.path.join(table, "_staging_*"))
+    assert current_version(table) == 1
+
+
+def test_check_query_rows_only_contract(spark, sf_dir):
+    """oracle.check_query without an oracle fails an empty result and a
+    result whose rows differ between two runs, and passes a non-empty
+    deterministic one."""
+    import itertools
+
+    from t_mobile_data_fnt_etl_pipeline_aws_spark.oracle import check_query
+
+    runs = itertools.count()
+    assert check_query(spark, sf_dir, lambda s, d: s.range(3), None) is None
+    assert "no rows" in check_query(spark, sf_dir, lambda s, d: s.range(0), None)
+    assert "nondeterministic" in check_query(
+        spark, sf_dir, lambda s, d: s.range(next(runs) + 1), None
+    )
+
+
+def test_manifest_batch_append_matches_serial_loop(spark, tmp_path):
+    """commit_appends stages its frames as concurrent jobs but publishes
+    prev+1..prev+n in input order with the given ops: every manifest
+    equals the one a serial commit_append loop writes (only paths, ts
+    and uuids differ), and every staging job stays in the caller's job
+    group — as many jobs as the serial loop, none outside the group."""
+    from t_mobile_data_fnt_etl_pipeline_aws_spark.sources.manifest_table import (
+        commit_append,
+        commit_appends,
+        read_manifest,
+    )
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    # more frames than the pool has threads on a small host
+    n = sc.defaultParallelism + 2
+    frames = [
+        spark.range(i * 100, i * 100 + 10 * (i + 1))
+        .selectExpr("id AS k", "id % 7 AS v")
+        .repartition(i % 3 + 1)
+        for i in range(n)
+    ]
+    ops = [f"op{i}" for i in range(n)]
+    batch, serial = str(tmp_path / "batch"), str(tmp_path / "serial")
+    seed = spark.createDataFrame([(-1, 0)], "k long, v long")
+    commit_append(seed, batch, ["k"])
+    commit_append(seed, serial, ["k"])
+
+    ungrouped = len(tracker.getJobIdsForGroup(None))
+    try:
+        sc.setJobGroup("manifest-batch", "batch")
+        assert commit_appends(frames, batch, ["k"], ops) == list(range(2, n + 2))
+        sc.setJobGroup("manifest-serial", "serial")
+        for df, op in zip(frames, ops):
+            commit_append(df, serial, ["k"], op=op)
+    finally:
+        sc.setJobGroup(None, None)
+    batch_jobs = tracker.getJobIdsForGroup("manifest-batch")
+    assert len(batch_jobs) == len(tracker.getJobIdsForGroup("manifest-serial"))
+    assert len(batch_jobs) >= len(frames)
+    assert len(tracker.getJobIdsForGroup(None)) == ungrouped
+
+    def shape(m):
+        files = [
+            {k: v for k, v in f.items() if k != "path"} for f in m["files"]
+        ]
+        return {k: v for k, v in m.items() if k not in ("files", "ts")}, files
+
+    for v in range(1, n + 2):
+        mb, ms = read_manifest(batch, v), read_manifest(serial, v)
+        assert shape(mb) == shape(ms), v
+    assert [read_manifest(batch, v)["op"] for v in range(2, n + 2)] == ops
 
 
 def test_manifest_delete_vectors_semantics(spark, tmp_path):
@@ -4556,8 +4653,9 @@ def test_label_propagation_communities_consistent(spark, sf_dir):
 def test_local_checkpoints_carry_row_caps():
     """VERDICT r15 item 4: localCheckpoint truncates lineage, so an
     executor loss KILLS the query instead of recomputing — it is
-    reserved for small decision tables. Every call site must document
-    its bound with a 'row-cap:' marker within the preceding 8 lines;
+    reserved for small decision tables. Every call site, lazy
+    ``localCheckpoint(eager=False)`` included, must document its bound
+    with a 'row-cap:' marker within the preceding 8 lines;
     corpus-sized intermediates must use functions.dfutil.materialized
     (lineage-keeping persist) instead."""
     import pathlib
@@ -4570,7 +4668,7 @@ def test_local_checkpoints_carry_row_caps():
     for p in sorted(root.rglob("*.py")):
         lines = p.read_text().splitlines()
         for i, ln in enumerate(lines):
-            if ".localCheckpoint()" in ln:
+            if ".localCheckpoint(" in ln:
                 window = "\n".join(lines[max(0, i - 8) : i + 1])
                 if "row-cap:" not in window:
                     offenders.append(f"{p.relative_to(root)}:{i + 1}")

@@ -4,17 +4,24 @@ key at sf0.01 under a per-key job group and record how many Spark jobs
 each submits (statusTracker().getJobIdsForGroup). Driver-loop keys and
 AQE stage materializations dominate the high counts; see
 OPTIMIZATION_r16.md for the audit conclusions. Output:
-plans/r16/jobcount_sf001.json."""
+plans/r16/jobcount_sf001.json.
+
+Given keys as arguments, it runs only those and prints their counts as
+JSON instead: ``python tools/jobcount_audit.py KEY [KEY ...]``. Jobs a
+key submits from a thread that does not inherit its job group are not
+counted."""
 import sys, os, time, json
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 os.environ.setdefault("SPARK_GRAFT_CPUS", "16")
 from t_mobile_data_fnt_etl_pipeline_aws_spark import get_spark
 from t_mobile_data_fnt_etl_pipeline_aws_spark.registry import all_queries
 spark = get_spark("job-count-audit")
 sf = "/root/testdata/sf0.01"
 qs = all_queries()
+keys = sys.argv[1:] or sorted(qs)
 out = {}
-for i, k in enumerate(sorted(qs)):
+for i, k in enumerate(keys):
     spark.sparkContext.setJobGroup(k, k)
     try:
         t0 = time.time()
@@ -27,6 +34,9 @@ for i, k in enumerate(sorted(qs)):
     if i % 50 == 0:
         print(f"[{i}] {k}", flush=True)
 spark.sparkContext.setJobGroup(None, None)
-json.dump(out, open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans/r16/jobcount_sf001.json"), "w"), indent=1)
+if sys.argv[1:]:
+    print(json.dumps(out, indent=1))
+else:
+    json.dump(out, open(os.path.join(ROOT, "plans/r16/jobcount_sf001.json"), "w"), indent=1)
 print("DONE", len(out))
 spark.stop()
