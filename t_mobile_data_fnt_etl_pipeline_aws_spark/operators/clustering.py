@@ -752,8 +752,11 @@ def q_cluster_kmeans_fixedrounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     item 4, the LSH-portable-twin strategy applied to clustering):
     exactly _KM_FIXED_ROUNDS (4) Lloyd rounds of the BLAS pipeline
     q_cluster_kmeans_lloyd ships — mapInPandas gram-update E-step +
-    decimal-finished driver M-step — with the FINAL assignment computed
-    by the exact HOF E-step on the finished centroids.
+    decimal-finished driver M-step — then a BLAS-argmin tail: the
+    final assignment is the same gram argmin (``_km_blas_assign``,
+    ties to the lowest c_id) on the finished centroids, and only the
+    OUTPUT distance is the exact sequential HOF fold, computed once
+    per vector against its assigned centroid (a broadcast k-row join).
 
     Why this proves the BLAS mechanics end-to-end: the finished-decimal
     centroids after every round are bit-identical doubles in both
@@ -761,15 +764,21 @@ def q_cluster_kmeans_fixedrounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     error does not compound), so if the BLAS gram argmin disagreed with
     the oracle's sequential-fold argmin for ANY vector in ANY round,
     that vector's mass would move to a different centroid and the final
-    hash would mismatch. The exact-fold tail (same _km_estep as the
-    oracled 2-step unroll) removes float-accumulation-order noise from
-    the OUTPUT while the ITERATIONS stay on the production kernel — the
-    convergence form (q_cluster_kmeans_lloyd) remains rows-only purely
-    for its data-dependent round count.
+    hash would mismatch. The exact-fold distance removes
+    float-accumulation-order noise from the OUTPUT while the
+    assignments stay on the production kernel — the convergence form
+    (q_cluster_kmeans_lloyd) remains rows-only purely for its
+    data-dependent round count.
+
+    Caveat: the gram argmin and the oracle's fold argmin can break a
+    near-tie differently (their float error differs). That they agree
+    is proven only at the tested scale factors (sf0.001 and sf0.01,
+    and sf0.1 once), not for every input.
 
     Scale: per round one map-only Arrow-batched scan (zero shuffle for
-    scoring) + one map-side-combined k·dim shuffle; the exact tail adds
-    a single broadcast ×k fan-out pass. Driver state is O(k·dim)."""
+    scoring) + one map-side-combined k·dim shuffle; the tail adds one
+    more map-only assignment scan and a broadcast k-row join. Driver
+    state is O(k·dim)."""
     e, cent0 = _km_base(spark, sf_dir)
     cent_rows = sorted((r["c_id"], tuple(r["ce"])) for r in cent0.collect())
     for _ in range(_KM_FIXED_ROUNDS):

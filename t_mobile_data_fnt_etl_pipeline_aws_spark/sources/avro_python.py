@@ -423,19 +423,27 @@ def spark_ddl_from_avro(schema: dict) -> str:
 # ---------------------------------------------------------------------------
 
 
+def _optional_branch(typ: list):
+    """T of a null-first union ``["null", T]``, else None. It is the one
+    union shape the columnar codec handles: that codec writes and reads
+    branch 0 as null and branch 1 as the value. A degenerate ['null']
+    union, a multi-branch union (reachable via readerSchema; ADVICE r15)
+    and a null-second union such as ["long", "null"] (ADVICE r16) stay
+    on the row path, which decodes the real branch index."""
+    if len(typ) == 2 and typ[0] == "null" and typ[1] != "null":
+        return typ[1]
+    return None
+
+
 def _pa_type_from_avro(typ):
     """Arrow type for an Avro field type, or None when the field must
-    stay on the row path (tz-aware timestamps)."""
+    stay on the row path (tz-aware timestamps, unions other than
+    ``["null", T]``)."""
     import pyarrow as pa
 
     if isinstance(typ, list):
-        # ADVICE r15: a degenerate ['null'] union or a multi-branch
-        # union (reachable via readerSchema) has no single Arrow type —
-        # fall back to the row path instead of mistyping the column.
-        non_null = [t for t in typ if t != "null"]
-        if len(non_null) != 1:
-            return None
-        return _pa_type_from_avro(non_null[0])
+        branch = _optional_branch(typ)
+        return None if branch is None else _pa_type_from_avro(branch)
     base = _base_type(typ)
     logical = _logical(typ)
     if logical == "date":
@@ -509,11 +517,10 @@ def _field_plan(typ) -> tuple[bool, str]:
     fall back to the row path."""
     nullable = False
     if isinstance(typ, list):
-        non_null = [t for t in typ if t != "null"]
-        if len(non_null) != 1:
-            raise ValueError(f"not a simple optional union: {typ!r}")
+        if _optional_branch(typ) is None:
+            raise ValueError(f"not a null-first optional union: {typ!r}")
         nullable = True
-        typ = non_null[0]
+        typ = typ[1]
     base = _base_type(typ)
     kind = {
         "long": "varint",

@@ -50,7 +50,27 @@ capabilities a raw parquet directory cannot offer:
 * **additive schema evolution** — every manifest records the committed
   table schema; ``read_version`` pins it on the scan, so files written
   before a column existed null-fill it (reader-schema resolution, the
-  Avro analogue) without an O(#files) mergeSchema footer sweep.
+  Avro analogue) without an O(#files) mergeSchema footer sweep;
+* **one commit core; snapshot fields carry forward unless a commit
+  overrides or drops them** — every commit kind runs ``_commit`` (read
+  base, plan, publish, retry on a lost race where the kind allows it)
+  and states only the fields it changes. The snapshot fields (schema,
+  deletes, partition_spec, eq_deletes, defaults, constraints) and the
+  live file list come from the base manifest otherwise. The drops:
+
+  - ``commit_replace`` drops deletes, eq_deletes, defaults and
+    partition_spec (the compaction feed applied them; its files are not
+    partition-aligned);
+  - ``compact_with_lineage`` drops the same four, for the same reasons;
+  - ``commit_optimize_binpack`` drops the position vectors that only
+    pointed into rewritten files;
+  - ``evolve_partition_spec(None)`` and dropping the last constraint
+    remove those fields;
+  - ``rollback`` restores every field of the target version except
+    constraints; ``commit_rewrite`` refuses while deletes exist.
+
+  Constraints gate writes; they are not data, so every other commit
+  kind keeps them.
 
 Readers pass the selected file list straight to ``spark.read.parquet``,
 so Catalyst still applies row-group pushdown INSIDE surviving files —
@@ -146,18 +166,11 @@ def _widen(v, side: str):
     return v
 
 
-def _file_stats(path: str, stat_cols: list[str]) -> dict:
-    """Per-file min/max for stat_cols from the parquet footer, stored as
-    native JSON types (numbers stay numbers; dates/timestamps as ISO
-    strings) so prune_files compares typed values, never str() forms."""
-    import pyarrow.parquet as pq
-
-    return _file_stats_from_meta(pq.ParquetFile(path).metadata, stat_cols)
-
-
 def _file_stats_from_meta(md, stat_cols: list[str]) -> dict:
-    """`_file_stats` over an already-parsed footer (FileMetaData) —
-    lets _stage_files reuse its single footer read."""
+    """Per-file min/max for stat_cols from a parsed parquet footer
+    (FileMetaData), stored as native JSON types (numbers stay numbers;
+    dates/timestamps as ISO strings) so prune_files compares typed
+    values, never str() forms."""
     out: dict[str, list] = {}
     for rg in range(md.num_row_groups):
         rgm = md.row_group(rg)
@@ -203,6 +216,12 @@ SNAPSHOT_INTERVAL = 16
 #: storage-form bookkeeping keys a delta manifest carries on top of the
 #: logical manifest fields; stripped during reconstruction
 _DELTA_KEYS = ("format", "base", "delta_depth", "add_files", "remove_paths")
+
+#: snapshot-level fields a commit carries forward from its base manifest
+#: unless its plan overrides or drops them (see ``_commit``)
+_SNAPSHOT_FIELDS = (
+    "schema", "deletes", "partition_spec", "eq_deletes", "defaults", "constraints"
+)
 
 
 def _read_raw(table_dir: str, version: int) -> dict:
@@ -351,20 +370,32 @@ def _stage_files(
     table_dir: str,
     stat_cols: list[str],
     bloom_cols: list[str] | None = None,
+    ptransform: str | None = None,
 ) -> list[dict]:
     """Land df as immutable uuid-named data files (invisible to every
     manifest until a commit references them); returns their manifest
     entries with footer-harvested stats, the footer row count (powers
     metadata-only COUNT/MIN/MAX), and optional per-file bloom filters
-    for point-lookup skipping."""
+    for point-lookup skipping.
+
+    With ``ptransform``, df carries its partition value in a ``__pval``
+    column: the write lands one file set per value (the value lives in
+    the directory name, never in the data files), and each entry
+    records its ``partition`` value and the ``ptransform`` it was
+    written with."""
     import pyarrow.parquet as pq
 
     os.makedirs(_data_dir(table_dir), exist_ok=True)
     staging = os.path.join(table_dir, f"_staging_{uuid.uuid4().hex[:8]}")
     entries = []
     try:
-        df.write.mode("overwrite").parquet(staging)
-        for f in sorted(glob.glob(os.path.join(staging, "*.parquet"))):
+        writer = df.write.mode("overwrite")
+        pattern = "*.parquet"
+        if ptransform is not None:
+            writer, pattern = writer.partitionBy("__pval"), "__pval=*/*.parquet"
+        writer.parquet(staging)
+        # order by (directory, name): files of '__pval=1' before '__pval=10'
+        for f in sorted(glob.glob(os.path.join(staging, pattern)), key=os.path.split):
             # ONE footer parse per file (round-15: this loop used to open
             # the footer four times — zero-row check, rows, schema, stats —
             # a 4× metadata-read tax on every commit of every manifest key).
@@ -384,6 +415,12 @@ def _stage_files(
                 "rows": md.num_rows,
                 "stats": _file_stats_from_meta(md, stat_cols),
             }
+            if ptransform is not None:
+                # the file's OWN transform rides with it: a later spec
+                # change must not reinterpret old partition values
+                pdir = os.path.basename(os.path.dirname(f))
+                entry["partition"] = pdir.split("=", 1)[1]
+                entry["ptransform"] = ptransform
             entries.append(entry)
             if "__row_id" in schema_names:
                 # lineage-materializing rewrite (compact_with_lineage):
@@ -404,22 +441,18 @@ def _stage_files(
     return entries
 
 
-def _stage_delete_vector(positions: DataFrame, table_dir: str) -> list[dict]:
-    """Land the (file_path, row_index) identities of ``positions`` as
-    one position-delete parquet under ``_deletes/`` (invisible until a
-    commit references it); returns its manifest entries."""
+def _stage_deletes(df: DataFrame, table_dir: str) -> list[dict]:
+    """Land df — position identities (file_path, row_index) or one
+    column of equality-delete values — as one delete parquet under
+    ``_deletes/`` (invisible until a commit references it); returns its
+    manifest entries."""
     import pyarrow.parquet as pq
 
     os.makedirs(_deletes_dir(table_dir), exist_ok=True)
     staging = os.path.join(table_dir, f"_staging_{uuid.uuid4().hex[:8]}")
     entries = []
     try:
-        (
-            positions.select("file_path", "row_index")
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(staging)
-        )
+        df.coalesce(1).write.mode("overwrite").parquet(staging)
         for f in sorted(glob.glob(os.path.join(staging, "*.parquet"))):
             n = pq.ParquetFile(f).metadata.num_rows
             if n == 0:
@@ -526,140 +559,113 @@ def _publish(
     and never folding the parent's file list (the whole point of the
     delta tier). Every SNAPSHOT_INTERVAL-deep chain still materializes
     a full snapshot, amortizing the O(live) read/write to 1/interval
-    per commit."""
+    per commit. A ``files`` commit is stored as a delta when
+    ``_delta_segment`` can (never with ``force_full``). Both forms go
+    through the same record builder.
+
+    Commit kinds do not call this directly: ``_commit`` carries the
+    base manifest's snapshot fields into these keywords."""
     os.makedirs(_log_dir(table_dir), exist_ok=True)
+    # branch commits chain from a REF head, not the newest id — the
+    # version sequence is an ID ALLOCATOR, the parent pointers are the
+    # history DAG (manifests without a parent are linear: version - 1)
+    parent_v = version - 1 if parent is None else parent
+    segment = None  # (delta_depth, add_files, remove_paths) when stored as a delta
     if files_add is not None:
         if files is not None:
             raise ValueError("pass files or files_add, not both")
-        parent_v = parent if parent is not None else version - 1
-        if parent_v < 1:
-            files = list(files_add)  # first commit: full by definition
-        else:
+        files = list(files_add)  # no parent: a full snapshot by definition
+        if parent_v >= 1:
             parent_raw = _read_raw(table_dir, parent_v)  # missing = caller bug
-            depth = (
-                parent_raw.get("delta_depth", 0) + 1
-                if parent_raw.get("format") == "delta"
-                else 1
-            )
+            depth = _depth_after(parent_raw)
             if depth >= SNAPSHOT_INTERVAL:
-                files = read_manifest(table_dir, parent_v)["files"] + list(
-                    files_add
-                )
+                files = read_manifest(table_dir, parent_v)["files"] + files
             else:
-                alloc = int(parent_raw.get("next_row_id", 0))
-                add = []
-                for f in files_add:
-                    f = f if "seq" in f else {**f, "seq": version}
-                    if "first_row_id" not in f and not f.get(
-                        "lineage_in_file"
-                    ):
-                        f = {**f, "first_row_id": alloc}
-                        alloc += int(f.get("rows", 0))
-                    add.append(f)
-                record = {
-                    "version": version,
-                    "op": op,
-                    "ts": time.time(),
-                    "next_row_id": alloc,
-                    "format": "delta",
-                    "base": parent_v,
-                    "delta_depth": depth,
-                    "add_files": add,
-                    "remove_paths": [],
-                }
-                if schema is not None:
-                    record["schema"] = schema
-                if deletes:
-                    record["deletes"] = deletes
-                if partition_spec is not None:
-                    record["partition_spec"] = partition_spec
-                if eq_deletes:
-                    record["eq_deletes"] = [
-                        e if "seq" in e else {**e, "seq": version}
-                        for e in eq_deletes
-                    ]
-                if defaults:
-                    record["defaults"] = defaults
-                if constraints:
-                    record["constraints"] = constraints
-                if parent is not None:
-                    record["parent"] = parent
-                return _write_record(table_dir, version, record)
-    # DATA SEQUENCE NUMBERS (Iceberg v2): every file/eq-delete entry is
-    # stamped with the version that first committed it, at the single
-    # commit point so no writer can forget. Carried-forward entries
-    # keep their original seq; equality deletes then apply only to
-    # files with a STRICTLY LOWER seq (commit_delete_equality masks
-    # what existed when it committed — a row re-inserted later is
-    # visible again, not swallowed by a standing mask).
-    files = [
-        f if "seq" in f else {**f, "seq": version} for f in files
-    ]
-    # ROW LINEAGE (Iceberg v3): every data file gets a first_row_id from
-    # a table-global monotone allocator; a row's stable id is
-    # first_row_id + its position (or the materialized __row_id column
-    # after a lineage-preserving compaction). The newest manifest holds
-    # the global high-water mark — publishes are serialized by the
-    # create-exclusive version ids, so reading version-1 suffices.
-    alloc = 0
-    if version > 1:
-        try:
-            alloc = int(read_manifest(table_dir, version - 1).get("next_row_id", 0))
-        except FileNotFoundError:
-            pass  # vacuumed beyond retention: fall back to the derived max
-    alloc = max(
-        [alloc]
-        + [
-            int(f.get("first_row_id", 0)) + int(f.get("rows", 0))
-            for f in files
-            if "first_row_id" in f
-        ]
-    )
-    stamped = []
-    for f in files:
-        if "first_row_id" not in f and not f.get("lineage_in_file"):
+                # the fast path stamps only the new entries, allocating
+                # row ids from the parent's high-water mark
+                files, alloc = _stamp(
+                    files, version, int(parent_raw.get("next_row_id", 0))
+                )
+                segment = (depth, files, [])
+    if segment is None:
+        # ROW LINEAGE (Iceberg v3): every data file gets a first_row_id
+        # from a table-global monotone allocator; a row's stable id is
+        # first_row_id + its position (or the materialized __row_id
+        # column after a lineage-preserving compaction). The newest
+        # manifest holds the global high-water mark — publishes are
+        # serialized by the create-exclusive version ids, so reading
+        # version-1 suffices.
+        alloc = 0
+        if version > 1:
+            try:
+                alloc = int(
+                    read_manifest_meta(table_dir, version - 1).get("next_row_id", 0)
+                )
+            except FileNotFoundError:
+                pass  # vacuumed beyond retention: fall back to the derived max
+        alloc = max(
+            [alloc]
+            + [
+                int(f.get("first_row_id", 0)) + int(f.get("rows", 0))
+                for f in files
+                if "first_row_id" in f
+            ]
+        )
+        files, alloc = _stamp(files, version, alloc)
+        if not force_full:
+            segment = _delta_segment(table_dir, version, parent_v, files)
+    # ONE record for both storage forms. Header first: the storage-form
+    # keys sit inside the first bytes _sniff_delta reads, and the
+    # O(files) lists come last. The wall-clock ts powers AS OF TIMESTAMP
+    # resolution (version_at_timestamp); versions stay the canonical
+    # offset.
+    record = {"version": version, "op": op, "ts": time.time(), "next_row_id": alloc}
+    if segment is not None:
+        record.update(format="delta", base=parent_v, delta_depth=segment[0])
+    fields = {
+        "schema": schema,
+        "deletes": deletes or None,
+        "partition_spec": partition_spec,
+        "eq_deletes": _stamp(eq_deletes, version)[0] if eq_deletes else None,
+        "defaults": defaults or None,
+        "constraints": constraints or None,
+        "parent": parent,
+    }
+    record.update((k, v) for k, v in fields.items() if v is not None)
+    if segment is None:
+        record["files"] = files
+    else:
+        record.update(add_files=segment[1], remove_paths=segment[2])
+    return _write_record(table_dir, version, record)
+
+
+def _stamp(entries: list[dict], version: int, alloc: int | None = None):
+    """Stamp entries committed at ``version``; returns (entries, alloc).
+
+    DATA SEQUENCE NUMBERS (Iceberg v2): every file/eq-delete entry gets
+    the version that first committed it, at the single commit point so
+    no writer can forget. Carried-forward entries keep their original
+    seq; equality deletes then apply only to files with a STRICTLY
+    LOWER seq (commit_delete_equality masks what existed when it
+    committed — a row re-inserted later is visible again, not
+    swallowed by a standing mask). With ``alloc``, data files without
+    a row-id range (and without in-file lineage) get one allocated
+    from it."""
+    out = []
+    for f in entries:
+        f = f if "seq" in f else {**f, "seq": version}
+        if alloc is not None and "first_row_id" not in f and not f.get("lineage_in_file"):
             f = {**f, "first_row_id": alloc}
             alloc += int(f.get("rows", 0))
-        stamped.append(f)
-    files = stamped
-    if eq_deletes:
-        eq_deletes = [
-            e if "seq" in e else {**e, "seq": version} for e in eq_deletes
-        ]
-    # wall-clock commit timestamp: powers AS OF TIMESTAMP resolution
-    # (version_at_timestamp); versions are still the canonical offset —
-    # the timestamp is a convenience index over the forward-only log
-    manifest = {
-        "version": version,
-        "op": op,
-        "ts": time.time(),
-        "next_row_id": alloc,
-        "files": files,
-    }
-    if schema is not None:
-        manifest["schema"] = schema
-    if deletes:
-        manifest["deletes"] = deletes
-    if partition_spec is not None:
-        manifest["partition_spec"] = partition_spec
-    if eq_deletes:
-        manifest["eq_deletes"] = eq_deletes
-    if defaults:
-        manifest["defaults"] = defaults
-    if constraints:
-        manifest["constraints"] = constraints
-    if parent is not None:
-        # branch commits chain from a REF head, not the newest id —
-        # the version sequence is an ID ALLOCATOR, the parent pointers
-        # are the history DAG (legacy manifests without a parent are
-        # linear: parent == version - 1)
-        manifest["parent"] = parent
-    record = (
-        manifest
-        if force_full
-        else _delta_or_full(table_dir, version, manifest)
-    )
-    return _write_record(table_dir, version, record)
+        out.append(f)
+    return out, alloc
+
+
+def _depth_after(parent_raw: dict) -> int:
+    """Delta-chain depth of a segment stored against ``parent_raw``."""
+    if parent_raw.get("format") == "delta":
+        return parent_raw.get("delta_depth", 0) + 1
+    return 1
 
 
 def _write_record(table_dir: str, version: int, record: dict) -> int:
@@ -682,36 +688,100 @@ def _write_record(table_dir: str, version: int, record: dict) -> int:
     return version
 
 
-def _delta_or_full(table_dir: str, version: int, manifest: dict) -> dict:
-    """Choose the STORAGE form for a logical manifest: a delta segment
-    against the DAG parent when that is readable and the chain depth
-    stays under SNAPSHOT_INTERVAL, else the full snapshot. The delta
-    carries every snapshot-level field verbatim (they're small and NOT
-    inherited — an empty "constraints" must mean "no constraints", not
-    "ask the parent") and replaces only the O(files) "files" list with
-    add_files / remove_paths. A reconstruction self-check guards the
-    canonical retained-then-added ordering: if folding the delta would
-    not reproduce the intended list exactly, the commit falls back to
-    a full snapshot rather than publish a lossy segment."""
-    files = manifest["files"]
-    parent_v = manifest.get("parent", version - 1)
-    if version <= 1 or parent_v < 1:
-        return manifest
+def _head(table_dir: str, empty: str | None = None) -> int:
+    """The newest version; raises ValueError(``empty``) on an empty
+    table when ``empty`` is given."""
+    prev = current_version(table_dir)
+    if not prev and empty:
+        raise ValueError(empty)
+    return prev
+
+
+def _commit(
+    table_dir: str,
+    op: str,
+    plan,
+    *,
+    retry: bool = False,
+    base_files: bool = True,
+    expected_base: int | None = None,
+    empty: str | None = None,
+    ref: str | None = None,
+    staged=(),
+    force_full: bool = False,
+) -> int:
+    """The commit protocol every commit kind runs: read the base
+    manifest, carry its snapshot fields (and its live file list)
+    forward, apply ``plan(base, version)``, publish ``version``.
+
+    ``plan`` returns only what the commit changes: a snapshot field set
+    to None is dropped, and "files" or "files_add" (an append onto the
+    live set; needs ``base_files=False``) replace the live list. The
+    base is the head, or the snapshot ``ref`` points at — a branch
+    commit takes the next free id, records the ref head as its parent
+    and moves the ref. ``base_files=False`` reads only the snapshot
+    fields, never the O(live) file list. ``expected_base`` pins the
+    base (CommitConflictError when the table moved past it).
+
+    A lost version race re-reads the base and re-plans only with
+    ``retry`` and no pin. Any raise unlinks ``staged``, the data files
+    no manifest references yet."""
     try:
-        parent_raw = _read_raw(table_dir, parent_v)
+        while True:
+            prev = get_ref(table_dir, ref) if ref else _head(table_dir, empty)
+            if expected_base is not None and prev != expected_base:
+                raise CommitConflictError(
+                    f"expected base version {expected_base}, table is at {prev}"
+                )
+            read = read_manifest if base_files else read_manifest_meta
+            base = read(table_dir, prev) if prev else {}
+            version = (current_version(table_dir) if ref else prev) + 1
+            fields = {k: base.get(k) for k in ("files", *_SNAPSHOT_FIELDS)}
+            fields.update(plan(base, version))
+            try:
+                v = _publish(
+                    table_dir, version, op, fields.pop("files"),
+                    parent=prev if ref else None, force_full=force_full,
+                    **fields,
+                )
+            except CommitConflictError:
+                if retry and expected_base is None:
+                    continue
+                raise
+            if ref:
+                set_ref(table_dir, ref, v)
+            return v
+    except BaseException:
+        _unlink_entries(staged)
+        raise
+
+
+def _delta_segment(
+    table_dir: str, version: int, parent_v: int, files: list[dict]
+) -> tuple[int, list[dict], list[str]] | None:
+    """Choose the STORAGE form for a logical manifest: a delta segment
+    (depth, add_files, remove_paths) against the DAG parent when that
+    is readable and the chain depth stays under SNAPSHOT_INTERVAL, else
+    None (store the full snapshot). The record carries every
+    snapshot-level field verbatim either way (they're small and NOT
+    inherited — an empty "constraints" must mean "no constraints", not
+    "ask the parent"); the segment replaces only the O(files) "files"
+    list. A reconstruction self-check guards the canonical
+    retained-then-added ordering: if folding the delta would not
+    reproduce the intended list exactly, the commit falls back to a
+    full snapshot rather than publish a lossy segment."""
+    if version <= 1 or parent_v < 1:
+        return None
+    try:
+        depth = _depth_after(_read_raw(table_dir, parent_v))
     except (FileNotFoundError, json.JSONDecodeError):
-        return manifest
-    depth = (
-        parent_raw.get("delta_depth", 0) + 1
-        if parent_raw.get("format") == "delta"
-        else 1
-    )
+        return None
     if depth >= SNAPSHOT_INTERVAL:
-        return manifest
+        return None
     try:
         parent_files = read_manifest(table_dir, parent_v)["files"]
     except (FileNotFoundError, KeyError, json.JSONDecodeError):
-        return manifest
+        return None
     base_by_path = {f["path"]: f for f in parent_files}
     new_paths = {f["path"] for f in files}
     add = [
@@ -729,18 +799,8 @@ def _delta_or_full(table_dir: str, version: int, manifest: dict) -> dict:
         if f["path"] not in removed and f["path"] not in replaced
     ] + add
     if folded != files:
-        return manifest
-    record = {k: v for k, v in manifest.items() if k != "files"}
-    record.update(
-        {
-            "format": "delta",
-            "base": parent_v,
-            "delta_depth": depth,
-            "add_files": add,
-            "remove_paths": remove,
-        }
-    )
-    return record
+        return None
+    return depth, add, remove
 
 
 def _schema_entry(df: DataFrame) -> list[list[str]]:
@@ -885,58 +945,26 @@ def commit_appends(
     versions = []
     try:
         for i, (df, new, op) in enumerate(zip(frames, staged, ops)):
-            base = None if expected_base is None else expected_base + i
-            versions.append(
-                _publish_append(table_dir, df, new, op, base, retry_conflicts)
-            )
+            # an append re-merges onto an advanced snapshot after a lost
+            # race; everything else carries forward (appended files are
+            # unaffected by existing deletes, and files without a
+            # partition value are simply never partition-skipped).
+            # Metadata-only base: files_add writes a delta segment with
+            # O(new files) work, never folding the live list.
+            versions.append(_commit(
+                table_dir, op,
+                lambda m, v: {
+                    "schema": _merged_schema(m.get("schema"), df),
+                    "files_add": new,
+                },
+                retry=retry_conflicts, base_files=False,
+                expected_base=None if expected_base is None else expected_base + i,
+            ))
     except BaseException:
         for new in staged[len(versions):]:  # staged, never referenced
             _unlink_entries(new)
         raise
     return versions
-
-
-def _publish_append(
-    table_dir: str,
-    df: DataFrame,
-    new: list[dict],
-    op: str,
-    expected_base: int | None,
-    retry_conflicts: bool,
-) -> int:
-    """The OCC publish loop of one append: link the next version as the
-    current live set plus the staged ``new`` entries, re-merging onto
-    an advanced snapshot after a lost race unless the base is pinned
-    or retries are off."""
-    while True:
-        prev = current_version(table_dir)
-        if expected_base is not None and prev != expected_base:
-            raise CommitConflictError(
-                f"expected base version {expected_base}, table is at {prev}"
-            )
-        # metadata-only read: validating an append needs the prev
-        # SCHEMA/CONSTRAINTS and snapshot-level fields, never the
-        # O(live) file list — files_add lets _publish write a delta
-        # segment with O(new files) work (the 100-TB commit path)
-        prev_meta = read_manifest_meta(table_dir, prev) if prev else {}
-        schema = _merged_schema(prev_meta.get("schema"), df)
-        try:
-            # delete vectors and a declared partition spec carry
-            # forward: appended files are unaffected by existing
-            # position deletes, and files without a recorded
-            # partition value are simply never partition-skipped
-            return _publish(
-                table_dir, prev + 1, op, None, schema,
-                deletes=prev_meta.get("deletes"),
-                partition_spec=prev_meta.get("partition_spec"),
-                eq_deletes=prev_meta.get("eq_deletes"),
-                defaults=prev_meta.get("defaults"),
-                constraints=prev_meta.get("constraints"),
-                files_add=new,
-            )
-        except CommitConflictError:
-            if expected_base is not None or not retry_conflicts:
-                raise
 
 
 def commit_replace(
@@ -958,14 +986,20 @@ def commit_replace(
     compacted from a deletes-APPLIED read (``read_version``, the
     default). Compacting from raw file reads would resurrect deleted
     rows; ``read_version`` is the documented source for compaction
-    input exactly for this reason. A declared partition spec is also
-    dropped (the compacted files are not partition-aligned; stats
-    pruning still applies)."""
+    input exactly for this reason. Column defaults drop for the same
+    reason (the read materialized them). A declared partition spec is
+    also dropped (the compacted files are not partition-aligned; stats
+    pruning still applies). CHECK constraints stay: they gate writes."""
     new = _stage_files(df, table_dir, stat_cols)
-    prev = current_version(table_dir)
-    prev_manifest = read_manifest(table_dir, prev) if prev else {}
-    schema = _merged_schema(prev_manifest.get("schema"), df)
-    return _publish(table_dir, prev + 1, op, new, schema)
+    return _commit(
+        table_dir, op,
+        lambda m, v: {
+            "files": new,
+            "schema": _merged_schema(m.get("schema"), df),
+            **dict.fromkeys(("deletes", "eq_deletes", "defaults", "partition_spec")),
+        },
+        base_files=False, staged=new,
+    )
 
 
 def _base_reader(spark: SparkSession, manifest: dict):
@@ -1220,28 +1254,12 @@ def commit_delete(
     resurrect masked rows). That exactness is what lets ``table_stats``
     keep answering COUNT from metadata alone: live rows = footer sum −
     delete-vector sum."""
-    prev = current_version(table_dir)
-    if not prev:
-        raise ValueError("cannot delete from an empty table")
-    prev_manifest = read_manifest(table_dir, prev)
-    entries = _stage_delete_vector(positions, table_dir)
-    try:
-        deletes = list(prev_manifest.get("deletes", [])) + entries
-        return _publish(
-            table_dir,
-            prev + 1,
-            op,
-            prev_manifest["files"],
-            prev_manifest.get("schema"),
-            deletes=deletes,
-            partition_spec=prev_manifest.get("partition_spec"),
-            eq_deletes=prev_manifest.get("eq_deletes"),
-            defaults=prev_manifest.get("defaults"),
-            constraints=prev_manifest.get("constraints"),
-        )
-    except BaseException:
-        _unlink_entries(entries)
-        raise
+    prev = _head(table_dir, "cannot delete from an empty table")
+    entries = _stage_deletes(positions.select("file_path", "row_index"), table_dir)
+    return _commit(
+        table_dir, op, lambda m, v: {"deletes": m.get("deletes", []) + entries},
+        expected_base=prev, staged=entries,
+    )
 
 
 def diff_files(table_dir: str, v_from: int, v_to: int) -> list[str]:
@@ -1521,30 +1539,29 @@ def commit_rewrite(
     files AND leave vectors pointing at superseded paths — compact the
     deletes away first (commit_replace from a read_version feed)."""
     replaced = set(replaced_paths)
-    prev0 = current_version(table_dir)
-    m0 = read_manifest(table_dir, prev0) if prev0 else {}
-    if m0.get("deletes") or m0.get("eq_deletes"):
-        raise ValueError(
-            "copy-on-write rewrite over live delete vectors would "
-            "resurrect deleted rows: compact deletes first "
-            "(commit_replace from a read_version feed)"
-        )
-    new = _stage_files(df_new, table_dir, stat_cols)
+
+    def plan(m, v):
+        if m.get("deletes") or m.get("eq_deletes"):
+            raise ValueError(
+                "copy-on-write rewrite over live delete vectors would "
+                "resurrect deleted rows: compact deletes first "
+                "(commit_replace from a read_version feed)"
+            )
+        live = m.get("files", [])
+        unknown = replaced - {f["path"] for f in live}
+        if unknown:
+            raise ValueError(f"replaced paths not in live set: {sorted(unknown)}")
+        return {
+            "files": [f for f in live if f["path"] not in replaced] + new,
+            "schema": _merged_schema(m.get("schema"), df_new),
+        }
+
     prev = current_version(table_dir)
-    prev_manifest = read_manifest(table_dir, prev) if prev else {}
-    unknown = replaced - {f["path"] for f in prev_manifest.get("files", [])}
-    if unknown:
-        raise ValueError(f"replaced paths not in live set: {sorted(unknown)}")
-    keep = [
-        f for f in prev_manifest.get("files", []) if f["path"] not in replaced
-    ]
-    schema = _merged_schema(prev_manifest.get("schema"), df_new)
-    return _publish(
-        table_dir, prev + 1, op, keep + new, schema,
-        partition_spec=prev_manifest.get("partition_spec"),
-        defaults=prev_manifest.get("defaults"),
-        constraints=prev_manifest.get("constraints"),
-    )
+    new: list[dict] = []
+    # reject before staging: live masks, unknown paths, schema change
+    plan(read_manifest(table_dir, prev) if prev else {}, prev + 1)
+    new = _stage_files(df_new, table_dir, stat_cols)
+    return _commit(table_dir, op, plan, staged=new)
 
 
 #: Declared partition transforms (the Iceberg hidden-partitioning set
@@ -1634,109 +1651,43 @@ def commit_append_partitioned(
     Scale: one shuffle by partition value per append (same cost class
     as any partitioned write); pruning stays O(#files) on the manifest.
     The transform column is derived INSIDE the write plan — no UDF, no
-    extra pass."""
-    from pyspark.sql import functions as F
+    extra pass.
 
+    The staging write is the slow part, so a concurrent commit may land
+    meanwhile: the publish re-reads the head and merges the staged
+    entries onto THAT live set (ADVICE r13 high; the same
+    win-the-next-version retry as commit_append — appends commute)."""
     pval_expr = _transform_expr(part_col, transform)
     if pval_expr is None:
         raise ValueError(
             f"unsupported transform {transform!r}; pick one of "
             f"{sorted(_PARTITION_TRANSFORMS)} + ['identity', 'bucket[N]']"
         )
-    prev = current_version(table_dir)
-    prev_manifest = read_manifest(table_dir, prev) if prev else {}
-    prev_spec = prev_manifest.get("partition_spec")
     spec = {"col": part_col, "transform": transform}
-    if prev_spec is not None and prev_spec != spec and not allow_evolution:
-        raise ValueError(
-            f"partition spec mismatch: table declares {prev_spec}, "
-            f"writer passed {spec} (pass allow_evolution=True to evolve "
-            f"the spec; existing files keep pruning under the transform "
-            f"they were written with)"
-        )
-    _merged_schema(prev_manifest.get("schema"), df)  # reject before staging
-    _validate_constraints(df, prev_manifest.get("constraints") or {})
 
-    import pyarrow.parquet as pq
+    def plan(m, v):
+        if m.get("partition_spec") not in (None, spec) and not allow_evolution:
+            raise ValueError(
+                f"partition spec mismatch: table declares "
+                f"{m['partition_spec']}, writer passed {spec} (pass "
+                f"allow_evolution=True to evolve the spec; existing files "
+                f"keep pruning under the transform they were written with)"
+            )
+        schema = _merged_schema(m.get("schema"), df)
+        return {"schema": schema, "partition_spec": spec, "files_add": entries}
 
-    os.makedirs(_data_dir(table_dir), exist_ok=True)
-    staging = os.path.join(table_dir, f"_staging_{uuid.uuid4().hex[:8]}")
-    (
-        df.withColumn("__pval", pval_expr)
-        .repartition("__pval")
-        .write.partitionBy("__pval")
-        .mode("overwrite")
-        .parquet(staging)
+    prev = current_version(table_dir)
+    prev_meta = read_manifest_meta(table_dir, prev) if prev else {}
+    entries: list[dict] = []
+    plan(prev_meta, prev + 1)  # reject before staging
+    _validate_constraints(df, prev_meta.get("constraints") or {})
+    entries = _stage_files(
+        df.withColumn("__pval", pval_expr).repartition("__pval"),
+        table_dir, stat_cols, ptransform=transform,
     )
-    entries = []
-    try:
-        for pdir in sorted(glob.glob(os.path.join(staging, "__pval=*"))):
-            pval = os.path.basename(pdir).split("=", 1)[1]
-            for f in sorted(glob.glob(os.path.join(pdir, "*.parquet"))):
-                if pq.ParquetFile(f).metadata.num_rows == 0:
-                    continue
-                dest = os.path.join(
-                    _data_dir(table_dir), f"{uuid.uuid4().hex}.parquet"
-                )
-                os.rename(f, dest)
-                entries.append(
-                    {
-                        "path": dest,
-                        "rows": pq.ParquetFile(dest).metadata.num_rows,
-                        "stats": _file_stats(dest, stat_cols),
-                        "partition": pval,
-                        # evolution support: the file's OWN transform
-                        # rides with it — a later spec change must not
-                        # reinterpret old partition values
-                        "ptransform": transform,
-                    }
-                )
-        # Optimistic-concurrency publish (ADVICE r13 high): the staging
-        # write above is the slow part, so a concurrent commit may have
-        # advanced the table since the entry-time read. Re-read the HEAD
-        # manifest each attempt and merge the staged entries onto THAT
-        # live set — publishing the entry-time merge at a recomputed
-        # version number would silently drop the racer's files/deletes.
-        # Same "win the next version" retry protocol as commit_append
-        # (appends commute).
-        while True:
-            head = current_version(table_dir)
-            # metadata-only head read: spec/schema validation never needs
-            # the O(live) file list — files_add publishes a delta segment
-            # (same fast path as commit_append)
-            head_manifest = read_manifest_meta(table_dir, head) if head else {}
-            head_spec = head_manifest.get("partition_spec")
-            if (
-                head_spec is not None
-                and head_spec != spec
-                and not allow_evolution
-            ):
-                raise ValueError(
-                    f"partition spec mismatch: table declares {head_spec}, "
-                    f"writer passed {spec} (pass allow_evolution=True)"
-                )
-            schema = _merged_schema(head_manifest.get("schema"), df)
-            try:
-                return _publish(
-                    table_dir,
-                    head + 1,
-                    op,
-                    None,
-                    schema,
-                    deletes=head_manifest.get("deletes"),
-                    partition_spec=spec,
-                    eq_deletes=head_manifest.get("eq_deletes"),
-                    defaults=head_manifest.get("defaults"),
-                    constraints=head_manifest.get("constraints"),
-                    files_add=entries,
-                )
-            except CommitConflictError:
-                continue
-    except BaseException:
-        _unlink_entries(entries)
-        raise
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
+    return _commit(
+        table_dir, op, plan, retry=True, base_files=False, staged=entries
+    )
 
 
 def evolve_partition_spec(
@@ -1761,26 +1712,10 @@ def evolve_partition_spec(
             )
         if "col" not in spec:
             raise ValueError("partition spec needs a 'col'")
-    while True:
-        prev = current_version(table_dir)
-        if not prev:
-            raise ValueError("cannot evolve the spec of an empty table")
-        m = read_manifest(table_dir, prev)
-        try:
-            return _publish(
-                table_dir,
-                prev + 1,
-                op,
-                m["files"],
-                m.get("schema"),
-                deletes=m.get("deletes"),
-                partition_spec=spec,
-                eq_deletes=m.get("eq_deletes"),
-                defaults=m.get("defaults"),
-                constraints=m.get("constraints"),
-            )
-        except CommitConflictError:
-            continue
+    return _commit(
+        table_dir, op, lambda m, v: {"partition_spec": spec}, retry=True,
+        empty="cannot evolve the spec of an empty table",
+    )
 
 
 def commit_add_column(
@@ -1800,32 +1735,20 @@ def commit_add_column(
     costs one manifest write, not a table rewrite. Without a default
     the column simply null-fills (the pre-existing additive-evolution
     behavior, now available without riding on an append)."""
-    while True:
-        prev = current_version(table_dir)
-        if not prev:
-            raise ValueError("cannot add a column to an empty table")
-        m = read_manifest(table_dir, prev)
-        schema = [list(e) for e in (m.get("schema") or [])]
+
+    def plan(m, v):
+        schema = m.get("schema") or []
         if any(n == name for n, _ in schema):
             raise ValueError(f"column {name!r} already exists")
-        schema.append([name, dtype])
         defaults = dict(m.get("defaults") or {})
         if default is not None:
-            defaults[name] = {"v": default, "t": dtype, "seq": prev + 1}
-        try:
-            return _publish(
-                table_dir,
-                prev + 1,
-                op,
-                m["files"],
-                schema,
-                deletes=m.get("deletes"),
-                partition_spec=m.get("partition_spec"),
-                eq_deletes=m.get("eq_deletes"),
-                defaults=defaults or None,
-            )
-        except CommitConflictError:
-            continue
+            defaults[name] = {"v": default, "t": dtype, "seq": v}
+        return {"schema": [*schema, [name, dtype]], "defaults": defaults}
+
+    return _commit(
+        table_dir, op, plan, retry=True,
+        empty="cannot add a column to an empty table",
+    )
 
 
 class ConstraintViolation(ValueError):
@@ -1844,58 +1767,34 @@ def commit_add_constraint(
     writer can forget it). Existing data is NOT retro-validated (the
     Delta contract: the constraint gates writes from now on; audit old
     data with a query). NOT NULL is just ``col IS NOT NULL``."""
-    while True:
-        prev = current_version(table_dir)
-        if not prev:
-            raise ValueError("cannot constrain an empty table")
-        m = read_manifest(table_dir, prev)
-        cons = dict(m.get("constraints") or {})
+
+    def plan(m, v):
+        cons = m.get("constraints") or {}
         if name in cons:
             raise ValueError(f"constraint {name!r} already exists")
-        cons[name] = predicate
-        try:
-            return _publish(
-                table_dir,
-                prev + 1,
-                op,
-                m["files"],
-                m.get("schema"),
-                deletes=m.get("deletes"),
-                partition_spec=m.get("partition_spec"),
-                eq_deletes=m.get("eq_deletes"),
-                defaults=m.get("defaults"),
-                constraints=cons,
-            )
-        except CommitConflictError:
-            continue
+        return {"constraints": {**cons, name: predicate}}
+
+    return _commit(
+        table_dir, op, plan, retry=True, empty="cannot constrain an empty table"
+    )
 
 
 def commit_drop_constraint(
     table_dir: str, name: str, op: str = "drop_constraint"
 ) -> int:
     """Drop a CHECK constraint (metadata-only commit)."""
-    while True:
-        prev = current_version(table_dir)
-        m = read_manifest(table_dir, prev)
+
+    def plan(m, v):
         cons = dict(m.get("constraints") or {})
         if name not in cons:
             raise ValueError(f"no such constraint {name!r}")
         del cons[name]
-        try:
-            return _publish(
-                table_dir,
-                prev + 1,
-                op,
-                m["files"],
-                m.get("schema"),
-                deletes=m.get("deletes"),
-                partition_spec=m.get("partition_spec"),
-                eq_deletes=m.get("eq_deletes"),
-                defaults=m.get("defaults"),
-                constraints=cons or None,
-            )
-        except CommitConflictError:
-            continue
+        return {"constraints": cons}
+
+    return _commit(
+        table_dir, op, plan, retry=True,
+        empty="cannot drop a constraint of an empty table",
+    )
 
 
 def _validate_constraints(df: DataFrame, constraints: dict) -> None:
@@ -1944,11 +1843,8 @@ def commit_widen_column(
     manifest write, not a rewrite. Narrowing or any unsafe change is
     rejected; later writers may keep writing the narrow type (accepted
     by ``_merged_schema``) or the wide one."""
-    while True:
-        prev = current_version(table_dir)
-        if not prev:
-            raise ValueError("cannot widen a column of an empty table")
-        m = read_manifest(table_dir, prev)
+
+    def plan(m, v):
         schema = [list(e) for e in (m.get("schema") or [])]
         by_name = {n: i for i, (n, _) in enumerate(schema)}
         if name not in by_name:
@@ -1960,21 +1856,12 @@ def commit_widen_column(
                 f"widening promotions are supported"
             )
         schema[by_name[name]][1] = new_type
-        try:
-            return _publish(
-                table_dir,
-                prev + 1,
-                op,
-                m["files"],
-                schema,
-                deletes=m.get("deletes"),
-                partition_spec=m.get("partition_spec"),
-                eq_deletes=m.get("eq_deletes"),
-                defaults=m.get("defaults"),
-                constraints=m.get("constraints"),
-            )
-        except CommitConflictError:
-            continue
+        return {"schema": schema}
+
+    return _commit(
+        table_dir, op, plan, retry=True,
+        empty="cannot widen a column of an empty table",
+    )
 
 
 def prune_files_partition(
@@ -2072,44 +1959,15 @@ def commit_delete_equality(
     compaction folds them in. Same commit discipline as position
     vectors: commit_rewrite refuses, commit_replace (from a
     read_version feed) drops them."""
-    import pyarrow.parquet as pq
-
-    prev = current_version(table_dir)
-    if not prev:
-        raise ValueError("cannot delete from an empty table")
-    prev_manifest = read_manifest(table_dir, prev)
-    os.makedirs(_deletes_dir(table_dir), exist_ok=True)
-    staging = os.path.join(table_dir, f"_staging_{uuid.uuid4().hex[:8]}")
-    values.select(col).distinct().coalesce(1).write.mode("overwrite").parquet(
-        staging
+    prev = _head(table_dir, "cannot delete from an empty table")
+    entries = [
+        {**e, "col": col}
+        for e in _stage_deletes(values.select(col).distinct(), table_dir)
+    ]
+    return _commit(
+        table_dir, op, lambda m, v: {"eq_deletes": m.get("eq_deletes", []) + entries},
+        expected_base=prev, staged=entries,
     )
-    entries = []
-    try:
-        for f in sorted(glob.glob(os.path.join(staging, "*.parquet"))):
-            n = pq.ParquetFile(f).metadata.num_rows
-            if n == 0:
-                continue
-            dest = os.path.join(
-                _deletes_dir(table_dir), f"{uuid.uuid4().hex}.parquet"
-            )
-            os.rename(f, dest)
-            entries.append({"path": dest, "rows": n, "col": col})
-        eq = list(prev_manifest.get("eq_deletes", [])) + entries
-        return _publish(
-            table_dir,
-            prev + 1,
-            op,
-            prev_manifest["files"],
-            prev_manifest.get("schema"),
-            deletes=prev_manifest.get("deletes"),
-            partition_spec=prev_manifest.get("partition_spec"),
-            eq_deletes=eq,
-            defaults=prev_manifest.get("defaults"),
-            constraints=prev_manifest.get("constraints"),
-        )
-    except BaseException:
-        _unlink_entries(entries)
-        raise
 
 
 def read_changes(
@@ -2340,37 +2198,19 @@ def commit_append_to_ref(
     base = get_ref(table_dir, ref)
     if base is None:
         raise ValueError(f"ref {ref!r} does not exist in {table_dir}")
-    base_m = read_manifest(table_dir, base)
+    base_m = read_manifest_meta(table_dir, base)
     _merged_schema(base_m.get("schema"), df)  # reject before staging
     _validate_constraints(df, base_m.get("constraints") or {})
     new = _stage_files(df, table_dir, stat_cols)
-    try:
-        while True:
-            base = get_ref(table_dir, ref)
-            base_m = read_manifest(table_dir, base)
-            schema = _merged_schema(base_m.get("schema"), df)
-            next_id = current_version(table_dir) + 1
-            try:
-                v = _publish(
-                    table_dir,
-                    next_id,
-                    op,
-                    list(base_m.get("files", [])) + new,
-                    schema,
-                    deletes=base_m.get("deletes"),
-                    partition_spec=base_m.get("partition_spec"),
-                    eq_deletes=base_m.get("eq_deletes"),
-                    defaults=base_m.get("defaults"),
-                    parent=base,
-                    constraints=base_m.get("constraints"),
-                )
-            except CommitConflictError:
-                continue  # lost the id race; re-read ref and retry
-            set_ref(table_dir, ref, v)
-            return v
-    except BaseException:
-        _unlink_entries(new)
-        raise
+    # a lost id race re-reads the ref and retries
+    return _commit(
+        table_dir, op,
+        lambda m, v: {
+            "files": m.get("files", []) + new,
+            "schema": _merged_schema(m.get("schema"), df),
+        },
+        retry=True, ref=ref, staged=new,
+    )
 
 
 def fast_forward(table_dir: str, ref: str, to: int | str) -> int:
@@ -2415,21 +2255,13 @@ def rollback(table_dir: str, to_version: int, op: str = "restore") -> int:
     the rollback; time travel still reaches the bad version), but the
     table's live state returns to the known-good snapshot. Zero data
     movement: the restored manifest references the same immutable
-    files."""
+    files. The CHECK constraints are the one exception: they gate
+    writes, not data, so the head's constraints stay in force."""
     src = read_manifest(table_dir, to_version)
-    prev = current_version(table_dir)
-    return _publish(
-        table_dir,
-        prev + 1,
-        op,
-        src["files"],
-        src.get("schema"),
-        deletes=src.get("deletes"),
-        partition_spec=src.get("partition_spec"),
-        eq_deletes=src.get("eq_deletes"),
-        defaults=src.get("defaults"),
-        constraints=src.get("constraints"),
-    )
+    restored = {
+        k: src.get(k) for k in ("files", *_SNAPSHOT_FIELDS) if k != "constraints"
+    }
+    return _commit(table_dir, op, lambda m, v: restored, base_files=False)
 
 
 def read_version_with_lineage(
@@ -2502,30 +2334,26 @@ def compact_with_lineage(
     ``__row_id`` as a physical column, and publish a REPLACE manifest —
     so ``_row_id`` reads identically before and after while every file
     path churns. Like ``commit_replace``, masks and the defaults
-    section drop (both are materialized into the feed); UNLIKE it, the
-    declared schema stays the DATA schema — ``__row_id`` is storage,
-    not surface (ordinary reads pin the declared schema and never see
-    it). The allocator high-water mark carries forward, so post-compact
-    appends keep minting fresh ids."""
-    prev = current_version(table_dir)
-    if not prev:
-        raise ValueError("cannot compact an empty table")
-    prev_m = read_manifest(table_dir, prev)
+    section drop (both are materialized into the feed), the partition
+    spec drops (the new files carry no partition values) and the
+    constraints stay; UNLIKE it, the declared schema stays the DATA
+    schema — ``__row_id`` is storage, not surface (ordinary reads pin
+    the declared schema and never see it). The allocator high-water
+    mark carries forward, so post-compact appends keep minting fresh
+    ids."""
+    prev = _head(table_dir, "cannot compact an empty table")
     feed = read_version_with_lineage(spark, table_dir, prev).withColumnRenamed(
         "_row_id", "__row_id"
     )
     new = _stage_files(feed, table_dir, stat_cols)
-    try:
-        return _publish(
-            table_dir,
-            prev + 1,
-            op,
-            new,
-            prev_m.get("schema"),
-        )
-    except BaseException:
-        _unlink_entries(new)
-        raise
+    return _commit(
+        table_dir, op,
+        lambda m, v: {
+            "files": new,
+            **dict.fromkeys(("deletes", "eq_deletes", "defaults", "partition_spec")),
+        },
+        base_files=False, expected_base=prev, staged=new,
+    )
 
 
 def commit_optimize_binpack(
@@ -2557,9 +2385,7 @@ def commit_optimize_binpack(
 
     Returns the new version (or the current one unchanged when fewer
     than two small files exist — nothing to pack)."""
-    prev = current_version(table_dir)
-    if not prev:
-        raise ValueError("cannot optimize an empty table")
+    prev = _head(table_dir, "cannot optimize an empty table")
     m = read_manifest(table_dir, prev)
     small = [f for f in m["files"] if int(f.get("rows", 0)) < target_rows]
     if len(small) < 2:
@@ -2592,6 +2418,11 @@ def commit_optimize_binpack(
                 spark, table_dir, prev, paths=[f["path"] for f in b]
             ).withColumnRenamed("_row_id", "__row_id")
             new_entries += _stage_files(feed.coalesce(1), table_dir, stat_cols)
+    except BaseException:
+        _unlink_entries(new_entries)
+        raise
+
+    def plan(m, v):
         # prune dead vector rows (they referenced rewritten files)
         import pyarrow as pa
         import pyarrow.parquet as pq
@@ -2616,21 +2447,11 @@ def commit_optimize_binpack(
             pq.write_table(pruned, dest)
             new_deletes.append({"path": dest, "rows": n_keep})
         keep_files = [f for f in m["files"] if f["path"] not in rewritten]
-        return _publish(
-            table_dir,
-            prev + 1,
-            op,
-            keep_files + new_entries,
-            m.get("schema"),
-            deletes=new_deletes or None,
-            partition_spec=m.get("partition_spec"),
-            eq_deletes=m.get("eq_deletes"),
-            defaults=m.get("defaults"),
-            constraints=m.get("constraints"),
-        )
-    except BaseException:
-        _unlink_entries(new_entries)
-        raise
+        return {"files": keep_files + new_entries, "deletes": new_deletes}
+
+    return _commit(
+        table_dir, op, plan, expected_base=prev, staged=new_entries
+    )
 
 
 def _norm_fp_str(p: str) -> str:
@@ -2938,27 +2759,10 @@ def compact_manifests(table_dir: str, op: str = "rewrite_manifests") -> int:
     it's an ordinary append-only commit, every prior version still
     reads. Version races retry (the rewrite commutes with itself;
     a race with a data commit just re-reconstructs)."""
-    while True:
-        prev = current_version(table_dir)
-        if not prev:
-            raise ValueError("cannot rewrite manifests of an empty table")
-        m = read_manifest(table_dir, prev)
-        try:
-            return _publish(
-                table_dir,
-                prev + 1,
-                op,
-                m["files"],
-                m.get("schema"),
-                deletes=m.get("deletes"),
-                partition_spec=m.get("partition_spec"),
-                eq_deletes=m.get("eq_deletes"),
-                defaults=m.get("defaults"),
-                constraints=m.get("constraints"),
-                force_full=True,
-            )
-        except CommitConflictError:
-            continue
+    return _commit(
+        table_dir, op, lambda m, v: {}, retry=True, force_full=True,
+        empty="cannot rewrite manifests of an empty table",
+    )
 
 
 def commit_drop_partition(
@@ -2988,36 +2792,23 @@ def commit_drop_partition(
     ``(new_version, files_dropped)``; racing commits retry against the
     advanced head (the drop re-partitions the new live set)."""
     want = set(values)
-    while True:
-        prev = current_version(table_dir)
-        if not prev:
-            raise ValueError("cannot drop partitions of an empty table")
-        m = read_manifest(table_dir, prev)
+    dropped = []
+
+    def plan(m, v):
         if not m.get("partition_spec"):
             raise ValueError(
                 "table is not partitioned; use merge-on-read or "
                 "copy-on-write deletes for row-level predicates"
             )
         keep = [f for f in m["files"] if f.get("partition") not in want]
-        dropped = len(m["files"]) - len(keep)
-        try:
-            return (
-                _publish(
-                    table_dir,
-                    prev + 1,
-                    op,
-                    keep,
-                    m.get("schema"),
-                    deletes=m.get("deletes"),
-                    partition_spec=m.get("partition_spec"),
-                    eq_deletes=m.get("eq_deletes"),
-                    defaults=m.get("defaults"),
-                    constraints=m.get("constraints"),
-                ),
-                dropped,
-            )
-        except CommitConflictError:
-            continue
+        dropped[:] = [len(m["files"]) - len(keep)]  # of the attempt that wins
+        return {"files": keep}
+
+    v = _commit(
+        table_dir, op, plan, retry=True,
+        empty="cannot drop partitions of an empty table",
+    )
+    return v, dropped[0]
 
 
 def manifests_table(spark: SparkSession, table_dir: str) -> DataFrame:
@@ -3093,17 +2884,10 @@ def clone_table(src_dir: str, dst_dir: str) -> int:
     if current_version(dst_dir):
         raise ValueError(f"clone destination {dst_dir} already exists")
     m = read_manifest(src_dir, src_v)
-    return _publish(
-        dst_dir,
-        1,
-        f"clone:{src_dir}@v{src_v}",
-        m["files"],
-        m.get("schema"),
-        deletes=m.get("deletes"),
-        partition_spec=m.get("partition_spec"),
-        eq_deletes=m.get("eq_deletes"),
-        defaults=m.get("defaults"),
-        constraints=m.get("constraints"),
+    return _commit(
+        dst_dir, f"clone:{src_dir}@v{src_v}",
+        lambda base, v: {k: m.get(k) for k in ("files", *_SNAPSHOT_FIELDS)},
+        expected_base=0,
     )
 
 
@@ -3130,37 +2914,29 @@ def commit_update_mor(
     the doomed old versions (from ``read_version_with_pos``); ``df_new``
     carries the replacement rows. The two are independent writes, so
     they stage as concurrent Spark jobs."""
-    prev = current_version(table_dir)
-    if not prev:
-        raise ValueError("cannot update an empty table")
-    prev_manifest = read_manifest(table_dir, prev)
-    _merged_schema(prev_manifest.get("schema"), df_new)  # reject early
+    prev = _head(table_dir, "cannot update an empty table")
+    prev_meta = read_manifest_meta(table_dir, prev)
+    _merged_schema(prev_meta.get("schema"), df_new)  # reject early
     # replacement/new rows of a MoR UPDATE/MERGE satisfy the same gate
-    _validate_constraints(df_new, prev_manifest.get("constraints") or {})
+    _validate_constraints(df_new, prev_meta.get("constraints") or {})
     new_files, dv_entries = _run_staging_jobs(
         spark,
         [
             functools.partial(_stage_files, df_new, table_dir, stat_cols),
-            functools.partial(_stage_delete_vector, positions, table_dir),
+            functools.partial(
+                _stage_deletes, positions.select("file_path", "row_index"), table_dir
+            ),
         ],
     )
-    try:
-        schema = _merged_schema(prev_manifest.get("schema"), df_new)
-        return _publish(
-            table_dir,
-            prev + 1,
-            op,
-            list(prev_manifest["files"]) + new_files,
-            schema,
-            deletes=list(prev_manifest.get("deletes", [])) + dv_entries,
-            partition_spec=prev_manifest.get("partition_spec"),
-            eq_deletes=prev_manifest.get("eq_deletes"),
-            defaults=prev_manifest.get("defaults"),
-            constraints=prev_manifest.get("constraints"),
-        )
-    except BaseException:
-        _unlink_entries(new_files + dv_entries)
-        raise
+    return _commit(
+        table_dir, op,
+        lambda m, v: {
+            "files": m["files"] + new_files,
+            "schema": _merged_schema(m.get("schema"), df_new),
+            "deletes": m.get("deletes", []) + dv_entries,
+        },
+        expected_base=prev, staged=new_files + dv_entries,
+    )
 
 
 def commit_merge_mor(

@@ -398,3 +398,63 @@ def test_row_path_writer_commits(tmp_path):
         (1, datetime.datetime(2001, 2, 3, 4, 5, 6)),
         (2, datetime.datetime(2002, 3, 4, 5, 6, 7)),
     ]
+
+
+def test_null_second_unions_take_the_row_path(tmp_path):
+    """ADVICE r16 (medium): ["long","null"] / ["string","null"] unions
+    put the value on branch 0. The columnar codec reads branch 0 as
+    null, so both of its entry points must refuse such a schema and
+    every caller must use the row path, which round-trips the values.
+    Covers the decode side through the Spark data source as well."""
+    import pyarrow as pa
+
+    from t_mobile_data_fnt_etl_pipeline_aws_spark.sources.avro_python import (
+        _field_plan,
+        make_avro_source,
+        pa_schema_from_avro,
+        read_container_arrow,
+        write_container_arrow,
+    )
+
+    schema = {
+        "type": "record",
+        "name": "ns",
+        "fields": [
+            {"name": "k", "type": ["long", "null"]},
+            {"name": "s", "type": ["string", "null"]},
+        ],
+    }
+    rows = [(1, "a"), (None, "b"), (3, None), (None, None), (-(2**40), "ü")]
+    src = tmp_path / "src"
+    src.mkdir()
+    path = str(src / "part-0.avro")
+    write_container(path, schema, rows)
+    assert list(read_container(path)) == rows
+    # both columnar entry points refuse instead of misreading branch 0
+    assert pa_schema_from_avro(schema) is None
+    with pytest.raises(ValueError, match="null-first"):
+        _field_plan(["long", "null"])
+    pa_schema = pa.schema([("k", pa.int64()), ("s", pa.string())])
+    with pytest.raises(ValueError, match="null-first"):
+        list(read_container_arrow(path, pa_schema))
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array([r[0] for r in rows], pa.int64()),
+         pa.array([r[1] for r in rows], pa.string())],
+        schema=pa_schema,
+    )
+    with pytest.raises(ValueError, match="null-first"):
+        write_container_arrow(str(tmp_path / "x.avro"), schema, [batch])
+    # the Spark source reads the file through the row path
+    pytest.importorskip("pyspark")
+    from pyspark.sql import SparkSession
+
+    spark = (
+        SparkSession.builder.master("local[2]")
+        .appName("avro-null-second")
+        .config("spark.ui.enabled", "false")
+        .getOrCreate()
+    )
+    spark.dataSource.register(make_avro_source())
+    (src / "_SUCCESS").touch()
+    back = spark.read.format("avro_py").option("path", str(src)).load()
+    assert sorted(map(tuple, back.collect()), key=repr) == sorted(rows, key=repr)

@@ -2757,7 +2757,8 @@ def test_manifest_rejected_commit_stages_nothing(spark, tmp_path):
     or a failed staging write must leave data/ byte-identical — staging
     before validation orphaned parquet files that only a vacuum could
     reclaim, and an external retry staged a second copy (ADVICE r12).
-    A batch append is held to the same rule across all its frames."""
+    A batch append is held to the same rule across all its frames, and
+    a partitioned append to the same rule as a plain one."""
     import glob as _glob
     import os as _os
 
@@ -2766,6 +2767,7 @@ def test_manifest_rejected_commit_stages_nothing(spark, tmp_path):
     from t_mobile_data_fnt_etl_pipeline_aws_spark.sources.manifest_table import (
         CommitConflictError,
         commit_append,
+        commit_append_partitioned,
         commit_appends,
         current_version,
     )
@@ -2813,6 +2815,13 @@ def test_manifest_rejected_commit_stages_nothing(spark, tmp_path):
     )
     with _pytest.raises(Exception, match="staging boom"):
         commit_appends([ok, boom, ok], table, ["k"])
+    assert set(_glob.glob(_os.path.join(table, "data", "*"))) == data_files
+    assert not _glob.glob(_os.path.join(table, "_staging_*"))
+    assert current_version(table) == 1
+
+    # a partitioned append whose write raises stages nothing either
+    with _pytest.raises(Exception, match="staging boom"):
+        commit_append_partitioned(boom, table, "s", "identity", ["k"])
     assert set(_glob.glob(_os.path.join(table, "data", "*"))) == data_files
     assert not _glob.glob(_os.path.join(table, "_staging_*"))
     assert current_version(table) == 1
@@ -3383,7 +3392,9 @@ def test_table_constraints_semantics(spark, tmp_path):
     constraint NAMED; (3) ANSI semantics — a NULL predicate result
     PASSES (so NOT NULL needs an explicit IS NOT NULL constraint);
     (4) rejection stages nothing; (5) existing data is not
-    retro-validated; (6) duplicate add and missing drop reject."""
+    retro-validated; (6) duplicate add and missing drop reject; (7)
+    constraints survive an added column and a full replace; (8) add and
+    drop on an empty table reject with ValueError."""
     import datetime
     import glob as _glob
     import os as _os
@@ -3447,6 +3458,18 @@ def test_table_constraints_semantics(spark, tmp_path):
     )
     with _pytest.raises(mt.ConstraintViolation):
         mt.commit_merge_mor(spark, table, src, "k", ["k"])
+    # (7) the gate survives every commit kind — an added column and a
+    # full replace carry it forward — and still rejects afterwards
+    mt.commit_add_column(table, "note", "string")
+    mt.commit_replace(mt.read_version(spark, table).repartition(1), table, ["k"])
+    cons = mt.read_manifest(table, mt.current_version(table))["constraints"]
+    assert cons == {"v_positive": "v > 0"}
+    with _pytest.raises(mt.ConstraintViolation, match="v_positive"):
+        mt.commit_append(
+            spark.createDataFrame([(4, -1, d0)], ddl).repartition(1),
+            table,
+            ["k"],
+        )
     # drop, then the formerly-bad append lands
     mt.commit_drop_constraint(table, "v_positive")
     with _pytest.raises(ValueError, match="no such constraint"):
@@ -3456,6 +3479,12 @@ def test_table_constraints_semantics(spark, tmp_path):
     )
     got = {(r.k, r.v) for r in mt.read_version(spark, table).collect()}
     assert got == {(1, 10), (2, -5), (3, None), (4, -1)}
+    # (8) add and drop on an empty table reject with ValueError
+    empty = str(tmp_path / "cons_empty")
+    with _pytest.raises(ValueError, match="empty table"):
+        mt.commit_add_constraint(empty, "c", "k > 0")
+    with _pytest.raises(ValueError, match="empty table"):
+        mt.commit_drop_constraint(empty, "c")
 
 
 def test_row_lineage_semantics(spark, tmp_path):

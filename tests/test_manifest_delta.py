@@ -261,3 +261,77 @@ def test_files_table_distributed_partitioned_generation(spark, tmp_path):
     assert {r.partition for r in got} == {
         "2024-01-01", "2024-01-02", "2024-01-03", "2024-01-04", "2024-01-05"
     }
+
+
+def test_metadata_commits_carry_unowned_snapshot_fields(tmp_path):
+    """Every metadata-only commit changes only the fields it owns: the
+    other snapshot fields (and the live file list) equal the parent's.
+    CHECK constraints are a write gate, so they survive every commit
+    kind, RESTORE included. Pure metadata (no Spark): the seed is a
+    synthetic manifest with all six snapshot fields set."""
+    table = str(tmp_path / "carry")
+    mt._publish(
+        table, 1, "seed",
+        [
+            {"path": f"{table}/data/{m}.parquet", "rows": 5,
+             "stats": {"k": [1, 5]}, "partition": m, "ptransform": "month"}
+            for m in ("2021-01", "2021-02")
+        ],
+        [["k", "bigint"], ["w", "int"], ["ts", "timestamp_ntz"]],
+        deletes=[{"path": f"{table}/_deletes/p.parquet", "rows": 1}],
+        partition_spec={"col": "ts", "transform": "month"},
+        eq_deletes=[{"path": f"{table}/_deletes/e.parquet", "rows": 1, "col": "k"}],
+        defaults={"w": {"v": 0, "t": "int", "seq": 1}},
+        constraints={"k_pos": "k > 0"},
+    )
+    fields = (
+        "files", "schema", "deletes", "partition_spec", "eq_deletes",
+        "defaults", "constraints",
+    )
+    steps = [
+        (lambda: mt.commit_add_column(table, "tag", "string", default="x"),
+         {"schema", "defaults"}),
+        (lambda: mt.commit_widen_column(table, "w", "bigint"), {"schema"}),
+        (lambda: mt.commit_add_constraint(table, "w_pos", "w > 0"),
+         {"constraints"}),
+        (lambda: mt.commit_drop_constraint(table, "k_pos"), {"constraints"}),
+        (lambda: mt.compact_manifests(table), set()),
+        (lambda: mt.commit_drop_partition(table, ["2021-01"])[0], {"files"}),
+        (lambda: mt.evolve_partition_spec(table, None), {"partition_spec"}),
+    ]
+    for commit, owned in steps:
+        v = commit()
+        parent, child = mt.read_manifest(table, v - 1), mt.read_manifest(table, v)
+        for f in fields:
+            if f not in owned:
+                assert child.get(f) == parent.get(f), (child["op"], f)
+        assert all(child.get(f) != parent.get(f) for f in owned), child["op"]
+    head = mt.read_manifest(table, mt.current_version(table))
+    # RESTORE owns the content fields (they come from the target) but
+    # keeps the head's constraints
+    v = mt.rollback(table, 1)
+    restored, seed = mt.read_manifest(table, v), mt.read_manifest(table, 1)
+    for f in fields:
+        want = head if f == "constraints" else seed
+        assert restored.get(f) == want.get(f), f
+    assert restored["constraints"] == {"w_pos": "w > 0"}
+    # a shallow clone starts from the source head, every field included
+    clone = str(tmp_path / "clone")
+    assert mt.clone_table(table, clone) == 1
+    src, dst = mt.read_manifest(table, v), mt.read_manifest(clone, 1)
+    for f in fields:
+        assert dst.get(f) == src.get(f), f
+
+
+def test_delta_record_is_sniffed_as_delta(tmp_path):
+    """The stored-form keys sit in the record header for BOTH storage
+    paths, so ``_sniff_delta``'s 512-byte probe finds them even when the
+    snapshot-level fields are long — a miss makes
+    files_table_distributed parse a delta segment as a full snapshot."""
+    table = str(tmp_path / "sniff")
+    files = [{"path": f"{table}/data/f.parquet", "rows": 1, "stats": {}}]
+    schema = [[f"column_with_a_long_name_{i}", "bigint"] for i in range(40)]
+    mt._publish(table, 1, "seed", files, schema)
+    mt._publish(table, 2, "meta", mt.read_manifest(table, 1)["files"], schema)
+    assert mt._read_raw(table, 2).get("format") == "delta"
+    assert mt._sniff_delta(_os.path.join(table, "_log", "v00002.json"))
