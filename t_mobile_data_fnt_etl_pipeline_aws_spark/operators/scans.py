@@ -1040,8 +1040,9 @@ def q_sink_avro_python(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition per file — at 100 TB the feed parallelizes file-wise
     exactly like the built-in connectors.
 
-    Types covered end-to-end: long, string, double, timestamp-micros
-    (logical), and a ["null", string] union (the derived priority_opt
+    Types covered end-to-end: long, string, double,
+    local-timestamp-micros (logical; ``o_orderdate`` loads as
+    TIMESTAMP_NTZ), and ["null", T] unions (the derived priority_opt
     is NULL for every 7th order — nullable columns are what separate
     Avro unions from plain primitives on the wire).
 
@@ -1169,10 +1170,9 @@ def q_events_protobuf_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     wanted = {1: ("event_id", "int64"), 4: ("event_type", "string"),
               5: ("value", "double")}
 
-    # Round-16 (guide §4.2): both stages run the BATCH codec — the wire
-    # bytes and decoded values are identical to the per-message path
-    # (pinned byte-for-byte by tests/test_protobuf_codec.py); only the
-    # per-row Python dispatch is gone.
+    # Both stages run the BATCH codec (guide §4.2): no per-row Python
+    # dispatch. tests/test_protobuf_codec.py pins its bytes and values to
+    # the per-message reference codec in tests/protobuf_reference.py.
     def encode_batches(batches):
         import pandas as pd
 
@@ -1262,11 +1262,11 @@ def q_events_protobuf_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
         encode_event_envelope,
     )
 
-    # Round-16 (guide §4.2): envelopes are encoded/decoded by the BATCH
-    # envelope codec — byte- and value-identical to the per-message path
-    # (pinned by tests/test_protobuf_codec.py); the grouped-map boundary
-    # runs on Arrow (applyInArrow) so no per-group pandas frames are
-    # built. The wire shape and the one grouping shuffle are unchanged.
+    # Envelopes are encoded/decoded by the envelope codec (guide §4.2),
+    # whose bytes and values tests/test_protobuf_codec.py pins to the
+    # per-message reference codec in tests/protobuf_reference.py; the
+    # grouped-map boundary runs on Arrow (applyInArrow) so no per-group
+    # pandas frames are built.
     def encode_group(tbl):
         import pyarrow as pa
 

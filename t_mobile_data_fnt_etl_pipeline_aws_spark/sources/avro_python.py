@@ -23,23 +23,23 @@ Files"):
   * ``string``/``bytes`` — long length prefix + payload;
   * ``boolean`` — one byte;
   * ``null`` — zero bytes;
-  * unions ``["null", T]`` — long branch index, then the branch value
-    (how Avro spells nullability);
+  * two-branch unions with one ``"null"`` branch, in either order
+    (``["null", T]`` or ``[T, "null"]``) — long branch index, then the
+    branch value (how Avro spells nullability). Any other union is
+    refused with a ``ValueError`` naming the field;
   * logical types ``date`` (int days since epoch),
     ``timestamp-micros`` and ``local-timestamp-micros`` (long) —
     annotations over the primitives.
 
     TIMEZONE CONTRACT: ``TimestampType`` maps to ``timestamp-micros``
-    (UTC-instant semantics per the Avro spec), but the codec encodes the
-    naive wall clock Spark hands the Python worker — which is the
-    session-local rendering (``spark.sql.session.timeZone``). The two
-    agree only when the session timezone is UTC, which ``session.py``
-    pins for every session this package creates. Under any other session
-    timezone, in-session round-trips stay self-consistent but an external
-    spec-compliant Avro reader would see instants skewed by the session
-    offset; set the session to UTC before writing files meant for
-    external consumers. ``TimestampNTZType`` → ``local-timestamp-micros``
-    is wall-clock by definition and has no such caveat;
+    and is carried as ``pa.timestamp("us", tz="UTC")``. The codec
+    stores the Arrow instant's microseconds since the Unix epoch,
+    whatever the session timezone (``spark.sql.session.timeZone``) or
+    the host timezone, and reads them back as the same instants — the
+    UTC-instant semantics the Avro spec gives the type, so external
+    spec-compliant readers agree with Spark. ``TimestampNTZType`` →
+    ``local-timestamp-micros`` (``pa.timestamp("us")``) stores the wall
+    clock, which is zone-less by definition;
   * container file — magic ``Obj\\x01``, a map<string,bytes> of file
     metadata (``avro.schema`` JSON + ``avro.codec``), a 16-byte sync
     marker, then blocks of (row count, byte length, payload, sync).
@@ -49,20 +49,30 @@ Files"):
     schema resolved per-file against each file's embedded writer
     schema: writer-only fields dropped, reader-only fields take their
     declared defaults, int->long/double, long->double, float->double
-    promotions (``read_container_resolved`` / the ``readerSchema``
-    source option);
+    promotions (``read_container_arrow_resolved`` / the
+    ``readerSchema`` source option);
   * a STREAMING landing-dir source (``make_avro_stream_source``) that
     tails immutable file drops through the Python Data Source offset
     protocol.
 
+One codec path: every schema and every caller — the batch writer, the
+batch reader, ``readerSchema`` resolution and the stream reader — runs
+the columnar block codec. The writer receives pyarrow RecordBatches
+(``DataSourceArrowWriter``) and encodes each block with numpy scatters
+(``write_container_arrow``); the readers decode each block with a
+schema-specialized generated loop and yield RecordBatches
+(``read_container_arrow``). The row-at-a-time codec lives in
+``tests/avro_reference.py`` as the reference the tests hold these
+bytes and values to.
+
 Scale design: the codec is deliberately split from the Spark plumbing —
-``write_container``/``read_container`` run EXECUTOR-side inside the
-data source's ``write``/``read`` (one container file per task / one
-input partition per file), so a 1000-file Avro feed fans out to 1000
-tasks and no row ever transits the driver. The reader uses the
-WRITER's schema embedded in each file header (Avro's self-describing
-core property), so schema inference at plan time opens one header —
-O(1) driver work regardless of data volume.
+it runs EXECUTOR-side inside the data source's ``write``/``read`` (one
+container file per task / one input partition per file, each file read
+once per task), so a 1000-file Avro feed fans out to 1000 tasks and no
+row ever transits the driver. The reader uses the WRITER's schema
+embedded in each file header (Avro's self-describing core property), so
+schema inference at plan time reads one file — the first in the listing
+— whatever the number of files.
 
 Reference repo has no code (/root/reference/README.md:1-2); the
 surface follows SURVEY §2.1's ingest-format contract.
@@ -70,15 +80,14 @@ surface follows SURVEY §2.1's ingest-format contract.
 
 from __future__ import annotations
 
-import datetime as _dt
 import json
 import os
-import struct
+import textwrap
 import zlib
-from collections.abc import Iterable, Iterator
+
+from .protobuf_python import _VARINT_READ, _np_varint_lens, _np_write_varints
 
 AVRO_MAGIC = b"Obj\x01"
-_EPOCH = _dt.date(1970, 1, 1)
 
 # ---------------------------------------------------------------------------
 # primitive binary encoding (spec: Binary Encoding)
@@ -123,11 +132,8 @@ def _read_bytes(buf: bytes, pos: int) -> tuple[bytes, int]:
     return buf[pos : pos + n], pos + n
 
 
-# ---------------------------------------------------------------------------
-# schema-driven value codec. A "type" here is the parsed Avro schema
-# fragment: a string primitive name, a {"type": ..., "logicalType": ...}
-# dict, or a ["null", T] union list.
-# ---------------------------------------------------------------------------
+# A "type" below is a parsed Avro schema fragment: a string primitive
+# name, a {"type": ..., "logicalType": ...} dict, or a union list.
 
 
 def _base_type(typ) -> str:
@@ -140,74 +146,6 @@ def _logical(typ) -> str | None:
     if isinstance(typ, dict):
         return typ.get("logicalType")
     return None
-
-
-def _encode_value(typ, v, out: bytearray) -> None:
-    if isinstance(typ, list):  # union — spec: long branch index + value
-        if v is None:
-            _write_long(out, typ.index("null"))
-            return
-        branch = next(i for i, t in enumerate(typ) if t != "null")
-        _write_long(out, branch)
-        _encode_value(typ[branch], v, out)
-        return
-    base = _base_type(typ)
-    logical = _logical(typ)
-    if base in ("long", "int"):
-        if logical == "date" and isinstance(v, _dt.date):
-            v = (v - _EPOCH).days
-        elif logical in ("timestamp-micros", "local-timestamp-micros") and isinstance(
-            v, _dt.datetime
-        ):
-            # naive datetimes are encoded as micros since the naive epoch —
-            # integer arithmetic, independent of the host timezone
-            v = (v - _dt.datetime(1970, 1, 1)) // _dt.timedelta(microseconds=1)
-        _write_long(out, int(v))
-    elif base == "double":
-        out.extend(struct.pack("<d", float(v)))
-    elif base == "string":
-        _write_bytes(out, v.encode("utf-8"))
-    elif base == "bytes":
-        _write_bytes(out, bytes(v))
-    elif base == "boolean":
-        out.append(1 if v else 0)
-    elif base == "null":
-        pass
-    else:  # pragma: no cover - guarded by schema construction
-        raise ValueError(f"unsupported Avro type: {typ!r}")
-
-
-def _decode_value(typ, buf: bytes, pos: int):
-    if isinstance(typ, list):
-        branch, pos = _read_long(buf, pos)
-        if typ[branch] == "null":
-            return None, pos
-        return _decode_value(typ[branch], buf, pos)
-    base = _base_type(typ)
-    logical = _logical(typ)
-    if base in ("long", "int"):
-        v, pos = _read_long(buf, pos)
-        if logical == "date":
-            return _EPOCH + _dt.timedelta(days=v), pos
-        if logical in ("timestamp-micros", "local-timestamp-micros"):
-            return (
-                _dt.datetime(1970, 1, 1) + _dt.timedelta(microseconds=v),
-                pos,
-            )
-        return v, pos
-    if base == "double":
-        return struct.unpack_from("<d", buf, pos)[0], pos + 8
-    if base == "string":
-        raw, pos = _read_bytes(buf, pos)
-        return raw.decode("utf-8"), pos
-    if base == "bytes":
-        raw, pos = _read_bytes(buf, pos)
-        return bytes(raw), pos
-    if base == "boolean":
-        return buf[pos] != 0, pos + 1
-    if base == "null":
-        return None, pos
-    raise ValueError(f"unsupported Avro type: {typ!r}")  # pragma: no cover
 
 
 # ---------------------------------------------------------------------------
@@ -223,18 +161,7 @@ def _sync_marker(seed: str) -> bytes:
     return hashlib.sha256(seed.encode()).digest()[:16]
 
 
-def write_container(
-    path: str,
-    schema: dict,
-    rows: Iterable[tuple],
-    *,
-    codec: str = "null",
-    block_rows: int = 4096,
-) -> int:
-    """Write rows (tuples aligned with ``schema['fields']``) as an Avro
-    object container file. Returns the row count."""
-    field_types = [f["type"] for f in schema["fields"]]
-    sync = _sync_marker(os.path.basename(path))
+def _container_header(schema: dict, codec: str, sync: bytes) -> bytes:
     header = bytearray()
     header.extend(AVRO_MAGIC)
     meta = {
@@ -247,52 +174,28 @@ def write_container(
         _write_bytes(header, v)
     _write_long(header, 0)  # end of metadata map
     header.extend(sync)
-
-    n_total = 0
-    with open(path, "wb") as fh:
-        fh.write(header)
-        block = bytearray()
-        n_block = 0
-
-        def _flush() -> None:
-            nonlocal block, n_block
-            if not n_block:
-                return
-            payload = bytes(block)
-            if codec == "deflate":
-                # spec Required Codecs: raw deflate (zlib with -15 window,
-                # no zlib header/checksum). Level 6 (zlib default) —
-                # round-15: level 9 spent ~3× the compressor CPU for a
-                # marginal ratio gain on these blocks; any level is
-                # spec-conformant and decodes identically.
-                comp = zlib.compressobj(6, zlib.DEFLATED, -15)
-                payload = comp.compress(payload) + comp.flush()
-            elif codec != "null":
-                raise ValueError(f"unsupported codec {codec!r}")
-            frame = bytearray()
-            _write_long(frame, n_block)
-            _write_long(frame, len(payload))
-            fh.write(frame)
-            fh.write(payload)
-            fh.write(sync)
-            block = bytearray()
-            n_block = 0
-
-        for row in rows:
-            for typ, v in zip(field_types, row):
-                _encode_value(typ, v, block)
-            n_block += 1
-            n_total += 1
-            if n_block >= block_rows:
-                _flush()
-        _flush()
-    return n_total
+    return bytes(header)
 
 
-def read_header(path: str) -> tuple[dict, str, bytes, int]:
-    """Parse an Avro container header -> (schema, codec, sync, data_pos)."""
-    with open(path, "rb") as fh:
-        buf = fh.read()
+def _frame_block(payload: bytes, n_block: int, codec: str, sync: bytes) -> bytes:
+    if codec == "deflate":
+        # spec Required Codecs: raw deflate (zlib with -15 window, no
+        # zlib header/checksum). Level 6 (zlib default): level 9 spent
+        # ~3x the compressor CPU for a marginal ratio gain on these
+        # blocks; any level is spec-conformant and decodes identically.
+        comp = zlib.compressobj(6, zlib.DEFLATED, -15)
+        payload = comp.compress(payload) + comp.flush()
+    elif codec != "null":
+        raise ValueError(f"unsupported codec {codec!r}")
+    frame = bytearray()
+    _write_long(frame, n_block)
+    _write_long(frame, len(payload))
+    frame.extend(payload)
+    frame.extend(sync)
+    return bytes(frame)
+
+
+def _parse_header(buf: bytes, path: str) -> tuple[dict, str, bytes, int]:
     if buf[:4] != AVRO_MAGIC:
         raise ValueError(f"not an Avro container file: {path}")
     pos = 4
@@ -315,32 +218,37 @@ def read_header(path: str) -> tuple[dict, str, bytes, int]:
     return schema, codec, sync, pos
 
 
-def read_container(path: str) -> Iterator[tuple]:
-    """Decode every row of an Avro object container file using the
-    WRITER's schema embedded in the header (self-describing read)."""
-    schema, codec, sync, pos = read_header(path)
-    field_types = [f["type"] for f in schema["fields"]]
+def read_header(path: str) -> tuple[dict, str, bytes, int]:
+    """Parse an Avro container header -> (schema, codec, sync, data_pos).
+    Reads the whole file; the plan-time ``schema()`` calls use it."""
+    with open(path, "rb") as fh:
+        return _parse_header(fh.read(), path)
+
+
+def _read_blocks(path: str):
+    """Read a container file ONCE -> (writer schema, iterator over its
+    blocks as (row count, inflated payload)). Every block's sync marker
+    is checked before its payload is handed out."""
     with open(path, "rb") as fh:
         buf = fh.read()
-    while pos < len(buf):
-        n_rows, pos = _read_long(buf, pos)
-        n_bytes, pos = _read_long(buf, pos)
-        payload = buf[pos : pos + n_bytes]
-        pos += n_bytes
-        if buf[pos : pos + 16] != sync:
-            raise ValueError(f"sync marker mismatch in {path}")
-        pos += 16
-        if codec == "deflate":
-            payload = zlib.decompress(payload, -15)
-        elif codec != "null":
-            raise ValueError(f"unsupported codec {codec!r}")
-        ppos = 0
-        for _ in range(n_rows):
-            row = []
-            for typ in field_types:
-                v, ppos = _decode_value(typ, payload, ppos)
-                row.append(v)
-            yield tuple(row)
+    schema, codec, sync, pos = _parse_header(buf, path)
+
+    def blocks(pos: int = pos):
+        while pos < len(buf):
+            n_rows, pos = _read_long(buf, pos)
+            n_bytes, pos = _read_long(buf, pos)
+            payload = buf[pos : pos + n_bytes]
+            pos += n_bytes
+            if buf[pos : pos + 16] != sync:
+                raise ValueError(f"sync marker mismatch in {path}")
+            pos += 16
+            if codec == "deflate":
+                payload = zlib.decompress(payload, -15)
+            elif codec != "null":
+                raise ValueError(f"unsupported codec {codec!r}")
+            yield n_rows, payload
+
+    return schema, blocks()
 
 
 # ---------------------------------------------------------------------------
@@ -412,46 +320,67 @@ def spark_ddl_from_avro(schema: dict) -> str:
 
 
 # ---------------------------------------------------------------------------
-# Arrow transport (round-15, guide §4): the Python Data Source row path
-# pickles every row across the JVM↔Python boundary — measured ~2-3 s of
-# the q_scan_avro_python write at sf0.1 with the codec itself at ~0.3 s.
-# The writer receives pyarrow RecordBatches (DataSourceArrowWriter) and
-# the reader yields them, so the boundary is columnar both ways; the
-# spec codec underneath is unchanged. Types with engine-side timezone
-# semantics (plain timestamp-micros) stay on the row path — Arrow
-# transport must never change a value.
+# Columnar block codec (guide §4, §4.2): the Spark boundary is Arrow both
+# ways, and each container block moves through numpy/pyarrow — the
+# writer scatters whole columns into the block, the reader runs one
+# generated loop per block and assembles Arrow arrays from its captures.
 # ---------------------------------------------------------------------------
 
+#: Avro base type -> block-codec kind (date/timestamp logicals are
+#: annotations over int/long, so they fold into 'varint')
+_KINDS = {
+    "long": "varint",
+    "int": "varint",
+    "double": "double",
+    "string": "string",
+    "bytes": "bytes",
+    "boolean": "boolean",
+}
 
-def _optional_branch(typ: list):
-    """T of a null-first union ``["null", T]``, else None. It is the one
-    union shape the columnar codec handles: that codec writes and reads
-    branch 0 as null and branch 1 as the value. A degenerate ['null']
-    union, a multi-branch union (reachable via readerSchema; ADVICE r15)
-    and a null-second union such as ["long", "null"] (ADVICE r16) stay
-    on the row path, which decodes the real branch index."""
-    if len(typ) == 2 and typ[0] == "null" and typ[1] != "null":
-        return typ[1]
-    return None
+
+def _field_plan(name: str, typ) -> tuple[tuple[int, int] | None, str]:
+    """(branches, kind) for one flat Avro field. ``branches`` is None
+    for a plain field, else the (null, value) branch-index bytes of a
+    two-branch union with one "null" branch — 0x00 for index 0, 0x02
+    for index 1 (zigzag), in whichever order the schema lists them.
+    Raises ValueError naming the field for any other shape."""
+    branches = None
+    if isinstance(typ, list):
+        values = [t for t in typ if t != "null"]
+        if len(typ) != 2 or len(values) != 1:
+            raise ValueError(
+                f"Avro field {name!r}: union {typ!r} is not a two-branch "
+                'union with one "null" branch'
+            )
+        null_index = typ.index("null")
+        branches = (2 * null_index, 2 * (1 - null_index))
+        typ = values[0]
+    kind = _KINDS.get(_base_type(typ))
+    if kind is None:
+        raise ValueError(f"Avro field {name!r}: unsupported type {typ!r}")
+    return branches, kind
+
+
+def _field_specs(schema: dict) -> tuple:
+    return tuple(
+        (f["name"], *_field_plan(f["name"], f["type"])) for f in schema["fields"]
+    )
 
 
 def _pa_type_from_avro(typ):
-    """Arrow type for an Avro field type, or None when the field must
-    stay on the row path (tz-aware timestamps, unions other than
-    ``["null", T]``)."""
+    """Arrow type of an Avro field type (unions carry their non-null
+    branch's type; nullability lives in the Arrow validity bitmap)."""
     import pyarrow as pa
 
     if isinstance(typ, list):
-        branch = _optional_branch(typ)
-        return None if branch is None else _pa_type_from_avro(branch)
-    base = _base_type(typ)
+        typ = next(t for t in typ if t != "null")
     logical = _logical(typ)
     if logical == "date":
         return pa.date32()
+    if logical == "timestamp-micros":
+        return pa.timestamp("us", tz="UTC")
     if logical == "local-timestamp-micros":
         return pa.timestamp("us")
-    if logical == "timestamp-micros":
-        return None  # session-tz semantics: keep the row path
     return {
         "long": pa.int64(),
         "int": pa.int32(),
@@ -459,110 +388,23 @@ def _pa_type_from_avro(typ):
         "string": pa.string(),
         "bytes": pa.binary(),
         "boolean": pa.bool_(),
-    }.get(base)
+    }[_base_type(typ)]
 
 
 def pa_schema_from_avro(schema: dict):
-    """pyarrow schema for an Avro record, or None if any field is
-    Arrow-transport-unsafe."""
+    """pyarrow schema for an Avro record. Raises ValueError naming the
+    field for a shape the codec does not carry."""
     import pyarrow as pa
 
-    fields = []
-    for f in schema["fields"]:
-        t = _pa_type_from_avro(f["type"])
-        if t is None:
-            return None
-        fields.append(pa.field(f["name"], t))
-    return pa.schema(fields)
-
-
-def rows_to_arrow_batches(rows, pa_schema, batch_rows: int = 4096):
-    """Pack an iterator of value tuples into Arrow RecordBatches."""
-    import pyarrow as pa
-
-    buf = []
-
-    def _flush():
-        cols = list(zip(*buf)) if buf else [[] for _ in pa_schema]
-        return pa.RecordBatch.from_arrays(
-            [
-                pa.array(list(col), type=f.type)
-                for col, f in zip(cols, pa_schema)
-            ],
-            schema=pa_schema,
-        )
-
-    for r in rows:
-        buf.append(r)
-        if len(buf) >= batch_rows:
-            yield _flush()
-            buf = []
-    if buf:
-        yield _flush()
-
-
-# ---------------------------------------------------------------------------
-# Vectorized block codec (round-16, guide §4.2): the row-at-a-time
-# encode/decode loops above are kept as the reference (and the fallback
-# for Arrow-unsafe schemas), but the hot Spark paths move whole blocks
-# through numpy/pyarrow — identical bytes out, identical values in.
-# ---------------------------------------------------------------------------
-
-
-def _field_plan(typ) -> tuple[bool, str]:
-    """(nullable, kind) for a flat Avro field type; kind in
-    {'varint','double','string','bytes','boolean'} with date/timestamp
-    logicals folded into 'varint' (Arrow carries their integer repr).
-    Raises for shapes the vectorized codec does not cover — callers
-    fall back to the row path."""
-    nullable = False
-    if isinstance(typ, list):
-        if _optional_branch(typ) is None:
-            raise ValueError(f"not a null-first optional union: {typ!r}")
-        nullable = True
-        typ = typ[1]
-    base = _base_type(typ)
-    kind = {
-        "long": "varint",
-        "int": "varint",
-        "double": "double",
-        "string": "string",
-        "bytes": "bytes",
-        "boolean": "boolean",
-    }.get(base)
-    if kind is None:
-        raise ValueError(f"no vectorized codec for Avro type {typ!r}")
-    return nullable, kind
-
-
-def _np_varint_lens(u):
-    """Per-value zigzag-varint byte length (1..10) for a uint64 array."""
-    import numpy as np
-
-    lens = np.ones(u.shape, np.int64)
-    for k in range(1, 10):
-        lens += (u >= (np.uint64(1) << np.uint64(7 * k))).astype(np.int64)
-    return lens
-
-
-def _np_write_varints(buf, starts, u, lens) -> None:
-    """Scatter zigzag varints (values ``u`` uint64, byte lengths
-    ``lens``) into ``buf`` at ``starts`` — the vectorized twin of
-    ``_write_long``."""
-    import numpy as np
-
-    if not len(starts):
-        return
-    for k in range(int(lens.max())):
-        m = lens > k
-        grp = ((u[m] >> np.uint64(7 * k)) & np.uint64(0x7F)).astype(np.uint8)
-        cont = (lens[m] - 1 > k).astype(np.uint8) << 7
-        buf[starts[m] + k] = grp | cont
+    _field_specs(schema)
+    return pa.schema(
+        [pa.field(f["name"], _pa_type_from_avro(f["type"])) for f in schema["fields"]]
+    )
 
 
 def _encode_block_arrow(batch, field_specs) -> bytes:
     """Encode one Arrow RecordBatch (columns aligned with field_specs)
-    as a raw Avro block payload, byte-identical to the row encoder."""
+    as a raw Avro block payload."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -570,14 +412,15 @@ def _encode_block_arrow(batch, field_specs) -> bytes:
     n = batch.num_rows
     if n == 0:
         return b""
-    per_field = []  # (nullable, kind, valid, payload...) per field
+    per_field = []  # (branches, kind, valid, payload...) per field
     lens = np.zeros((len(field_specs), n), np.int64)
-    for j, (_name, nullable, kind) in enumerate(field_specs):
+    for j, (_name, branches, kind) in enumerate(field_specs):
         arr = batch.column(j)
         t = arr.type
         if pa.types.is_date32(t):
             arr = arr.view(pa.int32())
         elif pa.types.is_timestamp(t):
+            # any tz: the int64 storage is the epoch-micros instant
             arr = arr.view(pa.int64())
         valid = ~np.asarray(arr.is_null())
         if kind == "varint":
@@ -589,17 +432,17 @@ def _encode_block_arrow(batch, field_specs) -> bytes:
             ).astype(np.uint64)
             vlen = _np_varint_lens(u)
             vlen[~valid] = 0
-            per_field.append((nullable, kind, valid, u, vlen))
+            per_field.append((branches, kind, valid, u, vlen))
             lens[j] = vlen
         elif kind == "double":
             d = np.asarray(pc.fill_null(arr, 0.0), dtype=np.float64)
             vlen = np.where(valid, 8, 0)
-            per_field.append((nullable, kind, valid, d))
+            per_field.append((branches, kind, valid, d))
             lens[j] = vlen
         elif kind == "boolean":
             b = np.asarray(pc.fill_null(arr, False)).astype(np.uint8)
             vlen = np.where(valid, 1, 0)
-            per_field.append((nullable, kind, valid, b))
+            per_field.append((branches, kind, valid, b))
             lens[j] = vlen
         else:  # string / bytes
             if pa.types.is_string(t) or pa.types.is_binary(t):
@@ -614,11 +457,11 @@ def _encode_block_arrow(batch, field_specs) -> bytes:
             llen = _np_varint_lens(lu)
             vlen = np.where(valid, llen + plen, 0)
             per_field.append(
-                (nullable, kind, valid, lu, llen, plen, off[:-1], data)
+                (branches, kind, valid, lu, llen, plen, off[:-1], data)
             )
             lens[j] = vlen
-        if nullable:
-            lens[j] += 1  # union branch marker byte
+        if branches is not None:
+            lens[j] += 1  # union branch index byte
 
     flat = lens.T.ravel()  # row-major (row, field) order
     ends = np.cumsum(flat)
@@ -627,10 +470,11 @@ def _encode_block_arrow(batch, field_specs) -> bytes:
     buf = np.empty(total, np.uint8)
 
     for j, spec in enumerate(per_field):
-        nullable, kind, valid = spec[0], spec[1], spec[2]
+        branches, kind, valid = spec[0], spec[1], spec[2]
         st = starts_all[:, j]
-        if nullable:
-            buf[st] = np.where(valid, 2, 0).astype(np.uint8)
+        if branches is not None:
+            null_byte, value_byte = branches
+            buf[st] = np.where(valid, value_byte, null_byte).astype(np.uint8)
             vst = st + 1
         else:
             if not valid.all():
@@ -666,36 +510,6 @@ def _encode_block_arrow(batch, field_specs) -> bytes:
     return buf.tobytes()
 
 
-def _container_header(schema: dict, codec: str, sync: bytes) -> bytes:
-    header = bytearray()
-    header.extend(AVRO_MAGIC)
-    meta = {
-        "avro.schema": json.dumps(schema, separators=(",", ":")).encode(),
-        "avro.codec": codec.encode(),
-    }
-    _write_long(header, len(meta))
-    for k, v in meta.items():
-        _write_bytes(header, k.encode())
-        _write_bytes(header, v)
-    _write_long(header, 0)  # end of metadata map
-    header.extend(sync)
-    return bytes(header)
-
-
-def _frame_block(payload: bytes, n_block: int, codec: str, sync: bytes) -> bytes:
-    if codec == "deflate":
-        comp = zlib.compressobj(6, zlib.DEFLATED, -15)
-        payload = comp.compress(payload) + comp.flush()
-    elif codec != "null":
-        raise ValueError(f"unsupported codec {codec!r}")
-    frame = bytearray()
-    _write_long(frame, n_block)
-    _write_long(frame, len(payload))
-    frame.extend(payload)
-    frame.extend(sync)
-    return bytes(frame)
-
-
 def write_container_arrow(
     path: str,
     schema: dict,
@@ -704,16 +518,14 @@ def write_container_arrow(
     codec: str = "null",
     block_rows: int = 4096,
 ) -> int:
-    """``write_container`` twin fed by pyarrow RecordBatches: identical
-    header, identical ``block_rows``-row block boundaries (cut across
-    incoming batch edges), identical deflate level — byte-identical
-    files, ~10-20x less encode CPU (numpy scatter instead of per-value
-    Python)."""
+    """Write pyarrow RecordBatches (columns named like
+    ``schema['fields']``) as an Avro object container file. Blocks hold
+    ``block_rows`` rows each, cut across incoming batch edges, so the
+    bytes depend only on the rows, not on how they were batched.
+    Returns the row count."""
     import pyarrow as pa
 
-    field_specs = [
-        (f["name"], *_field_plan(f["type"])) for f in schema["fields"]
-    ]
+    field_specs = _field_specs(schema)
     names = [s[0] for s in field_specs]
     sync = _sync_marker(os.path.basename(path))
     n_total = 0
@@ -737,6 +549,12 @@ def write_container_arrow(
             return parts[0]
         return pa.Table.from_batches(parts).combine_chunks().to_batches()[0]
 
+    def _frame(blk) -> bytes:
+        nonlocal n_total
+        n_total += blk.num_rows
+        payload = _encode_block_arrow(blk, field_specs)
+        return _frame_block(payload, blk.num_rows, codec, sync)
+
     with open(path, "wb") as fh:
         fh.write(_container_header(schema, codec, sync))
         for batch in batches:
@@ -745,121 +563,53 @@ def write_container_arrow(
             pending.append(batch)
             npend += batch.num_rows
             while npend >= block_rows:
-                blk = _take(block_rows)
-                fh.write(
-                    _frame_block(
-                        _encode_block_arrow(blk, field_specs),
-                        blk.num_rows,
-                        codec,
-                        sync,
-                    )
-                )
-                n_total += blk.num_rows
+                fh.write(_frame(_take(block_rows)))
         if npend:
-            blk = _take(npend)
-            fh.write(
-                _frame_block(
-                    _encode_block_arrow(blk, field_specs),
-                    blk.num_rows,
-                    codec,
-                    sync,
-                )
-            )
-            n_total += blk.num_rows
+            fh.write(_frame(_take(npend)))
     return n_total
 
 
 #: compiled per-schema block decoders, keyed by the field-spec signature
 _DECODER_CACHE: dict[str, object] = {}
 
-#: code template per (kind, nullable) — {i} = capture index. The loop
-#: body is exec-compiled once per schema so the hot path has no
+#: zero-indent read of one value into capture c{i} (strings and bytes
+#: also capture their length into c{j}). The generated loop has no
 #: per-value dispatch, no function calls and no datetime construction
 #: (logical ints stay ints; Arrow assembly types them).
-_SNIPPETS = {
-    ("varint", False): """
-        a = buf[pos]; pos += 1
-        if a & 128:
-            a &= 127; s = 7
-            while True:
-                b_ = buf[pos]; pos += 1
-                a |= (b_ & 127) << s
-                if b_ < 128:
-                    break
-                s += 7
-        c{i}((a >> 1) ^ -(a & 1))
-""",
-    ("varint", True): """
-        if buf[pos]:
-            pos += 1
-            a = buf[pos]; pos += 1
-            if a & 128:
-                a &= 127; s = 7
-                while True:
-                    b_ = buf[pos]; pos += 1
-                    a |= (b_ & 127) << s
-                    if b_ < 128:
-                        break
-                    s += 7
-            c{i}((a >> 1) ^ -(a & 1))
-        else:
-            pos += 1
-            c{i}(None)
-""",
-    ("double", False): """
-        c{i}(pos); pos += 8
-""",
-    ("double", True): """
-        if buf[pos]:
-            pos += 1
-            c{i}(pos); pos += 8
-        else:
-            pos += 1
-            c{i}(-1)
-""",
-    ("string", False): """
-        a = buf[pos]; pos += 1
-        if a & 128:
-            a &= 127; s = 7
-            while True:
-                b_ = buf[pos]; pos += 1
-                a |= (b_ & 127) << s
-                if b_ < 128:
-                    break
-                s += 7
-        n_ = (a >> 1) ^ -(a & 1)
-        c{i}(pos); c{j}(n_); pos += n_
-""",
-    ("string", True): """
-        if buf[pos]:
-            pos += 1
-            a = buf[pos]; pos += 1
-            if a & 128:
-                a &= 127; s = 7
-                while True:
-                    b_ = buf[pos]; pos += 1
-                    a |= (b_ & 127) << s
-                    if b_ < 128:
-                        break
-                    s += 7
-            n_ = (a >> 1) ^ -(a & 1)
-            c{i}(pos); c{j}(n_); pos += n_
-        else:
-            pos += 1
-            c{i}(-1); c{j}(0)
-""",
-    ("boolean", False): """
-        c{i}(buf[pos] != 0); pos += 1
-""",
-    ("boolean", True): """
-        if buf[pos]:
-            pos += 1
-            c{i}(buf[pos] != 0); pos += 1
-        else:
-            pos += 1
-            c{i}(None)
-""",
+_VALUE_READ = {
+    "varint": _VARINT_READ + "c{i}((a >> 1) ^ -(a & 1))\n",
+    "double": "c{i}(pos); pos += 8\n",
+    "string": _VARINT_READ
+    + "n_ = (a >> 1) ^ -(a & 1)\nc{i}(pos); c{j}(n_); pos += n_\n",
+    "boolean": "c{i}(buf[pos] != 0); pos += 1\n",
 }
+
+#: what the null branch of a union captures, per kind
+_NULL_CAPTURE = {
+    "varint": "c{i}(None)\n",
+    "double": "c{i}(-1)\n",
+    "string": "c{i}(-1); c{j}(0)\n",
+    "boolean": "c{i}(None)\n",
+}
+
+
+def _field_read(name: str, branches, kind: str, i: int) -> str:
+    """Zero-indent decode of one field. A union reads its branch byte
+    first and accepts only the two bytes its schema defines."""
+    kind = "string" if kind == "bytes" else kind
+    read = _VALUE_READ[kind].format(i=i, j=i + 1)
+    if branches is None:
+        return read
+    null_byte, value_byte = branches
+    return (
+        f"u_ = buf[pos]; pos += 1\nif u_ == {value_byte}:\n"
+        + textwrap.indent(read, "    ")
+        + f"elif u_ == {null_byte}:\n"
+        + textwrap.indent(_NULL_CAPTURE[kind].format(i=i, j=i + 1), "    ")
+        + "else:\n"
+        + "    raise ValueError('union branch byte %d in Avro field %r' "
+        + f"% (u_, {name!r}))\n"
+    )
 
 
 def _block_decoder(field_specs):
@@ -874,23 +624,15 @@ def _block_decoder(field_specs):
     binds = []
     body = []
     i = 0
-    for _name, nullable, kind in field_specs:
-        snip_kind = "string" if kind == "bytes" else kind
-        snip = _SNIPPETS[(snip_kind, nullable)]
-        if snip_kind == "string":
-            binds.append(f"    c{i} = caps[{i}].append")
-            binds.append(f"    c{i + 1} = caps[{i + 1}].append")
-            body.append(snip.format(i=i, j=i + 1))
-            i += 2
-        else:
-            binds.append(f"    c{i} = caps[{i}].append")
-            body.append(snip.format(i=i))
-            i += 1
+    for name, branches, kind in field_specs:
+        width = 2 if kind in ("string", "bytes") else 1
+        binds.extend(f"c{k} = caps[{k}].append\n" for k in range(i, i + width))
+        body.append(_field_read(name, branches, kind, i))
+        i += width
     src = (
         "def _decode(buf, n_rows, caps):\n"
-        + "\n".join(binds)
-        + "\n    pos = 0\n    for _ in range(n_rows):\n"
-        + "".join(body)
+        + textwrap.indent("".join(binds) + "pos = 0\nfor _ in range(n_rows):\n", "    ")
+        + textwrap.indent("".join(body), "        ")
         + "    return pos\n"
     )
     ns: dict = {}
@@ -908,7 +650,7 @@ def _assemble_block(caps, field_specs, pa_schema, payload, n_rows):
     buf_np = np.frombuffer(payload, np.uint8)
     arrays = []
     i = 0
-    for (_name, _nullable, kind), f in zip(field_specs, pa_schema):
+    for (_name, _branches, kind), f in zip(field_specs, pa_schema):
         if kind in ("varint", "boolean"):
             vals = caps[i]
             i += 1
@@ -967,36 +709,16 @@ def _assemble_block(caps, field_specs, pa_schema, payload, n_rows):
     return pa.RecordBatch.from_arrays(arrays, schema=pa_schema)
 
 
-def read_container_arrow(path: str, pa_schema=None):
-    """Columnar twin of ``read_container``: yields one pyarrow
-    RecordBatch per container block via the codegen decoder. Values are
-    identical to the row path (same varint/IEEE/UTF-8 decode, same null
-    semantics); only the materialization is columnar."""
-    schema, codec, sync, pos = read_header(path)
-    if pa_schema is None:
-        pa_schema = pa_schema_from_avro(schema)
-        if pa_schema is None:
-            raise ValueError(f"schema of {path} is not Arrow-safe")
-    field_specs = tuple(
-        (f["name"], *_field_plan(f["type"])) for f in schema["fields"]
-    )
+def _decode_blocks(path: str, schema: dict, blocks, pa_schema):
+    """RecordBatches of a file's blocks, decoded under its writer schema."""
+    field_specs = _field_specs(schema)
     decode, n_caps = _block_decoder(field_specs)
-    with open(path, "rb") as fh:
-        buf = fh.read()
-    while pos < len(buf):
-        n_rows, pos = _read_long(buf, pos)
-        n_bytes, pos = _read_long(buf, pos)
-        payload = buf[pos : pos + n_bytes]
-        pos += n_bytes
-        if buf[pos : pos + 16] != sync:
-            raise ValueError(f"sync marker mismatch in {path}")
-        pos += 16
-        if codec == "deflate":
-            payload = zlib.decompress(payload, -15)
-        elif codec != "null":
-            raise ValueError(f"unsupported codec {codec!r}")
+    for n_rows, payload in blocks:
         caps = [[] for _ in range(n_caps)]
-        end = decode(payload, n_rows, caps)
+        try:
+            end = decode(payload, n_rows, caps)
+        except ValueError as e:
+            raise ValueError(f"{e} in {path}") from None
         if end != len(payload):
             raise ValueError(
                 f"block decode consumed {end} of {len(payload)} bytes in {path}"
@@ -1004,260 +726,14 @@ def read_container_arrow(path: str, pa_schema=None):
         yield _assemble_block(caps, field_specs, pa_schema, payload, n_rows)
 
 
-# ---------------------------------------------------------------------------
-# Python Data Source plumbing (SPARK-44076): format name "avro_py"
-# ---------------------------------------------------------------------------
-
-
-def make_avro_source():
-    """Build the DataSource class lazily (pyspark.sql.datasource import
-    kept out of module import time so the codec half stays usable in
-    plain-Python tests and executor workers)."""
-    import uuid
-
-    from pyspark import TaskContext
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceArrowWriter,
-        DataSourceReader,
-        DataSourceWriter,
-        InputPartition,
-        WriterCommitMessage,
-    )
-
-    class _FilePartition(InputPartition):
-        def __init__(self, path: str):
-            self.path = path
-
-    class _Staged(WriterCommitMessage):
-        def __init__(self, tmp_name: str):
-            self.tmp_name = tmp_name
-
-    class AvroPyWriter(DataSourceWriter):
-        """Two-phase commit: tasks stage `.tmp-*` container files (task
-        attempt id in the name so speculative retries never collide);
-        the driver-side commit promotes them to part-NNNNN.avro and
-        writes _SUCCESS, so readers never observe a torn write."""
-
-        def __init__(self, options, schema, overwrite: bool):
-            self.dir = options["path"]
-            self.codec = options.get("codec", "null")
-            self.avro_schema = avro_schema_from_spark(schema)
-            os.makedirs(self.dir, exist_ok=True)
-            if overwrite:
-                for f in os.listdir(self.dir):
-                    os.remove(os.path.join(self.dir, f))
-
-        def write(self, iterator):
-            ctx = TaskContext.get()
-            tmp = (
-                f".tmp-{ctx.partitionId()}-{ctx.taskAttemptId()}-"
-                f"{uuid.uuid4().hex[:8]}"
-            )
-            names = [f["name"] for f in self.avro_schema["fields"]]
-            write_container(
-                os.path.join(self.dir, tmp),
-                self.avro_schema,
-                (tuple(row[n] for n in names) for row in iterator),
-                codec=self.codec,
-            )
-            return _Staged(tmp)
-
-        # commit/abort live on the BASE writer (ADVICE r15: they were
-        # accidentally moved onto the Arrow subclass, leaving the row
-        # path — still selected for Arrow-unsafe schemas — with the
-        # inherited no-op commit, so staged .tmp-* files were never
-        # promoted). The Arrow subclass inherits them.
-        def commit(self, messages) -> None:
-            for i, m in enumerate(messages):
-                os.replace(
-                    os.path.join(self.dir, m.tmp_name),
-                    os.path.join(self.dir, f"part-{i:05d}.avro"),
-                )
-            with open(os.path.join(self.dir, "_SUCCESS"), "w") as fh:
-                fh.write("ok")
-
-        def abort(self, messages) -> None:
-            for m in messages:
-                if m is not None:
-                    try:
-                        os.remove(os.path.join(self.dir, m.tmp_name))
-                    except OSError:
-                        pass
-
-    class AvroPyArrowWriter(DataSourceArrowWriter, AvroPyWriter):
-        """Arrow-transport variant (round-15, guide §4): same staging /
-        commit / abort protocol, but tasks receive pyarrow RecordBatches
-        and encode them COLUMN-WISE through the numpy block encoder
-        (round-16, guide §4.2: the per-row Python encode loop was the
-        hot half of every avro_py write). Byte output is identical to
-        the row path. Chosen by ``writer()`` whenever every field is
-        Arrow-transport-safe."""
-
-        def write(self, iterator):
-            ctx = TaskContext.get()
-            tmp = (
-                f".tmp-{ctx.partitionId()}-{ctx.taskAttemptId()}-"
-                f"{uuid.uuid4().hex[:8]}"
-            )
-            write_container_arrow(
-                os.path.join(self.dir, tmp),
-                self.avro_schema,
-                iterator,
-                codec=self.codec,
-            )
-            return _Staged(tmp)
-
-    class AvroPyReader(DataSourceReader):
-        def __init__(self, options):
-            self.dir = options["path"]
-            rs = options.get("readerschema")  # option keys arrive lowercased
-            self.reader_schema = json.loads(rs) if rs else None
-
-        def partitions(self):
-            if not os.path.exists(os.path.join(self.dir, "_SUCCESS")):
-                raise FileNotFoundError(f"uncommitted avro_py sink: {self.dir}")
-            return [
-                _FilePartition(os.path.join(self.dir, f))
-                for f in sorted(os.listdir(self.dir))
-                if f.endswith(".avro")
-            ]
-
-        def read(self, partition):
-            writer_schema, _, _, _ = read_header(partition.path)
-            eff = self.reader_schema or writer_schema
-            # Columnar decode when BOTH schemas are Arrow-safe
-            # (round-16, guide §4.2): the codegen block decoder yields
-            # RecordBatches without per-value dispatch. Values are
-            # identical — the row path below stays the reference and
-            # the fallback for tz-aware timestamps / exotic unions.
-            pa_eff = pa_schema_from_avro(eff)
-            if pa_eff is not None and pa_schema_from_avro(writer_schema) is not None:
-                if self.reader_schema is not None:
-                    yield from read_container_arrow_resolved(
-                        partition.path, self.reader_schema, pa_eff
-                    )
-                else:
-                    yield from read_container_arrow(partition.path, pa_eff)
-                return
-            if self.reader_schema is not None:
-                # spec Schema Resolution: consumer-side evolution —
-                # resolve each file's WRITER schema against the reader
-                # schema executor-side (defaults, drops, promotions)
-                rows = read_container_resolved(
-                    partition.path, self.reader_schema
-                )
-            else:
-                rows = read_container(partition.path)
-            # Arrow transport when every field is safe (round-15, guide
-            # §4): yield RecordBatches instead of per-row pickled tuples;
-            # values are identical — only the boundary format changes.
-            if pa_eff is None:
-                yield from rows
-            else:
-                yield from rows_to_arrow_batches(rows, pa_eff)
-
-    class AvroPySource(DataSource):
-        @classmethod
-        def name(cls) -> str:
-            return "avro_py"
-
-        def schema(self) -> str:
-            # self-describing: open ONE header at plan time (O(1) driver
-            # work) and derive the Spark DDL from the writer's schema —
-            # or from the READER schema when evolution is requested.
-            rs = self.options.get("readerschema")
-            if rs:
-                return spark_ddl_from_avro(json.loads(rs))
-            d = self.options["path"]
-            files = sorted(f for f in os.listdir(d) if f.endswith(".avro"))
-            if not files:
-                raise FileNotFoundError(f"no .avro files under {d}")
-            schema, _, _, _ = read_header(os.path.join(d, files[0]))
-            return spark_ddl_from_avro(schema)
-
-        def reader(self, schema) -> AvroPyReader:
-            return AvroPyReader(self.options)
-
-        def writer(self, schema, overwrite: bool) -> AvroPyWriter:
-            # Arrow transport when safe; row path otherwise (tz-aware
-            # timestamp values differ between the two transports, so
-            # those schemas keep the original path).
-            cls = (
-                AvroPyArrowWriter
-                if pa_schema_from_avro(avro_schema_from_spark(schema))
-                is not None
-                else AvroPyWriter
-            )
-            return cls(self.options, schema, overwrite)
-
-    return AvroPySource
-
-
-def make_avro_stream_source():
-    """Streaming half of the Avro surface: tail an Avro LANDING DIRECTORY
-    (the Kafka-less ingest pattern — an upstream system drops immutable
-    container files; the stream consumes them in name order).
-
-    Offset = count of files consumed over the SORTED listing, so the
-    determinism contract is the same one Spark's own FileStreamSource
-    documents: landing files must arrive with monotonically increasing
-    names (part-00000 counters, timestamped names) and are immutable
-    once visible. ``read`` consumes the next ≤ maxFilesPerBatch files;
-    ``readBetweenOffsets`` replays any committed file range
-    byte-identically (files are immutable, listing is sorted — a pure
-    function of the offset pair). Decoding runs through the same
-    spec-implemented codec as the batch source.
-    """
-    from pyspark.sql.datasource import (
-        DataSource,
-        SimpleDataSourceStreamReader,
-    )
-
-    class AvroDirStreamReader(SimpleDataSourceStreamReader):
-        def __init__(self, options):
-            self.dir = options["path"]
-            self.max_files = int(options.get("maxFilesPerBatch", "1"))
-
-        def _files(self) -> list[str]:
-            return sorted(
-                f for f in os.listdir(self.dir) if f.endswith(".avro")
-            )
-
-        def initialOffset(self) -> dict:
-            return {"idx": 0}
-
-        def read(self, start: dict):
-            files = self._files()
-            lo = int(start["idx"])
-            hi = min(lo + self.max_files, len(files))
-            rows: list[tuple] = []
-            for f in files[lo:hi]:
-                rows.extend(read_container(os.path.join(self.dir, f)))
-            return iter(rows), {"idx": hi}
-
-        def readBetweenOffsets(self, start: dict, end: dict):
-            files = self._files()
-            for f in files[int(start["idx"]) : int(end["idx"])]:
-                yield from read_container(os.path.join(self.dir, f))
-
-    class AvroStreamSource(DataSource):
-        @classmethod
-        def name(cls) -> str:
-            return "avro_py_stream"
-
-        def schema(self) -> str:
-            d = self.options["path"]
-            files = sorted(f for f in os.listdir(d) if f.endswith(".avro"))
-            if not files:
-                raise FileNotFoundError(f"no .avro files under {d}")
-            schema, _, _, _ = read_header(os.path.join(d, files[0]))
-            return spark_ddl_from_avro(schema)
-
-        def simpleStreamReader(self, schema) -> AvroDirStreamReader:
-            return AvroDirStreamReader(self.options)
-
-    return AvroStreamSource
+def read_container_arrow(path: str, pa_schema=None):
+    """Decode an Avro object container file under the WRITER's schema
+    embedded in its header (self-describing read): one pyarrow
+    RecordBatch per container block. The file is read once."""
+    schema, blocks = _read_blocks(path)
+    if pa_schema is None:
+        pa_schema = pa_schema_from_avro(schema)
+    yield from _decode_blocks(path, schema, blocks, pa_schema)
 
 
 # ---------------------------------------------------------------------------
@@ -1280,19 +756,10 @@ def _nonnull_base(typ) -> str:
     return _base_type(typ)
 
 
-def _resolve_value(reader_t, v):
-    """Promote a decoded writer value to the reader's type."""
-    if v is None:
-        return None
-    if _nonnull_base(reader_t) == "double" and isinstance(v, int):
-        return float(v)
-    return v
-
-
 def _resolution_plan(writer_schema: dict, reader_schema: dict) -> list:
     """Per reader field: ("copy", writer_idx, reader_t) | ("default",
-    value) — shared by the row and columnar resolved readers so the
-    spec's resolution/promotion checks cannot drift apart."""
+    value) — the spec's resolution and promotion checks, in one place
+    for the codec and the test-side reference."""
     writer_fields = writer_schema["fields"]
     by_name = {f["name"]: i for i, f in enumerate(writer_fields)}
     plan = []
@@ -1320,16 +787,19 @@ def _resolution_plan(writer_schema: dict, reader_schema: dict) -> list:
 
 
 def read_container_arrow_resolved(path: str, reader_schema: dict, pa_reader):
-    """Columnar twin of ``read_container_resolved``: decode the writer's
-    blocks via the codegen decoder, then apply the resolution plan
-    column-wise (defaults as literal columns, promotions as Arrow
-    casts — int->long/double, long->double, float->double, the same
-    value mapping ``_resolve_value`` applies row-wise)."""
+    """Decode a container file under a READER schema (spec: Schema
+    Resolution): fields match by NAME; writer-only fields are decoded
+    and dropped; reader-only fields take their declared ``default``
+    (literal columns); int->long/double, long->double, float->double
+    promotions apply as Arrow casts. This is how a consumer upgrades its
+    schema without rewriting the landed files — the evolution half of
+    the Avro contract. The file is read once."""
     import pyarrow as pa
 
-    writer_schema, _, _, _ = read_header(path)
+    writer_schema, blocks = _read_blocks(path)
     plan = _resolution_plan(writer_schema, reader_schema)
-    for wb in read_container_arrow(path, pa_schema_from_avro(writer_schema)):
+    pa_writer = pa_schema_from_avro(writer_schema)
+    for wb in _decode_blocks(path, writer_schema, blocks, pa_writer):
         arrays = []
         for step, f in zip(plan, pa_reader):
             if step[0] == "default":
@@ -1344,23 +814,205 @@ def read_container_arrow_resolved(path: str, reader_schema: dict, pa_reader):
         yield pa.RecordBatch.from_arrays(arrays, schema=pa_reader)
 
 
-def read_container_resolved(path: str, reader_schema: dict) -> Iterator[tuple]:
-    """Decode a container file under a READER schema (spec: Schema
-    Resolution): fields match by NAME; writer-only fields are decoded
-    and dropped; reader-only fields take their declared ``default``;
-    int->long/double, long->double, float->double promotions apply.
-    This is how a consumer upgrades its schema without rewriting the
-    landed files — the evolution half of the Avro contract.
-    """
-    writer_schema, _, _, _ = read_header(path)
-    plan = _resolution_plan(writer_schema, reader_schema)
+# ---------------------------------------------------------------------------
+# Python Data Source plumbing (SPARK-44076): format name "avro_py"
+# ---------------------------------------------------------------------------
 
-    for row in read_container(path):
-        out = []
-        for step in plan:
-            if step[0] == "default":
-                out.append(step[1])
+
+def make_avro_source():
+    """Build the DataSource class lazily (pyspark.sql.datasource import
+    kept out of module import time so the codec half stays usable in
+    plain-Python tests and executor workers)."""
+    import uuid
+
+    from pyspark import TaskContext
+    from pyspark.sql.datasource import (
+        DataSource,
+        DataSourceArrowWriter,
+        DataSourceReader,
+        InputPartition,
+        WriterCommitMessage,
+    )
+
+    class _FilePartition(InputPartition):
+        def __init__(self, path: str):
+            self.path = path
+
+    class _Staged(WriterCommitMessage):
+        def __init__(self, tmp_name: str):
+            self.tmp_name = tmp_name
+
+    class AvroPyWriter(DataSourceArrowWriter):
+        """Two-phase commit: tasks stage `.tmp-*` container files (task
+        attempt id in the name so speculative retries never collide);
+        the driver-side commit promotes them to part-NNNNN.avro and
+        writes _SUCCESS, so readers never observe a torn write. Tasks
+        receive pyarrow RecordBatches and encode them column-wise."""
+
+        def __init__(self, options, schema, overwrite: bool):
+            self.dir = options["path"]
+            self.codec = options.get("codec", "null")
+            self.avro_schema = avro_schema_from_spark(schema)
+            os.makedirs(self.dir, exist_ok=True)
+            if overwrite:
+                for f in os.listdir(self.dir):
+                    os.remove(os.path.join(self.dir, f))
+
+        def write(self, iterator):
+            ctx = TaskContext.get()
+            tmp = (
+                f".tmp-{ctx.partitionId()}-{ctx.taskAttemptId()}-"
+                f"{uuid.uuid4().hex[:8]}"
+            )
+            write_container_arrow(
+                os.path.join(self.dir, tmp),
+                self.avro_schema,
+                iterator,
+                codec=self.codec,
+            )
+            return _Staged(tmp)
+
+        def commit(self, messages) -> None:
+            for i, m in enumerate(messages):
+                os.replace(
+                    os.path.join(self.dir, m.tmp_name),
+                    os.path.join(self.dir, f"part-{i:05d}.avro"),
+                )
+            with open(os.path.join(self.dir, "_SUCCESS"), "w") as fh:
+                fh.write("ok")
+
+        def abort(self, messages) -> None:
+            for m in messages:
+                if m is not None:
+                    try:
+                        os.remove(os.path.join(self.dir, m.tmp_name))
+                    except OSError:
+                        pass
+
+    class AvroPyReader(DataSourceReader):
+        def __init__(self, options):
+            self.dir = options["path"]
+            rs = options.get("readerschema")  # option keys arrive lowercased
+            self.reader_schema = json.loads(rs) if rs else None
+
+        def partitions(self):
+            if not os.path.exists(os.path.join(self.dir, "_SUCCESS")):
+                raise FileNotFoundError(f"uncommitted avro_py sink: {self.dir}")
+            return [
+                _FilePartition(os.path.join(self.dir, f))
+                for f in sorted(os.listdir(self.dir))
+                if f.endswith(".avro")
+            ]
+
+        def read(self, partition):
+            if self.reader_schema is None:
+                yield from read_container_arrow(partition.path)
             else:
-                _, wi, rt = step
-                out.append(_resolve_value(rt, row[wi]))
-        yield tuple(out)
+                # spec Schema Resolution: consumer-side evolution —
+                # resolve each file's WRITER schema against the reader
+                # schema executor-side (defaults, drops, promotions)
+                yield from read_container_arrow_resolved(
+                    partition.path,
+                    self.reader_schema,
+                    pa_schema_from_avro(self.reader_schema),
+                )
+
+    class AvroPySource(DataSource):
+        @classmethod
+        def name(cls) -> str:
+            return "avro_py"
+
+        def schema(self) -> str:
+            # self-describing: read the FIRST file at plan time and
+            # derive the Spark DDL from the writer's schema — or from
+            # the READER schema when evolution is requested.
+            rs = self.options.get("readerschema")
+            if rs:
+                return spark_ddl_from_avro(json.loads(rs))
+            d = self.options["path"]
+            files = sorted(f for f in os.listdir(d) if f.endswith(".avro"))
+            if not files:
+                raise FileNotFoundError(f"no .avro files under {d}")
+            schema, _, _, _ = read_header(os.path.join(d, files[0]))
+            return spark_ddl_from_avro(schema)
+
+        def reader(self, schema) -> AvroPyReader:
+            return AvroPyReader(self.options)
+
+        def writer(self, schema, overwrite: bool) -> AvroPyWriter:
+            return AvroPyWriter(self.options, schema, overwrite)
+
+    return AvroPySource
+
+
+def make_avro_stream_source():
+    """Streaming half of the Avro surface: tail an Avro LANDING DIRECTORY
+    (the Kafka-less ingest pattern — an upstream system drops immutable
+    container files; the stream consumes them in name order).
+
+    Offset = count of files consumed over the SORTED listing, so the
+    determinism contract is the same one Spark's own FileStreamSource
+    documents: landing files must arrive with monotonically increasing
+    names (part-00000 counters, timestamped names) and are immutable
+    once visible. ``read`` consumes the next ≤ maxFilesPerBatch files;
+    ``readBetweenOffsets`` replays any committed file range
+    byte-identically (files are immutable, listing is sorted — a pure
+    function of the offset pair). Both decode through the same columnar
+    codec as the batch source and hand Spark RecordBatches.
+    """
+    from pyspark.sql.datasource import (
+        DataSource,
+        SimpleDataSourceStreamReader,
+    )
+
+    class AvroDirStreamReader(SimpleDataSourceStreamReader):
+        def __init__(self, options):
+            self.dir = options["path"]
+            self.max_files = int(options.get("maxFilesPerBatch", "1"))
+
+        def _files(self) -> list[str]:
+            return sorted(
+                f for f in os.listdir(self.dir) if f.endswith(".avro")
+            )
+
+        def _batches(self, names: list[str]):
+            # a list iterator: Spark copies the prefetched iterator of
+            # ``read`` to replay it, which a generator cannot do
+            return iter(
+                [
+                    b
+                    for f in names
+                    for b in read_container_arrow(os.path.join(self.dir, f))
+                ]
+            )
+
+        def initialOffset(self) -> dict:
+            return {"idx": 0}
+
+        def read(self, start: dict):
+            files = self._files()
+            lo = int(start["idx"])
+            hi = min(lo + self.max_files, len(files))
+            return self._batches(files[lo:hi]), {"idx": hi}
+
+        def readBetweenOffsets(self, start: dict, end: dict):
+            files = self._files()
+            return self._batches(files[int(start["idx"]) : int(end["idx"])])
+
+    class AvroStreamSource(DataSource):
+        @classmethod
+        def name(cls) -> str:
+            return "avro_py_stream"
+
+        def schema(self) -> str:
+            d = self.options["path"]
+            files = sorted(f for f in os.listdir(d) if f.endswith(".avro"))
+            if not files:
+                raise FileNotFoundError(f"no .avro files under {d}")
+            schema, _, _, _ = read_header(os.path.join(d, files[0]))
+            return spark_ddl_from_avro(schema)
+
+        def simpleStreamReader(self, schema) -> AvroDirStreamReader:
+            return AvroDirStreamReader(self.options)
+
+    return AvroStreamSource

@@ -6,41 +6,46 @@ Like ``from_avro`` (see sources/avro_python.py), Spark's
 not ship, and no ``google.protobuf`` wheel is installed (SURVEY §2.1
 exclusion note). The protobuf WIRE FORMAT, however, is public and small
 (https://protobuf.dev/programming-guides/encoding/), so this module
-implements it directly for the scalar types an event feed needs:
+implements it directly for the shapes the event queries move:
 
   * wire type 0 (VARINT)  — int64/uint64/bool (little-endian 7-bit
     groups, high bit = continuation); sint64 adds zigzag;
   * wire type 1 (I64)     — double, 8-byte little-endian;
   * wire type 2 (LEN)     — string/bytes, varint length prefix; also
-    NESTED MESSAGES (LEN-framed sub-message bytes) and PACKED repeated
-    numerics (one LEN field holding concatenated scalar payloads — the
-    proto3 default; unpacked form accepted on decode per the spec);
-    repeated strings/messages repeat the tag per element;
+    NESTED MESSAGES (LEN-framed sub-message bytes);
   * wire type 5 (I32)     — float, 4-byte little-endian;
   * a field = tag varint ``(field_number << 3) | wire_type`` + payload;
     a message = concatenated fields (order-insensitive on decode).
 
 Proto3 semantics are honored: scalar fields equal to their default
-(0, 0.0, "", false) are OMITTED on encode and materialized back on
-decode — the property that makes sparse event payloads cheap on the
-wire.
+(0, 0.0, "", false; -0.0 is not a default) are OMITTED on encode and
+materialized back on decode — the property that makes sparse event
+payloads cheap on the wire.
 
-The decoder takes a *projection*: only requested field numbers are
-materialized; every other field is SKIPPED structurally (varints
-consumed, LEN payloads jumped over by their length prefix) without
-decoding — protobuf's column-pruning analogue, and the reason partial
-decode of a wide message costs O(bytes skipped), not O(fields parsed).
-Both halves run executor-side under mapInPandas (Arrow batches); no
-row ever transits the driver.
+One codec path per caller, each batch-at-a-time:
+
+  * FLAT scalar messages (the event firehose shape) —
+    ``encode_flat_batch`` scatters whole numpy columns into N messages;
+    ``decode_flat_batch`` runs one generated loop over them and takes a
+    *projection*: only requested field numbers are materialized, every
+    other field is SKIPPED structurally (varints consumed, LEN payloads
+    jumped over by their length prefix) — protobuf's column-pruning
+    analogue, so partial decode of a wide message costs O(bytes
+    skipped), not O(fields parsed);
+  * per-entity ENVELOPES ``{user_id; repeated Event{event_id, value}}``
+    — ``encode_event_envelope`` / ``decode_event_envelopes``.
+
+Both run executor-side inside Arrow-batch map stages; no row ever
+transits the driver. The general per-message codec (nested and
+repeated kinds, packed and unpacked repeated numerics) lives in
+``tests/protobuf_reference.py`` as the reference the tests hold these
+bytes and values to.
 
 Reference repo has no code (/root/reference/README.md:1-2); the
 surface follows SURVEY §2.1's ingest-format contract.
 """
 
 from __future__ import annotations
-
-import math as _math
-import struct
 
 VARINT, I64, LEN, I32 = 0, 1, 2, 5
 
@@ -52,16 +57,6 @@ _WIRE = {
     "float": I32,
     "string": LEN,
     "bytes": LEN,
-}
-
-_DEFAULTS = {
-    "int64": 0,
-    "sint64": 0,
-    "bool": False,
-    "double": 0.0,
-    "float": 0.0,
-    "string": "",
-    "bytes": b"",
 }
 
 
@@ -92,130 +87,6 @@ def _kind_base(kind) -> str:
     return kind[0] if isinstance(kind, tuple) else kind
 
 
-def _encode_scalar(kind: str, v, out: bytearray) -> None:
-    """Tag-less payload encoding for one scalar value."""
-    if kind == "int64":
-        # proto wire: negative int64 is 10-byte two's-complement varint
-        _write_varint(out, v & 0xFFFFFFFFFFFFFFFF)
-    elif kind == "sint64":
-        _write_varint(out, (v << 1) ^ (v >> 63))
-    elif kind == "bool":
-        _write_varint(out, 1 if v else 0)
-    elif kind == "double":
-        out.extend(struct.pack("<d", v))
-    elif kind == "float":
-        out.extend(struct.pack("<f", v))
-    elif kind == "string":
-        raw = v.encode("utf-8")
-        _write_varint(out, len(raw))
-        out.extend(raw)
-    elif kind == "bytes":
-        _write_varint(out, len(v))
-        out.extend(v)
-    else:  # pragma: no cover - guarded by schema construction
-        raise ValueError(f"unsupported scalar kind {kind!r}")
-
-
-def _decode_scalar(kind: str, buf: bytes, pos: int):
-    if kind == "int64":
-        u, pos = _read_varint(buf, pos)
-        return u - (1 << 64) if u >= 1 << 63 else u, pos
-    if kind == "sint64":
-        u, pos = _read_varint(buf, pos)
-        return (u >> 1) ^ -(u & 1), pos
-    if kind == "bool":
-        u, pos = _read_varint(buf, pos)
-        return u != 0, pos
-    if kind == "double":
-        return struct.unpack_from("<d", buf, pos)[0], pos + 8
-    if kind == "float":
-        return struct.unpack_from("<f", buf, pos)[0], pos + 4
-    if kind == "string":
-        ln, pos = _read_varint(buf, pos)
-        return buf[pos : pos + ln].decode("utf-8"), pos + ln
-    if kind == "bytes":
-        ln, pos = _read_varint(buf, pos)
-        return bytes(buf[pos : pos + ln]), pos + ln
-    raise ValueError(f"unsupported scalar kind {kind!r}")  # pragma: no cover
-
-
-_PACKABLE = {"int64", "sint64", "bool", "double", "float"}
-
-
-def _is_default(base: str, v) -> bool:
-    """Proto3 default test with sign-aware zero compare: -0.0 == 0.0
-    under ``==`` but is NOT the default and must be emitted (else it
-    decodes back as +0.0 and flips sign under hash-compare oracles).
-    The ``v == 0.0`` short-circuit keeps the hot encode path at one
-    equality compare per field — the copysign bit test runs only for
-    actual zeros (a per-field struct.pack bit compare measurably slowed
-    the nested-envelope bench ~1.3×)."""
-    if base in ("double", "float"):
-        return v == 0.0 and _math.copysign(1.0, v) > 0.0
-    return v == _DEFAULTS[base]
-
-
-def encode_message(schema: dict, values: dict) -> bytes:
-    """Encode one message. ``schema`` maps field name -> (field_number,
-    kind), where kind is a scalar name, ("message", sub_schema), or
-    ("repeated", inner_kind). Proto3 semantics: default-valued scalars,
-    absent sub-messages, and empty repeateds are omitted from the wire;
-    repeated numerics are PACKED (one LEN field holding concatenated
-    payloads — the proto3 default), repeated strings/bytes/messages
-    repeat the tag per element."""
-    out = bytearray()
-    for name, (num, kind) in schema.items():
-        v = values.get(name)
-        base = _kind_base(kind)
-        if base == "message":
-            # Only absence (None) omits a sub-message; a present-but-empty
-            # dict {} must hit the wire as a zero-length LEN field so it
-            # decodes back as {} rather than collapsing to None.
-            if v is None:
-                continue
-            payload = encode_message(kind[1], v)
-            _write_varint(out, (num << 3) | LEN)
-            _write_varint(out, len(payload))
-            out.extend(payload)
-        elif base == "repeated":
-            if not v:
-                continue
-            inner = kind[1]
-            ibase = _kind_base(inner)
-            if ibase in _PACKABLE:
-                packed = bytearray()
-                for elem in v:
-                    _encode_scalar(ibase, elem, packed)
-                _write_varint(out, (num << 3) | LEN)
-                _write_varint(out, len(packed))
-                out.extend(packed)
-            elif ibase == "message":
-                for elem in v:
-                    payload = encode_message(inner[1], elem)
-                    _write_varint(out, (num << 3) | LEN)
-                    _write_varint(out, len(payload))
-                    out.extend(payload)
-            else:  # repeated string/bytes: one LEN field per element
-                for elem in v:
-                    _write_varint(out, (num << 3) | _WIRE[ibase])
-                    _encode_scalar(ibase, elem, out)
-        else:
-            if v is None or _is_default(base, v):
-                continue
-            _write_varint(out, (num << 3) | _WIRE[base])
-            _encode_scalar(base, v, out)
-    return bytes(out)
-
-
-def _default_for(kind):
-    base = _kind_base(kind)
-    if base == "repeated":
-        return []
-    if base == "message":
-        return None
-    return _DEFAULTS[base]
-
-
 def _skip_field(wire: int, buf: bytes, pos: int) -> int:
     if wire == VARINT:
         _, pos = _read_varint(buf, pos)
@@ -240,11 +111,8 @@ def _as_wanted(spec: dict) -> dict:
 
 
 # ---------------------------------------------------------------------------
-# Vectorized batch codec (round-16, guide §4.2): the per-message
-# encode_message/decode_message above stay the reference (and the only
-# path for nested/repeated shapes); FLAT scalar messages — the event
-# firehose shape — move whole Arrow/numpy batches at once. Bytes out and
-# values in are identical to the row path (tests pin both).
+# Vectorized batch codec (guide §4.2): whole Arrow/numpy batches at once.
+# The varint helpers below are shared with the Avro block codec.
 # ---------------------------------------------------------------------------
 
 
@@ -274,7 +142,7 @@ def _np_write_varints(buf, starts, u, lens) -> None:
 
 def encode_flat_batch(schema: dict, cols: dict):
     """Vectorized proto3 encode of N FLAT scalar messages — byte-wise
-    identical to calling ``encode_message`` per row (same field order,
+    identical to the per-message reference encoder (same field order,
     same default-omission incl. the -0.0 rule). ``cols`` maps field
     name -> sequence (numpy-coercible numerics/bools; str/bytes/None
     sequences for LEN fields). Returns ``(payload: bytes, offsets:
@@ -399,7 +267,8 @@ def _flat_decoder(wanted: dict):
     ``fn(buf, offsets, n, caps)`` walks each message's tag stream once,
     captures only the wanted field numbers (value for varint kinds,
     offsets for doubles/strings) and skips everything else by wire
-    type — the same projection semantics as ``decode_message``."""
+    type — the same projection semantics as the per-message reference
+    decoder."""
     import textwrap
 
     wanted = _as_wanted(wanted)
@@ -503,7 +372,8 @@ def decode_flat_batch(buf: bytes, offsets, wanted: dict) -> dict:
     back-to-back in ``buf`` at ``offsets`` (N+1 bounds). Returns
     name -> column: numpy arrays for numerics/bools, a pyarrow
     StringArray/BinaryArray for LEN kinds (proto3 defaults materialized
-    exactly like ``decode_message``: 0 / 0.0 / False / '' / b'')."""
+    exactly like the per-message reference decoder: 0 / 0.0 / False /
+    '' / b'')."""
     import numpy as np
     import pyarrow as pa
 
@@ -562,108 +432,56 @@ def decode_flat_batch(buf: bytes, offsets, wanted: dict) -> dict:
 
 def encode_event_envelope(user_id: int, event_ids, values) -> bytes:
     """Encode ONE ``{user_id; repeated Event{event_id, value}}``
-    envelope — byte-identical to ``encode_message`` over the same
-    values (proto3 default omission for user_id==0, event_id==0 and
-    +0.0 values; one LEN-framed sub-message per event). Small groups
-    run an inlined Python loop (measured 2.7x faster than the numpy
-    scatter below the ~1k-event crossover: ~30 numpy calls dominate at
-    per-user envelope grain); large groups take the vectorized path."""
-    if len(event_ids) < 1024:
-        import math
-        import struct as _struct
+    envelope — byte-identical to the per-message reference encoder over
+    the same values (proto3 default omission for user_id==0,
+    event_id==0 and +0.0 values; one LEN-framed sub-message per event).
+    An inlined Python loop: at per-user envelope grain it measured 2.7x
+    faster than a numpy scatter, whose ~30 array calls per envelope
+    dominate below ~1k events, and the largest envelope of the fixture
+    ``events`` table holds under 100."""
+    import math
+    import struct as _struct
 
-        out = bytearray()
-        ap = out.append
-        ext = out.extend
-        if user_id:
-            ap(0x08)
-            u = user_id & 0xFFFFFFFFFFFFFFFF
+    out = bytearray()
+    ap = out.append
+    ext = out.extend
+    if user_id:
+        ap(0x08)
+        _write_varint(out, user_id & 0xFFFFFFFFFFFFFFFF)
+    pack = _struct.pack
+    cs = math.copysign
+    for e, v in zip(
+        event_ids.tolist() if hasattr(event_ids, "tolist") else event_ids,
+        values.tolist() if hasattr(values, "tolist") else values,
+    ):
+        sub = bytearray()
+        sap = sub.append
+        if e:
+            sap(0x08)
+            u = e & 0xFFFFFFFFFFFFFFFF
             while True:
                 b = u & 0x7F
                 u >>= 7
                 if u:
-                    ap(b | 0x80)
+                    sap(b | 0x80)
                 else:
-                    ap(b)
+                    sap(b)
                     break
-        pack = _struct.pack
-        cs = math.copysign
-        for e, v in zip(
-            event_ids.tolist() if hasattr(event_ids, "tolist") else event_ids,
-            values.tolist() if hasattr(values, "tolist") else values,
-        ):
-            sub = bytearray()
-            sap = sub.append
-            if e:
-                sap(0x08)
-                u = e & 0xFFFFFFFFFFFFFFFF
-                while True:
-                    b = u & 0x7F
-                    u >>= 7
-                    if u:
-                        sap(b | 0x80)
-                    else:
-                        sap(b)
-                        break
-            if v != 0.0 or cs(1.0, v) < 0.0:
-                sap(0x11)
-                sub += pack("<d", v)
-            n = len(sub)
-            ap(0x12)
-            while True:
-                b = n & 0x7F
-                n >>= 7
-                if n:
-                    ap(b | 0x80)
-                else:
-                    ap(b)
-                    break
-            ext(sub)
-        return bytes(out)
-    return _encode_event_envelope_np(user_id, event_ids, values)
-
-
-def _encode_event_envelope_np(user_id: int, event_ids, values) -> bytes:
-    """Vectorized envelope encode (numpy scatter) for large groups."""
-    import numpy as np
-
-    eid = np.asarray(event_ids, np.int64)
-    val = np.asarray(values, np.float64)
-    u_eid = eid.astype(np.uint64)
-    emit_id = eid != 0
-    idl = _np_varint_lens(u_eid)
-    id_part = np.where(emit_id, 1 + idl, 0)
-    emit_v = ~((val == 0.0) & ~np.signbit(val))
-    v_part = np.where(emit_v, 9, 0)
-    sub_len = id_part + v_part
-    sl = _np_varint_lens(sub_len.astype(np.uint64))
-    ev_len = 1 + sl + sub_len
-    head = bytearray()
-    if user_id:
-        _write_varint(head, (1 << 3) | VARINT)
-        _write_varint(head, user_id & 0xFFFFFFFFFFFFFFFF)
-    h = len(head)
-    if not len(ev_len):
-        return bytes(head)
-    ends = h + np.cumsum(ev_len)
-    starts = ends - ev_len
-    buf = np.empty(int(ends[-1]), np.uint8)
-    if h:
-        buf[:h] = np.frombuffer(bytes(head), np.uint8)
-    buf[starts] = (2 << 3) | LEN  # 0x12
-    _np_write_varints(buf, starts + 1, sub_len.astype(np.uint64), sl)
-    p = starts + 1 + sl
-    pi = p[emit_id]
-    buf[pi] = (1 << 3) | VARINT  # 0x08
-    _np_write_varints(buf, pi + 1, u_eid[emit_id], idl[emit_id])
-    pv = (p + id_part)[emit_v]
-    buf[pv] = (2 << 3) | I64  # 0x11
-    dv = val[emit_v]
-    if len(dv):
-        buf[pv[:, None] + np.arange(1, 9)] = (
-            dv.astype("<f8").view(np.uint8).reshape(-1, 8)
-        )
-    return buf.tobytes()
+        if v != 0.0 or cs(1.0, v) < 0.0:
+            sap(0x11)
+            sub += pack("<d", v)
+        n = len(sub)
+        ap(0x12)
+        while True:
+            b = n & 0x7F
+            n >>= 7
+            if n:
+                ap(b | 0x80)
+            else:
+                ap(b)
+                break
+        ext(sub)
+    return bytes(out)
 
 
 def decode_event_envelopes(buf: bytes, offsets):
@@ -671,7 +489,7 @@ def decode_event_envelopes(buf: bytes, offsets):
     flatten to columns: ``(user_ids, event_ids, value_offsets)`` where
     a value offset of -1 means the proto3 default 0.0 (gather the 8-byte
     doubles vectorized from ``buf``). Row order and defaults match
-    ``decode_message`` + per-event Python flatten exactly."""
+    the per-message reference decoder + a per-event flatten exactly."""
     users: list = []
     eids: list = []
     voffs: list = []
@@ -758,53 +576,3 @@ def decode_event_envelopes(buf: bytes, offsets):
             ea(e_)
             va(vo)
     return users, eids, voffs
-
-
-def decode_message(buf: bytes, wanted: dict) -> dict:
-    """Decode one message, materializing ONLY the fields in ``wanted``
-    (field_number -> (name, kind) with the same kind grammar as
-    encode_message — encode-form schemas are accepted too; a wanted
-    ("message", sub_spec) projects into the sub-message recursively).
-    All other fields are skipped structurally by wire type. Missing
-    fields get proto3 defaults ([] for repeated, None for absent
-    sub-messages). Packed AND unpacked encodings of repeated numerics
-    are both accepted, per the spec."""
-    wanted = _as_wanted(wanted)
-    out = {name: _default_for(kind) for name, kind in wanted.values()}
-    pos = 0
-    n = len(buf)
-    while pos < n:
-        tag, pos = _read_varint(buf, pos)
-        num, wire = tag >> 3, tag & 0x7
-        spec = wanted.get(num)
-        if spec is None:
-            pos = _skip_field(wire, buf, pos)
-            continue
-        name, kind = spec
-        base = _kind_base(kind)
-        if base == "message":
-            ln, pos = _read_varint(buf, pos)
-            out[name] = decode_message(buf[pos : pos + ln], kind[1])
-            pos += ln
-        elif base == "repeated":
-            inner = kind[1]
-            ibase = _kind_base(inner)
-            if ibase == "message":
-                ln, pos = _read_varint(buf, pos)
-                out[name].append(
-                    decode_message(buf[pos : pos + ln], inner[1])
-                )
-                pos += ln
-            elif ibase in _PACKABLE and wire == LEN:
-                ln, pos = _read_varint(buf, pos)
-                end = pos + ln
-                while pos < end:
-                    v, pos = _decode_scalar(ibase, buf, pos)
-                    out[name].append(v)
-            else:  # unpacked numeric, or string/bytes element
-                v, pos = _decode_scalar(ibase, buf, pos)
-                out[name].append(v)
-        else:
-            v, pos = _decode_scalar(base, buf, pos)
-            out[name] = v
-    return out

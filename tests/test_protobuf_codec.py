@@ -1,15 +1,14 @@
-"""Unit tests for the pure-Python protobuf wire-format codec
-(sources/protobuf_python.py) — the protobuf docs' own byte vectors,
-proto3 default omission, projected decode with structural skips. Pure
-Python; the Spark integration is covered by the q_events_protobuf_decode
-oracle mirror in test_queries.py."""
+"""Unit tests for the pure-Python protobuf wire-format codec — the
+protobuf docs' own byte vectors, proto3 default omission and projected
+decode with structural skips on the per-message reference
+(tests/protobuf_reference.py), and byte/value identity of the batch
+codecs in sources/protobuf_python.py with it. Pure Python; the Spark
+integration is covered by the q_events_protobuf_decode oracle mirror in
+test_queries.py."""
 
 import pytest
 
-from t_mobile_data_fnt_etl_pipeline_aws_spark.sources.protobuf_python import (
-    decode_message,
-    encode_message,
-)
+from tests.protobuf_reference import decode_message, encode_message
 
 SCHEMA = {
     "event_id": (1, "int64"),
@@ -327,7 +326,7 @@ def test_sqlite_identifier_validation(tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# round-16 vectorized batch codec: byte-identity with the row path
+# vectorized batch codecs: byte-identity with the per-message reference
 # ---------------------------------------------------------------------------
 
 _EVENT_SCHEMA = {
@@ -369,7 +368,6 @@ def _event_cols(n):
 def test_encode_flat_batch_byte_identical():
     from t_mobile_data_fnt_etl_pipeline_aws_spark.sources.protobuf_python import (
         encode_flat_batch,
-        encode_message,
     )
 
     n = 2000
@@ -397,7 +395,6 @@ def test_encode_flat_batch_byte_identical():
 def test_decode_flat_batch_matches_row_decode():
     from t_mobile_data_fnt_etl_pipeline_aws_spark.sources.protobuf_python import (
         decode_flat_batch,
-        decode_message,
         encode_flat_batch,
     )
 
@@ -414,14 +411,13 @@ def test_decode_flat_batch_matches_row_decode():
 
 
 def test_event_envelope_encode_identical_both_paths():
-    """The small-group inline loop AND the large-group numpy scatter
-    must both reproduce encode_message byte-for-byte (incl. uid=0,
-    eid=0 and -0.0 omission edges)."""
+    """The envelope encoder must reproduce encode_message byte-for-byte
+    for small and large groups alike (incl. uid=0, eid=0 and -0.0
+    omission edges)."""
     import numpy as np
 
     from t_mobile_data_fnt_etl_pipeline_aws_spark.sources.protobuf_python import (
         encode_event_envelope,
-        encode_message,
     )
 
     env = {
@@ -433,7 +429,7 @@ def test_event_envelope_encode_identical_both_paths():
         ),
     }
     for uid in (0, 5, 2**40):
-        for n in (1, 130, 1500):  # spans the 1024 inline/numpy crossover
+        for n in (1, 130, 1500):
             eids = [0 if j == 0 else (j * 7 - 3) * 9973 for j in range(n)]
             vals = [
                 0.0 if j % 10 == 0 else (-0.0 if j % 11 == 1 else j * 0.5)
@@ -460,7 +456,6 @@ def test_decode_event_envelopes_matches_row_decode():
 
     from t_mobile_data_fnt_etl_pipeline_aws_spark.sources.protobuf_python import (
         decode_event_envelopes,
-        decode_message,
         encode_event_envelope,
     )
 
