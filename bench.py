@@ -1,24 +1,40 @@
 #!/usr/bin/env python
 """Benchmark harness (BASELINE.md protocol).
 
-Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON
-line: {"metric": ..., "value": <total sec>, "unit": "sec",
-"queries": {key: sec, ...}, "sf": ...}.
+Runs the headline queries (``registry.headline_keys()``: every key not
+registered with ``bench=False``) at $SPARK_GRAFT_SF_DIR (default: the
+sf0.1 test data) on local[$SPARK_GRAFT_CPUS] and prints TWO JSON
+lines: the full payload {"metric": ..., "value": <total sec>, "unit":
+"sec", "queries": {key: sec}, "counters": {key: {...}}, "sf": ...,
+"regressions": {...}}, then a compact summary that fits a ~2 KB tail
+capture. SPARK_GRAFT_BENCH_QUERIES=comma,separated,keys (or "all")
+times other keys; at sf0.01 such a subset run is the job-count audit.
 
-Protocol (BASELINE.md): warm one SparkSession; per query, one warm-up
-run then N timed runs (median reported). Timing covers full
-materialization via the noop sink — executors do all the work, no
-driver-collect tax, plans can't stay lazy.
+Protocol: one SparkSession, restarted every JVM_ROTATE_KEYS keys. Per
+key, one untimed warm-up then RUNS timed materializations through the
+noop sink (executors do all the work, no driver-collect tax), each run
+under its own job group and each preceded by ``clearCache()``, so no
+run reads blocks that ``materialized()`` persisted in an earlier one.
+Reported per key: the median seconds, and the median of Spark's own
+accounting for a timed run (jobs, stages that ran, shuffle-write bytes,
+bytes spilled to disk).
 
-Query set: every registered query except the bounded-slice micro
-queries would over-weight tiny fixed work; headline = the scale-bearing
-representatives of each SURVEY §2 block. Override with
-SPARK_GRAFT_BENCH_QUERIES=comma,separated,keys or "all".
+Gate: counters move with the code, not with host speed. A key is
+flagged when its job count rises, or its shuffle-write bytes rise by
+more than SHUFFLE_TOLERANCE, against the newest record holding that
+key with the same master, default_parallelism and sf. Wall time is
+reported, never gated. Every run writes its payload with exclusive
+create to BENCH_LOCAL_p<parallelism>_<UTC timestamp>.json, so records
+never overwrite each other.
+
+Cross-round comparison restarts at the first record of this protocol:
+older BENCH_LOCAL_r*.json records timed warm-cache runs and carry no
+counters, so the gate ignores them.
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import statistics
@@ -28,628 +44,151 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from t_mobile_data_fnt_etl_pipeline_aws_spark import get_spark  # noqa: E402
-from t_mobile_data_fnt_etl_pipeline_aws_spark.registry import all_queries  # noqa: E402
+from t_mobile_data_fnt_etl_pipeline_aws_spark.registry import (  # noqa: E402
+    all_queries,
+    headline_keys,
+)
 
-#: scale-bearing headline set (one+ per SURVEY §2 block)
-HEADLINE = [
-    "q_agg_hash",            # flagship scan→filter→hash-agg
-    "q_agg_cube",            # grouping-set expansion
-    "q_agg_distinct",        # distinct-agg expand
-    "q_join_inner_hash",     # dim chain join
-    "q_join_sortmerge",      # fact-fact shuffle join
-    "q_join_asof",           # as-of window pick-latest
-    "q_window_rank",         # 3-window rank battery
-    "q_window_range_frame",  # range-frame over events
-    "q_topk_per_group",      # WindowGroupLimit
-    "q_sort_multi",          # global sort
-    "q_union_all",           # set-op concat
-    "q_string_funcs",        # codegen scalar battery
-    "q_json_funcs",          # JSON extraction
-    "q_array_funcs",         # higher-order vector math
-    "q_udf_scalar_pandas",   # Arrow UDF boundary
-    "q_udtf_grouped_map",    # applyInPandas boundary
-    "q_dedup_exact",         # full-text hash agg
-    "q_dedup_fuzzy_minhash", # LSH banding pipeline
-    "q_text_token_stats",    # explode-heavy text path
-    "q_text_langid",         # self-join profile scoring
-    "q_sim_search_topk",     # brute-force ANN baseline
-    "q_knn_join_bucketed",   # LSH bucket join
-    "q_label_centroids",     # posexplode centroid agg
-    "q_stream_tumbling",     # event-time windowing (batch form)
-    "q_stream_session",      # session windows
-    "q_scan_parquet",        # raw scan throughput
-    "q_sink_parquet_partitioned",  # partitioned write+read
-    "q_pipeline_shipping_priority",  # TPC-H Q3 shape (3-way join + topk)
-    "q_pipeline_region_volume",      # TPC-H Q5 shape (6-way star join)
-    "q_etl_upsert",                  # full-join merge
-    "q_sim_search_topk_vectorized",  # BLAS ANN path
-    "q_join_salted_skew",            # skew-mitigated salted join
-    "q_join_theta_bucketed",         # geometric-bucket band equi-join
-    "q_chunk_overlap",               # token-window chunking (map-only explode)
-    "q_contamination_ngram",         # 5-gram decontamination semi-join
-    "q_pack_sequences",              # prefix-sum sequence packing
-    "q_etl_scd2",                    # SCD2 lag/lead validity chaining
-    "q_resample_ffill",              # daily-grid resample + forward fill
-    "q_cdc_compact",                 # change-log compaction pick-latest
-    "q_dq_referential",              # FK orphan audit (3 probe joins)
-    "q_join_asof_tolerance",         # union-merge LOCF as-of (no join)
-    "q_text_edit_distance",          # blocked levenshtein pair gen
-    "q_subquery_waiting_supplier",   # Q21 double decorrelation
-    "q_pipeline_market_share",       # Q8 conditional-share star join
-    "q_multimodal_framesample",      # map-only Arrow byte kernel
-    "q_agg_mad_outliers",            # double window-sort robust stats
-    "q_funnel_conversion",           # conditional-min funnel (1 shuffle)
-    "q_cohort_retention",            # cohort join + distinct triangle
-    # round-4 driver-window rotation: the 11 final registry keys
-    "q_scan_orc_roundtrip",          # ORC write+read roundtrip
-    "q_scan_text_lines",             # raw-line text source/sink
-    "q_scan_schema_evolution",       # mergeSchema across file generations
-    "q_catalog_table_roundtrip",     # saveAsTable + SQL read by name
-    "q_etl_compact_smallfiles",      # small-file compaction rewrite
-    "q_join_null_safe",              # hash-joinable <=> join
-    "q_agg_boolean",                 # every/any/count_if rollup
-    "q_agg_sketch_reaggregate",      # mergeable per-day HLL rollup
-    "q_profile_histogram",           # bounds-broadcast 10-bin histogram
-    "q_dq_drift",                    # per-category share drift
-    "q_sample_deterministic_k",      # md5-ordered exact-k sample
-    # round-4 llmprep/similarity additions
-    "q_text_unigram_logprob",        # vocab broadcast + decimal doc sums
-    "q_source_contamination_matrix", # fingerprint × source pair matrix
-    "q_corpus_train_report",         # dedup+quality funnel rollup
-    "q_topic_assign_nearest_centroid",  # broadcast-centroid E-step
-    "q_embedding_quantize_int8",     # map-only HOF quantization audit
-    "q_agg_approx_percentile",       # GK-sketch approximate quartiles
-    "q_join_point_in_time",          # union-merge LOCF PIT join
-    "q_dedup_incremental",           # fingerprint-candidate batch dedup
-    "q_text_tfidf_keywords",         # broadcast-idf TF-IDF top-3
-    "q_pattern_error_burst",         # run-length islands pattern scan
-    "q_window_moving_zscore",        # decimal windowed-moments anomaly gate
-    "q_sample_weighted_aes",         # A-ES weighted per-stratum sample
-    # round-5 additions
-    "q_join_asof_forward",           # union-merge LOCF next-event as-of
-    "q_dedup_containment",           # asymmetric subset-dup detection
-    "q_agg_weighted_median",         # decimal cumulative-weight crossing
-    "q_window_ewma",                 # 8-lag truncated-kernel EWMA
-    "q_resample_interpolate",        # daily-grid linear gap fill
-    "q_sample_split_hash",           # md5-bucket train/valid/test split
-    "q_etl_quarantine",              # rule-routing FK/domain audit
-    "q_sort_zorder_layout",          # Morton-interleave layout stats
-    # round-5 second batch: stats + mining modules
-    "q_agg_linreg_trend",            # decimal normal-equation OLS
-    "q_stats_chi2",                  # contingency + χ² statistic
-    "q_agg_higher_moments",          # 4-power-sum skew/kurtosis
-    "q_agg_entropy",                 # per-user event-mix entropy
-    "q_window_autocorr",             # daily-series lag-1 Pearson
-    "q_pattern_cusum",               # CUSUM change-point locator
-    "q_dq_benford",                  # first-digit law audit
-    "q_skyline_pareto",              # shard-prefix-max 2D skyline
-    "q_assoc_market_basket",         # orderkey self-join pair mining
-    "q_markov_transitions",          # per-user lead transition matrix
-    "q_text_pmi_bigrams",            # bigram collocation PMI
-    "q_text_inverted_index",         # token posting-list build
-    "q_graph_pagerank",              # 3-step unrolled power iteration
-    "q_gen_calendar_dim",            # generated spine + coverage join
-    "q_agg_pythagorean_means",       # AM/GM/HM one-pass battery
-    "q_pipeline_forecast_revenue",   # Q6 pure scan-filter-agg pushdown
-    "q_pipeline_returned_revenue",   # Q10 quarter returns top-20
-    "q_pipeline_promo_share",        # Q14 conditional promo share
-    "q_pipeline_large_orders",       # Q18 pre-agg semi-join prune
-    "q_report_mom_growth",           # year-partitioned lag growth
-    "q_stream_stream_left_outer",    # watermarked outer interval join
-    "q_udf_cogrouped_map",           # cogroup two-table Arrow boundary
-    "q_window_drawdown",             # cummax peak-to-trough argmax
-    "q_agg_gini",                    # rank-weighted concentration sum
-    # round-6 additions
-    "q_dedup_substring",             # repeated-span islands (substring dedup)
-    "q_cluster_kmeans",              # 2-step unrolled Lloyd k-means
-    # q_cluster_kmeans_lloyd is deliberately NOT in the headline: its
-    # honest cost is ~35 convergence rounds x the ~0.5 s local job floor
-    # (~19 s at sf0.1) which would drown the 100-key total; the unrolled
-    # twin represents the family here and the full "all" sweep
-    # (BENCH_LOCAL_r{N}_full.json) still records the loop's number.
-    "q_graph_pagerank_converged",    # signature-stop power iteration
-    "q_knn_join_multiprobe",         # Hamming-1 probe-expanded LSH join
-    "q_stream_stream_full_outer",    # two-sided watermarked outer funnel
-    "q_pipeline_nation_profit",      # Q9 adapted: filtered-dim star profit
-    "q_pipeline_fulfillment_priority",  # Q12 adapted: lag-bucket priority mix
-    "q_pipeline_small_qty_revenue",  # Q17 decorrelated avg-qty filter
-    "q_pipeline_disjunctive_revenue",  # Q19 OR-of-conjuncts with derived pushdown
-    "q_report_top_supplier",         # Q15 scalar-max view reuse
-    "q_report_supplier_parts",       # Q16 distinct-supplier diversity
-    "q_chunk_cdc",                   # content-defined chunking (md5 boundary)
-    "q_dedup_cdc_chunks",            # cross-doc duplicated-chunk report
-    "q_graph_triangles",             # degree-oriented wedge-join triangles
-    "q_profile_histogram_equidepth", # decile (equal-population) histogram
-    "q_window_trailing_distinct",    # rolling-7d distinct users (bounded fan-out)
-    "q_window_rolling_median",       # bounded collect-sort-frame robust median
-    # round-7 additions
-    # q_dedup_pairs_full is NOT in the headline: at sf0.1 it EMITS
-    # 2.97M exact pairs (65 s) — the cost is the output's size, not the
-    # plan (the candidate generation is the same prefix-filter the
-    # headline's bounded twin exercises); the full "all" sweep records
-    # it.
-    "q_join_bloom_pruned",           # runtime-Bloom-shaped selective SMJ
-    "q_etl_merge_tombstones",        # u/i/d MERGE compaction with deletes
-    "q_report_wow_growth",           # ReusedExchange weekly self-join
-    # q_bpe_train_merges is NOT in the headline for the same reason as
-    # q_cluster_kmeans_lloyd: 10 argmax/rewrite driver rounds x the
-    # ~0.5 s local job floor is loop overhead, not throughput; the full
-    # "all" sweep records it.
-    "q_graph_bfs_hops",              # frontier-loop BFS reachability
-    "q_graph_bfs_recursive_sql",     # native WITH RECURSIVE BFS twin
-    "q_ts_seasonal_decompose",       # spine fan-out trend/seasonal split
-    "q_agg_winsorized_mean",         # nearest-rank clamp + decimal mean
-    "q_scan_binaryfile",             # blob-lake write + binaryFile scan
-    "q_variant_shred",               # parse_json once + variant_get
-    "q_sink_dynamic_partition_overwrite",  # one-slice dynamic backfill
-    "q_sketch_approx_topk",          # frequent-items sketch heavy hitters
-    "q_udf_arrow_optimized",         # Arrow-transport row UDF boundary
-    "q_scan_agg_pushdown",           # footer-stats count/min/max profile
-    "q_join_lateral_topk",           # decorrelated LATERAL top-k join
-    "q_etl_observed_load",           # observe()-gated filtered load
-    "q_udf_map_in_arrow",            # raw-RecordBatch pyarrow.compute kernel
-    "q_sql_parameterized",           # named-param + IDENTIFIER templated SQL
-    # round-9 additions
-    "q_sim_search_batch_topk",       # IVF-routed batch retrieval join (RAG shape)
-    "q_bpe_apply",                   # frozen-merge BPE tokenize (codegen replace chain)
-    "q_scan_python_datasource",      # Python DataSource API per-file partitions
-    "q_udtf_polymorphic",            # analyze-time polymorphic UDTF
-    "q_sql_udf_create_function",     # inlined SQL-body scalar function
-    "q_udtf_table_argument",         # TABLE(...) PARTITION BY UDTF boundary
-    "q_agg_listagg",                 # ANSI ordered string aggregate
-    "q_try_functions",               # error-safe try_* scalar battery
-    "q_topk_global",                 # global TakeOrderedAndProject top-k
-    "q_sink_python_datasource",      # Python DataSource two-phase-commit sink
-    "q_report_shared_scan",          # cached-base multi-report fan-out
-    "q_join_shuffled_hash",          # pinned SHJ (third join strategy)
-    "q_join_dpp_prune",              # dynamic partition pruning star join
-    "q_er_resolve_entities",         # blocked fuzzy entity resolution
-    "q_er_golden_record",            # survivorship golden records
-    "q_window_gaps_islands",         # consecutive-day streak islands
-    "q_scan_file_metadata",          # _metadata file-provenance lineage
-    "q_udf_iterator_pandas",         # SCALAR_ITER per-task-init UDF boundary
-    "q_join_skew_aqe",               # AQE OptimizeSkewedJoin split join
-    "q_sql_group_by_all",            # GROUP BY ALL / ORDER BY ALL sugar
-    "q_sql_lateral_alias",           # lateral column aliases + * EXCEPT
-    "q_agg_median_mode",             # exact order-statistics aggregates
-    "q_agg_bitmap_distinct",         # segment-mergeable exact distinct bitmaps
-    "q_sql_pipe_syntax",             # SQL pipe dataflow front-end
-    "q_sql_collation_group",         # UTF8_LCASE collated grouping
-    "q_join_null_skew",              # null-key shuffle-bypass outer join
-    "q_scan_csv_permissive",         # malformed-line PERMISSIVE/DROPMALFORMED
-    "q_etl_mv_incremental",          # additive MV partial-state refresh
-    "q_sql_variables",               # DECLARE/SET VARIABLE + EXECUTE IMMEDIATE
-    "q_agg_percentile_within_group", # ANSI ordered-set exact quantiles
-    "q_udf_pandas_struct",           # struct-returning one-transfer featurizer
-    "q_string_regexp_battery",       # codegen regex battery (count/extract/instr)
-    "q_text_url_parse",              # parse_url crawl canonicalization
-    "q_sql_named_window",            # shared named-window single shuffle
-    "q_sql_pivot_unpivot",           # SQL PIVOT static-schema single pass
-    "q_xml_funcs",                   # xpath_* + from_xml extraction battery
-    "q_agg_grouping_id",             # ROLLUP grouping()/grouping_id() labels
-    "q_agg_hll_sketch_merge",        # Datasketches HLL build + union-merge
-    "q_sink_rowgroup_stats_audit",   # footer-stats layout audit (pyarrow)
-    "q_date_timezone",               # IANA tz conversion battery (DST + half-hour)
-    "q_join_geo_grid",               # grid-cell spatial radius join
-    "q_graph_hierarchy_rollup",      # recursive ancestor-closure subtree rollup
-    "q_join_nearest_value",          # driver-sorted searchsorted nearest-1D kernel (map-only)
-    "q_interval_concurrency",        # +1/-1 sweep peak-concurrency curve
-    "q_graph_hierarchy_path",        # recursive breadcrumb materialization
-    "q_filter_inset_large",          # 400-id InSet allowlist filter (pushed In)
-    "q_sink_avro_python",            # spec-implemented Avro container sink+readback (deflate)
-    "q_scan_avro_python",            # Avro scan + Catalyst agg composed on top
-    "q_events_protobuf_decode",      # proto3 wire encode -> projected skip-decode
-    "q_events_protobuf_nested",      # per-user envelope: nested repeated sub-messages
-    "q_scan_avro_evolution",         # reader-schema resolution (drop/default/promote)
-    "q_scan_xml_roundtrip",          # native XML file format round-trip
-    "q_scan_sqlite_partitioned",     # range-partitioned DB ingest (JDBC pattern)
-    "q_sink_parquet_codecs",         # none/snappy/zstd codec audit (lossless + sizes)
-    "q_join_federated_sources",      # sqlite dim broadcast x parquet fact (federation)
-    # round-11 additions
-    "q_join_spatial_knn",            # density-adaptive grid-pruned exact KNN join
-    "q_stats_ks_drift",              # binned two-sample KS drift statistic
-    "q_timeseries_ohlc",             # argmin/argmax-by-struct OHLC bars
-    "q_stream_foreachbatch_upsert",  # latest-per-key upsert state (foreachBatch twin)
-    "q_stats_ab_lift",               # two-proportion z-test single-pass readout
-    "q_etl_time_travel",             # manifest-versioned as-of snapshot read
-    "q_scan_files_pruned_by_stats",  # manifest min/max file skipping + exact filter
-    "q_etl_manifest_compact",        # small-files OPTIMIZE via replace commit
-    "q_etl_incremental_consume",     # version-diff change-feed delta read
-    "q_etl_manifest_vacuum",         # retention-gated physical file cleanup
-    "q_stream_manifest_sink",        # per-microbatch append commits (streaming table sink)
-    # round-12 additions
-    "q_etl_schema_evolution_add_column",  # manifest reader-schema null-fill
-    "q_etl_concurrent_commit_retry",      # create-exclusive commit + OCC retry
-    "q_stream_manifest_dim_join",         # per-batch as-of dim enrichment
-    "q_scan_count_metadata_only",         # manifest-fold count/min/max (no data reads)
-    "q_scan_files_pruned_bloom",          # per-file bloom point-lookup skipping
-    "q_scan_files_pruned_zorder",         # z-order multi-dim conjunctive skipping
-    "q_etl_manifest_merge_cow",           # stats-pruned copy-on-write MERGE
-    "q_stream_manifest_cdc_apply",        # change-feed incremental view maintenance
-    # round-13 additions
-    "q_etl_manifest_delete_mor",          # merge-on-read position delete vectors
-    "q_etl_hidden_partitioning",          # declared-transform partition pruning
-    "q_etl_manifest_delete_equality",     # blind equality delete (GDPR shape)
-    "q_etl_changefeed_rowlevel",          # net row-level CDF with delete rows
-    "q_etl_write_audit_publish",          # ref-gated WAP + RESTORE rollback
-    "q_stream_changefeed_apply_retract",  # retraction-capable incremental MV
-    "q_scan_manifest_files_table",        # table$files metadata inspection
-    "q_scan_manifest_history_table",      # table$history audit trail
-    "q_stream_manifest_cdf_source",       # version-as-offset CDF readStream source
-    "q_etl_manifest_clone",               # zero-copy shallow clone + isolation
-    "q_etl_manifest_update_mor",          # atomic row-level merge-on-read UPDATE
-    "q_etl_partition_evolution",          # per-file-transform spec evolution
-    # round-14 additions
-    "q_scan_manifest_partitions_table",   # table$partitions per-value counts
-    "q_etl_manifest_merge_mor",           # three-clause merge-on-read MERGE INTO
-    "q_etl_schema_default_values",        # metadata-only ADD COLUMN DEFAULT
-    "q_etl_type_widening",                # int->bigint/float->double/decimal widening
-    "q_etl_time_travel_timestamp",        # AS OF TIMESTAMP snapshot resolution
-    "q_etl_branch_fastforward",           # branch commits + ancestor fast-forward
-    "q_scan_manifest_refs_table",         # table$refs branch-hygiene listing
-    "q_text_redact_pii",                  # codegen regex PII scrub + audit
-    "q_text_repetition_stats",            # Gopher-style repetition gate
-    "q_corpus_mix_sample",                # weighted deterministic domain mix
-    "q_etl_row_lineage",                  # stable row ids through compaction
-    "q_stream_manifest_merge_sink",       # foreachBatch MoR MERGE CDC sink
-    "q_etl_table_constraints",            # commit-gated CHECK constraints
-    "q_etl_optimize_binpack",             # partial small-file OPTIMIZE + vector pruning
-    "q_sql_over_manifest_table",          # ANSI SQL via register_table view
-    "q_etl_maintenance_report",           # table-health manifest fold
-    "q_dedup_minhash_portable",           # oracle-proven LSH banding twin
-    "q_dedup_simhash_portable",           # oracle-proven SimHash Hamming twin
-    "q_text_vocab_coverage",              # top-K vocab OOV rate (broadcast probe)
-    "q_sql_scripting_loop",               # SQL scripting WHILE/IF compound
-    "q_catalog_analyze_cbo",              # ANALYZE stats -> CBO plan estimates
-    "q_stream_session_dynamic_gap",       # per-event-gap session windows
-    "q_stream_stream_semi",               # stream-stream left-semi interval join
-    "q_etl_merge_schema_evolution",       # autoMerge: ADD COLUMN + MoR MERGE
-    "q_dq_expectations",                  # one-pass declarative rule battery
-    "q_etl_remove_orphans",               # age-gated orphan-file GC
-    "q_etl_row_column_policy",            # row-filter + column-mask governance
-    "q_etl_gdpr_purge",                   # delete+compact+vacuum physical erasure
-    "q_corpus_curation_pipeline",         # dedup->quality->mix composed plan
-    "q_stats_welch_ttest",                # one-pass two-sample Welch t
-    "q_scan_manifest_policies_table",     # $policies governance audit table
-    "q_scan_python_datasource_pushdown",  # pushFilters partition pruning
-    "q_sink_python_datasource_arrow",     # Arrow-batch custom sink (2-phase)
-    "q_stream_state_store_read",          # checkpoint state-store inspection
-    "q_ml_minmax_scaler",                 # MLlib exact-stat fit/transform
-    "q_ml_string_indexer",                # frequencyDesc categorical encoding
-    "q_pandas_api_groupby",               # pandas-on-Spark API veneer
-    # round-15 additions
-    "q_cluster_kmeans_fixedrounds",       # oracle-proven BLAS Lloyd rounds
-    "q_dedup_semantic",                   # hyperplane-LSH near-dup clusters + CC
-    "q_stream_state_store_dedup",         # dedup-ledger checkpoint inspection
-    "q_stream_cdc_hidden_partition",      # per-batch partitioned commits + pruning
-    "q_etl_rewrite_manifests",            # $manifests listing + metadata-only compaction
-    "q_stream_python_datasource",         # offset-checkpointed Python stream source
-    "q_scan_manifest_files_distributed",  # executor-side manifest listing
-    "q_ml_maxabs_scaler",                 # sparsity-preserving exact-stat scaler
-    "q_ml_normalizer_l2",                 # stateless row-wise unit-sphere projection
-    "q_knn_join_portable",                # exact-oracled ANN bucket-join twin
-    "q_text_normalize_nfc",               # Unicode NFC via Arrow-batched UDF
-    "q_join_existence_mark",              # ExistenceJoin (projected IN/EXISTS marks)
-    "q_etl_drop_partition_metadata_only", # whole-file DROP PARTITION commit
-    "q_pattern_sequence_match",           # MATCH_RECOGNIZE-lite journey regex
-    "q_etl_merge_not_matched_by_source",  # 3-clause MERGE semantics
-    "q_etl_bucket_partition_transform",   # bucket[8] layout + point-lookup prune
-    "q_etl_identity_partition_transform", # identity layout + equality prune
-    "q_sink_python_datasource_stream",    # Python streaming sink 2-phase commit
-    "q_stats_mann_whitney",               # global-rank nonparametric U test
-    "q_graph_label_propagation",          # 3-round synchronous LPA communities
-    "q_udf_grouped_apply_arrow",          # zero-pandas grouped-map Arrow rung
-    # (q_bpe_train_portable / q_bpe_train_merges stay OFF the headline:
-    # the driver-loop trainer rounds are checkpoint-bound fixed overhead,
-    # not scan throughput — the correctness gate covers them at sf0.01)
-    # NOTE on anchors: every ANCHOR_KEYS entry MUST be in this list —
-    # an anchor missing from the record leaves the next round's confirm
-    # gate with no prior and silently degrades it to single-anchor
-    # (round-9 lesson: the first r9 bench ran with its second anchor
-    # absent and an anchor-jitter flag survived confirmation); pinned
-    # by test_anchors_in_headline. q_agg_hash and q_join_sortmerge are
-    # both long-standing headline keys.
-]
+METRIC = "total_seconds_noop_materialize_sum_of_medians"
 
 RUNS = 3
 
-#: marathon JVM lifetime (keys per JVM) — see the rotation note in main()
+#: Keys per JVM: a long single-JVM sweep drifts (JIT tier churn,
+#: listener/GC accumulation) and the drift grows with a key's position
+#: in the list, so the session restarts every JVM_ROTATE_KEYS keys.
 JVM_ROTATE_KEYS = 50
 
-#: Regression gate: flag any query whose median drifts beyond this factor
-#: vs the most recent BENCH_r*.json on disk (VERDICT r3 item 6 — catch the
-#: next bench-methodology problem in the tool, not the judge).
-DRIFT_FACTOR = 1.5
-#: Ignore drift below this ABSOLUTE increase (now - prior): sub-second
-#: keys jitter across their whole historic band by scheduling noise
-#: alone (q_string_funcs has recorded 0.15-0.47 s across 20 records
-#: with its source untouched), so a 1.5x ratio there is meaningless —
-#: three rounds of adjudication burned on exactly this class (r11
-#: token_stats, r12 string_funcs/union_all/map_in_arrow, all re-pinned
-#: at their historic floors on a quiet host in r13). An absolute-delta
-#: floor subsumes the old max(now, prior) < 0.3 rule and keeps the gate
-#: focused on drift big enough to adjudicate under jitter.
-DRIFT_MIN_SEC = 0.3
-
-#: Metric names across rounds (r1/r2 used the old name for the same
-#: sum-of-per-query-medians value — ADVICE r3: treat them as comparable).
-_METRIC_NAMES = {
-    "total_seconds_noop_materialize_sum_of_medians",
-    "median_query_seconds_noop_materialize",
-}
-
-
-#: How many recent bench records feed each key's prior. Median-of-5
-#: (vs newest-record-wins) kills the prior-selection artifact class:
-#: a full-sweep record holding an all-time-fastest sample for a tiny
-#: (< 0.4 s) key used to become the sole prior for the next headline
-#: run and fire a phantom adj-1.5x flag (r11 token_stats adjudication).
-_PRIOR_HISTORY_N = 5
-
-
-def load_prior_timings(repo_dir: str) -> dict[str, float]:
-    """Per-query prior = MEDIAN of that key's last ``_PRIOR_HISTORY_N``
-    recorded timings across recent bench records, {} if none.
-
-    BENCH_LOCAL_r*.json (written by this script, always complete) is
-    preferred over the driver's BENCH_r*.json tail capture, which clips
-    at ~2 KB (r04 recorded parsed:null for exactly that reason — ADVICE
-    r4). Handles both this script's raw output shape and the driver's
-    wrapper (which nests the parsed JSON line under "parsed"). Taking a
-    per-key median over history instead of the newest record keeps one
-    lucky (or marathon-JVM-slowed) sample from defining the baseline a
-    2x drift gate compares against."""
-    import glob
-    import re
-    import statistics
-
-    # Canonical record names only (round-16): BENCH_LOCAL_r16_driver_c8
-    # is an 8-CORE record and BENCH_LOCAL_r16_baseline a pre-change
-    # snapshot — neither may feed the 32-core drift prior.
-    _canon = re.compile(
-        r"^(BENCH_LOCAL_r\d+(_full|_final|_cont\d*|_first)?|BENCH_r\d+)\.json$"
-    )
-    paths = sorted(
-        (
-            p
-            for p in glob.glob(os.path.join(repo_dir, "BENCH_LOCAL_r*.json"))
-            + glob.glob(os.path.join(repo_dir, "BENCH_r*.json"))
-            if _canon.match(os.path.basename(p))
-        ),
-        key=lambda p: (os.path.basename(p).rsplit("_r", 1)[-1],
-                       "BENCH_LOCAL" in os.path.basename(p)),
-    )
-    history: dict[str, list[float]] = {}
-    for path in reversed(paths):  # newest first
-        try:
-            with open(path) as fh:
-                prior = json.load(fh)
-        except (OSError, json.JSONDecodeError):
-            continue
-        if not isinstance(prior, dict):
-            continue
-        if "parsed" in prior and isinstance(prior["parsed"], dict):
-            prior = prior["parsed"]
-        if prior.get("metric") not in _METRIC_NAMES:
-            continue
-        for k, v in (prior.get("queries") or {}).items():
-            if isinstance(v, (int, float)):
-                vals = history.setdefault(k, [])
-                if len(vals) < _PRIOR_HISTORY_N:
-                    vals.append(float(v))
-    out = {k: statistics.median(v) for k, v in history.items()}
-    # Quiet-host re-pins override history for keys whose recent records
-    # are known contention-inflated (see PINNED_PRIORS).
-    out.update(PINNED_PRIORS)
-    return out
-
-
-def next_round_number(repo_dir: str) -> int:
-    """1 + the highest round among driver BENCH_r*.json records."""
-    import glob
-    import re
-
-    rounds = [0]
-    for p in glob.glob(os.path.join(repo_dir, "BENCH_r*.json")):
-        m = re.search(r"BENCH_r(\d+)\.json$", os.path.basename(p))
-        if m:
-            rounds.append(int(m.group(1)))
-    return max(rounds) + 1
-
-
-def find_regressions(
-    timings: dict[str, float], prior: dict[str, float]
-) -> dict[str, dict[str, float]]:
-    out = {}
-    for k, now in timings.items():
-        base = prior.get(k)
-        if base is None or (now - base) < DRIFT_MIN_SEC:
-            continue
-        if now > DRIFT_FACTOR * base:
-            out[k] = {"prior": base, "now": now, "ratio": round(now / base, 2)}
-    return out
-
-
-#: Host-speed anchors for drift confirmation (VERDICT r8 item 4): TWO
-#: independent plan families — the flagship scan→filter→hash-agg and the
-#: fact-fact sort-merge shuffle join — both present in every round's
-#: record, stable plans, comfortably above DRIFT_MIN_SEC at sf0.1
-#: (q_join_sortmerge holds 0.47-0.67 s across r7-r9; the first pick,
-#: q_topk_global, measured 0.116 s — inside scheduling noise — and was
-#: replaced the same round). Two anchors close the single-anchor blind
-#: spots: an anchor-LOCAL regression no longer self-normalizes to ~1.0
-#: (the other anchor adjudicates it and it surfaces as an
-#: ``anchor_regression`` entry), and a key is confirmed only when BOTH
-#: normalizations agree (divide by the larger host factor), so one
-#: anchor's own jitter can't mint flags.
-ANCHOR_KEYS = ("q_agg_hash", "q_join_sortmerge", "q_agg_higher_moments")
-#: primary anchor (back-compat: the payload's scalar "anchor_ratio")
-ANCHOR_KEY = ANCHOR_KEYS[0]
-
-#: Anchor drift class (VERDICT r14 item 2): the original two anchors are
-#: scan/shuffle-bound, so a host whose CPUs are contended but whose IO is
-#: fine reads anchor ~1.0 while compute-bound keys drift 1.3-1.9x — the
-#: gate under-corrects and mints phantom flags (31 hand-adjudicated in
-#: r14). q_agg_higher_moments is the compute proxy: 4-power-sum decimal
-#: skew/kurtosis over lineitem, CPU-dominated, single stable plan, in
-#: every round's record since r5.
-ANCHOR_CLASS = {
-    "q_agg_hash": "scan",
-    "q_join_sortmerge": "shuffle",
-    "q_agg_higher_moments": "compute",
-}
-
-#: Keys whose cost is CPU-dominated (iterative driver loops, BLAS/Arrow
-#: kernels, Python-boundary hot paths, decimal power sums). A flagged key
-#: in this set is normalized by the COMPUTE anchor; everything else by the
-#: min of the scan/shuffle anchors (the pre-r15 behavior). This is the
-#: r14 drift class: every key below that was flagged in r11-r14 cleared
-#: on a quiet host while the scan anchors read ~1.0.
-COMPUTE_BOUND = frozenset({
-    "q_cluster_kmeans",
-    "q_cluster_kmeans_fixedrounds",
-    "q_cluster_kmeans_lloyd",
-    "q_dedup_semantic",
-    "q_graph_pagerank",
-    "q_graph_pagerank_converged",
-    "q_graph_triangles",
-    "q_graph_bfs_hops",
-    "q_graph_bfs_recursive_sql",
-    "q_knn_join_multiprobe",
-    "q_knn_join_bucketed",
-    "q_agg_percentile_within_group",
-    "q_agg_higher_moments",
-    "q_sim_search_topk_vectorized",
-    "q_text_edit_distance",
-    "q_er_resolve_entities",
-    "q_bpe_train_merges",
-    "q_dedup_pairs_full",
-})
-
-#: Quiet-host re-pins — EXPIRED round 16 (VERDICT r15 item 6): the pins
-#: (q_cluster_kmeans 2.5, q_graph_pagerank 2.6, q_knn_join_multiprobe
-#: 3.3, added r15 over contention-inflated r14 history) shielded those
-#: three keys from their own drift gate. The rolling median-of-5 now
-#: spans the r15 quiet-host records (pagerank 1.32, multiprobe 1.63 in
-#: the driver's r15 run), so history governs again.
-PINNED_PRIORS: dict[str, float] = {}
-
-
-def confirm_regressions(
-    flagged: dict[str, dict[str, float]],
-    prior: dict[str, float],
-    rerun,
-) -> dict[str, dict[str, float]]:
-    """Second-chance drift gate: cross-round seconds measure the HOST as
-    much as the code (round-6 lesson: unchanged round-5 code ran
-    1.3-1.9x slower on a busier VM, and all three driver flags that
-    round were exactly such artifacts). For each raw flag, re-run the
-    anchors and the flagged key back-to-back in this same JVM and
-    normalize the flagged key's cross-round ratio by the anchors'
-    cross-round ratios — the ratio of ratios (VERDICT r6 item 2). A real
-    regression survives normalization by the SMALLER (least-inflated)
-    host factor; a host-speed artifact cancels out. VERDICT r12 item 3:
-    the divisor used to be the LARGER factor, which let one
-    self-inflated anchor (r12: q_agg_hash read 2.1x while
-    q_join_sortmerge read 1.1x and the 203-key median was 0.96) clear
-    any real regression up to ~3x — min() keeps the outlier anchor from
-    shielding flags, and a deflated-anchor false positive still has to
-    survive the fresh-JVM rerun to be minted. A flagged ANCHOR is
-    normalized by the OTHER anchor and, if confirmed, emitted with
-    ``anchor_regression: true`` instead of being silently dropped
-    (ADVICE r7 item 2). ``rerun(key) -> float`` must produce a fresh
-    median with the same protocol as the main loop. With no
-    anchor prior on record, raw flags pass through unconfirmed (better
-    to over-flag than to silently drop the gate).
-
-    Returns ``(confirmed, cleared)``: cleared flags carry their rerun /
-    host / adj-ratio evidence instead of vanishing (VERDICT r12 item 3 —
-    ``regressions: {}`` used to hide the adjudication from the record)."""
-    if not flagged:
-        return flagged, {}
-    hosts = {
-        a: rerun(a) / prior[a] for a in ANCHOR_KEYS if prior.get(a)
-    }
-    if not hosts:
-        return flagged, {}
-    confirmed, cleared = {}, {}
-    for k, info in flagged.items():
-        partners = {a: h for a, h in hosts.items() if a != k}
-        if not partners:
-            # k is the only anchor with a prior — nothing independent to
-            # normalize by; surface the raw flag rather than drop it.
-            confirmed[k] = {**info, "anchor_regression": True}
-            continue
-        now2 = rerun(k)
-        # Class-matched normalization (VERDICT r14 item 2): compute-bound
-        # keys drift with CPU contention the scan/shuffle anchors can't
-        # see — normalize them by the compute anchor; everything else by
-        # the min of the non-compute anchors (pre-r15 behavior). The
-        # shielding trade-off is accepted deliberately: a genuine code
-        # regression in shared compute helpers would also inflate the
-        # compute anchor, but its own cross-round ratio is surfaced
-        # unconditionally in anchor_ratios, so it can't hide.
-        want_compute = k in COMPUTE_BOUND
-        pool = {
-            a: h
-            for a, h in partners.items()
-            if (ANCHOR_CLASS.get(a) == "compute") == want_compute
-        } or partners
-        host = min(pool.values())
-        adj = (now2 / prior[k]) / host
-        verdict = {
-            **info,
-            "rerun": round(now2, 4),
-            "host_factor": round(host, 2),
-            "host_factors": {a: round(h, 2) for a, h in partners.items()},
-            "adj_ratio": round(adj, 2),
-            **({"anchor_regression": True} if k in ANCHOR_KEYS else {}),
-        }
-        if adj > DRIFT_FACTOR:
-            confirmed[k] = {**verdict, "ratio": round(adj, 2)}
-        else:
-            cleared[k] = verdict
-    return confirmed, cleared
+#: Relative shuffle-write growth the gate tolerates before flagging.
+SHUFFLE_TOLERANCE = 0.10
 
 
 def materialize(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def compact_summary(payload: dict) -> dict:
-    """Tail-capture-safe summary emitted as the LAST stdout line.
+def run_counters(sc, group: str) -> dict[str, int]:
+    """Spark's accounting for the jobs of one job group: jobs, stages
+    that ran (each once; skipped stages excluded), shuffle-write bytes
+    and bytes spilled to disk."""
+    from py4j.protocol import Py4JJavaError
 
-    The driver's tail capture clips at ~2 KB, so the full per-query
-    line is unparseable once the registry grew past ~60 keys
-    (BENCH_r04/r05 recorded parsed:null — VERDICT r5 item 2): same
-    contract fields, but "queries" holds only the top-10 most
-    expensive keys, and regressions are truncated to the 5 worst by
-    ratio so a pathological round can't blow the line past the cap
-    either. The complete map lives in the preceding full line and in
-    BENCH_LOCAL_r*.json."""
+    jsc = sc._jsc.sc()
+    # the status store is fed asynchronously: drain the listener bus so
+    # every job and stage of the finished run has been recorded
+    jsc.listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    stage_ids = set()
+    for job in jobs:
+        info = tracker.getJobInfo(job)
+        stage_ids.update(info.stageIds if info else ())
+    out = {"jobs": len(jobs), "stages": 0, "shuffle_write_bytes": 0, "spill_bytes": 0}
+    store = jsc.statusStore()
+    for sid in stage_ids:
+        try:
+            data = store.lastStageAttempt(sid)
+        except Py4JJavaError:
+            continue  # never attempted
+        if str(data.status()) == "SKIPPED":
+            continue
+        out["stages"] += 1
+        out["shuffle_write_bytes"] += data.shuffleWriteBytes()
+        out["spill_bytes"] += data.diskBytesSpilled()
+    return out
+
+
+def time_query(spark, key: str, fn, sf_dir: str) -> tuple[float, dict[str, int]]:
+    """Median seconds and median counters of RUNS timed runs of one key."""
+    sc = spark.sparkContext
+    sc._jvm.System.gc()
+    samples, counts = [], []
+    for run in range(RUNS + 1):  # run 0 is the untimed warm-up
+        spark.catalog.clearCache()
+        group = f"bench:{key}:{run}"
+        sc.setJobGroup(group, key)
+        t0 = time.perf_counter()
+        materialize(fn(spark, sf_dir))
+        elapsed = time.perf_counter() - t0
+        if run:
+            samples.append(elapsed)
+            counts.append(run_counters(sc, group))
+    counters = {n: statistics.median_low(c[n] for c in counts) for n in counts[0]}
+    return round(statistics.median(samples), 4), counters
+
+
+def load_prior_counters(
+    repo_dir: str, master: str, parallelism: int, sf
+) -> dict[str, tuple[str, dict[str, int]]]:
+    """key -> (record file name, counters) from the newest record that
+    holds the key and was taken with this master, parallelism and sf."""
+    want = (master, parallelism, sf)
+    records = []
+    for path in glob.glob(os.path.join(repo_dir, "BENCH_LOCAL_*.json")):
+        try:
+            with open(path) as fh:
+                rec = json.load(fh)
+        except (OSError, json.JSONDecodeError):
+            continue
+        if isinstance(rec, dict) and "counters" in rec and want == (
+            rec.get("master"), rec.get("default_parallelism"), rec.get("sf")
+        ):
+            records.append((rec.get("utc", ""), os.path.basename(path), rec["counters"]))
+    prior = {}
+    for _, name, counters in sorted(records):  # oldest first: newer records win
+        for key, c in counters.items():
+            prior[key] = (name, c)
+    return prior
+
+
+def find_regressions(
+    counters: dict[str, dict[str, int]],
+    prior: dict[str, tuple[str, dict[str, int]]],
+) -> dict[str, dict]:
+    """Keys whose job count rose, or whose shuffle-write bytes rose by
+    more than SHUFFLE_TOLERANCE, each with ``[prior, now]`` per flagged
+    counter and the record it was compared against."""
+    out = {}
+    for key, now in counters.items():
+        if key not in prior:
+            continue
+        record, base = prior[key]
+        flags = {}
+        if now["jobs"] > base["jobs"]:
+            flags["jobs"] = [base["jobs"], now["jobs"]]
+        shuffle = "shuffle_write_bytes"
+        if now[shuffle] > (1 + SHUFFLE_TOLERANCE) * base[shuffle]:
+            flags[shuffle] = [base[shuffle], now[shuffle]]
+        if flags:
+            out[key] = {"record": record, **flags}
+    return out
+
+
+def write_record(repo_dir: str, payload: dict) -> str:
+    """Write ``payload`` under a new name; an existing name raises
+    FileExistsError instead of being overwritten."""
+    name = f"BENCH_LOCAL_p{payload['default_parallelism']}_{payload['utc']}.json"
+    path = os.path.join(repo_dir, name)
+    with open(path, "x") as fh:
+        json.dump(payload, fh, indent=1)
+    return path
+
+
+def compact_summary(payload: dict) -> dict:
+    """Tail-capture-safe summary emitted as the LAST stdout line: a
+    tail capture of stdout clips at ~2 KB, so "queries" holds only the
+    10 most expensive keys and "regressions" only the first 5."""
     timings = payload["queries"]
-    regressions = dict(
-        sorted(
-            payload["regressions"].items(),
-            key=lambda kv: kv[1]["ratio"],
-            reverse=True,
-        )[:5]
-    )
-    top10 = dict(
-        sorted(timings.items(), key=lambda kv: kv[1], reverse=True)[:10]
-    )
+    top10 = dict(sorted(timings.items(), key=lambda kv: kv[1], reverse=True)[:10])
     return {
         "metric": payload["metric"],
         "value": payload["value"],
         "unit": "sec",
         "sf": payload["sf"],
-        # core-count proof rides in the tail-captured line too
         "master": payload.get("master"),
         "default_parallelism": payload.get("default_parallelism"),
         "n_queries": len(timings),
         "n_regressions": len(payload["regressions"]),
-        "n_cleared_flags": len(payload.get("cleared_flags") or {}),
-        "regressions": regressions,
+        "regressions": dict(list(payload["regressions"].items())[:5]),
         "queries": top10,
     }
 
@@ -663,156 +202,42 @@ def main() -> None:
     elif sel:
         keys = [k.strip() for k in sel.split(",") if k.strip()]
     else:
-        keys = HEADLINE
+        keys = headline_keys()
     spark = get_spark("spark-graft-bench")
 
-    def time_query_with(sess, key: str) -> float:
-        """ONE timing protocol for the main loop AND the confirm-gate
-        reruns — two copies drifted apart would make the gate compare
-        medians measured under different protocols, the exact
-        methodology bug it exists to prevent. Isolates queries sharing
-        one JVM (clearCache + GC nudge: round-2 showed 2.5-2.8x phantom
-        regressions from cross-query garbage), one warm-up
-        materialization (plan + JIT + page cache), then the median of
-        RUNS timed noop materializations."""
-        sess.catalog.clearCache()
-        sess.sparkContext._jvm.System.gc()
-        fn = queries[key]
-        materialize(fn(sess, sf_dir))
-        samples = []
-        for _ in range(RUNS):
-            t0 = time.perf_counter()
-            materialize(fn(sess, sf_dir))
-            samples.append(time.perf_counter() - t0)
-        return statistics.median(samples)
-
-    def time_query(key: str) -> float:
-        return time_query_with(spark, key)
-
-    # Rotate the JVM every JVM_ROTATE_KEYS keys: a long single-JVM
-    # sweep drifts (JIT tier churn, listener/GC accumulation), and the
-    # drift is POSITION-dependent — keys late in a growing headline
-    # list read slower round over round with their code untouched
-    # (r10 bfs_hops 2.14x, r12 q_agg_hash 2.1x, r13 q_bpe_apply 1.7x —
-    # all re-pinned at prior in a fresh JVM). Bounded-lifetime JVMs cap
-    # how much drift any key's position can see, making cross-round
-    # medians compare like-for-like at ~1 restart per 50 keys of cost.
     timings: dict[str, float] = {}
+    counters: dict[str, dict[str, int]] = {}
     for i, key in enumerate(keys):
         if i and i % JVM_ROTATE_KEYS == 0:
             spark.stop()
             spark = get_spark(f"spark-graft-bench-{i // JVM_ROTATE_KEYS}")
-        timings[key] = round(time_query(key), 4)
-
-    # Anchor double-read (VERDICT r12 item 5): q_agg_hash sits at
-    # headline position 0 yet recorded 2.97 s in the r12 marathon vs
-    # 1.48 s fresh-JVM on the same host — a long sweep's JVM drifts
-    # (JIT tiering, listener/GC accumulation) and a single read can't
-    # tell "anchor ran on a slow moment" from "host is slow". Re-time
-    # both anchors at the END of the sweep, record both reads, and use
-    # the MIN as the anchor's timing: the anchor is a host-speed proxy,
-    # and the lower of two same-JVM reads is the better estimate of
-    # what the host can do (an inflated proxy corrupts the confirm
-    # gate's divisor AND next round's median-of-history prior).
-    anchor_runs: dict[str, dict[str, float]] = {}
-    for a in ANCHOR_KEYS:
-        if a in timings:
-            last = round(time_query(a), 4)
-            anchor_runs[a] = {"first": timings[a], "last": last}
-            timings[a] = min(timings[a], last)
+        timings[key], counters[key] = time_query(spark, key, queries[key], sf_dir)
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    sf = float(sf) if sf.replace(".", "").isdigit() else sf
+    master = spark.sparkContext.master
+    parallelism = spark.sparkContext.defaultParallelism
     repo_dir = os.path.dirname(os.path.abspath(__file__))
-    prior = load_prior_timings(repo_dir)
-    raw_flags = find_regressions(timings, prior)
-
-    if raw_flags:
-        # Confirm reruns run in a FRESH JVM, not the marathon session:
-        # a long sweep accumulates per-JOB submission overhead that
-        # inflates multi-job iterative keys (BFS/k-means driver loops)
-        # while leaving single-job anchors untouched — so anchor
-        # normalization inside the old JVM cannot cancel it and mints
-        # phantom "confirmed" flags (round-10: q_graph_bfs_hops adj 2.14
-        # at the end of the 290-key sweep vs 1.11 in a fresh JVM on the
-        # same host minutes later). Restarting the session makes the
-        # confirm measurement match how the prior record was produced
-        # for early-position keys.
-        spark.stop()
-        spark = get_spark("spark-graft-bench-confirm")
-        fresh = spark
-        regressions, cleared_flags = confirm_regressions(
-            raw_flags, prior, lambda key: time_query_with(fresh, key)
-        )
-    else:
-        regressions, cleared_flags = {}, {}
-
-    # Surface the anchors' own cross-round ratios UNCONDITIONALLY: the
-    # confirm gate normalizes by the anchors, so a uniform real slowdown
-    # (e.g. a shared numeric-helper regression that drags anchors and
-    # keys alike) would cancel to adj_ratio ~1 and vanish — these fields
-    # keep it visible. > DRIFT_FACTOR here with empty regressions
-    # means either a host change or an across-the-board code change;
-    # compare the totals (and BENCH_SCALING) to tell which. An
-    # anchor-LOCAL regression is no longer only visible here: the
-    # confirm gate now emits it as an anchor_regression entry.
-    anchor_ratio = None
-    if prior.get(ANCHOR_KEY) and ANCHOR_KEY in timings:
-        anchor_ratio = round(timings[ANCHOR_KEY] / prior[ANCHOR_KEY], 2)
-    anchor_ratios = {
-        a: round(timings[a] / prior[a], 2)
-        for a in ANCHOR_KEYS
-        if prior.get(a) and a in timings
-    }
+    prior = load_prior_counters(repo_dir, master, parallelism, sf)
     payload = {
-        # value = SUM over queries of the per-query median-of-3;
-        # per-query medians are under "queries".
-        "metric": "total_seconds_noop_materialize_sum_of_medians",
+        # value = SUM over queries of the per-query median of RUNS runs
+        "metric": METRIC,
         "value": round(sum(timings.values()), 4),
         "unit": "sec",
         "queries": timings,
-        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        # Core-count contract proof (VERDICT r15 item 2): the resolved
-        # master and the session's effective parallelism, so a scaling
-        # run can VERIFY $SPARK_GRAFT_CPUS was honored instead of
-        # inferring it from driver-loop keys whose cost is job-floor
-        # bound (the r15 `suspect_cpus_ignored` false alarm).
-        "master": spark.sparkContext.master,
-        "default_parallelism": spark.sparkContext.defaultParallelism,
+        "counters": counters,
+        "sf": sf,
+        # core-count proof: the resolved master and the session's
+        # effective parallelism, so a record shows $SPARK_GRAFT_CPUS held
+        "master": master,
+        "default_parallelism": parallelism,
         "cpus_env": os.environ.get("SPARK_GRAFT_CPUS") or None,
-        # queries whose median drifted > DRIFT_FACTOR x vs the
-        # newest usable bench record on disk (empty = no drift); the
-        # flag rides along in the JSON rather than failing the
-        # run so the driver still records the numbers.
-        "regressions": regressions,
-        # raw flags the confirm gate adjudicated AWAY, with their
-        # rerun/host/adj evidence (VERDICT r12 item 3: regressions={}
-        # used to hide the adjudication entirely)
-        "cleared_flags": cleared_flags,
-        # anchors' own cross-round ratios (host proxy; see above) —
-        # scalar kept for cross-round back-compat, dict carries both
-        "anchor_ratio": anchor_ratio,
-        "anchor_ratios": anchor_ratios,
-        # both same-JVM anchor reads (sweep-start + sweep-end); the min
-        # is what "queries"/"anchor_ratio*" report
-        "anchor_runs": anchor_runs,
+        "utc": time.strftime("%Y%m%dT%H%M%SZ", time.gmtime()),
+        "regressions": find_regressions(counters, prior),
     }
     print(json.dumps(payload))
     print(json.dumps(compact_summary(payload)))
-    # Durable complete record: the driver's tail capture clips at ~2 KB,
-    # which truncated the full-registry r04 line (ADVICE r4). Only the
-    # default headline run and the full-registry sweep write — a
-    # filtered SPARK_GRAFT_BENCH_QUERIES subset run would poison the
-    # next round's drift baseline.
-    if not sel or sel == "all":
-        # full sweeps get their own name so the driver's end-of-round
-        # default run can't clobber the complete 200-key record
-        suffix = "_full" if sel == "all" else ""
-        local = os.path.join(
-            repo_dir,
-            f"BENCH_LOCAL_r{next_round_number(repo_dir):02d}{suffix}.json",
-        )
-        with open(local, "w") as fh:
-            json.dump(payload, fh, indent=1)
+    write_record(repo_dir, payload)
     spark.stop()
 
 

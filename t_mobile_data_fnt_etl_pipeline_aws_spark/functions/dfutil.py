@@ -29,9 +29,12 @@ from pyspark.sql import DataFrame
 def materialized(df: DataFrame) -> DataFrame:
     """Executor-loss-safe single materialization of a corpus-sized,
     multi-referenced intermediate: persist with lineage intact and
-    populate eagerly. The persisted blocks are scoped to the query's
-    session cache (bench/oracle runs clear it between keys), and every
-    bench invocation re-computes from parquet — nothing survives a run.
+    populate eagerly. The persisted blocks stay in the session cache
+    until ``spark.catalog.clearCache()`` (or an unpersist) releases
+    them, so the caller bounds their lifetime: bench.py clears the cache
+    before every run and the oracle test after each key. A caller that
+    runs a query again without clearing reads the blocks the earlier run
+    persisted instead of re-computing from parquet.
     """
     from pyspark import StorageLevel
 

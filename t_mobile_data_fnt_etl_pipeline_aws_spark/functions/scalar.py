@@ -69,6 +69,7 @@ def q_string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_date_funcs",
+    bench=False,
     oracle="""
     SELECT o_orderkey,
            cast(year(o_orderdate) as int) AS order_year,
@@ -116,6 +117,7 @@ def q_date_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_math_funcs",
+    bench=False,
     oracle=f"""
     SELECT c_custkey,
            abs(c_acctbal) AS bal_abs,
@@ -159,6 +161,7 @@ def q_math_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_conditional",
+    bench=False,
     oracle="""
     SELECT c_custkey, c_acctbal,
            CASE WHEN c_acctbal < 0 THEN 'delinquent'
@@ -191,6 +194,7 @@ def q_conditional(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_cast_types",
+    bench=False,
     oracle="""
     SELECT o_orderkey,
            cast(o_orderkey as varchar) AS key_str,
@@ -288,6 +292,7 @@ def q_array_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_explode_posexplode",
+    bench=False,
     oracle="""
     SELECT vec_id,
            generate_subscripts(embedding, 1) - 1 AS pos,
@@ -330,6 +335,7 @@ def q_json_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_map_funcs",
+    bench=False,
     oracle="""
     SELECT event_id,
            'k' AS mkeys,
@@ -363,6 +369,7 @@ def q_map_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_struct_funcs",
+    bench=False,
     oracle="""
     SELECT o_orderstatus AS status, o_orderpriority AS priority,
            count(*) AS n_orders

@@ -63,6 +63,7 @@ def q_udf_scalar_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_udaf_grouped_agg",
+    bench=False,
     oracle=f"""
     SELECT l_returnflag,
            {sql_finish_dec(f'sum(cast(l_extendedprice * l_quantity as {DEC}))', 2)}
@@ -156,6 +157,7 @@ def q_udtf_grouped_map(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_udtf_python",
+    bench=False,
     oracle="""
     SELECT doc_id,
            unnest(string_split(text, ' ')) AS word,
@@ -186,6 +188,7 @@ def q_udtf_python(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_udf_registered_sql",
+    bench=False,
     oracle="""
     SELECT c_custkey,
            CASE WHEN c_acctbal < 0 THEN 'delinquent'

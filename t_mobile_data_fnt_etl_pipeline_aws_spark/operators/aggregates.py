@@ -78,6 +78,7 @@ def q_agg_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_agg_multi",
+    bench=False,
     oracle=f"""
     SELECT o_orderstatus,
            count(*) AS n_rows,
@@ -141,7 +142,7 @@ def q_agg_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("q_agg_approx_distinct")  # rows-only: HLL estimate differs from DuckDB's
+@query("q_agg_approx_distinct", bench=False)  # rows-only: HLL estimate differs from DuckDB's
 def q_agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HyperLogLog++ distinct users per event type (rsd=0.01).
 
@@ -159,6 +160,7 @@ def q_agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_agg_having",
+    bench=False,
     oracle=f"""
     SELECT o_custkey,
            {sql_dsum('o_totalprice', 'total_spend')},
@@ -193,6 +195,7 @@ def q_agg_having(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_agg_rollup",
+    bench=False,
     oracle=f"""
     SELECT n_name, c_mktsegment,
            cast(grouping(n_name) as int) AS g_nation,
@@ -244,6 +247,7 @@ def q_agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_agg_grouping_sets",
+    bench=False,
     oracle=f"""
     SELECT o_orderstatus, o_orderpriority,
            count(*) AS n_orders,
@@ -270,6 +274,7 @@ def q_agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_agg_collect_sorted",
+    bench=False,
     oracle="""
     SELECT o_custkey,
            count(*) AS n_orders,
@@ -302,6 +307,7 @@ def q_agg_collect_sorted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_agg_conditional",
+    bench=False,
     oracle=f"""
     SELECT user_id,
            {sql_dsum("case when event_type = 'click' then value end", 'click_value')},
@@ -335,6 +341,7 @@ def q_agg_conditional(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_agg_median_exact",
+    bench=False,
     oracle="""
     WITH ranked AS (
         SELECT o_orderstatus, o_totalprice,
@@ -440,6 +447,7 @@ def q_agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_agg_stats_corr",
+    bench=False,
     oracle=f"""
     SELECT l_returnflag,
            count(*) AS n,
@@ -500,6 +508,7 @@ def q_agg_stats_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_agg_mode_deterministic",
+    bench=False,
     oracle="""
     SELECT lang, token AS top_token, n_uses
     FROM (
@@ -533,7 +542,7 @@ def q_agg_mode_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("q_sample_stratified")  # rows-only: sampler is engine-specific
+@query("q_sample_stratified", bench=False)  # rows-only: sampler is engine-specific
 def q_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seeded stratified sample: ~20% of orders per status stratum.
 
@@ -556,6 +565,7 @@ def q_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_agg_percentile_multi",
+    bench=False,
     oracle="""
     WITH ranked AS (
         SELECT c_mktsegment, c_acctbal,
@@ -607,6 +617,7 @@ def q_agg_percentile_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_agg_argminmax",
+    bench=False,
     oracle="""
     WITH r AS (
         SELECT c_mktsegment, c_custkey, c_acctbal,
@@ -683,6 +694,7 @@ def q_agg_sketch_reaggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_agg_incremental_merge",
+    bench=False,
     oracle=f"""
     WITH partial AS (
         SELECT o_orderstatus,

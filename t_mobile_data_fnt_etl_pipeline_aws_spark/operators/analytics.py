@@ -55,6 +55,7 @@ def _epoch_us(col: str = "ts"):
 
 @query(
     "q_interval_merge",
+    bench=False,
     oracle=f"""
     WITH iv AS (
         SELECT user_id, event_id,
@@ -140,6 +141,7 @@ def q_interval_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_attribution_last_touch",
+    bench=False,
     oracle=f"""
     WITH marked AS (
         SELECT user_id, event_id, event_type, value,
@@ -219,6 +221,7 @@ def q_attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_alloc_proration",
+    bench=False,
     oracle="""
     WITH o AS (
         SELECT o_orderkey,
@@ -319,6 +322,7 @@ def q_alloc_proration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_rfm_segmentation",
+    bench=False,
     oracle="""
     WITH maxd AS (SELECT max(o_orderdate) AS d_ref FROM orders),
     rfm AS (
@@ -429,6 +433,7 @@ def q_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_timeseries_twap",
+    bench=False,
     oracle=f"""
     WITH pts AS (
         SELECT user_id, value,
@@ -505,6 +510,7 @@ def q_timeseries_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_pareto_abc",
+    bench=False,
     oracle=f"""
     WITH rev AS (
         SELECT n.n_name, s.s_suppkey,

@@ -178,6 +178,7 @@ def _components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_dedup_clusters_cc",
+    bench=False,
     oracle=f"""
     {_CC_ORACLE_WITH}
     SELECT c.doc_id, c.cluster_id,
@@ -203,6 +204,7 @@ def q_dedup_clusters_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_dedup_keep_canonical",
+    bench=False,
     oracle=f"""
     {_CC_ORACLE_WITH}
     SELECT d.lang,
@@ -618,7 +620,7 @@ def q_cluster_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("q_cluster_kmeans_lloyd")  # rows-only: round count is data-dependent
+@query("q_cluster_kmeans_lloyd", bench=False)  # rows-only: round count is data-dependent
 def q_cluster_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lloyd k-means run to convergence from the same seeds as
     q_cluster_kmeans, converging when the 6-dp-finished CENTROIDS reach

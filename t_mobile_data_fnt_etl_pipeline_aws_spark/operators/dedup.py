@@ -244,7 +244,7 @@ def q_dedup_fuzzy_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("q_dedup_simhash")  # rows-only: xxhash64 token hashes are engine-specific
+@query("q_dedup_simhash", bench=False)  # rows-only: xxhash64 token hashes are engine-specific
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash fingerprints: 48-bit bitwise-majority token sketch.
 
@@ -302,6 +302,7 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_dedup_ngram_jaccard",
+    bench=False,
     oracle=f"""
     WITH sh AS (
         SELECT doc_id,
@@ -456,6 +457,7 @@ def prefix_filter_containment_pairs(
 
 @query(
     "q_dedup_embedding",
+    bench=False,
     oracle=f"""
     WITH v AS (
         SELECT vec_id, label,
@@ -514,6 +516,7 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_dedup_prefix_filter",
+    bench=False,
     oracle="""
     WITH tok AS (
         SELECT DISTINCT doc_id, token
@@ -650,6 +653,7 @@ def prefix_filter_jaccard_pairs(tok: DataFrame, num: int, den: int) -> DataFrame
 
 @query(
     "q_dedup_pairs_full",
+    bench=False,
     # Round-16 (VERDICT r15 item 9): the key itself is EXACT (no
     # engine-seeded hashing), so it takes a real SQL oracle — the
     # unbounded twin of q_dedup_prefix_filter's: all word-Jaccard ≥ 0.8

@@ -17,6 +17,7 @@ from ..sources.tables import load
 
 @query(
     "q_project_rename",
+    bench=False,
     oracle="""
     SELECT l_orderkey AS order_key,
            l_linenumber AS line_no,
@@ -47,6 +48,7 @@ def q_project_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_filter_pred",
+    bench=False,
     oracle="""
     SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice, o_orderpriority
     FROM orders
@@ -74,6 +76,7 @@ def q_filter_pred(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_filter_like",
+    bench=False,
     oracle="""
     SELECT p_partkey, p_name, p_brand, p_type,
            p_name LIKE '%widget%' AS is_widget,
@@ -101,6 +104,7 @@ def q_filter_like(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_filter_null",
+    bench=False,
     oracle="""
     SELECT c_custkey,
            nullif(c_mktsegment, 'BUILDING') AS seg,
@@ -133,6 +137,7 @@ def q_filter_null(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_distinct_rows",
+    bench=False,
     oracle="""
     SELECT DISTINCT c_mktsegment, c_nationkey
     FROM customer

@@ -53,7 +53,7 @@ def q_join_inner_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _c_n_r(spark, sf_dir, use_broadcast=False)
 
 
-@query("q_join_broadcast", oracle=_CNR_SQL)
+@query("q_join_broadcast", bench=False, oracle=_CNR_SQL)
 def q_join_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same join with the dimension sides pinned broadcast (plan-invariant
     result; the 100-TB default for any dim that fits an executor)."""
@@ -90,6 +90,7 @@ _BIG = 300000
 
 @query(
     "q_join_left",
+    bench=False,
     oracle=f"""
     SELECT c_custkey, c_mktsegment, o.o_orderkey, o.o_totalprice
     FROM customer c
@@ -107,6 +108,7 @@ def q_join_left(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_join_right",
+    bench=False,
     oracle=f"""
     SELECT c_custkey, c_mktsegment, o.o_orderkey, o.o_totalprice
     FROM (SELECT * FROM orders WHERE o_totalprice > {_BIG}) o
@@ -123,6 +125,7 @@ def q_join_right(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_join_full",
+    bench=False,
     oracle=f"""
     SELECT c.c_custkey, c.c_acctbal, o.o_orderkey, o.o_totalprice
     FROM (SELECT * FROM customer WHERE c_acctbal < 0) c
@@ -141,6 +144,7 @@ def q_join_full(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_join_semi",
+    bench=False,
     oracle=f"""
     SELECT c_custkey, c_name, c_mktsegment
     FROM customer c
@@ -159,6 +163,7 @@ def q_join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_join_anti",
+    bench=False,
     oracle=f"""
     SELECT c_custkey, c_name, c_mktsegment
     FROM customer c
@@ -177,6 +182,7 @@ def q_join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_join_cross",
+    bench=False,
     oracle="""
     SELECT r_name, n_name, n_nationkey + r_regionkey AS key_sum
     FROM region CROSS JOIN nation
@@ -195,6 +201,7 @@ def q_join_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_join_theta_range",
+    bench=False,
     oracle="""
     SELECT l_orderkey, l_linenumber, l_extendedprice, p_partkey, p_retailprice
     FROM lineitem JOIN part
@@ -278,6 +285,7 @@ def q_join_theta_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_join_interval",
+    bench=False,
     oracle="""
     SELECT o_orderkey, o_orderdate, l_linenumber, l_shipdate
     FROM orders JOIN lineitem

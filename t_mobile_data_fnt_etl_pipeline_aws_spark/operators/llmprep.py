@@ -116,6 +116,7 @@ def _mix_case_sql() -> str:
 
 @query(
     "q_corpus_mix_weighted",
+    bench=False,
     oracle=f"""
     SELECT lang,
            count(*) AS n_total,
@@ -226,6 +227,7 @@ _PHONE_RE = r"555-[0-9]{4}"
 
 @query(
     "q_pii_redact",
+    bench=False,
     oracle=f"""
     WITH aug AS (
         SELECT doc_id, lang,
@@ -364,6 +366,7 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_quality_repetition",
+    bench=False,
     oracle="""
     WITH t AS (
         SELECT doc_id, lang,
@@ -739,7 +742,7 @@ def _bpe_train_oracle(n_rounds: int) -> str:
     return "".join(parts) + f" {selects} ORDER BY merge_rank"
 
 
-@query("q_bpe_train_merges", oracle=_bpe_train_oracle(10))
+@query("q_bpe_train_merges", bench=False, oracle=_bpe_train_oracle(10))
 # Round-16 (VERDICT r15 item 9): the production 10-round trainer now
 # carries the same chained-CTE replay oracle the 3-round portable twin
 # proved out — the replay is linear in rounds over the word-type table,
@@ -849,7 +852,7 @@ def _train_merges(
 
 
 
-@query("q_bpe_train_portable", oracle=_bpe_train_oracle(3))
+@query("q_bpe_train_portable", bench=False, oracle=_bpe_train_oracle(3))
 def q_bpe_train_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE TRAINING under an exact end-to-end oracle — the
     portable-twin standard applied to the LAST algorithmic rows-only

@@ -78,6 +78,7 @@ def q_ml_minmax_scaler(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_ml_bucketizer_discretize",
+    bench=False,
     oracle="""
     SELECT CASE WHEN o_totalprice < 50000 THEN 0
                 WHEN o_totalprice < 150000 THEN 1

@@ -24,6 +24,7 @@ from ..sources.tables import load
 
 @query(
     "q_multimodal_enrich",
+    bench=False,
     oracle=f"""
     SELECT d.lang, e.label,
            count(*) AS n_docs,
@@ -69,6 +70,7 @@ def decode_media(payload: bytes, media_type: str):
 
 @query(
     "q_multimodal_decode_stub",
+    bench=False,
     oracle="""
     SELECT doc_id,
            cast(octet_length(encode(text)) as bigint) AS n_bytes,
@@ -197,6 +199,7 @@ def q_multimodal_framesample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_multimodal_resize",
+    bench=False,
     oracle="""
     WITH pos AS (
         SELECT doc_id, text,

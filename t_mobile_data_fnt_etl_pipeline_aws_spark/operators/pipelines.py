@@ -315,6 +315,7 @@ def q_etl_merge_tombstones(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_profile_table",
+    bench=False,
     oracle="""
     SELECT 'c_custkey' AS column_name, count(*) AS n_rows,
            count(c_custkey) AS n_non_null,
@@ -602,6 +603,7 @@ def q_pipeline_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_profile_skew",
+    bench=False,
     oracle="""
     SELECT l_suppkey AS hot_key,
            cast(count(*) AS bigint) AS n_rows,
@@ -919,6 +921,7 @@ def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_etl_table_diff",
+    bench=False,
     oracle="""
     WITH v_old AS (
         SELECT o_orderkey, o_totalprice FROM orders WHERE o_orderkey % 7 <> 0

@@ -28,6 +28,7 @@ from ..sources.tables import load
 
 @query(
     "q_report_custdist",
+    bench=False,
     oracle="""
     WITH c_orders AS (
         SELECT c.c_custkey, count(o.o_orderkey) AS c_count
@@ -76,6 +77,7 @@ _SHARE = "0.030000"
 
 @query(
     "q_report_nation_share",
+    bench=False,
     oracle=f"""
     WITH rev AS (
         SELECT n.n_name,
@@ -148,6 +150,7 @@ def q_report_nation_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_report_prospects",
+    bench=False,
     oracle=f"""
     WITH pos AS (
         SELECT sum(cast(c_acctbal AS {DEC})) AS total_bal,
@@ -217,6 +220,7 @@ _BLOC = [f"NATION_{i}" for i in range(5)]
 
 @query(
     "q_report_binational_volume",
+    bench=False,
     oracle=f"""
     SELECT n1.n_name AS supp_nation,
            n2.n_name AS cust_nation,

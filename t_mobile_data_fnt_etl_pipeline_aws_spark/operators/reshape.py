@@ -27,6 +27,7 @@ _PRIORITIES = [
 
 @query(
     "q_pivot_wide",
+    bench=False,
     oracle=f"""
     SELECT o_orderstatus,
            {", ".join(
@@ -64,6 +65,7 @@ def q_pivot_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_unpivot_long",
+    bench=False,
     oracle=f"""
     WITH wide AS (
         SELECT l_returnflag,

@@ -43,6 +43,7 @@ def q_scan_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_scan_schema_assert",
+    bench=False,
     oracle="SELECT * FROM supplier",
 )
 def q_scan_schema_assert(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -61,6 +62,7 @@ def q_scan_schema_assert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_scan_csv_roundtrip",
+    bench=False,
     oracle="SELECT r_regionkey, r_name FROM region",
 )
 def q_scan_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -77,6 +79,7 @@ def q_scan_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_scan_json_roundtrip",
+    bench=False,
     oracle="""
     SELECT event_id, user_id, event_type, value,
            cast(json_extract_string(props, '$.k') as int) AS k
@@ -137,6 +140,7 @@ def q_sink_parquet_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_sink_overwrite_idempotent",
+    bench=False,
     oracle="""
     SELECT o_orderstatus, count(*) AS n_orders
     FROM orders
@@ -160,6 +164,7 @@ def q_sink_overwrite_idempotent(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_bucketed_join_colocated",
+    bench=False,
     oracle="""
     SELECT o_orderstatus,
            count(*) AS n_lines,

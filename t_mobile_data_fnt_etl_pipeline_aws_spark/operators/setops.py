@@ -34,33 +34,33 @@ def q_union_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     return a.unionByName(b)
 
 
-@query("q_union_distinct", oracle=f"({_A_SQL}) UNION ({_B_SQL})")
+@query("q_union_distinct", bench=False, oracle=f"({_A_SQL}) UNION ({_B_SQL})")
 def q_union_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Set union — concat + distinct (one hash-aggregate shuffle)."""
     a, b = _slices(spark, sf_dir)
     return a.unionByName(b).distinct()
 
 
-@query("q_intersect", oracle=f"({_A_SQL}) INTERSECT ({_B_SQL})")
+@query("q_intersect", bench=False, oracle=f"({_A_SQL}) INTERSECT ({_B_SQL})")
 def q_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     a, b = _slices(spark, sf_dir)
     return a.intersect(b)
 
 
-@query("q_intersect_all", oracle=f"({_A_SQL}) INTERSECT ALL ({_B_SQL})")
+@query("q_intersect_all", bench=False, oracle=f"({_A_SQL}) INTERSECT ALL ({_B_SQL})")
 def q_intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bag intersection — multiplicity = min(count_a, count_b)."""
     a, b = _slices(spark, sf_dir)
     return a.intersectAll(b)
 
 
-@query("q_except", oracle=f"({_A_SQL}) EXCEPT ({_B_SQL})")
+@query("q_except", bench=False, oracle=f"({_A_SQL}) EXCEPT ({_B_SQL})")
 def q_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     a, b = _slices(spark, sf_dir)
     return a.subtract(b)
 
 
-@query("q_except_all", oracle=f"({_A_SQL}) EXCEPT ALL ({_B_SQL})")
+@query("q_except_all", bench=False, oracle=f"({_A_SQL}) EXCEPT ALL ({_B_SQL})")
 def q_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bag difference — multiplicity = max(0, count_a - count_b)."""
     a, b = _slices(spark, sf_dir)

@@ -52,6 +52,7 @@ _SQL_NORM = (
 
 @query(
     "q_sim_cosine_pair",
+    bench=False,
     oracle=f"""
     WITH a AS (SELECT embedding AS ea FROM embeddings WHERE vec_id = 7),
          b AS (SELECT embedding AS eb FROM embeddings WHERE vec_id = 42)
@@ -326,6 +327,7 @@ def q_knn_join_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_sim_search_ivf",
+    bench=False,
     oracle=f"""
     WITH cent AS (
         SELECT label,

@@ -54,6 +54,7 @@ def _h_col(col, a: int, b: int, w: int):
 
 @query(
     "q_sketch_cms_freq",
+    bench=False,
     oracle=f"""
     WITH hashed AS (
         SELECT h.i,
@@ -147,6 +148,7 @@ def q_sketch_cms_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_sketch_bloom_prune",
+    bench=False,
     oracle=f"""
     WITH members AS (
         SELECT DISTINCT o_custkey FROM orders

@@ -49,6 +49,7 @@ def q_sort_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_limit",
+    bench=False,
     oracle="""
     SELECT o_orderkey, o_custkey, o_totalprice
     FROM orders

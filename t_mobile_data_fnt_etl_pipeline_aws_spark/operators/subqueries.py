@@ -28,6 +28,7 @@ def _view(spark: SparkSession, sf_dir: str, name: str) -> None:
 
 @query(
     "q_subquery_exists",
+    bench=False,
     oracle="""
     SELECT o_orderpriority, count(*) AS order_count
     FROM orders
@@ -67,6 +68,7 @@ def q_subquery_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_subquery_not_exists",
+    bench=False,
     oracle="""
     SELECT c_mktsegment, count(*) AS n_customers
     FROM customer
@@ -115,7 +117,7 @@ GROUP BY p_brand
 """
 
 
-@query("q_subquery_scalar", oracle=_SCALAR_SQL)
+@query("q_subquery_scalar", bench=False, oracle=_SCALAR_SQL)
 def q_subquery_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Uncorrelated scalar subqueries: parts priced above the corpus
     mean, per brand. ``price · n > Σprice`` is the division-free form of

@@ -68,6 +68,7 @@ def q_text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_text_ngrams",
+    bench=False,
     oracle="""
     SELECT bigram, n_uses
     FROM (
@@ -113,6 +114,7 @@ def q_text_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_text_doc_stats",
+    bench=False,
     oracle=f"""
     SELECT doc_id, lang, source,
            cast(length(text) as bigint) AS chars_measured,
@@ -201,6 +203,7 @@ def q_text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_text_quality",
+    bench=False,
     oracle=f"""
     WITH s AS (
         SELECT doc_id,
@@ -249,6 +252,7 @@ def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_text_fingerprint",
+    bench=False,
     oracle="""
     WITH codes AS (
         SELECT doc_id,
@@ -284,6 +288,7 @@ def q_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_text_dedup_normalized",
+    bench=False,
     oracle="""
     SELECT min(doc_id) AS keep_doc_id,
            count(*) AS n_variants,
@@ -382,6 +387,7 @@ _BPE_PRETOKEN = r"[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]"
 
 @query(
     "q_text_tokenize_bpe",
+    bench=False,
     oracle=f"""
     SELECT lang,
            cast(count(*) AS bigint) AS n_docs,

@@ -57,6 +57,7 @@ def q_window_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_window_analytic",
+    bench=False,
     oracle="""
     SELECT o_orderkey, o_custkey, o_orderdate, o_totalprice,
            lag(o_totalprice)  OVER w AS prev_price,
@@ -89,6 +90,7 @@ def q_window_analytic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_window_running",
+    bench=False,
     oracle=f"""
     SELECT o_orderkey, o_custkey, o_orderdate,
            {sql_finish_dec(f'''sum(cast(o_totalprice as {DEC})) OVER
@@ -159,6 +161,7 @@ def q_window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_window_distribution",
+    bench=False,
     oracle="""
     SELECT c_custkey, c_mktsegment, c_acctbal,
            ntile(4)       OVER w AS quartile,
@@ -210,6 +213,7 @@ def q_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_sessionize_batch",
+    bench=False,
     oracle="""
     WITH o AS (
         SELECT user_id, event_id, epoch_us(ts) // 1000000 AS tsec,
@@ -359,6 +363,7 @@ def q_resample_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_window_cumulative_distinct",
+    bench=False,
     oracle="""
     WITH firsts AS (
         SELECT event_type, user_id,

@@ -7,6 +7,13 @@ Every operator from SURVEY.md §2 registers here via the ``@query`` decorator:
 
 ``oracle=None`` marks a rows-only query (non-SQL-expressible — the driver
 records the weaker check; SURVEY.md §2 documents which keys and why).
+
+``bench=False`` keeps a key out of ``headline_keys()``, the set bench.py
+times by default: bounded-slice micro queries whose tiny fixed work
+would over-weight the total, and keys whose cost is a driver loop's job
+floor (q_cluster_kmeans_lloyd, q_bpe_train_*) or the size of their output
+(q_dedup_pairs_full emits ~3M pairs at sf0.1) rather than the plan. The
+full ``SPARK_GRAFT_BENCH_QUERIES=all`` sweep still times them.
 """
 
 from __future__ import annotations
@@ -20,6 +27,8 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
+#: keys registered with ``bench=False``
+NOT_BENCHED: set[str] = set()
 
 #: Modules that register queries on import (one per SURVEY.md §2 block).
 _QUERY_MODULES = [
@@ -53,13 +62,17 @@ _QUERY_MODULES = [
 ]
 
 
-def query(key: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
+def query(
+    key: str, oracle: str | None = None, bench: bool = True
+) -> Callable[[QueryFn], QueryFn]:
     def deco(fn: QueryFn) -> QueryFn:
         if key in QUERIES:
             raise ValueError(f"duplicate query key {key!r}")
         QUERIES[key] = fn
         if oracle is not None:
             ORACLES[key] = oracle
+        if not bench:
+            NOT_BENCHED.add(key)
         return fn
 
     return deco
@@ -182,3 +195,8 @@ def all_queries() -> dict[str, QueryFn]:
 def all_oracles() -> dict[str, str]:
     _import_all()
     return {k: ORACLES[k] for k in _window_order(ORACLES)}
+
+
+def headline_keys() -> list[str]:
+    """The keys bench.py times by default, in registry order."""
+    return [k for k in all_queries() if k not in NOT_BENCHED]

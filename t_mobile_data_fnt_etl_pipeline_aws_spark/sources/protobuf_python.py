@@ -248,9 +248,8 @@ def encode_flat_batch(schema: dict, cols: dict):
 #: compiled flat-projection decoders, keyed by the wanted-spec signature
 _FLAT_DECODER_CACHE: dict[str, object] = {}
 
-#: zero-indent varint read into ``a`` (indented per use site)
-_VARINT_READ = """\
-a = buf[pos]; pos += 1
+#: zero-indent rest of a varint whose first byte is already in ``a``
+_VARINT_TAIL = """\
 if a & 128:
     a &= 127; s = 7
     while True:
@@ -260,6 +259,8 @@ if a & 128:
             break
         s += 7
 """
+#: zero-indent varint read into ``a`` (indented per use site)
+_VARINT_READ = "a = buf[pos]; pos += 1\n" + _VARINT_TAIL
 
 
 def _flat_decoder(wanted: dict):
@@ -484,95 +485,55 @@ def encode_event_envelope(user_id: int, event_ids, values) -> bytes:
     return bytes(out)
 
 
+def _envelope_decoder():
+    """exec-compile the envelope decode loop behind
+    ``decode_event_envelopes``. Its varint reads are ``_VARINT_READ``,
+    as in ``_flat_decoder``; an event field's tag is tested on its first
+    byte (both wanted tags are one byte) and only an unknown or
+    multi-byte tag reads the rest with ``_VARINT_TAIL``."""
+    import textwrap
+
+    def ind(text: str, levels: int) -> str:
+        return textwrap.indent(text, "    " * levels)
+
+    as_int64 = "a - 18446744073709551616 if a >= 9223372036854775808 else a\n"
+    src = (
+        "def _decode(buf, offsets):\n"
+        + ind(
+            "users = []; eids = []; voffs = []\n"
+            "ua, ea, va = users.append, eids.append, voffs.append\n"
+            "for mi in range(len(offsets) - 1):\n"
+            "    pos = offsets[mi]; end = offsets[mi + 1]\n"
+            "    uid = 0; evs = []\n"
+            "    while pos < end:\n",
+            1,
+        )
+        + ind(_VARINT_READ + "num = a >> 3; wire = a & 7\n", 3)
+        + ind(f"if num == 2 and wire == {LEN}:\n", 3)
+        + ind(_VARINT_READ + "pend = pos + a; e_ = 0; vo = -1\nwhile pos < pend:\n", 4)
+        + ind("t = buf[pos]; pos += 1\nif t == 0x08:\n", 5)
+        + ind(_VARINT_READ + "e_ = " + as_int64, 6)
+        + ind("elif t == 0x11:\n    vo = pos; pos += 8\nelse:\n    a = t\n", 5)
+        + ind(_VARINT_TAIL + "pos = _skip_field(a & 7, buf, pos)\n", 6)
+        + ind("evs.append((e_, vo))\n", 4)
+        + ind(f"elif num == 1 and wire == {VARINT}:\n", 3)
+        + ind(_VARINT_READ + "uid = " + as_int64, 4)
+        + ind("else:\n    pos = _skip_field(wire, buf, pos)\n", 3)
+        + ind("for e_, vo in evs:\n    ua(uid); ea(e_); va(vo)\n", 2)
+        + ind("return users, eids, voffs\n", 1)
+    )
+    ns: dict = {"_skip_field": _skip_field}
+    exec(compile(src, "<protobuf_envelope_decoder>", "exec"), ns)
+    return ns["_decode"]
+
+
+_DECODE_ENVELOPES = _envelope_decoder()
+
+
 def decode_event_envelopes(buf: bytes, offsets):
     """Decode N back-to-back envelopes (bounds in ``offsets``) and
     flatten to columns: ``(user_ids, event_ids, value_offsets)`` where
     a value offset of -1 means the proto3 default 0.0 (gather the 8-byte
     doubles vectorized from ``buf``). Row order and defaults match
     the per-message reference decoder + a per-event flatten exactly."""
-    users: list = []
-    eids: list = []
-    voffs: list = []
-    ua, ea, va = users.append, eids.append, voffs.append
-    for mi in range(len(offsets) - 1):
-        pos = offsets[mi]
-        end = offsets[mi + 1]
-        uid = 0
-        evs: list = []
-        while pos < end:
-            a = buf[pos]; pos += 1
-            if a & 128:
-                a &= 127; s = 7
-                while True:
-                    b_ = buf[pos]; pos += 1
-                    a |= (b_ & 127) << s
-                    if b_ < 128:
-                        break
-                    s += 7
-            num = a >> 3
-            wire = a & 7
-            if num == 2 and wire == LEN:
-                a = buf[pos]; pos += 1
-                if a & 128:
-                    a &= 127; s = 7
-                    while True:
-                        b_ = buf[pos]; pos += 1
-                        a |= (b_ & 127) << s
-                        if b_ < 128:
-                            break
-                        s += 7
-                pend = pos + a
-                e_ = 0
-                vo = -1
-                while pos < pend:
-                    t = buf[pos]; pos += 1
-                    if t == 0x08:
-                        a = buf[pos]; pos += 1
-                        if a & 128:
-                            a &= 127; s = 7
-                            while True:
-                                b_ = buf[pos]; pos += 1
-                                a |= (b_ & 127) << s
-                                if b_ < 128:
-                                    break
-                                s += 7
-                        e_ = (
-                            a - 18446744073709551616
-                            if a >= 9223372036854775808
-                            else a
-                        )
-                    elif t == 0x11:
-                        vo = pos; pos += 8
-                    else:  # general skip (multi-byte tag or unknown field)
-                        if t & 128:
-                            t &= 127; s = 7
-                            while True:
-                                b_ = buf[pos]; pos += 1
-                                t |= (b_ & 127) << s
-                                if b_ < 128:
-                                    break
-                                s += 7
-                        pos = _skip_field(t & 7, buf, pos)
-                evs.append((e_, vo))
-            elif num == 1 and wire == VARINT:
-                a = buf[pos]; pos += 1
-                if a & 128:
-                    a &= 127; s = 7
-                    while True:
-                        b_ = buf[pos]; pos += 1
-                        a |= (b_ & 127) << s
-                        if b_ < 128:
-                            break
-                        s += 7
-                uid = (
-                    a - 18446744073709551616
-                    if a >= 9223372036854775808
-                    else a
-                )
-            else:
-                pos = _skip_field(wire, buf, pos)
-        for e_, vo in evs:
-            ua(uid)
-            ea(e_)
-            va(vo)
-    return users, eids, voffs
+    return _DECODE_ENVELOPES(buf, offsets)

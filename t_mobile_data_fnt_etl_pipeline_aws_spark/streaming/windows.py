@@ -49,8 +49,8 @@ def q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     the r11 driver drift flag (0.23 -> 0.67 s) is jitter on a sub-0.5 s
     key — source untouched since r6, and the anchor-normalized ratio
     has bounced 0.15-0.37 across 19 recorded runs; the dual-anchor
-    re-measure landed 0.28, mid-band. bench.py's prior is now the
-    median of the last 5 records, which retires this flag class.
+    re-measure landed 0.28, mid-band. bench.py now gates on job and
+    shuffle counters, not wall time, which retires this flag class.
     """
     e = load(spark, sf_dir, "events")
     return (
@@ -65,6 +65,7 @@ def q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_stream_sliding",
+    bench=False,
     oracle=f"""
     SELECT {_EPOCH} + (
                (epoch_us(ts) // 1000000 // 21600) * 21600 - i.i * 21600
@@ -151,6 +152,7 @@ _WM_SHARD = 1 << 16
 
 @query(
     "q_stream_watermark_late",
+    bench=False,
     oracle="""
     WITH arrivals AS (
         SELECT ts, event_type,
@@ -223,6 +225,7 @@ def q_stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_stream_dedup",
+    bench=False,
     oracle="""
     SELECT event_type,
            count(*) AS n_raw,
@@ -255,6 +258,7 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_stream_stateful_count",
+    bench=False,
     oracle="""
     WITH last AS (
         SELECT user_id, event_type,
@@ -292,6 +296,7 @@ def q_stream_stateful_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_stream_static_join",
+    bench=False,
     oracle=f"""
     SELECT date_trunc('day', ts) AS w_start,
            c_mktsegment,
@@ -333,6 +338,7 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_stream_stream_join",
+    bench=False,
     oracle="""
     SELECT date_trunc('day', v.ts) AS w_start,
            count(*) AS n_pairs,
@@ -528,6 +534,7 @@ def q_stream_stream_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_stream_avro_ingest",
+    bench=False,
     oracle=f"""
     SELECT event_type,
            count(*) AS n_events,

@@ -138,52 +138,6 @@ def test_theta_bucketed_is_equi_join_not_nested_loop(spark, sf_dir):
     ), strategies
 
 
-def test_no_unpartitioned_window_over_raw_input(spark, sf_dir):
-    """No registered query may run a partition-less window over base-table
-    rows — that funnels the whole input through ONE task at scale (the
-    round-1 q_stream_watermark_late defect). The only allowed global
-    window is that query's boundary prefix-max, which scans the tiny
-    per-shard aggregate (rows = n / 2^16), and the explicit global sorts
-    of q_sort_multi-style ORDER BY outputs (Sort, not Window).
-
-    A partition-less windowspecdefinition's first argument is an ORDER
-    column (`col ASC ...`); partitioned ones lead with bare partition
-    columns followed by a comma.
-    """
-    import re
-
-    partitionless = re.compile(
-        r"windowspecdefinition\([^,()]+ (?:ASC|DESC)"
-    )
-    # zorder: one prefix-sum over the per-shard COUNT table (rows =
-    # distinct zkey-high-bits shards, not base rows) — same tiny-aggregate
-    # class as the watermark boundary prefix-max. skyline: one prefix-max
-    # over the per-price-shard MAX table (~100 rows at any SF).
-    # equidepth: the same zorder-style prefix-sum over the per-price-shard
-    # COUNT table (~35 rows) — the base-table rank is shard-partitioned.
-    # ks_drift: the two CDF cumsums run over the per-$1000-BUCKET count
-    # table (~500 rows bounded by the fixed price domain at any SF) —
-    # same tiny-aggregate class as skyline's price shards.
-    # mann_whitney: one prefix-sum over the per-$1000-price-shard COUNT
-    # table (bounded by the price domain at any SF) — the equidepth
-    # construction; base-table ranks are shard-partitioned.
-    allowed = {
-        "q_stream_watermark_late": 1,
-        "q_sort_zorder_layout": 1,
-        "q_skyline_pareto": 1,
-        "q_profile_histogram_equidepth": 1,
-        "q_stats_ks_drift": 4,
-        "q_stats_mann_whitney": 1,
-    }
-    offenders = {}
-    for key, fn in QUERIES.items():
-        plan = plan_string(fn(spark, sf_dir))
-        n = len(partitionless.findall(plan))
-        if n > allowed.get(key, 0):
-            offenders[key] = n
-    assert not offenders, f"partition-less windows: {offenders}"
-
-
 def test_exists_decorrelates_to_semi_join(spark, sf_dir):
     """EXISTS must compile to a semi join — not per-row subquery
     re-execution (which would be a correlated-loop disaster at scale)."""
