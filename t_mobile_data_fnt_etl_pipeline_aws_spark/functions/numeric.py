@@ -51,9 +51,13 @@ At 100 TB this costs one decimal accumulator per aggregate in the
 partial-agg buffer — still one shuffle with map-side combine; no extra
 pass. Measured cost of that exactness (flagship, sf0.1, local[32]):
 decimal sums 1.3 s vs plain-double sums 0.4 s — 3.3× on the agg-bound
-query, invariant to the decimal precision chosen (18,4) vs (30,10),
-because Spark's sum-over-decimal accumulator widens past the long-backed
-range either way. The premium buys bit-reproducible results across runs,
+query. The premium depends on the precision: Spark sums a decimal(p, s)
+in a decimal(p+10, s) buffer, and a sum whose buffer stays within 18
+digits (p <= 8) is long-backed — Catalyst's DecimalAggregates rewrites
+it to a sum over the unscaled long — while a wider buffer accumulates
+on java.math.BigDecimal. Four power sums over 600k lineitem rows
+(local[4]): decimal(30,10) 5.05 s, decimal(18,10) 4.85 s, decimal(8,4)
+1.96 s, double 0.44 s. The premium buys bit-reproducible results across runs,
 partitionings, AND engines — the correctness gate this repo is built on.
 """
 

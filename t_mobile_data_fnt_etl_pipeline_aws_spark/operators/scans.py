@@ -1742,7 +1742,7 @@ def q_scan_files_pruned_by_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import uuid as _uuid
 
-    from ..sources.manifest_table import commit_appends, prune_files
+    from ..sources.manifest_table import commit_appends, prune_files, read_version
 
     table = _sink_dir(f"orders_fileskip_{_uuid.uuid4().hex[:8]}")
     o = load(spark, sf_dir, "orders").withColumn(
@@ -1762,7 +1762,7 @@ def q_scan_files_pruned_by_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "1998-01-01 00:00:00",
         "1998-12-31 23:59:59.999999",
     )
-    pruned = spark.read.parquet(*files).filter(
+    pruned = read_version(spark, table, version, paths=files).filter(
         (F.col("o_orderdate") >= F.lit("1998-01-01 00:00:00").cast("timestamp_ntz"))
         & (F.col("o_orderdate") < F.lit("1999-01-01 00:00:00").cast("timestamp_ntz"))
     )
@@ -1886,7 +1886,7 @@ def q_etl_incremental_consume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import uuid as _uuid
 
-    from ..sources.manifest_table import commit_append, diff_files
+    from ..sources.manifest_table import commit_append, diff_files, read_version
 
     table = _sink_dir(f"orders_cdf_{_uuid.uuid4().hex[:8]}")
     o = load(spark, sf_dir, "orders")
@@ -1911,7 +1911,7 @@ def q_etl_incremental_consume(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     delta = diff_files(table, v1, v2)
     return (
-        spark.read.parquet(*delta)
+        read_version(spark, table, v2, paths=delta)
         .groupBy("o_orderpriority")
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
@@ -3117,7 +3117,7 @@ def q_scan_files_pruned_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import uuid as _uuid
 
-    from ..sources.manifest_table import commit_append, prune_files_bloom
+    from ..sources.manifest_table import commit_append, prune_files_bloom, read_version
 
     table = _sink_dir(f"orders_bloom_{_uuid.uuid4().hex[:8]}")
     o = load(spark, sf_dir, "orders").select(
@@ -3135,7 +3135,7 @@ def q_scan_files_pruned_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     needle = o.agg(F.min("o_orderkey")).collect()[0][0]  # 1-row finish
     files, total = prune_files_bloom(table, v, "o_orderkey", int(needle))
     return (
-        spark.read.parquet(*files)
+        read_version(spark, table, v, paths=files)
         .filter(F.col("o_orderkey") == F.lit(needle))
         .select("o_orderkey", "o_orderpriority", "o_totalprice")
         .withColumn("pruned_subset", F.lit(len(files) < total))
@@ -3191,7 +3191,7 @@ def q_scan_files_pruned_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import uuid as _uuid
 
-    from ..sources.manifest_table import commit_append, prune_files_multi
+    from ..sources.manifest_table import commit_append, prune_files_multi, read_version
     from .sorts import _zkey_expr
 
     o = load(spark, sf_dir, "orders").select(
@@ -3245,7 +3245,7 @@ def q_scan_files_pruned_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     ck_only = {"o_custkey": preds["o_custkey"]}
     zfiles_ck, _ = prune_files_multi(ztable, vz, ck_only)
     lfiles_ck, _ = prune_files_multi(ltable, vl, ck_only)
-    pruned = spark.read.parquet(*zfiles).filter(
+    pruned = read_version(spark, ztable, vz, paths=zfiles).filter(
         (F.col("o_custkey") <= maxck // 4)
         & (F.col("o_orderdate") >= F.lit("1995-01-01").cast("timestamp_ntz"))
         & (F.col("o_orderdate") < F.lit("1996-01-01").cast("timestamp_ntz"))
@@ -3332,7 +3332,7 @@ def q_etl_manifest_merge_cow(spark: SparkSession, sf_dir: str) -> DataFrame:
     in_range = (
         F.col("o_orderdate") >= F.lit("1998-01-01").cast("timestamp_ntz")
     ) & (F.col("o_orderdate") < F.lit("1999-01-01").cast("timestamp_ntz"))
-    touched = spark.read.parquet(*affected)
+    touched = read_version(spark, table, v, paths=affected)
     merged = touched.withColumn(
         "o_totalprice",
         F.when(in_range, F.col("o_totalprice") + F.lit(100))
@@ -3475,6 +3475,7 @@ def q_etl_hidden_partitioning(spark: SparkSession, sf_dir: str) -> DataFrame:
         commit_append_partitioned,
         current_version,
         prune_files_partition,
+        read_version,
     )
 
     table = _sink_dir(f"orders_hidden_{_uuid.uuid4().hex[:8]}")
@@ -3491,7 +3492,7 @@ def q_etl_hidden_partitioning(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp_ntz")
     ) & (F.col("o_orderdate") < F.lit("1997-04-01").cast("timestamp_ntz"))
     return (
-        spark.read.parquet(*files)
+        read_version(spark, table, v, paths=files)
         .filter(in_range)
         .groupBy("o_orderpriority")
         .agg(
@@ -4279,6 +4280,7 @@ def q_etl_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         current_version,
         prune_files_partition,
         read_manifest,
+        read_version,
     )
 
     table = _sink_dir(f"orders_pevol_{_uuid.uuid4().hex[:8]}")
@@ -4322,7 +4324,7 @@ def q_etl_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderdate") < F.lit("1997-04-01").cast("timestamp_ntz")
     )
     return (
-        spark.read.parquet(*files)
+        read_version(spark, table, v, paths=files)
         .filter(in_range)
         .groupBy("o_orderpriority")
         .agg(
@@ -5727,6 +5729,7 @@ def q_etl_bucket_partition_transform(
         current_version,
         prune_files_partition_value,
         read_manifest,
+        read_version,
     )
 
     table = _sink_dir(f"orders_bucket_{_uuid.uuid4().hex[:8]}")
@@ -5747,7 +5750,9 @@ def q_etl_bucket_partition_transform(
     pruned_ok = 0 < len(files) < total and all(
         by_path[p] == want_bucket for p in files
     )
-    rows = spark.read.parquet(*files).filter(F.col("o_custkey") == probe)
+    rows = read_version(spark, table, v, paths=files).filter(
+        F.col("o_custkey") == probe
+    )
     rederived = F.pmod(
         F.conv(
             F.substring(F.md5(F.col("o_custkey").cast("string")), 1, 15),
@@ -5804,6 +5809,7 @@ def q_etl_identity_partition_transform(
         current_version,
         prune_files_partition_value,
         read_manifest,
+        read_version,
     )
 
     table = _sink_dir(f"orders_identity_{_uuid.uuid4().hex[:8]}")
@@ -5824,7 +5830,7 @@ def q_etl_identity_partition_transform(
         by_path[p] == probe for p in files
     )
     return (
-        spark.read.parquet(*files)
+        read_version(spark, table, v, paths=files)
         .filter(F.col("o_orderpriority") == probe)
         .groupBy("o_orderpriority")
         .agg(

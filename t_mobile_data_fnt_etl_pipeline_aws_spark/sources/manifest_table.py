@@ -71,10 +71,18 @@ capabilities a raw parquet directory cannot offer:
 
   Constraints gate writes; they are not data, so every other commit
   kind keeps them.
-
-Readers pass the selected file list straight to ``spark.read.parquet``,
-so Catalyst still applies row-group pushdown INSIDE surviving files —
-manifest pruning composes with, not replaces, PushedFilters.
+* **one masked-scan core** — every read (``read_version`` and its
+  ``paths=`` subsets, ``read_version_with_pos``,
+  ``read_version_with_lineage``, both sides of ``read_changes``) plans
+  through ``_scan``: the manifest schema pinned on the data files, the
+  ``_metadata`` row identity captured once, then position vectors,
+  seq-scoped equality deletes and column defaults in that order, with
+  ONE broadcast per-file map (path -> seq, first_row_id) for all that
+  need it. Vector and value files are read under their fixed schemas,
+  so building a read runs no Spark job. A read with nothing to mask is
+  the bare pinned scan, so Catalyst still applies row-group pushdown
+  INSIDE surviving files — manifest pruning composes with, not
+  replaces, PushedFilters.
 
 Reference repo publishes no code (/root/reference/README.md:1-2); the
 surface follows public Iceberg/Delta-log semantics.
@@ -1002,44 +1010,32 @@ def commit_replace(
     )
 
 
-def _base_reader(spark: SparkSession, manifest: dict):
-    files = [f["path"] for f in manifest["files"]]
-    schema = manifest.get("schema")
-    reader = spark.read
-    if schema:
-        reader = reader.schema(", ".join(f"`{n}` {t}" for n, t in schema))
-    return reader.parquet(*files)
+def _ddl(schema) -> str:
+    """The reader DDL of a ``[[name, type], ...]`` schema."""
+    return ", ".join(f"`{n}` {t}" for n, t in schema)
 
 
-def _apply_delete_vectors(
-    spark: SparkSession, df: DataFrame, deletes: list[dict]
-) -> DataFrame:
-    """Mask position-deleted rows: broadcast anti-join the (small,
-    sparse-by-design) delete vectors against the scan's (file_path,
-    row_index) identity from the parquet reader's ``_metadata`` struct.
-    At 100 TB the delete side is proportional to ROWS DELETED, not
-    table size, so the broadcast holds exactly when merge-on-read is
-    the right trade (sparse deletes); a delete too big to broadcast is
-    the signal to compact (commit_replace folds the mask in and starts
-    delete-free)."""
+def _vectors(spark: SparkSession, deletes: list[dict]) -> DataFrame:
+    """Position vectors as ``__del_fp``/``__del_ri``. ``_stage_deletes``
+    lands them as (file_path, row_index) pairs, a fixed schema, so the
+    read is pinned and plans without a schema-inference job."""
     from pyspark.sql import functions as F
 
-    cols = df.columns
-    pos = df.select(
-        "*",
-        F.col("_metadata.file_path").alias("__dv_fp"),
-        F.col("_metadata.row_index").alias("__dv_ri"),
+    return (
+        spark.read.schema("file_path string, row_index bigint")
+        .parquet(*[d["path"] for d in deletes])
+        .select(
+            F.col("file_path").alias("__del_fp"),
+            F.col("row_index").alias("__del_ri"),
+        )
     )
-    dv = spark.read.parquet(*[d["path"] for d in deletes]).select(
-        F.col("file_path").alias("__del_fp"),
-        F.col("row_index").alias("__del_ri"),
-    )
-    return pos.join(
-        F.broadcast(dv),
-        (pos["__dv_fp"] == dv["__del_fp"])
-        & (pos["__dv_ri"] == dv["__del_ri"]),
-        "left_anti",
-    ).select(*cols)
+
+
+def _eq_values(spark: SparkSession, e: dict, types: dict) -> DataFrame:
+    """One equality-delete value file, pinned to its column's declared
+    type (``commit_delete_equality`` stages only that type; a later
+    widening upcasts the narrow file natively). No inference job."""
+    return spark.read.schema(_ddl([(e["col"], types[e["col"]])])).parquet(e["path"])
 
 
 def _norm_fp(col):
@@ -1050,80 +1046,90 @@ def _norm_fp(col):
     return F.regexp_replace(col, "^file:/+", "/")
 
 
-def _apply_equality_deletes(
-    spark: SparkSession, df: DataFrame, manifest: dict, fp_col: str
+def _scan(
+    spark: SparkSession,
+    manifest: dict,
+    paths: list[str] | None = None,
+    deletes: list[dict] | None = None,
+    schema: list | None = None,
+    lineage: bool = False,
+    pos: bool = False,
 ) -> DataFrame:
-    """Mask rows matching any live equality delete, SCOPED BY DATA
-    SEQUENCE NUMBER (Iceberg v2): an equality vector committed at seq
-    ``s`` applies only to rows from files with seq < s — rows appended
-    AFTER the delete are visible, not swallowed by a standing mask
-    (ADVICE r13: a row re-inserted post-delete must reappear without
-    waiting for compaction). Legacy entries without a seq fall back to
-    the old standing-mask behavior (file seq -> 0, delete seq ->
-    unscoped).
+    """The one masked scan every manifest read plans through.
 
-    One broadcast anti-join per (column, file) pair plus ONE broadcast
-    map join file_path -> seq (O(#files) rows). Values-proportional,
-    like the position path — an equality set too big to broadcast is
-    the signal to compact. ``fp_col`` names the raw
-    ``_metadata.file_path`` column on ``df``."""
+    Reads ``manifest``'s live files (restricted to ``paths`` if given)
+    under ``schema`` (default: the manifest's committed schema, so files
+    written before a column existed null-fill it), then, in order:
+
+    1. anti-joins the position vectors ``deletes`` (default: the
+       manifest's) against the ``_metadata`` row identity;
+    2. joins ONE per-file map, path -> (data sequence number,
+       first_row_id), when equality deletes, defaults or lineage need it;
+    3. anti-joins each equality delete, SEQ-SCOPED (Iceberg v2): a value
+       committed at seq ``s`` masks only rows of files with seq < s, so
+       a row re-inserted after the delete stays visible; an entry
+       without a seq masks unscoped;
+    4. resolves column defaults (Iceberg v3 ``initial-default``): a
+       null in a file older than the default's seq reads the default,
+       newer files keep their stored values, legitimate nulls included.
+
+    Every join is a broadcast: vectors and values are O(rows deleted),
+    the map is O(#files), so the data side is never shuffled; a mask too
+    big to broadcast is the signal to compact. A read with no masks, no
+    defaults, no lineage and no ``pos`` is the bare pinned scan: no
+    identity columns, no join. Output: the schema's columns, plus
+    ``__mt_fp``/``__mt_ri`` (the raw row identity) when ``pos``, plus
+    ``_row_id`` (materialized ``__row_id``, else first_row_id + row
+    index) when ``lineage``."""
     from pyspark.sql import functions as F
 
+    if schema is None:
+        schema = manifest["schema"]
+    if deletes is None:
+        deletes = manifest.get("deletes") or []
+    files = manifest["files"]
+    if paths is not None:
+        keep = set(paths)
+        files = [f for f in files if f["path"] in keep]
+    cols = [n for n, _ in schema]
     eq = manifest.get("eq_deletes") or []
-    if not eq:
+    defaults = {
+        n: d for n, d in (manifest.get("defaults") or {}).items() if n in cols
+    }
+    ddl = _ddl([*schema, ("__row_id", "bigint")] if lineage else schema)
+    df = spark.read.schema(ddl).parquet(*[f["path"] for f in files])
+    if not (deletes or eq or defaults or lineage or pos):
         return df
-    cols = df.columns
-    df = _with_file_seq(spark, df, manifest, fp_col)
-    fseq = F.coalesce(F.col("__sq_seq"), F.lit(0))
-    for e in eq:
-        vals = spark.read.parquet(e["path"]).select(
-            F.col(e["col"]).alias("__eq_v")
+    # the row identity is only resolvable at the scan, before any join
+    df = df.select(
+        "*",
+        F.col("_metadata.file_path").alias("__mt_fp"),
+        F.col("_metadata.row_index").alias("__mt_ri"),
+    )
+    if deletes:
+        dv = _vectors(spark, deletes)
+        df = df.join(
+            F.broadcast(dv),
+            (df["__mt_fp"] == dv["__del_fp"]) & (df["__mt_ri"] == dv["__del_ri"]),
+            "left_anti",
         )
+    if eq or defaults or lineage:
+        fmap = spark.createDataFrame(
+            [(f["path"], int(f.get("seq", 0)), f.get("first_row_id")) for f in files],
+            "__fm_fp string, __fm_seq long, __fm_first long",
+        )
+        df = df.withColumn("__fm_fp", _norm_fp(F.col("__mt_fp"))).join(
+            F.broadcast(fmap), on="__fm_fp", how="left"
+        )
+        fseq = F.coalesce(F.col("__fm_seq"), F.lit(0))
+    types = dict(schema)
+    for e in eq:
+        vals = _eq_values(spark, e, types).select(F.col(e["col"]).alias("__eq_v"))
         cond = df[e["col"]] == F.col("__eq_v")
         if e.get("seq") is not None:
             cond = cond & (fseq < F.lit(int(e["seq"])))
         df = df.join(F.broadcast(vals), cond, "left_anti")
-    return df.select(*cols)
-
-
-def _with_file_seq(spark: SparkSession, df: DataFrame, manifest: dict, fp_col: str):
-    """Attach each row's file DATA SEQUENCE NUMBER as ``__sq_seq`` via
-    one broadcast map join (O(#files) rows) keyed on the normalized
-    ``fp_col`` path. Shared by equality-delete scoping and column
-    defaults — both are 'does this row predate commit N' questions."""
-    from pyspark.sql import functions as F
-
-    smap = spark.createDataFrame(
-        [(f["path"], int(f.get("seq", 0))) for f in manifest["files"]],
-        "__sq_fp string, __sq_seq long",
-    )
-    return (
-        df.withColumn("__sq_fp", _norm_fp(F.col(fp_col)))
-        .join(F.broadcast(smap), on="__sq_fp", how="left")
-        .drop("__sq_fp")
-    )
-
-
-def _apply_column_defaults(
-    spark: SparkSession, df: DataFrame, manifest: dict, fp_col: str
-) -> DataFrame:
-    """COLUMN DEFAULT VALUES (the Iceberg v3 ``initial-default`` shape):
-    a column added with a default reads that default from every file
-    committed BEFORE the column existed (file seq < default seq —
-    those files null-fill at scan, the default replaces the null),
-    while files written after honor their STORED values including
-    legitimate NULLs. Pure projection over the shared file-seq map —
-    no data rewritten, O(#files) metadata."""
-    from pyspark.sql import functions as F
-
-    defaults = manifest.get("defaults") or {}
-    cols = df.columns
-    todo = {n: d for n, d in defaults.items() if n in cols}
-    if not todo:
-        return df
-    df = _with_file_seq(spark, df, manifest, fp_col)
-    fseq = F.coalesce(F.col("__sq_seq"), F.lit(0))
-    for name, d in todo.items():
+    for name, d in defaults.items():
         df = df.withColumn(
             name,
             F.when(
@@ -1131,13 +1137,22 @@ def _apply_column_defaults(
                 F.lit(d["v"]).cast(d["t"]),
             ).otherwise(F.col(name)),
         )
-    return df.select(*cols)
+    out = [*cols, "__mt_fp", "__mt_ri"] if pos else cols
+    if lineage:
+        row_id = F.coalesce(F.col("__row_id"), F.col("__fm_first") + F.col("__mt_ri"))
+        out = [*out, row_id.alias("_row_id")]
+    return df.select(*out)
 
 
 def read_version(
-    spark: SparkSession, table_dir: str, version: int | None = None
+    spark: SparkSession,
+    table_dir: str,
+    version: int | None = None,
+    paths: list[str] | None = None,
 ) -> DataFrame:
-    """Time-travel read: plan from the (as-of) manifest's file list.
+    """Time-travel read: plan from the (as-of) manifest's file list,
+    restricted to ``paths`` (a manifest-pruned or diffed file list) if
+    given.
 
     The read uses the manifest's COMMITTED schema (reader-schema
     resolution, the Avro analogue): files written before a column was
@@ -1151,39 +1166,8 @@ def read_version(
     Iceberg v2 position-delete shape), they are applied here — readers
     always see the post-delete table; the raw files are a private
     storage detail."""
-    from pyspark.sql import functions as F
-
     v = current_version(table_dir) if version is None else version
-    manifest = read_manifest(table_dir, v)
-    df = _base_reader(spark, manifest)
-    deletes = manifest.get("deletes") or []
-    eq = manifest.get("eq_deletes") or []
-    defaults = manifest.get("defaults") or {}
-    if not deletes and not eq and not defaults:
-        return df
-    # capture the row identity ONCE at the scan (it is not resolvable
-    # after a join), feed both mask kinds + column defaults, then
-    # project it away
-    cols = df.columns
-    pos = df.select(
-        "*",
-        F.col("_metadata.file_path").alias("__mt_fp"),
-        F.col("_metadata.row_index").alias("__mt_ri"),
-    )
-    if deletes:
-        dv = spark.read.parquet(*[d["path"] for d in deletes]).select(
-            F.col("file_path").alias("__del_fp"),
-            F.col("row_index").alias("__del_ri"),
-        )
-        pos = pos.join(
-            F.broadcast(dv),
-            (pos["__mt_fp"] == dv["__del_fp"])
-            & (pos["__mt_ri"] == dv["__del_ri"]),
-            "left_anti",
-        )
-    pos = _apply_equality_deletes(spark, pos, manifest, fp_col="__mt_fp")
-    pos = _apply_column_defaults(spark, pos, manifest, fp_col="__mt_fp")
-    return pos.select(*cols)
+    return _scan(spark, read_manifest(table_dir, v), paths=paths)
 
 
 def read_version_with_pos(
@@ -1199,32 +1183,10 @@ def read_version_with_pos(
     vectors are excluded, so re-deleting an already-deleted row is
     impossible by construction (the exactness invariant metadata-only
     COUNT depends on)."""
-    from pyspark.sql import functions as F
-
     v = current_version(table_dir) if version is None else version
-    manifest = read_manifest(table_dir, v)
-    base = _base_reader(spark, manifest)
-    cols = base.columns
-    pos = base.select(
-        "*",
-        F.col("_metadata.file_path").alias("file_path"),
-        F.col("_metadata.row_index").alias("row_index"),
+    return _scan(spark, read_manifest(table_dir, v), pos=True).withColumnsRenamed(
+        {"__mt_fp": "file_path", "__mt_ri": "row_index"}
     )
-    deletes = manifest.get("deletes") or []
-    if deletes:
-        dv = spark.read.parquet(*[d["path"] for d in deletes]).select(
-            F.col("file_path").alias("__del_fp"),
-            F.col("row_index").alias("__del_ri"),
-        )
-        pos = pos.join(
-            F.broadcast(dv),
-            (pos["file_path"] == dv["__del_fp"])
-            & (pos["row_index"] == dv["__del_ri"]),
-            "left_anti",
-        ).select(*cols, "file_path", "row_index")
-    pos = _apply_equality_deletes(spark, pos, manifest, fp_col="file_path")
-    pos = _apply_column_defaults(spark, pos, manifest, fp_col="file_path")
-    return pos
 
 
 def commit_delete(
@@ -1958,8 +1920,17 @@ def commit_delete_equality(
     reading) — ``table_stats`` reports ``count_exact: False`` until a
     compaction folds them in. Same commit discipline as position
     vectors: commit_rewrite refuses, commit_replace (from a
-    read_version feed) drops them."""
+    read_version feed) drops them. ``values[col]`` must carry the
+    column's declared type (ValueError before anything stages), so
+    readers pin that type on the value file."""
     prev = _head(table_dir, "cannot delete from an empty table")
+    declared = dict(read_manifest_meta(table_dir, prev).get("schema") or [])
+    got = dict(values.dtypes).get(col)
+    if got is None or got != declared.get(col):
+        raise ValueError(
+            f"equality delete on {col!r}: values type {got} does not match "
+            f"the declared type {declared.get(col)}"
+        )
     entries = [
         {**e, "col": col}
         for e in _stage_deletes(values.select(col).distinct(), table_dir)
@@ -1986,10 +1957,10 @@ def read_changes(
       consumers get values, not just positions), plus rows of v_from
       files matched by window-added equality deletes.
 
-    Same caveat as ``diff_files``: across a REPLACE commit the file
-    diff is not a row diff (compaction rewrites everything); consumers
-    downstream of a compaction dedupe by row identity — the documented
-    CDF limitation real formats share."""
+    Both sides read under v_to's schema. Same caveat as ``diff_files``:
+    across a REPLACE commit the file diff is not a row diff (compaction
+    rewrites everything); consumers downstream of a compaction dedupe by
+    row identity — the documented CDF limitation real formats share."""
     from pyspark.sql import functions as F
 
     mf = read_manifest(table_dir, v_from) if v_from else {"files": []}
@@ -1997,80 +1968,39 @@ def read_changes(
     from_paths = {f["path"] for f in mf["files"]}
     added = [f["path"] for f in mt["files"] if f["path"] not in from_paths]
     old_pos = {d["path"] for d in mf.get("deletes", [])}
-    new_pos = [
-        d["path"] for d in mt.get("deletes", []) if d["path"] not in old_pos
-    ]
+    new_pos = [d for d in mt.get("deletes", []) if d["path"] not in old_pos]
     old_eq = {d["path"] for d in mf.get("eq_deletes", [])}
-    new_eq = [
-        d for d in mt.get("eq_deletes", []) if d["path"] not in old_eq
-    ]
-    schema = mt.get("schema")
-
-    def _reader():
-        r = spark.read
-        if schema:
-            r = r.schema(", ".join(f"`{n}` {t}" for n, t in schema))
-        return r
-
-    def _with_pos(paths):
-        return _reader().parquet(*paths).select(
-            "*",
-            F.col("_metadata.file_path").alias("__cf_fp"),
-            F.col("_metadata.row_index").alias("__cf_ri"),
-        )
-
-    cols = [n for n, _ in schema] if schema else None
+    new_eq = [d for d in mt.get("eq_deletes", []) if d["path"] not in old_eq]
+    schema = mt["schema"]
+    cols = [n for n, _ in schema]
     pieces = []
-    dv = None
-    if new_pos:
-        dv = spark.read.parquet(*new_pos).select(
-            F.col("file_path").alias("__del_fp"),
-            F.col("row_index").alias("__del_ri"),
-        )
     if added:
-        ins = _with_pos(added)
-        if cols is None:
-            cols = [c for c in ins.columns if not c.startswith("__cf_")]
-        if dv is not None:
-            ins = ins.join(
-                F.broadcast(dv),
-                (ins["__cf_fp"] == dv["__del_fp"])
-                & (ins["__cf_ri"] == dv["__del_ri"]),
-                "left_anti",
-            )
-        # v_to's equality vectors mask the new files SEQ-SCOPED: an
-        # in-window vector masks files appended before it; a file
-        # appended after the vector (or a pre-window vector) is not
-        # masked — matching read_version's sequence-number semantics
-        ins = _apply_equality_deletes(spark, ins, mt, fp_col="__cf_fp")
-        ins = _apply_column_defaults(spark, ins, mt, fp_col="__cf_fp")
-        pieces.append(
-            ins.select(*cols).withColumn("_change_type", F.lit("insert"))
-        )
-    if from_paths and (dv is not None or new_eq):
-        old = _with_pos(sorted(from_paths))
-        if cols is None:
-            cols = [c for c in old.columns if not c.startswith("__cf_")]
-        # restrict to rows VISIBLE at v_from: a row already masked
+        # the window's vectors mask the new files; v_to's equality
+        # vectors mask them SEQ-SCOPED (an in-window vector masks files
+        # appended before it, not after) — read_version's semantics
+        ins = _scan(spark, mt, paths=added, deletes=new_pos)
+        pieces.append(ins.withColumn("_change_type", F.lit("insert")))
+    if from_paths and (new_pos or new_eq):
+        # rows VISIBLE at v_from, with v_from's defaults: a row masked
         # before the window must not re-emit as a delete (a downstream
-        # retraction fold would subtract it twice)
-        if mf.get("deletes"):
-            odv = spark.read.parquet(
-                *[d["path"] for d in mf["deletes"]]
-            ).select(
-                F.col("file_path").alias("__odel_fp"),
-                F.col("row_index").alias("__odel_ri"),
+        # retraction fold would subtract it twice), and delete rows
+        # carry the values consumers SAW at v_from
+        old = _scan(spark, mf, schema=schema, pos=True)
+        dels = []
+        if new_pos:
+            dv = _vectors(spark, new_pos)
+            dels.append(
+                old.join(
+                    F.broadcast(dv),
+                    (old["__mt_fp"] == dv["__del_fp"])
+                    & (old["__mt_ri"] == dv["__del_ri"]),
+                    "left_semi",
+                )
             )
-            old = old.join(
-                F.broadcast(odv),
-                (old["__cf_fp"] == odv["__odel_fp"])
-                & (old["__cf_ri"] == odv["__odel_ri"]),
-                "left_anti",
-            )
-        old = _apply_equality_deletes(spark, old, mf, fp_col="__cf_fp")
-        # delete rows materialize the values consumers SAW at v_from,
-        # including v_from's column defaults
-        old = _apply_column_defaults(spark, old, mf, fp_col="__cf_fp")
+        types = dict(schema)
+        for e in new_eq:
+            vals = _eq_values(spark, e, types)
+            dels.append(old.join(F.broadcast(vals), on=e["col"], how="left_semi"))
         # Dedupe on PHYSICAL row identity (file_path, row_index), not on
         # data values (ADVICE r13 medium): two distinct rows with equal
         # column values deleted in the same window must emit TWO delete
@@ -2079,40 +2009,15 @@ def read_changes(
         # identity dedupe only collapses the legitimate double-match
         # case: one physical row hit by both a position vector and an
         # equality vector in the same window.
-        ident = ["__cf_fp", "__cf_ri"]
-        dels = []
-        if dv is not None:
-            dels.append(
-                old.join(
-                    F.broadcast(dv),
-                    (old["__cf_fp"] == dv["__del_fp"])
-                    & (old["__cf_ri"] == dv["__del_ri"]),
-                    "left_semi",
-                ).select(*cols, *ident)
-            )
-        for e in new_eq:
-            vals = spark.read.parquet(e["path"])
-            dels.append(
-                old.join(F.broadcast(vals), on=e["col"], how="left_semi")
-                .select(*cols, *ident)
-            )
-        deleted = dels[0]
-        for d in dels[1:]:
-            deleted = deleted.unionByName(d)
+        deleted = functools.reduce(DataFrame.unionByName, dels)
         pieces.append(
-            deleted.dropDuplicates(ident)
+            deleted.dropDuplicates(["__mt_fp", "__mt_ri"])
             .select(*cols)
             .withColumn("_change_type", F.lit("delete"))
         )
     if not pieces:
-        base = _reader().parquet(
-            *[f["path"] for f in mt["files"]]
-        ).limit(0)
-        return base.withColumn("_change_type", F.lit(""))
-    out = pieces[0]
-    for p in pieces[1:]:
-        out = out.unionByName(p)
-    return out
+        return spark.createDataFrame([], _ddl([*schema, ("_change_type", "string")]))
+    return functools.reduce(DataFrame.unionByName, pieces)
 
 
 def set_ref(table_dir: str, name: str, version: int) -> None:
@@ -2276,54 +2181,10 @@ def read_version_with_lineage(
     written by a lineage-preserving compaction, the MATERIALIZED
     ``__row_id`` column. The id survives compaction, masking, and time
     travel — the identity a downstream feature store or incremental
-    trainer can key on while files churn underneath. One broadcast map
-    join (O(#files)) on top of read_version's plan."""
-    from pyspark.sql import functions as F
-
+    trainer can key on while files churn underneath. The first_row_id
+    lookup rides the scan's one per-file map join (O(#files))."""
     v = current_version(table_dir) if version is None else version
-    manifest = read_manifest(table_dir, v)
-    schema = manifest.get("schema") or []
-    ddl = ", ".join(f"`{n}` {t}" for n, t in schema)
-    reader = spark.read.schema(ddl + ", `__row_id` bigint")
-    file_list = [f["path"] for f in manifest["files"]]
-    if paths is not None:
-        file_list = [p for p in file_list if p in set(paths)]
-    df = reader.parquet(*file_list)
-    cols = [n for n, _ in schema]
-    pos = df.select(
-        "*",
-        F.col("_metadata.file_path").alias("__mt_fp"),
-        F.col("_metadata.row_index").alias("__mt_ri"),
-    )
-    deletes = manifest.get("deletes") or []
-    if deletes:
-        dv = spark.read.parquet(*[d["path"] for d in deletes]).select(
-            F.col("file_path").alias("__del_fp"),
-            F.col("row_index").alias("__del_ri"),
-        )
-        pos = pos.join(
-            F.broadcast(dv),
-            (pos["__mt_fp"] == dv["__del_fp"])
-            & (pos["__mt_ri"] == dv["__del_ri"]),
-            "left_anti",
-        )
-    pos = _apply_equality_deletes(spark, pos, manifest, fp_col="__mt_fp")
-    pos = _apply_column_defaults(spark, pos, manifest, fp_col="__mt_fp")
-    fmap = spark.createDataFrame(
-        [
-            (f["path"], f.get("first_row_id"))
-            for f in manifest["files"]
-        ],
-        "__ln_fp string, __ln_first long",
-    )
-    pos = pos.withColumn("__ln_key", _norm_fp(F.col("__mt_fp")))
-    pos = pos.join(
-        F.broadcast(fmap), pos["__ln_key"] == fmap["__ln_fp"], "left"
-    )
-    row_id = F.coalesce(
-        F.col("__row_id"), F.col("__ln_first") + F.col("__mt_ri")
-    )
-    return pos.select(*cols, row_id.alias("_row_id"))
+    return _scan(spark, read_manifest(table_dir, v), paths=paths, lineage=True)
 
 
 def compact_with_lineage(

@@ -93,6 +93,3 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         )
     return df
 
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load(spark, sf_dir, name) for name in SCHEMAS}

@@ -844,7 +844,7 @@ def q_stream_manifest_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
     import uuid as _uuid
 
-    from ..sources.manifest_table import commit_append, diff_files
+    from ..sources.manifest_table import commit_append, diff_files, read_version
 
     base = os.path.join(
         tempfile.gettempdir(), f"spark_graft_sinks_{os.getpid()}"
@@ -866,7 +866,7 @@ def q_stream_manifest_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     for v in versions:
         delta = diff_files(table, v - 1, v)
         d = (
-            spark.read.parquet(*delta)
+            read_version(spark, table, v, paths=delta)
             .groupBy("event_type")
             .agg(
                 F.count(F.lit(1)).alias("n_events"),
@@ -1535,6 +1535,7 @@ def q_stream_cdc_hidden_partition(spark: SparkSession, sf_dir: str) -> DataFrame
         commit_append_partitioned,
         current_version,
         prune_files_partition,
+        read_version,
     )
     from ..sources.tables import load
 
@@ -1559,7 +1560,7 @@ def q_stream_cdc_hidden_partition(spark: SparkSession, sf_dir: str) -> DataFrame
     lo = F.lit("2024-01-10 00:00:00").cast(ts_t)
     hi = F.lit("2024-01-15 00:00:00").cast(ts_t)
     return (
-        spark.read.parquet(*files)
+        read_version(spark, table, v, paths=files)
         .filter((F.col("ts") >= lo) & (F.col("ts") < hi))
         .groupBy("event_type")
         .agg(

@@ -3509,6 +3509,124 @@ def test_cdf_partition_planner_matches_reference(spark, tmp_path):
     assert (7, 700, "insert", cur) in whole  # the re-insert surfaced
 
 
+def test_manifest_reads_build_without_spark_jobs(spark, tmp_path):
+    """Every manifest read plans through one masked scan whose inputs
+    are all schema-given: the data files under the manifest schema, the
+    position vectors under (file_path, row_index), the equality values
+    under the column's declared type. Building the four reads on a table
+    with a position vector, an equality delete and a column default must
+    therefore run NO Spark job (schema inference would run one per
+    unpinned read)."""
+    from t_mobile_data_fnt_etl_pipeline_aws_spark.sources import manifest_table as mt
+
+    table = str(tmp_path / "zero_job_reads")
+    mt.commit_append(
+        spark.range(60).selectExpr("id AS k", "id % 7 AS v").repartition(2),
+        table,
+        ["k"],
+    )
+    mt.commit_add_column(table, "c", "string", default="d")
+    doomed = mt.read_version_with_pos(spark, table).filter("k % 10 = 0")
+    mt.commit_delete(spark, table, doomed.select("file_path", "row_index"))
+    v = mt.commit_delete_equality(
+        spark, table, "k", spark.createDataFrame([(7,)], "k bigint")
+    )
+
+    sc = spark.sparkContext
+    group = f"manifest-read-build-{tmp_path.name}"
+    try:
+        sc.setJobGroup(group, "build only")
+        reads = [
+            mt.read_version(spark, table),
+            mt.read_version_with_pos(spark, table),
+            mt.read_version_with_lineage(spark, table),
+            mt.read_changes(spark, table, 1, v),
+        ]
+    finally:
+        sc.setJobGroup(None, None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    ks = sorted(r.k for r in reads[0].collect())
+    assert ks == [k for k in range(60) if k % 10 and k != 7]
+    assert {r.c for r in reads[0].collect()} == {"d"}
+    assert reads[2].count() == len(ks)
+    assert sorted(r.k for r in reads[3].collect()) == [0, 7, 10, 20, 30, 40, 50]
+
+
+def test_read_version_paths_is_masked_restriction(spark, tmp_path):
+    """``read_version(paths=subset)`` is the full masked read restricted
+    to the rows of those files: masks (position and equality) still
+    apply inside a selected file, and other files' rows never appear."""
+    import re
+
+    from t_mobile_data_fnt_etl_pipeline_aws_spark.sources import manifest_table as mt
+
+    table = str(tmp_path / "paths_subset")
+    mt.commit_append(
+        spark.range(200).selectExpr("id AS k", "id % 7 AS v").repartition(4, "k"),
+        table,
+        ["k"],
+    )
+    doomed = mt.read_version_with_pos(spark, table).filter("k % 5 = 0")
+    doomed_at = {
+        r.k: re.sub("^file:/+", "/", r.file_path) for r in doomed.collect()
+    }
+    mt.commit_delete(spark, table, doomed.select("file_path", "row_index"))
+    v = mt.commit_delete_equality(
+        spark, table, "k", spark.createDataFrame([(1,), (2,), (3,)], "k bigint")
+    )
+    files = [f["path"] for f in mt.read_manifest(table, v)["files"]]
+    assert len(files) == 4
+    subset = files[:2]
+
+    full = mt.read_version_with_pos(spark, table, v).collect()
+    want = sorted(
+        (r.k, r.v) for r in full if re.sub("^file:/+", "/", r.file_path) in subset
+    )
+    sub = mt.read_version(spark, table, v, paths=subset)
+    got = sorted((r.k, r.v) for r in sub.collect())
+    assert got == want and got
+    masked_in_subset = {k for k, p in doomed_at.items() if p in subset}
+    assert masked_in_subset
+    assert not masked_in_subset & {k for k, _ in got}
+    assert not {1, 2, 3} & {k for k, _ in got}
+
+
+def test_equality_delete_values_pinned_to_declared_type(spark, tmp_path):
+    """Equality-delete values are read under the column's DECLARED type,
+    so a commit must stage only that type: a mistyped values column
+    raises ValueError before anything is staged or published. A value
+    file staged before ``commit_widen_column`` still masks afterwards
+    (the widened reader upcasts the narrow file), and a row appended
+    after the delete stays visible (seq scoping)."""
+    import os
+
+    from t_mobile_data_fnt_etl_pipeline_aws_spark.sources import manifest_table as mt
+
+    table = str(tmp_path / "eq_typed")
+    mt.commit_append(
+        spark.createDataFrame([(i, i * 10) for i in range(10)], "k int, v int"),
+        table,
+        ["k"],
+    )
+    head = mt.current_version(table)
+    with pytest.raises(ValueError, match="declared type"):
+        mt.commit_delete_equality(
+            spark, table, "k", spark.createDataFrame([(3,)], "k bigint")
+        )
+    assert mt.current_version(table) == head
+    assert not os.path.isdir(os.path.join(table, "_deletes"))
+    assert not [d for d in os.listdir(table) if d.startswith("_staging_")]
+
+    three = spark.createDataFrame([(3,)], "k int")
+    mt.commit_delete_equality(spark, table, "k", three)
+    mt.commit_widen_column(table, "k", "bigint")
+    mt.commit_append(spark.createDataFrame([(3, 99)], "k bigint, v int"), table, ["k"])
+    df = mt.read_version(spark, table)
+    assert dict(df.dtypes)["k"] == "bigint"
+    rows = sorted(tuple(r) for r in df.collect())
+    assert rows == sorted([(i, i * 10) for i in range(10) if i != 3] + [(3, 99)])
+
+
 def test_branch_commits_and_fast_forward(spark, tmp_path):
     """Branching contract: commits on a branch chain from the REF head
     via recorded PARENT pointers (the version log is just an id
