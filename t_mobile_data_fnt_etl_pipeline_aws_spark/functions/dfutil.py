@@ -19,6 +19,21 @@ Two tiers for "compute a multi-referenced intermediate once":
 
 tests/test_invariants.py pins the rule: every ``localCheckpoint()``
 call site must carry a documented row cap.
+
+The driver loops (``q_dedup_*``, ``q_er_*``, ``q_graph_*``,
+``q_bpe_*``) must keep their checkpoints: the lineage truncation is
+what keeps each round's plan constant in size. Their checkpoint blocks
+outlive the key (``clearCache()`` does not free them), but swapping
+``materialized()`` in is not the fix. A feature-request probe (one-off,
+not re-run since; sf0.01, ``local[4]``, median of 3 timed runs after a
+warm-up, cache cleared before each run) patched
+``DataFrame.localCheckpoint`` to ``persist(MEMORY_AND_DISK)`` plus
+``count()``; seconds before -> after: ``q_dedup_clusters_cc``
+2.64 -> 25.9, ``q_dedup_keep_canonical`` 2.67 -> 25.0,
+``q_er_golden_record`` 2.40 -> 18.8, ``q_bpe_train_merges`` 2.97 ->
+7.96, ``q_graph_bfs_hops`` 2.24 -> 5.77; job counts rose too (e.g.
+35 -> 45 and 34 -> 56). The leak fix has to release the checkpoint
+blocks themselves.
 """
 
 from __future__ import annotations

@@ -31,6 +31,45 @@ def _sink_dir(name: str) -> str:
     return os.path.join(base, name)
 
 
+#: The orders projection most per-year manifest tables hold.
+_ORDER_COLS = ["o_orderkey", "o_orderdate", "o_orderpriority", "o_totalprice"]
+
+
+def _orders_by_year(
+    spark: SparkSession,
+    sf_dir: str,
+    tag: str,
+    cols: list[str] | None = None,
+    parts: int = 1,
+    op: str = "append_y",
+) -> tuple[str, DataFrame, list[int]]:
+    """The per-year manifest table of the write-then-read keys: a fresh
+    uuid table dir ``<tag>_<uuid>`` holding ``orders`` (projected to
+    ``cols``) as one version per order year, ascending, each slice
+    ``repartition(parts)`` with op ``f"{op}{year}"``. The years are
+    collected once; the slices are independent appends, so they stage
+    concurrently through one ``commit_appends`` and publish in year
+    order (the manifests equal a serial ``commit_append`` loop's).
+    Returns (table dir, the projected orders, the versions)."""
+    import uuid
+
+    from ..sources.manifest_table import commit_appends
+
+    table = _sink_dir(f"{tag}_{uuid.uuid4().hex[:8]}")
+    o = load(spark, sf_dir, "orders")
+    if cols:
+        o = o.select(*cols)
+    yr = F.year("o_orderdate")
+    years = sorted(r.yr for r in o.select(yr.alias("yr")).distinct().collect())
+    versions = commit_appends(
+        [o.filter(yr == y).repartition(parts) for y in years],
+        table,
+        ["o_orderdate"],
+        [f"{op}{y}" for y in years],
+    )
+    return table, o, versions
+
+
 @query(
     "q_scan_parquet",
     oracle="SELECT * FROM lineitem",
@@ -1740,21 +1779,10 @@ def q_scan_files_pruned_by_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     production file counts the manifest scan itself distributes (it is
     just a JSON-lines dataset).
     """
-    import uuid as _uuid
+    from ..sources.manifest_table import prune_files, read_version
 
-    from ..sources.manifest_table import commit_appends, prune_files, read_version
-
-    table = _sink_dir(f"orders_fileskip_{_uuid.uuid4().hex[:8]}")
-    o = load(spark, sf_dir, "orders").withColumn(
-        "yr", F.year("o_orderdate")
-    )
-    years = sorted(r.yr for r in o.select("yr").distinct().collect())
-    version = commit_appends(
-        [o.filter(F.col("yr") == yr).drop("yr").repartition(1) for yr in years],
-        table,
-        ["o_orderdate"],
-        [f"append_y{yr}" for yr in years],
-    )[-1]
+    table, _, versions = _orders_by_year(spark, sf_dir, "orders_fileskip")
+    version = versions[-1]
     files, total = prune_files(
         table,
         version,
@@ -1815,25 +1843,9 @@ def q_etl_manifest_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     would target size-tiered file groups instead of the whole set; the
     commit protocol is identical.
     """
-    import uuid as _uuid
+    from ..sources.manifest_table import commit_replace, read_manifest, read_version
 
-    from ..sources.manifest_table import (
-        commit_append,
-        commit_replace,
-        read_manifest,
-        read_version,
-    )
-
-    table = _sink_dir(f"orders_compact_{_uuid.uuid4().hex[:8]}")
-    o = load(spark, sf_dir, "orders").withColumn("yr", F.year("o_orderdate"))
-    years = sorted(r.yr for r in o.select("yr").distinct().collect())
-    for yr in years:
-        commit_append(
-            o.filter(F.col("yr") == yr).drop("yr").repartition(2),
-            table,
-            ["o_orderdate"],
-            op=f"append_y{yr}",
-        )
+    table, _, _ = _orders_by_year(spark, sf_dir, "orders_compact", parts=2)
     live = read_version(spark, table)
     v_compact = commit_replace(
         live.repartition(2), table, ["o_orderdate"]
@@ -1886,26 +1898,20 @@ def q_etl_incremental_consume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import uuid as _uuid
 
-    from ..sources.manifest_table import commit_append, diff_files, read_version
+    from ..sources.manifest_table import commit_appends, diff_files, read_version
 
     table = _sink_dir(f"orders_cdf_{_uuid.uuid4().hex[:8]}")
     o = load(spark, sf_dir, "orders")
     lit_ts = lambda s: F.lit(s).cast("timestamp_ntz")  # noqa: E731
-    v1 = commit_append(
-        o.filter(F.col("o_orderdate") < lit_ts("1997-01-01 00:00:00")),
-        table,
-        ["o_orderdate"],
-    )
-    v2 = commit_append(
-        o.filter(
-            (F.col("o_orderdate") >= lit_ts("1997-01-01 00:00:00"))
-            & (F.col("o_orderdate") < lit_ts("1999-01-01 00:00:00"))
-        ),
-        table,
-        ["o_orderdate"],
-    )
-    commit_append(
-        o.filter(F.col("o_orderdate") >= lit_ts("1999-01-01 00:00:00")),
+    v1, v2, _ = commit_appends(
+        [
+            o.filter(F.col("o_orderdate") < lit_ts("1997-01-01 00:00:00")),
+            o.filter(
+                (F.col("o_orderdate") >= lit_ts("1997-01-01 00:00:00"))
+                & (F.col("o_orderdate") < lit_ts("1999-01-01 00:00:00"))
+            ),
+            o.filter(F.col("o_orderdate") >= lit_ts("1999-01-01 00:00:00")),
+        ],
         table,
         ["o_orderdate"],
     )
@@ -1955,29 +1961,17 @@ def q_etl_manifest_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     over unreferenced files. The per-year driver loop is bounded by the
     date domain (~7 values — the Lloyd-centroid bounded-collect class).
     """
-    import uuid as _uuid
-
     import glob as _glob
     import os as _os
 
     from ..sources.manifest_table import (
-        commit_append,
         commit_replace,
         read_manifest,
         read_version,
         vacuum,
     )
 
-    table = _sink_dir(f"orders_vacuum_{_uuid.uuid4().hex[:8]}")
-    o = load(spark, sf_dir, "orders").withColumn("yr", F.year("o_orderdate"))
-    years = sorted(r.yr for r in o.select("yr").distinct().collect())
-    for yr in years:
-        commit_append(
-            o.filter(F.col("yr") == yr).drop("yr").repartition(1),
-            table,
-            ["o_orderdate"],
-            op=f"append_y{yr}",
-        )
+    table, _, _ = _orders_by_year(spark, sf_dir, "orders_vacuum")
     v_c = commit_replace(
         read_version(spark, table).repartition(2), table, ["o_orderdate"]
     )
@@ -2039,21 +2033,21 @@ def q_etl_schema_evolution_add_column(
     """
     import uuid as _uuid
 
-    from ..sources.manifest_table import commit_append, read_version
+    from ..sources.manifest_table import commit_appends, read_version
 
     table = _sink_dir(f"orders_evolve_{_uuid.uuid4().hex[:8]}")
     o = load(spark, sf_dir, "orders").select(
         "o_orderpriority", "o_totalprice", "o_orderdate"
     )
     split = F.lit("1998-01-01 00:00:00").cast("timestamp_ntz")
-    commit_append(
-        o.filter(F.col("o_orderdate") < split), table, ["o_orderdate"]
-    )
-    commit_append(
-        o.filter(F.col("o_orderdate") >= split).withColumn(
-            "priority_rank",
-            F.substring("o_orderpriority", 1, 1).cast("int"),
-        ),
+    commit_appends(
+        [
+            o.filter(F.col("o_orderdate") < split),
+            o.filter(F.col("o_orderdate") >= split).withColumn(
+                "priority_rank",
+                F.substring("o_orderpriority", 1, 1).cast("int"),
+            ),
+        ],
         table,
         ["o_orderdate"],
     )
@@ -2125,6 +2119,7 @@ def q_etl_schema_default_values(spark: SparkSession, sf_dir: str) -> DataFrame:
         f["path"] for f in read_manifest(table, v2)["files"]
     ]
     k = F.col("o_orderkey")
+    # serial by design: commit_add_column sits between the two appends
     commit_append(
         o.filter(F.col("o_orderdate") >= cut)
         .withColumn(
@@ -2173,30 +2168,12 @@ def q_scan_manifest_refs_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: a directory listing of kilobyte pointer files — the 'git
     branch -v' of a 100-TB table.
     """
-    import uuid as _uuid
+    from ..sources.manifest_table import create_branch, refs_table, set_ref
 
-    from ..sources.manifest_table import (
-        commit_append,
-        create_branch,
-        refs_table,
-        set_ref,
+    table, _, versions = _orders_by_year(
+        spark, sf_dir, "orders_refstbl", ["o_orderkey", "o_orderdate"]
     )
-
-    table = _sink_dir(f"orders_refstbl_{_uuid.uuid4().hex[:8]}")
-    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
-    years = sorted(
-        r.yr
-        for r in o.select(F.year("o_orderdate").alias("yr")).distinct().collect()
-    )
-    v = 0
-    for yr in years:
-        v = commit_append(
-            o.filter(F.year("o_orderdate") == yr).repartition(1),
-            table,
-            ["o_orderdate"],
-            op=f"append_y{yr}",
-        )
-    set_ref(table, "main", v)
+    set_ref(table, "main", versions[-1])
     create_branch(table, "dev", at_version=1)
     set_ref(table, "audit", 2)
     return refs_table(spark, table)
@@ -2265,6 +2242,7 @@ def q_etl_branch_fastforward(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .collect()
     )
+    # serial by design: commit_append_to_ref has no batch form
     for yr in years:
         commit_append_to_ref(
             o.filter(F.year("o_orderdate") == yr).repartition(2),
@@ -2329,30 +2307,15 @@ def q_etl_maintenance_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     cheap enough to sweep a whole warehouse every hour and rank where
     the `commit_optimize_binpack` / `vacuum` budget goes.
     """
-    import uuid as _uuid
-
     from ..sources.manifest_table import (
-        commit_append,
         commit_delete,
         maintenance_report,
         read_version_with_pos,
     )
 
-    table = _sink_dir(f"orders_maint_{_uuid.uuid4().hex[:8]}")
-    o = load(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderdate", "o_orderpriority", "o_totalprice"
+    table, o, _ = _orders_by_year(
+        spark, sf_dir, "orders_maint", _ORDER_COLS, op="trickle_y"
     )
-    years = sorted(
-        r.yr
-        for r in o.select(F.year("o_orderdate").alias("yr")).distinct().collect()
-    )
-    for yr in years:
-        commit_append(
-            o.filter(F.year("o_orderdate") == yr).repartition(1),
-            table,
-            ["o_orderdate"],
-            op=f"trickle_y{yr}",
-        )
     doomed = read_version_with_pos(spark, table).filter(
         F.col("o_orderkey") % 113 == 0
     )
@@ -2593,7 +2556,8 @@ def q_etl_table_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
     meta_only = [
         f["path"] for f in read_manifest(table, v_c1 - 1)["files"]
     ] == [f["path"] for f in read_manifest(table, v_c2)["files"]]
-    # clean batch passes the gate
+    # clean batch passes the gate (serial by design: the constraint
+    # commits sit before it and the refused append after it)
     v_good = commit_append(
         o.filter(F.col("o_orderdate") >= cut).repartition(2),
         table,
@@ -2663,6 +2627,7 @@ def q_etl_row_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.manifest_table import (
         commit_append,
+        commit_appends,
         commit_delete,
         compact_with_lineage,
         read_manifest,
@@ -2676,13 +2641,15 @@ def q_etl_row_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_orderdate", "o_orderpriority", "o_totalprice"
     )
     cut = F.lit("1997-01-01").cast("timestamp_ntz")
-    for half, flt in [
-        ("old", F.col("o_orderdate") < cut),
-        ("new", F.col("o_orderdate") >= cut),
-    ]:
-        v = commit_append(
-            o.filter(flt).repartition(2), table, ["o_orderdate"], op=f"append_{half}"
-        )
+    commit_appends(
+        [
+            o.filter(F.col("o_orderdate") < cut).repartition(2),
+            o.filter(F.col("o_orderdate") >= cut).repartition(2),
+        ],
+        table,
+        ["o_orderdate"],
+        ["append_old", "append_new"],
+    )
     doomed = read_version_with_pos(spark, table).filter(
         F.col("o_orderkey") % 113 == 0
     )
@@ -2803,6 +2770,7 @@ def q_etl_time_travel_timestamp(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp_ntz"),
     ]
     stamps = []
+    # serial by design: a wall-clock stamp is taken between commits
     for i, flt in enumerate(cuts):
         commit_append(
             o.filter(flt).repartition(2), table, ["o_orderdate"], op=f"slice_{i}"
@@ -3003,6 +2971,7 @@ def q_etl_concurrent_commit_retry(
         ),
         o.filter(F.col("o_orderdate") >= lit_ts("1999-01-01 00:00:00")),
     ]
+    # serial by design: writer C's base is read between the commits
     commit_append(slices[0], table, ["o_orderdate"])
     stale_base = current_version(table)  # writer C plans here...
     commit_append(slices[1], table, ["o_orderdate"])  # ...B advances
@@ -3065,17 +3034,16 @@ def q_scan_count_metadata_only(spark: SparkSession, sf_dir: str) -> DataFrame:
     import datetime as _dt
     import uuid as _uuid
 
-    from ..sources.manifest_table import commit_append, table_stats
+    from ..sources.manifest_table import commit_appends, table_stats
 
     table = _sink_dir(f"orders_metaonly_{_uuid.uuid4().hex[:8]}")
     o = load(spark, sf_dir, "orders")
-    for i in range(3):
-        commit_append(
-            o.filter(F.col("o_orderkey") % 3 == i),
-            table,
-            ["o_orderdate"],
-            op=f"append_{i}",
-        )
+    commit_appends(
+        [o.filter(F.col("o_orderkey") % 3 == i) for i in range(3)],
+        table,
+        ["o_orderdate"],
+        [f"append_{i}" for i in range(3)],
+    )
     st = table_stats(table, col="o_orderdate")
     assert st["files_with_stats"] == st["n_files"], "fold would be a bound"
     parse = lambda s: _dt.datetime.fromisoformat(s)  # noqa: E731
@@ -3117,21 +3085,19 @@ def q_scan_files_pruned_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import uuid as _uuid
 
-    from ..sources.manifest_table import commit_append, prune_files_bloom, read_version
+    from ..sources.manifest_table import commit_appends, prune_files_bloom, read_version
 
     table = _sink_dir(f"orders_bloom_{_uuid.uuid4().hex[:8]}")
     o = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
-    v = 0
-    for i in range(8):
-        v = commit_append(
-            o.filter(F.col("o_orderkey") % 8 == i).repartition(1),
-            table,
-            ["o_orderkey"],
-            op=f"slice_{i}",
-            bloom_cols=["o_orderkey"],
-        )
+    v = commit_appends(
+        [o.filter(F.col("o_orderkey") % 8 == i).repartition(1) for i in range(8)],
+        table,
+        ["o_orderkey"],
+        [f"slice_{i}" for i in range(8)],
+        bloom_cols=["o_orderkey"],
+    )[-1]
     needle = o.agg(F.min("o_orderkey")).collect()[0][0]  # 1-row finish
     files, total = prune_files_bloom(table, v, "o_orderkey", int(needle))
     return (
@@ -3301,31 +3267,12 @@ def q_etl_manifest_merge_cow(spark: SparkSession, sf_dir: str) -> DataFrame:
     type (the +100 fold is exact decimal arithmetic, cast back so the
     union and the schema contract stay width-stable).
     """
-    import uuid as _uuid
+    from ..sources.manifest_table import commit_rewrite, prune_files, read_version
 
-    from ..sources.manifest_table import (
-        commit_append,
-        commit_rewrite,
-        prune_files,
-        read_version,
+    table, o, versions = _orders_by_year(
+        spark, sf_dir, "orders_mergecow", _ORDER_COLS, parts=2
     )
-
-    table = _sink_dir(f"orders_mergecow_{_uuid.uuid4().hex[:8]}")
-    o = load(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderdate", "o_orderpriority", "o_totalprice"
-    )
-    years = sorted(
-        r.yr
-        for r in o.select(F.year("o_orderdate").alias("yr")).distinct().collect()
-    )
-    v = 0
-    for yr in years:
-        v = commit_append(
-            o.filter(F.year("o_orderdate") == yr).repartition(2),
-            table,
-            ["o_orderdate"],
-            op=f"append_y{yr}",
-        )
+    v = versions[-1]
     lo, hi = "1998-01-01 00:00:00", "1998-12-31 23:59:59.999999"
     affected, total = prune_files(table, v, "o_orderdate", lo, hi)
     price_t = dict(o.dtypes)["o_totalprice"]
@@ -3387,32 +3334,17 @@ def q_etl_manifest_delete_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     Vectors too large to broadcast are the signal to compact
     (commit_replace folds them in and starts delete-free).
     """
-    import uuid as _uuid
-
     from ..sources.manifest_table import (
-        commit_append,
         commit_delete,
         read_manifest,
         read_version,
         read_version_with_pos,
     )
 
-    table = _sink_dir(f"orders_mor_{_uuid.uuid4().hex[:8]}")
-    o = load(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderdate", "o_orderpriority", "o_totalprice"
+    table, _, versions = _orders_by_year(
+        spark, sf_dir, "orders_mor", _ORDER_COLS, parts=2
     )
-    years = sorted(
-        r.yr
-        for r in o.select(F.year("o_orderdate").alias("yr")).distinct().collect()
-    )
-    v = 0
-    for yr in years:
-        v = commit_append(
-            o.filter(F.year("o_orderdate") == yr).repartition(2),
-            table,
-            ["o_orderdate"],
-            op=f"append_y{yr}",
-        )
+    v = versions[-1]
     pre_rows = read_version(spark, table, v).count()
     doomed = read_version_with_pos(spark, table, v).filter(
         F.col("o_orderkey") % 97 == 0
@@ -3533,10 +3465,7 @@ def q_etl_manifest_delete_equality(spark: SparkSession, sf_dir: str) -> DataFram
     commit_replace from the deletes-applied read drops the vectors and
     COUNT is metadata-exact again, equal to the oracle's row count).
     """
-    import uuid as _uuid
-
     from ..sources.manifest_table import (
-        commit_appends,
         commit_delete_equality,
         commit_replace,
         read_manifest,
@@ -3544,22 +3473,10 @@ def q_etl_manifest_delete_equality(spark: SparkSession, sf_dir: str) -> DataFram
         table_stats,
     )
 
-    table = _sink_dir(f"orders_eqdel_{_uuid.uuid4().hex[:8]}")
-    o = load(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderdate", "o_orderpriority", "o_totalprice"
+    table, o, versions = _orders_by_year(
+        spark, sf_dir, "orders_eqdel", _ORDER_COLS, parts=2
     )
-    years = sorted(
-        r.yr
-        for r in o.select(F.year("o_orderdate").alias("yr")).distinct().collect()
-    )
-    # the per-year appends are independent: staged concurrently,
-    # published in order
-    v = commit_appends(
-        [o.filter(F.year("o_orderdate") == yr).repartition(2) for yr in years],
-        table,
-        ["o_orderdate"],
-        [f"append_y{yr}" for yr in years],
-    )[-1]
+    v = versions[-1]
     # blind commit: the doomed-key set comes from the caller, not from
     # scanning the table (values-proportional, zero data reads)
     doomed_keys = o.filter(F.col("o_orderkey") % 131 == 0).select("o_orderkey")
@@ -3626,7 +3543,7 @@ def q_etl_changefeed_rowlevel(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid as _uuid
 
     from ..sources.manifest_table import (
-        commit_append,
+        commit_appends,
         commit_delete,
         read_changes,
         read_version_with_pos,
@@ -3637,17 +3554,14 @@ def q_etl_changefeed_rowlevel(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_orderdate", "o_orderpriority", "o_totalprice"
     )
     cut = F.lit("1997-01-01").cast("timestamp_ntz")
-    v_from = commit_append(
-        o.filter(F.col("o_orderdate") < cut).repartition(4),
+    v_from, _ = commit_appends(
+        [
+            o.filter(F.col("o_orderdate") < cut).repartition(4),
+            o.filter(F.col("o_orderdate") >= cut).repartition(2),
+        ],
         table,
         ["o_orderdate"],
-        op="history",
-    )
-    commit_append(
-        o.filter(F.col("o_orderdate") >= cut).repartition(2),
-        table,
-        ["o_orderdate"],
-        op="append_new",
+        ["history", "append_new"],
     )
     doomed = read_version_with_pos(spark, table).filter(
         F.col("o_orderkey") % 97 == 0
@@ -3798,32 +3712,17 @@ def q_scan_manifest_files_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     the diagnosis surface for small-file problems and pruning forensics
     ("which files would this predicate touch, and why").
     """
-    import uuid as _uuid
+    from ..sources.manifest_table import files_table
 
-    from ..sources.manifest_table import commit_append, files_table
-
-    table = _sink_dir(f"orders_filestbl_{_uuid.uuid4().hex[:8]}")
-    o = load(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderdate", "o_totalprice"
+    table, _, versions = _orders_by_year(
+        spark, sf_dir, "orders_filestbl", ["o_orderkey", "o_orderdate", "o_totalprice"]
     )
-    years = sorted(
-        r.yr
-        for r in o.select(F.year("o_orderdate").alias("yr")).distinct().collect()
-    )
-    v = 0
-    for yr in years:
-        v = commit_append(
-            o.filter(F.year("o_orderdate") == yr).repartition(1),
-            table,
-            ["o_orderdate"],
-            op=f"append_y{yr}",
-        )
     # stats is a JSON string; extraction stays JVM-side (get_json_object,
     # no Python UDF) — metadata rows are few, but the hot-path discipline
     # is uniform
     lo = F.get_json_object("stats", "$.o_orderdate[0]")
     hi = F.get_json_object("stats", "$.o_orderdate[1]")
-    ft = files_table(spark, table, v)
+    ft = files_table(spark, table, versions[-1])
     return ft.select(
         F.substring(lo, 1, 4).cast("long").alias("file_year"),
         F.col("n_rows"),
@@ -3857,23 +3756,11 @@ def q_scan_manifest_history_table(spark: SparkSession, sf_dir: str) -> DataFrame
     is what makes the forward-only log an AUDIT TRAIL: every append,
     compaction, delete, and restore stays inspectable after the fact.
     """
-    import uuid as _uuid
+    from ..sources.manifest_table import history_table
 
-    from ..sources.manifest_table import commit_append, history_table
-
-    table = _sink_dir(f"orders_histtbl_{_uuid.uuid4().hex[:8]}")
-    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
-    years = sorted(
-        r.yr
-        for r in o.select(F.year("o_orderdate").alias("yr")).distinct().collect()
+    table, _, _ = _orders_by_year(
+        spark, sf_dir, "orders_histtbl", ["o_orderkey", "o_orderdate"]
     )
-    for yr in years:
-        commit_append(
-            o.filter(F.year("o_orderdate") == yr).repartition(1),
-            table,
-            ["o_orderdate"],
-            op=f"append_y{yr}",
-        )
     return history_table(spark, table)
 
 
@@ -3981,7 +3868,7 @@ def q_etl_manifest_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.manifest_table import (
         clone_table,
-        commit_append,
+        commit_appends,
         commit_delete,
         read_version,
         read_version_with_pos,
@@ -3993,13 +3880,12 @@ def q_etl_manifest_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate", "o_orderpriority", "o_totalprice"
     )
-    for i in range(4):
-        commit_append(
-            o.filter(F.col("o_orderkey") % 4 == i).repartition(2),
-            src,
-            ["o_orderdate"],
-            op=f"slice_{i}",
-        )
+    commit_appends(
+        [o.filter(F.col("o_orderkey") % 4 == i).repartition(2) for i in range(4)],
+        src,
+        ["o_orderdate"],
+        [f"slice_{i}" for i in range(4)],
+    )
     src_total = read_version(spark, src).count()
     clone_table(src, dst)
     zero_copied = not _glob.glob(_os.path.join(dst, "data", "*.parquet"))
@@ -4060,10 +3946,7 @@ def q_etl_manifest_update_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     compaction folds the masks — the documented merge-on-read trade,
     chosen per-table by update sparsity.
     """
-    import uuid as _uuid
-
     from ..sources.manifest_table import (
-        commit_append,
         commit_update_mor,
         current_version,
         read_manifest,
@@ -4071,22 +3954,10 @@ def q_etl_manifest_update_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_version_with_pos,
     )
 
-    table = _sink_dir(f"orders_updmor_{_uuid.uuid4().hex[:8]}")
-    o = load(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderdate", "o_orderpriority", "o_totalprice"
+    table, o, versions = _orders_by_year(
+        spark, sf_dir, "orders_updmor", _ORDER_COLS, parts=2
     )
-    years = sorted(
-        r.yr
-        for r in o.select(F.year("o_orderdate").alias("yr")).distinct().collect()
-    )
-    v = 0
-    for yr in years:
-        v = commit_append(
-            o.filter(F.year("o_orderdate") == yr).repartition(2),
-            table,
-            ["o_orderdate"],
-            op=f"append_y{yr}",
-        )
+    v = versions[-1]
     live_before = [f["path"] for f in read_manifest(table, v)["files"]]
     price_t = dict(o.dtypes)["o_totalprice"]
     in_range = (
@@ -4584,7 +4455,7 @@ def q_etl_remove_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid as _uuid
 
     from ..sources.manifest_table import (
-        commit_append,
+        commit_appends,
         read_manifest,
         read_version,
         remove_orphan_files,
@@ -4594,11 +4465,11 @@ def q_etl_remove_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    commit_append(
-        o.filter(F.col("o_orderkey") % 2 == 0), table, ["o_orderkey"], op="a1"
-    )
-    v_head = commit_append(
-        o.filter(F.col("o_orderkey") % 2 == 1), table, ["o_orderkey"], op="a2"
+    _, v_head = commit_appends(
+        [o.filter(F.col("o_orderkey") % 2 == i) for i in (0, 1)],
+        table,
+        ["o_orderkey"],
+        ["a1", "a2"],
     )
     n_v1 = read_version(spark, table, 1).count()
     # plant orphans: byte-copies of a live file under uncommitted names
@@ -4771,7 +4642,7 @@ def q_etl_gdpr_purge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.manifest_table import (
         _data_dir,
-        commit_append,
+        commit_appends,
         commit_delete,
         commit_replace,
         read_version,
@@ -4783,8 +4654,12 @@ def q_etl_gdpr_purge(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
     )
-    commit_append(o.filter(F.col("o_orderkey") % 2 == 0), table, ["o_custkey"], op="a1")
-    commit_append(o.filter(F.col("o_orderkey") % 2 == 1), table, ["o_custkey"], op="a2")
+    commit_appends(
+        [o.filter(F.col("o_orderkey") % 2 == i) for i in (0, 1)],
+        table,
+        ["o_custkey"],
+        ["a1", "a2"],
+    )
     victim = o.agg(F.min("o_custkey")).collect()[0][0]  # O(1) driver fetch
     n_before = read_version(spark, table).count()
     doomed = (
@@ -5175,11 +5050,20 @@ def q_etl_rewrite_manifests(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: $manifests is O(#versions) kilobyte raw reads;
     compact_manifests costs one O(live) manifest write — the scheduled
-    dual of what every 16th commit does automatically."""
+    dual of what every 16th commit does automatically.
+
+    Job floor, 22 Spark jobs (measured at sf0.1, ``local[4]``): the
+    orders load 1; the six contracted appends 12 (each
+    ``repartition(n)`` fixes the oracle's file counts and costs a
+    shuffle-map job plus the write job — one ``commit_appends`` batch
+    overlaps them but cannot drop them); the rewrite itself 0
+    (metadata-only); the graded reads 8 (the counts at v6, v7 and v2
+    and the expected v2 count, two jobs each under AQE); the
+    ``$manifests`` result 1."""
     import uuid as _uuid
 
     from ..sources.manifest_table import (
-        commit_append,
+        commit_appends,
         compact_manifests,
         manifests_table,
         read_version,
@@ -5190,15 +5074,17 @@ def q_etl_rewrite_manifests(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
     slices = [o.filter(F.col("o_orderkey") % 6 == i) for i in range(6)]
-    commit_append(slices[0].repartition(4), table, ["o_orderkey"])
-    for s in slices[1:]:
-        commit_append(s.repartition(2), table, ["o_orderkey"])
+    commit_appends(
+        [s.repartition(4 if i == 0 else 2) for i, s in enumerate(slices)],
+        table,
+        ["o_orderkey"],
+    )
     n_before = read_version(spark, table).count()
     v7 = compact_manifests(table)
     n_after = read_version(spark, table, v7).count()
     rows_stable = n_after == n_before
     n_v2 = read_version(spark, table, 2).count()
-    n_v2_expected = slices[0].count() + slices[1].count()
+    n_v2_expected = o.filter(F.col("o_orderkey") % 6 < 2).count()  # slices 0-1
     travel_intact = n_v2 == n_v2_expected
     return (
         manifests_table(spark, table)

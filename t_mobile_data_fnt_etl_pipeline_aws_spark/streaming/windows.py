@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.numeric import DEC, dsum, finish, sql_dsum, sql_finish_dec
+from ..operators.scans import _sink_dir
 from ..registry import query
 from ..sources.tables import load
 
@@ -562,19 +563,13 @@ def q_stream_avro_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     (incremental work ∝ arrival rate, not corpus size); the aggregate
     state is per-event-type — O(|types|), not O(rows).
     """
-    import os
-    import tempfile
     import uuid
 
     from ..sources.avro_python import make_avro_source
 
     spark.dataSource.register(make_avro_source())
-    base = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_sinks_{os.getpid()}"
-    )
-    os.makedirs(base, exist_ok=True)
     # uuid-unique landing dir per invocation (write-then-read rule)
-    landing = os.path.join(base, f"events_avro_landing_{uuid.uuid4().hex[:8]}")
+    landing = _sink_dir(f"events_avro_landing_{uuid.uuid4().hex[:8]}")
     load(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     ).repartition(6).write.format("avro_py").option("path", landing).mode(
@@ -690,27 +685,20 @@ def q_stream_manifest_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     ever advances once per batch id (documented caveat: the idempotence
     ledger keyed on batch id is the production hardening step).
     """
-    import os
-    import tempfile
     import uuid as _uuid
 
-    from ..sources.manifest_table import commit_append, read_version
+    from ..sources.manifest_table import commit_appends, read_version
 
-    base = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_sinks_{os.getpid()}"
-    )
-    os.makedirs(base, exist_ok=True)
-    table = os.path.join(base, f"events_manifest_{_uuid.uuid4().hex[:8]}")
+    table = _sink_dir(f"events_manifest_{_uuid.uuid4().hex[:8]}")
     e = load(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type", "value"
     )
-    for i in range(4):
-        commit_append(
-            e.filter(F.col("event_id") % 4 == i).repartition(2),
-            table,
-            ["ts"],
-            op=f"microbatch_{i}",
-        )
+    commit_appends(
+        [e.filter(F.col("event_id") % 4 == i).repartition(2) for i in range(4)],
+        table,
+        ["ts"],
+        [f"microbatch_{i}" for i in range(4)],
+    )
     return (
         read_version(spark, table)
         .groupBy("event_type")
@@ -761,23 +749,16 @@ def q_stream_manifest_dim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(batch) + O(dim); dim compaction keeps the broadcast file count
     bounded.
     """
-    import os
-    import tempfile
     import uuid as _uuid
 
-    from ..sources.manifest_table import commit_append, read_version
+    from ..sources.manifest_table import commit_appends, read_version
 
-    base = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_sinks_{os.getpid()}"
-    )
-    os.makedirs(base, exist_ok=True)
-    dim_table = os.path.join(base, f"cust_dim_{_uuid.uuid4().hex[:8]}")
+    dim_table = _sink_dir(f"cust_dim_{_uuid.uuid4().hex[:8]}")
     c = load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    v1 = commit_append(
-        c.filter(F.col("c_custkey") % 2 == 0), dim_table, ["c_custkey"]
-    )
-    v2 = commit_append(
-        c.filter(F.col("c_custkey") % 2 == 1), dim_table, ["c_custkey"]
+    v1, v2 = commit_appends(
+        [c.filter(F.col("c_custkey") % 2 == i) for i in (0, 1)],
+        dim_table,
+        ["c_custkey"],
     )
     o = load(spark, sf_dir, "orders").select(
         "o_custkey", "o_totalprice", "o_orderdate"
@@ -840,28 +821,19 @@ def q_stream_manifest_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     table format's version diff instead of a stream source, so ANY
     engine (or an orchestrated batch job) can maintain the view.
     """
-    import os
-    import tempfile
     import uuid as _uuid
 
-    from ..sources.manifest_table import commit_append, diff_files, read_version
+    from ..sources.manifest_table import commit_appends, diff_files, read_version
 
-    base = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_sinks_{os.getpid()}"
-    )
-    os.makedirs(base, exist_ok=True)
     run = _uuid.uuid4().hex[:8]
-    table = os.path.join(base, f"events_cdcapply_{run}")
+    table = _sink_dir(f"events_cdcapply_{run}")
     e = load(spark, sf_dir, "events").select("event_id", "ts", "event_type", "value")
-    versions = [
-        commit_append(
-            e.filter(F.col("event_id") % 4 == i).repartition(2),
-            table,
-            ["ts"],
-            op=f"microbatch_{i}",
-        )
-        for i in range(4)
-    ]
+    versions = commit_appends(
+        [e.filter(F.col("event_id") % 4 == i).repartition(2) for i in range(4)],
+        table,
+        ["ts"],
+        [f"microbatch_{i}" for i in range(4)],
+    )
     state = None
     for v in versions:
         delta = diff_files(table, v - 1, v)
@@ -883,7 +855,7 @@ def q_stream_manifest_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("sum_dec").alias("sum_dec"),
             )
         )
-        path = os.path.join(base, f"events_cdcstate_{run}_v{v}")
+        path = _sink_dir(f"events_cdcstate_{run}_v{v}")
         merged.write.mode("overwrite").parquet(path)
         state = spark.read.parquet(path)
     return state.select(
@@ -931,39 +903,30 @@ def q_stream_changefeed_apply_retract(
     no access to the base table at all — the feed is the interface, any
     engine downstream can maintain the view.
     """
-    import os
-    import tempfile
     import uuid as _uuid
 
     from ..sources.manifest_table import (
-        commit_append,
+        commit_appends,
         commit_delete,
         commit_delete_equality,
         read_changes,
         read_version_with_pos,
     )
 
-    base = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_sinks_{os.getpid()}"
-    )
-    os.makedirs(base, exist_ok=True)
     run = _uuid.uuid4().hex[:8]
-    table = os.path.join(base, f"orders_retract_{run}")
+    table = _sink_dir(f"orders_retract_{run}")
     o = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate", "o_orderpriority", "o_totalprice"
     )
     cut = F.lit("1997-01-01").cast("timestamp_ntz")
-    v1 = commit_append(
-        o.filter(F.col("o_orderdate") < cut).repartition(4),
+    v1, v2 = commit_appends(
+        [
+            o.filter(F.col("o_orderdate") < cut).repartition(4),
+            o.filter(F.col("o_orderdate") >= cut).repartition(2),
+        ],
         table,
         ["o_orderdate"],
-        op="history",
-    )
-    v2 = commit_append(
-        o.filter(F.col("o_orderdate") >= cut).repartition(2),
-        table,
-        ["o_orderdate"],
-        op="append_new",
+        ["history", "append_new"],
     )
     doomed = read_version_with_pos(spark, table).filter(
         F.col("o_orderkey") % 97 == 0
@@ -1000,7 +963,7 @@ def q_stream_changefeed_apply_retract(
                 F.sum("sum_dec").alias("sum_dec"),
             )
         )
-        path = os.path.join(base, f"orders_retractstate_{run}_v{w_to}")
+        path = _sink_dir(f"orders_retractstate_{run}_v{w_to}")
         merged.write.mode("overwrite").parquet(path)
         state = spark.read.parquet(path)
     return state.filter(F.col("n_orders") > 0).select(
@@ -1059,38 +1022,29 @@ def q_stream_manifest_cdf_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     window (VERDICT r13 item 2: no change row flows through the
     driver on either the streaming or the batch path).
     """
-    import os
-    import tempfile
     import uuid as _uuid
 
     from ..sources.manifest_table import (
-        commit_append,
+        commit_appends,
         commit_delete,
         current_version,
         read_changes,
         read_version_with_pos,
     )
 
-    base = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_sinks_{os.getpid()}"
-    )
-    os.makedirs(base, exist_ok=True)
-    table = os.path.join(base, f"orders_cdfsrc_{_uuid.uuid4().hex[:8]}")
+    table = _sink_dir(f"orders_cdfsrc_{_uuid.uuid4().hex[:8]}")
     o = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate", "o_orderpriority", "o_totalprice"
     )
     cut = F.lit("1997-01-01").cast("timestamp_ntz")
-    commit_append(
-        o.filter(F.col("o_orderdate") < cut).repartition(4),
+    commit_appends(
+        [
+            o.filter(F.col("o_orderdate") < cut).repartition(4),
+            o.filter(F.col("o_orderdate") >= cut).repartition(2),
+        ],
         table,
         ["o_orderdate"],
-        op="history",
-    )
-    commit_append(
-        o.filter(F.col("o_orderdate") >= cut).repartition(2),
-        table,
-        ["o_orderdate"],
-        op="append_new",
+        ["history", "append_new"],
     )
     doomed = read_version_with_pos(spark, table).filter(
         F.col("o_orderkey") % 97 == 0
@@ -1157,8 +1111,6 @@ def q_stream_manifest_merge_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     vector + one small file; this is how a trickle of CDC lands in a
     100-TB table without ever rewriting it.
     """
-    import os
-    import tempfile
     import uuid as _uuid
 
     from ..sources.manifest_table import (
@@ -1170,11 +1122,7 @@ def q_stream_manifest_merge_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from ..sources.tables import load
 
-    base = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_sinks_{os.getpid()}"
-    )
-    os.makedirs(base, exist_ok=True)
-    table = os.path.join(base, f"merge_sink_{_uuid.uuid4().hex[:8]}")
+    table = _sink_dir(f"merge_sink_{_uuid.uuid4().hex[:8]}")
     e = load(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value", "ts"
     )
@@ -1407,16 +1355,11 @@ def q_stream_state_store_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     through the driver.
     """
     import os as _os
-    import tempfile as _tempfile
     import uuid as _uuid
 
     from .harness import read_events_stream, run_available_now, stage_events
 
-    base = _os.path.join(
-        _tempfile.gettempdir(),
-        f"spark_graft_sinks_{_os.getpid()}",
-        f"ssr_{_uuid.uuid4().hex[:8]}",
-    )
+    base = _sink_dir(f"ssr_{_uuid.uuid4().hex[:8]}")
     stream_dir, _ = stage_events(spark, sf_dir, base)
     counts = (
         read_events_stream(spark, stream_dir)
@@ -1466,16 +1409,11 @@ def q_stream_state_store_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     inspection parallelism equals the query's shuffle layout; nothing
     data-sized flows through the driver."""
     import os as _os
-    import tempfile as _tempfile
     import uuid as _uuid
 
     from .harness import read_events_stream, run_available_now, stage_events
 
-    base = _os.path.join(
-        _tempfile.gettempdir(),
-        f"spark_graft_sinks_{_os.getpid()}",
-        f"ssd_{_uuid.uuid4().hex[:8]}",
-    )
+    base = _sink_dir(f"ssd_{_uuid.uuid4().hex[:8]}")
     stream_dir, _ = stage_events(spark, sf_dir, base)
     deduped = read_events_stream(spark, stream_dir).select(
         "user_id", "event_type"
@@ -1527,8 +1465,6 @@ def q_stream_cdc_hidden_partition(spark: SparkSession, sf_dir: str) -> DataFrame
     delta segment (O(new files) metadata). The read plans only the
     pruned days' files; the 5-day window below touches ~5/30 of the
     fixture's partitions."""
-    import os as _os
-    import tempfile as _tempfile
     import uuid as _uuid
 
     from ..sources.manifest_table import (
@@ -1539,11 +1475,7 @@ def q_stream_cdc_hidden_partition(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     from ..sources.tables import load
 
-    base = _os.path.join(
-        _tempfile.gettempdir(), f"spark_graft_sinks_{_os.getpid()}"
-    )
-    _os.makedirs(base, exist_ok=True)
-    table = _os.path.join(base, f"cdc_hidden_{_uuid.uuid4().hex[:8]}")
+    table = _sink_dir(f"cdc_hidden_{_uuid.uuid4().hex[:8]}")
     e = load(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )

@@ -2663,7 +2663,8 @@ def test_manifest_batch_append_matches_serial_loop(spark, tmp_path):
     prev+1..prev+n in input order with the given ops: every manifest
     equals the one a serial commit_append loop writes (only paths, ts
     and uuids differ), and every staging job stays in the caller's job
-    group — as many jobs as the serial loop, none outside the group."""
+    group — as many jobs as the serial loop, none outside the group.
+    Held with and without per-file bloom sidecars (``bloom_cols``)."""
     from t_mobile_data_fnt_etl_pipeline_aws_spark.sources.manifest_table import (
         commit_append,
         commit_appends,
@@ -2681,24 +2682,7 @@ def test_manifest_batch_append_matches_serial_loop(spark, tmp_path):
         for i in range(n)
     ]
     ops = [f"op{i}" for i in range(n)]
-    batch, serial = str(tmp_path / "batch"), str(tmp_path / "serial")
     seed = spark.createDataFrame([(-1, 0)], "k long, v long")
-    commit_append(seed, batch, ["k"])
-    commit_append(seed, serial, ["k"])
-
-    ungrouped = len(tracker.getJobIdsForGroup(None))
-    try:
-        sc.setJobGroup("manifest-batch", "batch")
-        assert commit_appends(frames, batch, ["k"], ops) == list(range(2, n + 2))
-        sc.setJobGroup("manifest-serial", "serial")
-        for df, op in zip(frames, ops):
-            commit_append(df, serial, ["k"], op=op)
-    finally:
-        sc.setJobGroup(None, None)
-    batch_jobs = tracker.getJobIdsForGroup("manifest-batch")
-    assert len(batch_jobs) == len(tracker.getJobIdsForGroup("manifest-serial"))
-    assert len(batch_jobs) >= len(frames)
-    assert len(tracker.getJobIdsForGroup(None)) == ungrouped
 
     def shape(m):
         files = [
@@ -2706,10 +2690,107 @@ def test_manifest_batch_append_matches_serial_loop(spark, tmp_path):
         ]
         return {k: v for k, v in m.items() if k not in ("files", "ts")}, files
 
-    for v in range(1, n + 2):
-        mb, ms = read_manifest(batch, v), read_manifest(serial, v)
-        assert shape(mb) == shape(ms), v
-    assert [read_manifest(batch, v)["op"] for v in range(2, n + 2)] == ops
+    for bloom_cols in (None, ["k"]):
+        tag = "bloom" if bloom_cols else "plain"
+        batch, serial = str(tmp_path / f"batch_{tag}"), str(tmp_path / f"serial_{tag}")
+        commit_append(seed, batch, ["k"], bloom_cols=bloom_cols)
+        commit_append(seed, serial, ["k"], bloom_cols=bloom_cols)
+
+        # job ids only grow: every ungrouped job from here on is above
+        # the mark (a count of ungrouped jobs would shrink whenever the
+        # status store evicts old jobs, as it does in a long session)
+        mark = max(tracker.getJobIdsForGroup(None), default=-1)
+        try:
+            sc.setJobGroup(f"manifest-batch-{tag}", "batch")
+            assert commit_appends(
+                frames, batch, ["k"], ops, bloom_cols=bloom_cols
+            ) == list(range(2, n + 2))
+            sc.setJobGroup(f"manifest-serial-{tag}", "serial")
+            for df, op in zip(frames, ops):
+                commit_append(df, serial, ["k"], op=op, bloom_cols=bloom_cols)
+        finally:
+            sc.setJobGroup(None, None)
+        batch_jobs = tracker.getJobIdsForGroup(f"manifest-batch-{tag}")
+        assert len(batch_jobs) == len(
+            tracker.getJobIdsForGroup(f"manifest-serial-{tag}")
+        ), tag
+        assert len(batch_jobs) >= len(frames)
+        assert all(j <= mark for j in tracker.getJobIdsForGroup(None))
+
+        for v in range(1, n + 2):
+            mb, ms = read_manifest(batch, v), read_manifest(serial, v)
+            assert shape(mb) == shape(ms), (tag, v)
+        assert [read_manifest(batch, v)["op"] for v in range(2, n + 2)] == ops
+        if bloom_cols:  # the sidecars were really built, on every file
+            live = read_manifest(batch, n + 1)["files"]
+            assert live and all("k" in f.get("bloom", {}) for f in live)
+
+
+def test_orders_by_year_builder_contract(spark, sf_dir, tmp_path):
+    """operators/scans.py::_orders_by_year, the shared fixture of the
+    per-year manifest-table keys: versions 1..n carry ops append_y<year>
+    in ascending year order; every file a version adds holds only that
+    year (manifest o_orderdate min/max inside it); the live table holds
+    every order; and the builder's batched appends run as many jobs as
+    the serial commit_append loop it replaced, all of them in the
+    caller's job group."""
+    from pyspark.sql import functions as F
+
+    from t_mobile_data_fnt_etl_pipeline_aws_spark.operators.scans import (
+        _orders_by_year,
+    )
+    from t_mobile_data_fnt_etl_pipeline_aws_spark.sources.manifest_table import (
+        commit_append,
+        read_manifest,
+        read_version,
+    )
+    from t_mobile_data_fnt_etl_pipeline_aws_spark.sources.tables import load
+
+    cols = ["o_orderkey", "o_orderdate"]
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    mark = max(tracker.getJobIdsForGroup(None), default=-1)  # as above
+    serial = str(tmp_path / "serial")
+    try:
+        sc.setJobGroup("by-year-builder", "builder")
+        table, o, versions = _orders_by_year(
+            spark, sf_dir, "orders_byyear_contract", cols, parts=2
+        )
+        sc.setJobGroup("by-year-serial", "serial")
+        so = load(spark, sf_dir, "orders").select(*cols)
+        years = sorted(
+            r.yr
+            for r in so.select(F.year("o_orderdate").alias("yr")).distinct().collect()
+        )
+        for yr in years:
+            commit_append(
+                so.filter(F.year("o_orderdate") == yr).repartition(2),
+                serial,
+                ["o_orderdate"],
+                op=f"append_y{yr}",
+            )
+    finally:
+        sc.setJobGroup(None, None)
+    assert len(tracker.getJobIdsForGroup("by-year-builder")) == len(
+        tracker.getJobIdsForGroup("by-year-serial")
+    )
+    assert all(j <= mark for j in tracker.getJobIdsForGroup(None))
+
+    assert len(years) > 1
+    assert versions == list(range(1, len(years) + 1))
+    assert [read_manifest(table, v)["op"] for v in versions] == [
+        f"append_y{yr}" for yr in years
+    ]
+    seen: set[str] = set()
+    for v, yr in zip(versions, years):
+        added = [f for f in read_manifest(table, v)["files"] if f["path"] not in seen]
+        assert added, v
+        for f in added:
+            lo, hi = f["stats"]["o_orderdate"]
+            assert str(yr) <= lo <= hi < str(yr + 1), (v, yr, lo, hi)
+            seen.add(f["path"])
+    assert o.columns == cols
+    assert read_version(spark, table).count() == load(spark, sf_dir, "orders").count()
 
 
 def test_manifest_delete_vectors_semantics(spark, tmp_path):

@@ -602,15 +602,10 @@ def test_binaryfile_partition_pruning(spark, sf_dir):
     PartitionFilter on the scan, not a post-scan Filter over all
     blobs — at 100 TB that is the difference between opening one
     directory and statting a billion files."""
-    QUERIES["q_scan_binaryfile"](spark, sf_dir).collect()  # lay the blobs
-    import os
-    import tempfile
+    from t_mobile_data_fnt_etl_pipeline_aws_spark.operators.scans import _sink_dir
 
-    out = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_sinks_{os.getpid()}",
-        "documents_blobs",
-    )
+    QUERIES["q_scan_binaryfile"](spark, sf_dir).collect()  # lay the blobs
+    out = _sink_dir("documents_blobs")
     bf = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.txt")
@@ -961,13 +956,13 @@ def test_parquet_codec_sizes_ordered(spark, sf_dir):
     byte counts vary with codec library versions."""
     import glob as _glob
     import os as _os
-    import tempfile as _tf
 
-    base = _os.path.join(_tf.gettempdir(), f"spark_graft_sinks_{_os.getpid()}")
+    from t_mobile_data_fnt_etl_pipeline_aws_spark.operators.scans import _sink_dir
+
     QUERIES["q_sink_parquet_codecs"](spark, sf_dir).collect()
     sizes = {}
     for codec in ("none", "snappy", "zstd"):
-        dirs = sorted(_glob.glob(_os.path.join(base, f"orders_codec_{codec}_*")))
+        dirs = sorted(_glob.glob(_sink_dir(f"orders_codec_{codec}_*")))
         assert dirs, f"no sink dir for codec {codec}"
         d = dirs[-1]  # newest generation from the collect above
         sizes[codec] = sum(
