@@ -27,6 +27,9 @@ reported, never gated. Every run writes its payload with exclusive
 create to BENCH_LOCAL_p<parallelism>_<UTC timestamp>.json, so records
 never overwrite each other.
 
+``run(keys, sf_dir)`` is the repo's one timing loop: ``main`` calls it
+with the env's keys and dir, and bench_scaling.py once per scale point.
+
 Cross-round comparison restarts at the first record of this protocol:
 older BENCH_LOCAL_r*.json records timed warm-cache runs and carry no
 counters, so the gate ignores them.
@@ -163,11 +166,15 @@ def find_regressions(
     return out
 
 
+def record_name(payload: dict) -> str:
+    """File name of the record that holds ``payload``."""
+    return f"BENCH_LOCAL_p{payload['default_parallelism']}_{payload['utc']}.json"
+
+
 def write_record(repo_dir: str, payload: dict) -> str:
     """Write ``payload`` under a new name; an existing name raises
     FileExistsError instead of being overwritten."""
-    name = f"BENCH_LOCAL_p{payload['default_parallelism']}_{payload['utc']}.json"
-    path = os.path.join(repo_dir, name)
+    path = os.path.join(repo_dir, record_name(payload))
     with open(path, "x") as fh:
         json.dump(payload, fh, indent=1)
     return path
@@ -195,14 +202,22 @@ def compact_summary(payload: dict) -> dict:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    queries = all_queries()
     sel = os.environ.get("SPARK_GRAFT_BENCH_QUERIES", "")
     if sel == "all":
-        keys = sorted(queries)
+        keys = sorted(all_queries())
     elif sel:
         keys = [k.strip() for k in sel.split(",") if k.strip()]
     else:
         keys = headline_keys()
+    payload = run(keys, sf_dir)
+    print(json.dumps(payload))
+    print(json.dumps(compact_summary(payload)))
+
+
+def run(keys: list[str], sf_dir: str) -> dict:
+    """Time ``keys`` at ``sf_dir``, gate their counters against the
+    prior records and write the new record; return its payload."""
+    queries = all_queries()
     spark = get_spark("spark-graft-bench")
 
     timings: dict[str, float] = {}
@@ -217,6 +232,7 @@ def main() -> None:
     sf = float(sf) if sf.replace(".", "").isdigit() else sf
     master = spark.sparkContext.master
     parallelism = spark.sparkContext.defaultParallelism
+    spark.stop()
     repo_dir = os.path.dirname(os.path.abspath(__file__))
     prior = load_prior_counters(repo_dir, master, parallelism, sf)
     payload = {
@@ -235,10 +251,8 @@ def main() -> None:
         "utc": time.strftime("%Y%m%dT%H%M%SZ", time.gmtime()),
         "regressions": find_regressions(counters, prior),
     }
-    print(json.dumps(payload))
-    print(json.dumps(compact_summary(payload)))
     write_record(repo_dir, payload)
-    spark.stop()
+    return payload
 
 
 if __name__ == "__main__":

@@ -1,57 +1,47 @@
 #!/usr/bin/env python
-"""Scale-headroom measurement (VERDICT r6 item 5): seconds-vs-scale
-exponents for the most expensive registry keys, measured on locally
-generated data at 1x / 2x / 5x / 10x the sf0.1 row counts (10x = TPC-H
-sf1-equivalent for the tables involved).
+"""Scale curves: seconds, jobs and shuffle-write bytes against data size
+for ten expensive registry keys, on a generated family at 1x / 2x / 5x /
+10x the sf0.1 row counts (10x = TPC-H sf1-equivalent for the tables
+involved).
 
-Everything at ≤ sf0.1 proves correctness; this converts the "survives
-100x" plan-shape ARGUMENT into a measured seconds-vs-sf TREND. A key
-whose log-log slope is ≈ 1 scales linearly with data on a fixed-core
-machine (the cluster-scaling prerequisite); a slope ≫ 1 is a quadratic
-term the plan audit missed.
+A log-log slope of ~1 scales linearly with data on fixed cores; a slope
+well above 1 is a super-linear term the plan audit missed. The wall
+slope moves with the host; the shuffle-write slope is Spark's own byte
+count and does not.
 
-Generation (seed 42, deterministic, same shape as TESTDATA.md's
-generator as observed from the sf0.1 fixtures — /root/testdata is
-read-only so the family lives under /tmp):
-  * documents: fresh text from the fixture's OWN 31-word vocabulary at
-    its empirical token frequencies, uniform 10-99 word lengths, its
-    lang/source marginals. Fresh generation (not row replication) —
-    replicating docs k-fold would plant k-cliques of exact duplicates
-    and quadratically poison the near-dup keys' trend.
-  * embeddings: uniform(-1/sqrt(3), 1/sqrt(3)) float32, dim 64, 10
-    labels — the fixture's observed distribution.
-  * lineitem: the sf0.1 rows replicated k-fold with shifted orderkeys
-    (moment sums and band-join bucket loads scale exactly linearly
-    under replication, which is what real growth does to them).
-  * part: FIXED at sf0.1 (the dimension side of the band join; scaling
-    it too would measure the data model's quadratic band-match growth,
-    not the engine).
+Each scale point is one ``bench.run(KEYS, ensure_full_scale_dir(k))``:
+bench.py's protocol and counters, and an ordinary bench record whose
+``sf`` is the scale dir, so the counter gate compares a point only with
+the same point of an earlier sweep.
 
-Usage: python bench_scaling.py [--scales 1,2,5,10] [--runs 3]
-Writes BENCH_SCALING.md and prints one JSON line.
+Usage: python bench_scaling.py [--scales 1,2,5,10]
+Writes one bench record per scale point, then BENCH_SCALING.md, and
+prints one JSON line.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import math
 import os
 import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+import bench  # noqa: E402
 
 BASE_SF_DIR = "/root/testdata/sf0.1"
 WORK_DIR = "/tmp/spark_graft_scaling"
 SEED = 42
 
-#: the most expensive keys per BENCH_LOCAL_r06_full.json, one per
-#: cost family (convergence loop, LSH banding, CC loop, decimal agg,
-#: bucketed band join), plus the round-9 additions — the IVF batch
-#: retrieval join (probe count AND corpus grow with scale — the RAG
-#: serving shape) and the zero-shuffle BPE tokenize (pure map stage,
-#: the slope-1.0 control) — and the round-10 Avro codec throughput key.
+#: one key per cost family: convergence loop, LSH banding, CC loop,
+#: decimal agg, bucketed band join, IVF batch retrieval (probe batch
+#: fixed, corpus grows), the zero-shuffle BPE tokenize (pure map stage,
+#: the slope-1.0 control), Avro codec throughput (map-only, fixed file
+#: count), OHLC bars over tie-dense events (fixed bar grain) and a
+#: latest-per-key upsert (fixed user universe).
 KEYS = [
     "q_cluster_kmeans_lloyd",
     "q_dedup_fuzzy_minhash",
@@ -60,22 +50,10 @@ KEYS = [
     "q_join_theta_bucketed",
     "q_sim_search_batch_topk",
     "q_bpe_apply",
-    # round-10: pure-Python Avro codec throughput — encode+decode are
-    # map-only over lineitem, so the expected slope is ~1.0 (file count
-    # is fixed at 8; bytes per file grow linearly)
     "q_scan_avro_python",
-    # round-11: argmin/argmax-by-decimal-composite OHLC bars — events
-    # replicated k-fold with SAME timestamps (tie-dense) and fixed
-    # (event_type, day) grain, so state stays constant and the slope is
-    # the scan+combine cost (~1.0)
     "q_timeseries_ohlc",
-    # round-11: latest-per-key upsert — user_id universe fixed, rows
-    # grow k-fold: per-group struct-max combine, expected slope ~1.0
     "q_stream_foreachbatch_upsert",
 ]
-
-#: tables each key loads — each scale dir carries exactly these
-TABLES = ["documents", "embeddings", "lineitem", "part", "events"]
 
 
 def _fixture_profiles():
@@ -100,6 +78,9 @@ def _fixture_profiles():
 
 
 def _gen_documents(out: str, n: int, rng) -> None:
+    """Fresh text from the fixture's OWN vocabulary at its empirical
+    token frequencies, uniform 10-99 word lengths, and its lang/source
+    marginals."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -140,6 +121,8 @@ def _gen_documents(out: str, n: int, rng) -> None:
 
 
 def _gen_embeddings(out: str, n: int, rng) -> None:
+    """uniform(-1/sqrt(3), 1/sqrt(3)) float32, dim 64, 10 labels: the
+    fixture's observed distribution."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -156,67 +139,12 @@ def _gen_embeddings(out: str, n: int, rng) -> None:
     pq.write_table(tbl, out)
 
 
-def _gen_lineitem(out: str, k: int) -> None:
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-    import pyarrow as pa
-
-    base = pq.read_table(f"{BASE_SF_DIR}/lineitem.parquet")
-    shift = int(pc.max(base["l_orderkey"]).as_py()) + 1
-    copies = []
-    for i in range(k):
-        t = base
-        if i:
-            t = t.set_column(
-                t.schema.get_field_index("l_orderkey"),
-                "l_orderkey",
-                pc.add(t["l_orderkey"], i * shift),
-            )
-        copies.append(t)
-    pq.write_table(pa.concat_tables(copies), out)
-
-
-def ensure_scale_dir(k: int) -> str:
-    """Generate /tmp/spark_graft_scaling/x{k} if absent; return the dir."""
-    import numpy as np
-    import shutil
-
-    d = os.path.join(WORK_DIR, f"x{k}")
-    marker = os.path.join(d, ".complete")
-    if not os.path.exists(marker):
-        os.makedirs(d, exist_ok=True)
-        rng = np.random.RandomState(SEED + k)
-        _gen_documents(os.path.join(d, "documents.parquet"), 5000 * k, rng)
-        _gen_embeddings(os.path.join(d, "embeddings.parquet"), 2000 * k, rng)
-        _gen_lineitem(os.path.join(d, "lineitem.parquet"), k)
-        shutil.copyfile(
-            f"{BASE_SF_DIR}/part.parquet", os.path.join(d, "part.parquet")
-        )
-        with open(marker, "w") as fh:
-            fh.write("ok")
-    # events joined TABLES in round 11 — backfill into dirs cached by
-    # earlier rounds (event_id shifted per copy; ts/user_id kept so the
-    # family stays tie-dense with a fixed key universe)
-    ev = os.path.join(d, "events.parquet")
-    if not os.path.exists(ev):
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-
-        src = f"{BASE_SF_DIR}/events.parquet"
-        shift = int(
-            pc.max(pq.read_table(src, columns=["event_id"])["event_id"]).as_py()
-        ) + 1
-        _replicate_keyed(src, ev, k, {"event_id": shift})
-    return d
-
-
 def _replicate_keyed(src: str, out: str, k: int, shifts: dict[str, int]) -> None:
     """k copies of a parquet table with per-copy key-column shifts.
 
-    Copy i adds ``i * shifts[col]`` to each column in ``shifts`` — the
-    same replication recipe _gen_lineitem uses, generalized so parent /
-    child tables can share ONE shift per key family and keep their FKs
-    intact across copies.
+    Copy i adds ``i * shifts[col]`` to each column in ``shifts``, so
+    parent / child tables can share ONE shift per key family and keep
+    their FKs intact across copies.
     """
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -241,9 +169,9 @@ def ensure_full_scale_dir(k: int) -> str:
     """Generate /tmp/spark_graft_scaling/x{k}full — ALL TEN fixture
     tables at k× sf0.1 — if absent; return the dir.
 
-    The oracle-parity family (VERDICT r8 item 3): unlike ensure_scale_dir
-    (4 tables, timing only), this family is complete so the DuckDB
-    oracle harness can run against it — the check that catches
+    The one scale family: every scale point of the sweep is timed on
+    it, and it is complete, so the DuckDB oracle harness can run
+    against it too (tests/test_scale10.py) — the check that catches
     synthetic-key constructions that only collide past fixture scale
     (the q_etl_merge_tombstones +10**7 insert-key bug fixed in commit
     3ff3f0f collided from ~sf7; this dir IS sf1-equivalent and the
@@ -261,8 +189,7 @@ def ensure_full_scale_dir(k: int) -> str:
         regime where rank/median interpolation and decimal rounding-tie
         bugs live.
       * documents / embeddings: fresh seeded generation at k× rows
-        (the ensure_scale_dir recipe — replication would plant
-        quadratic duplicate cliques).
+        (replication would plant quadratic duplicate cliques).
       * region/nation/customer/supplier/part: copied fixed (dimensions).
     """
     import shutil
@@ -280,34 +207,20 @@ def ensure_full_scale_dir(k: int) -> str:
     _gen_documents(os.path.join(d, "documents.parquet"), 5000 * k, rng)
     _gen_embeddings(os.path.join(d, "embeddings.parquet"), 2000 * k, rng)
 
-    o_max = int(
-        pc.max(pq.read_table(f"{BASE_SF_DIR}/orders.parquet")["o_orderkey"]).as_py()
+    def col_max(table: str, col: str) -> int:
+        path = f"{BASE_SF_DIR}/{table}.parquet"
+        return int(pc.max(pq.read_table(path, columns=[col])[col]).as_py())
+
+    okey_shift = 1 + max(
+        col_max("orders", "o_orderkey"), col_max("lineitem", "l_orderkey")
     )
-    l_max = int(
-        pc.max(pq.read_table(f"{BASE_SF_DIR}/lineitem.parquet")["l_orderkey"]).as_py()
-    )
-    okey_shift = max(o_max, l_max) + 1
-    _replicate_keyed(
-        f"{BASE_SF_DIR}/orders.parquet",
-        os.path.join(d, "orders.parquet"),
-        k,
-        {"o_orderkey": okey_shift},
-    )
-    _replicate_keyed(
-        f"{BASE_SF_DIR}/lineitem.parquet",
-        os.path.join(d, "lineitem.parquet"),
-        k,
-        {"l_orderkey": okey_shift},
-    )
-    e_max = int(
-        pc.max(pq.read_table(f"{BASE_SF_DIR}/events.parquet")["event_id"]).as_py()
-    )
-    _replicate_keyed(
-        f"{BASE_SF_DIR}/events.parquet",
-        os.path.join(d, "events.parquet"),
-        k,
-        {"event_id": e_max + 1},
-    )
+    for table, shifts in (
+        ("orders", {"o_orderkey": okey_shift}),
+        ("lineitem", {"l_orderkey": okey_shift}),
+        ("events", {"event_id": col_max("events", "event_id") + 1}),
+    ):
+        src = f"{BASE_SF_DIR}/{table}.parquet"
+        _replicate_keyed(src, os.path.join(d, f"{table}.parquet"), k, shifts)
     for dim in ("region", "nation", "customer", "supplier", "part"):
         shutil.copyfile(
             f"{BASE_SF_DIR}/{dim}.parquet", os.path.join(d, f"{dim}.parquet")
@@ -317,439 +230,111 @@ def ensure_full_scale_dir(k: int) -> str:
     return d
 
 
-def run_metadata_curves() -> dict:
-    """Metadata-plane scale curves (VERDICT r14 items 3 & 6).
-
-    (1) COMMIT COST vs LIVE FILE COUNT — pure metadata, no Spark: at
-    each table size, the cost of one trickle append under the delta
-    tier (expected: flat in table size) vs a full-snapshot publish
-    (expected: linear). Done-criterion for the incremental manifest
-    tier: delta commit seconds/bytes sublinear in file count at
-    10^4-10^5 files.
-
-    (2) OPTIMIZE (bin-pack) vs SMALL-FILE DEBT — Spark: fixed total
-    rows, varying trickle-file count d. The docstring claim is cost ∝
-    d (the small-file problem), NOT table size; measured by holding the
-    big-file ballast constant while d doubles.
-
-    (3) MoR MERGE vs TOUCHED ROWS — Spark: fixed 32-file table, source
-    batches matching 1/4/16x the rows. Claim: merge cost tracks the
-    CHANGE set (delete-vector + new-file volume), not table size.
-    """
-    import shutil
-    import statistics as st
-    import time as _t
-
-    from t_mobile_data_fnt_etl_pipeline_aws_spark.sources import (
-        manifest_table as mt,
+def loglog_slope(points: dict[int, float]) -> float | None:
+    """Least-squares slope of log(value) on log(scale); None when a
+    value is 0, whose log does not exist."""
+    scales = sorted(points)
+    if len(scales) < 2 or any(points[k] <= 0 for k in scales):
+        return None
+    fit = statistics.linear_regression(
+        [math.log(k) for k in scales], [math.log(points[k]) for k in scales]
     )
+    return round(fit.slope, 3)
 
-    out: dict = {}
-    meta_dir = os.path.join(WORK_DIR, "metadata_curves")
-    shutil.rmtree(meta_dir, ignore_errors=True)
 
-    # (1) pure-metadata commit curve
-    commit_curve = {}
-    for n in (1_000, 10_000, 100_000):
-        tbl = os.path.join(meta_dir, f"files_{n}")
-        entries = [
-            {
-                "path": f"{tbl}/data/{i:08x}.parquet",
-                "rows": 100,
-                "stats": {"k": [i * 100, i * 100 + 99]},
-            }
-            for i in range(n)
-        ]
-        t0 = _t.perf_counter()
-        mt._publish(tbl, 1, "bootstrap", entries, [["k", "bigint"]])
-        full_s = _t.perf_counter() - t0
-        full_b = os.path.getsize(os.path.join(tbl, "_log", "v00001.json"))
-        ds, db = [], []
-        for j in range(5):
-            add = [
-                {
-                    "path": f"{tbl}/data/new{j}.parquet",
-                    "rows": 100,
-                    "stats": {"k": [0, 99]},
-                }
-            ]
-            t0 = _t.perf_counter()
-            v = mt._publish(
-                tbl, j + 2, "append", None, [["k", "bigint"]],
-                files_add=add,
-            )
-            ds.append(_t.perf_counter() - t0)
-            db.append(
-                os.path.getsize(
-                    os.path.join(tbl, "_log", f"v{v:05d}.json")
-                )
-            )
-        commit_curve[n] = {
-            "full_snapshot_s": round(full_s, 4),
-            "full_snapshot_bytes": full_b,
-            "delta_append_ms": round(st.median(ds) * 1000, 2),
-            "delta_append_bytes": int(st.median(db)),
+def reduce_points(points: dict[int, dict]) -> dict[str, dict]:
+    """Per key of ``{scale: bench payload}``: seconds, jobs and
+    shuffle-write bytes at each scale, the wall slope and the
+    shuffle-write slope."""
+    scales = sorted(points)
+    table = {}
+    for key in points[scales[0]]["queries"]:
+        seconds = {k: points[k]["queries"][key] for k in scales}
+        counters = {k: points[k]["counters"][key] for k in scales}
+        shuffle = {k: c["shuffle_write_bytes"] for k, c in counters.items()}
+        table[key] = {
+            "seconds": seconds,
+            "jobs": {k: c["jobs"] for k, c in counters.items()},
+            "shuffle_write_bytes": shuffle,
+            "wall_slope": loglog_slope(seconds),
+            "shuffle_slope": loglog_slope(shuffle),
         }
-    out["commit_vs_file_count"] = commit_curve
-
-    # (4) DROP PARTITION vs manifest entry count — pure metadata: the
-    # whole-file delete fast path folds the live list once (O(manifest
-    # entries), zero data IO). Claim: milliseconds at 10^5 entries,
-    # independent of row counts — where CoW would rewrite a partition
-    # of data and MoR would write row-sized vectors.
-    drop_curve = {}
-    for n in (1_000, 10_000, 100_000):
-        tbl = os.path.join(meta_dir, f"drop_{n}")
-        entries = [
-            {
-                "path": f"{tbl}/data/{i:08x}.parquet",
-                "rows": 100,
-                "stats": {"k": [i * 100, i * 100 + 99]},
-                "partition": f"1995-{(i % 12) + 1:02d}",
-                "ptransform": "month",
-            }
-            for i in range(n)
-        ]
-        mt._publish(
-            tbl, 1, "bootstrap", entries, [["k", "bigint"]],
-            partition_spec={"col": "k", "transform": "month"},
-        )
-        t0 = _t.perf_counter()
-        _, dropped = mt.commit_drop_partition(tbl, ["1995-03"])
-        drop_curve[n] = {
-            "drop_ms": round((_t.perf_counter() - t0) * 1000, 2),
-            "files_dropped": dropped,
-        }
-    out["drop_partition_vs_entries"] = drop_curve
-
-    from t_mobile_data_fnt_etl_pipeline_aws_spark import get_spark
-
-    spark = get_spark("spark-graft-metadata-scaling")
-
-    # JVM/plan warm-up: the first binpack+merge of a session pays JIT and
-    # plan-compilation costs that would masquerade as the smallest-d
-    # point's cost (measured: 3.5 s at d=8 cold vs 0.7 s warm)
-    wtbl = os.path.join(meta_dir, "warmup")
-    wdf = spark.range(1000).selectExpr("id as k", "id * 2 as v")
-    mt.commit_append(wdf.repartition(2), wtbl, ["k"])
-    mt.commit_append(wdf.repartition(1), wtbl, ["k"])
-    mt.commit_optimize_binpack(spark, wtbl, ["k"], target_rows=10_000)
-    from pyspark.sql import functions as _F
-
-    mt.commit_merge_mor(
-        spark,
-        wtbl,
-        spark.range(10)
-        .selectExpr("id as k", "id as v")
-        .withColumn("__op", _F.lit("u")),
-        "k",
-        ["k"],
-    )
-
-    # (2) binpack vs small-file debt (fixed ballast: 4 x 50k-row files)
-    binpack_curve = {}
-    ballast = spark.range(200_000).selectExpr("id as k", "id * 2 as v")
-    for d in (8, 32, 128):
-        tbl = os.path.join(meta_dir, f"binpack_d{d}")
-        mt.commit_append(ballast.repartition(4), tbl, ["k"])
-        trickle = spark.range(2000).selectExpr(
-            "id + 1000000 as k", "id as v"
-        )
-        for _ in range(d):
-            mt.commit_append(trickle.repartition(1), tbl, ["k"])
-        t0 = _t.perf_counter()
-        mt.commit_optimize_binpack(spark, tbl, ["k"], target_rows=10_000)
-        binpack_curve[d] = round(_t.perf_counter() - t0, 3)
-    out["binpack_vs_smallfile_debt"] = binpack_curve
-
-    # (3) MoR MERGE vs touched rows (fixed 32-file, 200k-row table)
-    merge_curve = {}
-    for touch in (100, 400, 1600):
-        tbl = os.path.join(meta_dir, f"merge_t{touch}")
-        mt.commit_append(ballast.repartition(32), tbl, ["k"])
-        from pyspark.sql import functions as F
-
-        src = (
-            spark.range(touch)
-            .selectExpr("id * 7 as k", "id as v")
-            .withColumn("__op", F.lit("u"))
-        )
-        t0 = _t.perf_counter()
-        mt.commit_merge_mor(spark, tbl, src, "k", ["k"])
-        merge_curve[touch] = round(_t.perf_counter() - t0, 3)
-    out["merge_mor_vs_touched_rows"] = merge_curve
-
-    # (4) GDPR purge vs purged rows (round-16, VERDICT r15 item 8):
-    # delete (O(victim positions)) + compact rewrite (O(table)) +
-    # vacuum (O(files)). The expected curve is FLAT in the victim
-    # count — physical erasure is dominated by the compaction rewrite
-    # of the fixed-size table, which is the honest cost statement for
-    # the right-to-be-forgotten path.
-    purge_curve = {}
-    for p in (100, 400, 1600):
-        tbl = os.path.join(meta_dir, f"gdpr_p{p}")
-        mt.commit_append(ballast.repartition(32), tbl, ["k"])
-        from pyspark.sql import functions as F
-
-        doomed = (
-            mt.read_version_with_pos(spark, tbl)
-            .filter(F.col("k") < p)
-            .select("file_path", "row_index")
-        )
-        t0 = _t.perf_counter()
-        mt.commit_delete(spark, tbl, doomed, op="gdpr_delete")
-        mt.commit_replace(
-            mt.read_version(spark, tbl), tbl, ["k"], op="gdpr_compact"
-        )
-        mt.vacuum(tbl, retain_last=1)
-        purge_curve[p] = round(_t.perf_counter() - t0, 3)
-    out["gdpr_purge_vs_victim_rows"] = purge_curve
-    spark.stop()
-    return out
+    return table
 
 
-def _append_metadata_md(curves: dict) -> None:
-    c = curves["commit_vs_file_count"]
-    bp = curves["binpack_vs_smallfile_debt"]
-    mg = curves["merge_mor_vs_touched_rows"]
-    gp = curves.get("gdpr_purge_vs_victim_rows") or {}
+def _write_md(points: dict[int, dict], table: dict[str, dict]) -> None:
+    scales = sorted(points)
+    first = points[scales[0]]
     lines = [
+        "# BENCH_SCALING — seconds, jobs and shuffle bytes against scale",
         "",
-        "## Metadata-plane curves (round 15)",
+        f"Measured by `python bench_scaling.py --scales "
+        f"{','.join(map(str, scales))}` on `{first['master']}` "
+        f"(default parallelism {first['default_parallelism']}).",
         "",
-        "Incremental manifest tier: per-commit metadata is O(changed",
-        "files) — delta segments against the DAG parent, full snapshot",
-        "every SNAPSHOT_INTERVAL commits. Measured by",
-        "`bench_scaling.py --metadata`:",
+        "Method: each scale point is one `bench.run` over the keys below",
+        "on `ensure_full_scale_dir(k)`, k x the sf0.1 row counts.",
+        f"`bench.py`'s protocol holds: a warm-up, then {bench.RUNS} timed",
+        "runs on a cleared cache; seconds and counters are run medians.",
+        "Slopes fit log(value) on log(scale): 1.0 is linear in data,",
+        "below 1 a fixed cost (job floor, round count) still dominates.",
+        "The shuffle-write slope is n/a when a point writes 0 bytes.",
         "",
-        "| live files | full-snapshot commit | delta append |",
-        "|---|---|---|",
+        "The keys are the script's fixed list, one per cost family. They",
+        "are not yet a profile's top-10 by wall time: that per-query",
+        "profile (ROADMAP direction 1) does not exist yet.",
+        "",
+        "Point records:",
+        "",
     ]
-    for n in sorted(c):
-        r = c[n]
-        lines.append(
-            f"| {n:,} | {r['full_snapshot_s']:.3f} s / "
-            f"{r['full_snapshot_bytes']:,} B | "
-            f"{r['delta_append_ms']:.1f} ms / "
-            f"{r['delta_append_bytes']:,} B |"
-        )
+    lines += [f"- x{k}: `{bench.record_name(points[k])}`" for k in scales]
     lines += [
         "",
-        "Delta commit bytes/seconds are FLAT in table file count (the",
-        "done-criterion): at 10^5 files a trickle append writes ~300 B",
-        "in well under a millisecond while the full snapshot costs",
-        "seconds and tens of MB. Reads stay O(live + recent changes):",
-        "reconstruction folds at most SNAPSHOT_INTERVAL segments.",
-        "",
-        "Write-path family (fixed table size, varying work):",
-        "",
-        "| small-file debt d | binpack s | | touched rows | MoR merge s |",
-        "|---|---|---|---|---|",
+        "| key | "
+        + " | ".join(f"x{k} s" for k in scales)
+        + " | jobs "
+        + "/".join(f"x{k}" for k in scales)
+        + " | wall slope | shuffle slope |",
+        "|---|" + "---|" * (len(scales) + 3),
     ]
-    ds = sorted(bp)
-    ts = sorted(mg)
-    for i in range(max(len(ds), len(ts))):
-        a = f"| {ds[i]} | {bp[ds[i]]:.2f} |" if i < len(ds) else "| | |"
-        b = f" | {ts[i]} | {mg[ts[i]]:.2f} |" if i < len(ts) else " | | |"
-        lines.append(a + b)
+    for key, row in table.items():
+        cells = [f"{row['seconds'][k]:.2f}" for k in scales]
+        jobs = "/".join(str(row["jobs"][k]) for k in scales)
+        slopes = [
+            "n/a" if s is None else f"{s:.2f}"
+            for s in (row["wall_slope"], row["shuffle_slope"])
+        ]
+        lines.append(f"| {key} | {' | '.join(cells + [jobs] + slopes)} |")
     lines += [
         "",
-        "Binpack cost is ~linear in the small-file debt d (the",
-        "ballast files carry over by reference at every d) — the",
-        "O(small-file-debt) docstring claim measured on a curve; MoR",
-        "merge cost stays at the job floor across 16x the touched",
-        "rows — the table is never rewritten. Both confirm cost",
-        "tracks the WORK, not the table.",
+        "The metadata-plane curves (commit cost against file count, drop",
+        "partition, binpack, MoR merge, GDPR purge) were last written at",
+        "`d70c058`, on `local[32]`. Commit cost against file count is",
+        "pinned by Tier-1 tests; binpack, MoR merge and GDPR purge are",
+        "headline keys that `bench.py` times with counters.",
     ]
-    if gp:
-        lines += [
-            "",
-            "GDPR purge (delete + compact rewrite + vacuum) vs victim",
-            "rows on a fixed 200k-row table (round 16):",
-            "",
-            "| victim rows | purge chain s |",
-            "|---|---|",
-        ]
-        for p in sorted(gp):
-            lines.append(f"| {p} | {gp[p]:.2f} |")
-        lines += [
-            "",
-            "FLAT in victim count, as the design predicts: physical",
-            "erasure is dominated by the O(table) compaction rewrite —",
-            "the honest right-to-be-forgotten cost; the delete itself",
-            "is O(victim positions) and vacuum O(files).",
-        ]
-    dp = curves.get("drop_partition_vs_entries")
-    if dp:
-        lines += [
-            "",
-            "DROP PARTITION (whole-file delete fast path, pure",
-            "metadata — one live-list fold, zero data IO):",
-            "",
-            "| manifest entries | drop commit | files dropped |",
-            "|---|---|---|",
-        ]
-        for n in sorted(dp):
-            r = dp[n]
-            lines.append(
-                f"| {n:,} | {r['drop_ms']:.1f} ms | "
-                f"{r['files_dropped']:,} |"
-            )
-        lines += [
-            "",
-            "Linear in the MANIFEST length only (ms at 10^4 entries,",
-            "~seconds at 10^5 — the manifest read+publish cost class,",
-            "zero data IO at every point) — the delete-triangle claim",
-            "(cost ∝ metadata, vs CoW's data rewrite and MoR's row",
-            "vectors) measured.",
-        ]
-    with open(
-        os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "BENCH_SCALING.md"
-        ),
-        "a",
-    ) as fh:
+    repo_dir = os.path.dirname(os.path.abspath(__file__))
+    with open(os.path.join(repo_dir, "BENCH_SCALING.md"), "w") as fh:
         fh.write("\n".join(lines) + "\n")
 
 
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--scales", default="1,2,5,10")
-    ap.add_argument("--runs", type=int, default=3)
-    ap.add_argument(
-        "--metadata",
-        action="store_true",
-        help="run the metadata-plane curves instead of the sf sweep",
-    )
-    args = ap.parse_args()
-    if args.metadata:
-        curves = run_metadata_curves()
-        print(json.dumps({"metric": "metadata_plane_curves", **curves}))
-        _append_metadata_md(curves)
-        return
-    scales = [int(s) for s in args.scales.split(",")]
+    scales = [int(s) for s in ap.parse_args().scales.split(",")]
 
-    from t_mobile_data_fnt_etl_pipeline_aws_spark import get_spark
-    from t_mobile_data_fnt_etl_pipeline_aws_spark.registry import all_queries
-
-    queries = all_queries()
-    spark = get_spark("spark-graft-scaling")
-
-    dirs = {k: ensure_scale_dir(k) for k in scales}
-    results: dict[str, dict[int, float]] = {key: {} for key in KEYS}
-    for key in KEYS:
-        for k in scales:
-            spark.catalog.clearCache()
-            spark.sparkContext._jvm.System.gc()
-            fn = queries[key]
-            fn(spark, dirs[k]).write.format("noop").mode("overwrite").save()
-            samples = []
-            for _ in range(args.runs):
-                t0 = time.perf_counter()
-                fn(spark, dirs[k]).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                samples.append(time.perf_counter() - t0)
-            results[key][k] = round(statistics.median(samples), 3)
-            print(f"# {key} x{k}: {results[key][k]} s", file=sys.stderr)
-
-    import numpy as np
-
-    slopes = {}
-    for key, by_k in results.items():
-        xs = np.log([k for k in sorted(by_k)])
-        ys = np.log([by_k[k] for k in sorted(by_k)])
-        slopes[key] = round(float(np.polyfit(xs, ys, 1)[0]), 3)
-
-    payload = {
-        "metric": "scaling_exponent_loglog_slope",
+    points = {}
+    for k in scales:
+        points[k] = bench.run(KEYS, ensure_full_scale_dir(k))
+        print(f"# x{k}: {bench.record_name(points[k])}", file=sys.stderr)
+    table = reduce_points(points)
+    _write_md(points, table)
+    print(json.dumps({
+        "metric": "scaling_loglog_slope",
         "scales": scales,
-        "seconds": results,
-        "slopes": slopes,
-    }
-    print(json.dumps(payload))
-    _write_md(scales, results, slopes)
-    spark.stop()
-
-
-def _write_md(scales, results, slopes) -> None:
-    lines = [
-        "# BENCH_SCALING — seconds-vs-scale exponents (round 11)",
-        "",
-        f"Measured by `bench_scaling.py` on local[32]: the {len(KEYS)} most",
-        "expensive registry keys run against a seeded generated data",
-        "family at 1x/2x/5x/10x the sf0.1 row counts (10x = TPC-H",
-        "sf1-equivalent; generation recipe in the script docstring).",
-        "Slope = least-squares fit of log(seconds) vs log(scale); 1.0 is",
-        "linear-in-data (the cluster-scaling prerequisite on fixed",
-        "cores), < 1 means a fixed overhead (job floor / round count)",
-        "still dominates at these sizes.",
-        "",
-        "| key | " + " | ".join(f"x{k} s" for k in scales) + " | slope |",
-        "|---|" + "---|" * (len(scales) + 1),
-    ]
-    for key in KEYS:
-        row = [key] + [f"{results[key][k]:.2f}" for k in scales] + [
-            f"**{slopes[key]:.2f}**"
-        ]
-        lines.append("| " + " | ".join(row) + " |")
-    lines += [
-        "",
-        "Reading the slopes:",
-        "",
-        "- **q_cluster_kmeans_lloyd** — run-to-convergence loop: cost =",
-        "  rounds x (job floor + E-step). At these sizes the ~0.5 s",
-        "  local job floor dominates, so the slope mostly reflects the",
-        "  data-dependent round count; the per-round work itself is one",
-        "  linear scan + one O(k x dim) shuffle.",
-        "- **q_dedup_fuzzy_minhash** — band-join LSH: hashing is linear;",
-        "  candidate pairs grow with bucket collision rates. Fresh",
-        "  generated docs keep the duplicate rate realistic (replication",
-        "  would have planted quadratic k-cliques).",
-        "- **q_dedup_clusters_cc** — alternating-star CC: O(log n)",
-        "  rounds of linear work.",
-        "- **q_agg_higher_moments** — one decimal power-sum pass;",
-        "  expected slope ~1 exactly.",
-        "- **q_join_theta_bucketed** — geometric-bucket band equi-join",
-        "  with the dimension side FIXED: linear in the probe side (the",
-        "  engine property under test). Scaling the part side too would",
-        "  measure the band-match model's inherent quadratic growth,",
-        "  not the join strategy.",
-        "- **q_sim_search_batch_topk** — IVF batch retrieval join with",
-        "  the probe batch FIXED (<= 100 held-out vectors at every",
-        "  scale; serving query rate does not grow with corpus size):",
-        "  centroid agg + the per-probe nprobe/|cells| candidate scan",
-        "  are linear in the corpus. The first cut scaled the probe",
-        "  set with the data and measured slope 1.76 -- the data",
-        "  model's probes x scan quadratic, same class as scaling the",
-        "  theta join's dimension side; capping the batch restores the",
-        "  engine-shape measurement.",
-        "- **q_bpe_apply** — zero-shuffle codegen replace chain over",
-        "  the documents scan; the pure map-stage control, expected",
-        "  slope ~1 exactly.",
-        "- **q_scan_avro_python** — pure-Python Avro container",
-        "  encode+decode over lineitem, map-only with a FIXED file",
-        "  count (8): bytes per file grow linearly and so does codec",
-        "  CPU; the second map-stage control alongside q_bpe_apply.",
-        "- **q_timeseries_ohlc** — hash-agg OHLC bars (min_by/max_by",
-        "  over the decimal composite key): bar-grain state is FIXED",
-        "  (|event_type| x days), rows grow k-fold — pure map-side",
-        "  combine, sub-linear while the job floor dominates.",
-        "- **q_stream_foreachbatch_upsert** — latest-per-key fold with",
-        "  a FIXED user universe: per-group sort-agg combine over",
-        "  k-fold rows; the tie-dense replicated timestamps make the",
-        "  (ts, event_id) tiebreak load-bearing at every scale.",
-        "",
-        "No super-linear surprise = the plan-contract story (pushdown,",
-        "broadcast, bucketing, no nested loops) holds empirically",
-        "through a 10x data sweep, not just in plan text.",
-    ]
-    with open(
-        os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                     "BENCH_SCALING.md"),
-        "w",
-    ) as fh:
-        fh.write("\n".join(lines) + "\n")
+        "records": {k: bench.record_name(p) for k, p in points.items()},
+        "keys": table,
+    }))
 
 
 if __name__ == "__main__":

@@ -134,6 +134,15 @@ def q_dedup_fuzzy_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         22-31 s; with barriers the whole operator is ~2 s). The exchange
         is also reused (ReuseExchange) by the two verify-side joins.
 
+    Shuffle-write slope 1.20 over the 1x-10x scale family
+    (BENCH_SCALING.md, local[4]): linear in the corpus plus one plan
+    switch, not a super-linear term. From 2x to 5x the bytes step 3.7x
+    (12.6 -> 46.3 MB) and the jobs 15 -> 18, because one verify join
+    outgrows the 10 MB autoBroadcastJoinThreshold (executed plans at
+    2x: 1 BroadcastHashJoin + 2 SortMergeJoin; at 5x: 3 SortMergeJoin),
+    so its shingle side is now shuffled. From 5x to 10x the bytes grow
+    exactly 2.0x (46.3 -> 92.9 MB).
+
     Round-10 drift adjudication (VERDICT r9 item 2): the r9 driver's
     1.49x move (2.43 -> 3.61 s) was HOST VARIANCE, not a band-join
     regression — quiet-host re-measure with the q_agg_hash anchor
@@ -660,13 +669,21 @@ def prefix_filter_jaccard_pairs(tok: DataFrame, num: int, den: int) -> DataFrame
     # pairs from a full token self-join (prefix filtering is lossless,
     # so the outputs are identical by construction). The driver's gate
     # runs at sf0.01, where the corpus is 500 docs — the same quadratic
-    # budget the bounded oracle already spends.
+    # budget the bounded oracle already spends. ``guard`` makes any
+    # larger corpus fail fast instead of running the O(n²) self-join;
+    # ``tok`` filters on ``guard.ok`` so DuckDB cannot prune the check.
     oracle="""
-    WITH tok AS (
+    WITH guard AS (
+        SELECT CASE WHEN count(*) > 500
+                    THEN error('q_dedup_pairs_full oracle is O(n^2): sf <= 0.01 only')
+                    ELSE 1 END AS ok
+        FROM documents
+    ),
+    tok AS (
         SELECT DISTINCT doc_id, token
         FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS token
-              FROM documents)
-        WHERE token <> ''
+              FROM documents) CROSS JOIN guard
+        WHERE token <> '' AND guard.ok = 1
     ),
     sizes AS (SELECT doc_id, count(*) AS sz FROM tok GROUP BY doc_id),
     ij AS (

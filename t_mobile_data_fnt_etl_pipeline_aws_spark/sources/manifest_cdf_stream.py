@@ -41,19 +41,7 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-from .manifest_table import current_version, read_manifest
-
-
-def _strip_scheme(p: str) -> str:
-    """Normalize Spark's _metadata.file_path URI to a plain filesystem
-    path — Spark emits the single-slash 'file:/abs/path' form (and
-    other Hadoop filesystems the 'scheme://' form); manifests store
-    plain paths."""
-    if p.startswith("file://"):
-        return p[7:]
-    if p.startswith("file:"):
-        return p[5:]
-    return p
+from .manifest_table import _norm_fp_str, current_version, read_manifest
 
 
 def _pos_mask(paths: list[str]) -> set[tuple[str, int]]:
@@ -68,7 +56,7 @@ def _pos_mask(paths: list[str]) -> set[tuple[str, int]]:
         for fp, ri in zip(
             t.column("file_path").to_pylist(), t.column("row_index").to_pylist()
         ):
-            mask.add((_strip_scheme(fp), int(ri)))
+            mask.add((_norm_fp_str(fp), int(ri)))
     return mask
 
 

@@ -13,7 +13,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from t_mobile_data_fnt_etl_pipeline_aws_spark.registry import all_queries
+from t_mobile_data_fnt_etl_pipeline_aws_spark.registry import all_oracles, all_queries
 from t_mobile_data_fnt_etl_pipeline_aws_spark.sources.tables import load
 
 QUERIES = all_queries()
@@ -52,6 +52,22 @@ def test_dedup_pairs_full_invariants(spark, sf_dir):
         assert jacc >= 0.8
         assert 0 < n_common <= min(sz_a, sz_b)
         assert jacc == n_common / (sz_a + sz_b - n_common)
+
+
+def test_dedup_pairs_full_oracle_refuses_large_corpus():
+    """The q_dedup_pairs_full oracle is an O(n²) token self-join, so it
+    runs on at most 500 documents (sf0.01) and fails fast, naming the
+    key, on a larger corpus. DuckDB only."""
+    import duckdb
+
+    sql = all_oracles()["q_dedup_pairs_full"]
+    con = duckdb.connect()
+    docs = "SELECT range AS doc_id, 'w' || range AS text FROM range({})"
+    con.execute(f"CREATE VIEW documents AS {docs.format(500)}")
+    assert con.execute(sql).fetchall() == []
+    con.execute(f"CREATE OR REPLACE VIEW documents AS {docs.format(501)}")
+    with pytest.raises(duckdb.Error, match="q_dedup_pairs_full oracle is O"):
+        con.execute(sql).fetchall()
 
 
 def test_union_all_is_sum_of_slices(spark, sf_dir):
@@ -1459,6 +1475,42 @@ def test_bench_counter_gate(tmp_path):
 
     with pytest.raises(FileExistsError):
         record("20261017T110000Z", **base)
+
+
+def test_bench_scaling_reducer():
+    """bench_scaling.py reduces one bench payload per scale point to
+    per-key seconds, jobs and two log-log slopes: a linear key reads
+    wall slope 1, a key that writes no shuffle bytes reads shuffle slope
+    None (its log does not exist), and jobs pass through per point. No
+    Spark involved."""
+    import math
+    import sys
+
+    sys.path.insert(0, str(__import__("pathlib").Path(__file__).parent.parent))
+    from bench_scaling import reduce_points
+
+    def payload(k):
+        jobs = {"q_lin": 3 + k, "q_map": 2}
+        shuffle = {"q_lin": 1000 * k**1.5, "q_map": 0}
+        return {
+            "queries": {"q_lin": 0.7 * k, "q_map": 0.5},
+            "counters": {
+                key: {"jobs": jobs[key], "stages": jobs[key],
+                      "shuffle_write_bytes": shuffle[key], "spill_bytes": 0}
+                for key in jobs
+            },
+        }
+
+    table = reduce_points({k: payload(k) for k in (1, 2, 5, 10)})
+    assert set(table) == {"q_lin", "q_map"}
+    lin, flat = table["q_lin"], table["q_map"]
+    assert math.isclose(lin["wall_slope"], 1.0, abs_tol=1e-3)
+    assert math.isclose(lin["shuffle_slope"], 1.5, abs_tol=1e-3)
+    assert math.isclose(flat["wall_slope"], 0.0, abs_tol=1e-3)
+    assert flat["shuffle_slope"] is None
+    assert lin["jobs"] == {1: 4, 2: 5, 5: 8, 10: 13}
+    assert flat["jobs"] == {1: 2, 2: 2, 5: 2, 10: 2}
+    assert lin["seconds"] == {k: 0.7 * k for k in (1, 2, 5, 10)}
 
 
 def test_equidepth_bins_tile_and_are_monotone(spark, sf_dir):
