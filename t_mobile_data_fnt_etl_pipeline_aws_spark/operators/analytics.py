@@ -43,8 +43,8 @@ _LOOKBACK_US = 7 * 24 * 3600 * 1_000_000
 def _epoch_us(col: str = "ts"):
     """Epoch µs of a TIMESTAMP_NTZ column, bit-equal to DuckDB epoch_us.
 
-    load() yields NTZ timestamps (parquet nanos div 1000), which
-    unix_micros() rejects and a cast to TIMESTAMP would shift by the
+    load() yields NTZ timestamps (parquet TIMESTAMP(MICROS), no zone),
+    which unix_micros() rejects and a cast to TIMESTAMP would shift by the
     session timezone; diffing against an NTZ epoch literal is the
     tz-independent integer form (verified equal to epoch_us at sf0.01).
     """

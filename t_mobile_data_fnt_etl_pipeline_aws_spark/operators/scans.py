@@ -86,17 +86,12 @@ def q_scan_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="SELECT * FROM supplier",
 )
 def q_scan_schema_assert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scan with an EXPLICIT schema (no footer inference) + drift check.
-
-    The canonical StructType is applied via .schema(...) — the pattern
-    for production readers where inference is a correctness risk — and
-    the loader's assert keeps it honest.
+    """Scan under the contract schema: the loader checks the footer
+    against ``SCHEMAS["supplier"]`` on the driver, then hands Spark that
+    StructType via ``.schema(...)``, so no inference job runs — the
+    pattern for production readers where inference is a correctness risk.
     """
-    explicit = StructType.fromDDL(SCHEMAS["supplier"])
-    df = spark.read.schema(explicit).parquet(f"{sf_dir}/supplier.parquet")
-    if df.schema != explicit:
-        raise ValueError("schema drift on supplier scan")
-    return df
+    return load(spark, sf_dir, "supplier")
 
 
 @query(
@@ -635,9 +630,11 @@ def q_scan_agg_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     run, and the one every table-health dashboard runs hourly.
     Pushdown is all-or-nothing over the aggregate list, so the profile
     sticks to types the parquet stats path supports (double + int64):
-    the fixture's nanos-encoded timestamps would veto the whole
-    rewrite, and a NaN-bearing double column would too (parquet stats
-    ordering with NaN is unspecified — Spark only pushes safe types).
+    a min/max over the TIMESTAMP_NTZ o_orderdate or the string
+    o_orderpriority leaves PushedAggregation empty on Spark 4.1 (probed
+    at sf0.01), and a NaN-bearing double column would veto it too
+    (parquet stats ordering with NaN is unspecified — Spark only pushes
+    safe types).
     """
     o = load(spark, sf_dir, "orders")
     return o.agg(

@@ -430,14 +430,18 @@ def q_window_cumulative_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM events
         WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
                      ROWS BETWEEN 20 PRECEDING AND 1 PRECEDING)
+    ), mv AS (
+        SELECT event_id, user_id, value, n, s1,
+               (s2 - s1 * s1 / n) / (n - 1) AS var
+        FROM st
     )
     SELECT event_id, user_id, value,
-           (value - s1 / n) / sqrt((s2 - s1 * s1 / n) / (n - 1)) AS zscore,
+           (value - s1 / n) / CASE WHEN var > 0 THEN sqrt(var) END AS zscore,
            cast(n as bigint) AS n_window
-    FROM st
+    FROM mv
     WHERE n >= 10
-      AND (s2 - s1 * s1 / n) / (n - 1) > 0
-      AND abs((value - s1 / n) / sqrt((s2 - s1 * s1 / n) / (n - 1))) > 3
+      AND var > 0
+      AND abs((value - s1 / n) / CASE WHEN var > 0 THEN sqrt(var) END) > 3
     """,
 )
 def q_window_moving_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -451,9 +455,12 @@ def q_window_moving_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     two DECIMAL window sums (order-independent) finished to identical
     doubles, then fixed IEEE arithmetic for mean/var/z (rule 5: no
     finish on quotients); var > 0 guards the all-identical-window
-    division in both engines identically. Scale: one shuffle on
-    user_id, a 21-row sliding frame per row (O(1) incremental decimal
-    adds), and only the |z| > 3 tail survives to output.
+    division in both engines identically. A cancelled variance can come
+    out a hair below zero: Spark's sqrt returns NaN there, DuckDB's
+    raises, so the oracle evaluates sqrt only under CASE WHEN var > 0.
+    Scale: one shuffle on user_id, a 21-row sliding frame per row (O(1)
+    incremental decimal adds), and only the |z| > 3 tail survives to
+    output.
     """
     e = load(spark, sf_dir, "events")
     w = (

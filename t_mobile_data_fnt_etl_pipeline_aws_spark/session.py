@@ -6,10 +6,6 @@ Two entry modes:
     before reading fixture tables; sets only runtime-settable SQL confs.
 
 Config rationale (SURVEY.md §0.2, §4):
-  * ``spark.sql.legacy.parquet.nanosAsLong`` — events.ts is parquet
-    TIMESTAMP(NANOS); Spark 4.x has no nanosecond timestamp type and refuses
-    the file otherwise. We read the raw int64 nanos and truncate to µs at
-    load time (sources/tables.py), matching DuckDB's ns→µs read behavior.
   * ``spark.sql.session.timeZone=UTC`` — all fixture timestamps are naive;
     keeping the session in UTC makes TIMESTAMP↔TIMESTAMP_NTZ casts identity
     and keeps epoch arithmetic aligned with the DuckDB oracle.
@@ -27,7 +23,6 @@ from pyspark.sql import SparkSession
 #: Runtime-settable SQL confs applied to every session that touches fixtures.
 RUNTIME_CONFS = {
     "spark.sql.session.timeZone": "UTC",
-    "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.sql.parquet.inferTimestampNTZ.enabled": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.adaptive.enabled": "true",
@@ -44,8 +39,7 @@ def configure(spark: SparkSession) -> SparkSession:
         try:
             spark.conf.set(key, value)
         except Exception:
-            # A locked-down session may refuse some confs; reads still work
-            # for all tables except events (which needs nanosAsLong).
+            # A locked-down session may refuse a conf; apply the rest.
             pass
     return spark
 

@@ -5,10 +5,10 @@ source so tests can assert that the streaming form of each §2.9 operator
 converges to its batch-equivalent answer, and that watermarks actually
 drop late data (two-phase checkpointed replay).
 
-The fixture's parquet uses TIMESTAMP(NANOS), which the streaming reader
-can't take directly — staging rewrites it through the batch loader (µs
-timestamps) into one-or-more ordered files, which doubles as the arrival
--order control for the late-data test.
+The fixture's ``ts`` loads as TIMESTAMP_NTZ, but watermarks need an
+instant TIMESTAMP — staging rewrites the table through the batch loader,
+casting ``ts`` to TIMESTAMP, into one-or-more ordered files, which doubles
+as the arrival-order control for the late-data test.
 """
 
 from __future__ import annotations

@@ -9,6 +9,8 @@ driver's single-SF gate would.
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 from pyspark.sql import functions as F
@@ -3683,6 +3685,90 @@ def test_manifest_reads_build_without_spark_jobs(spark, tmp_path):
     assert {r.c for r in reads[0].collect()} == {"d"}
     assert reads[2].count() == len(ks)
     assert sorted(r.k for r in reads[3].collect()) == [0, 7, 10, 20, 30, 40, 50]
+
+
+def test_fixture_loads_run_no_spark_job(spark, sf_dir):
+    """``load`` checks the parquet footer with pyarrow on the driver and
+    hands Spark the contract schema, so loading any of the fixture tables
+    runs NO Spark job (schema inference would run one per table)."""
+    from pyspark.sql.types import StructType
+
+    from t_mobile_data_fnt_etl_pipeline_aws_spark.sources.tables import (
+        SCHEMAS,
+        table_names,
+    )
+
+    sc = spark.sparkContext
+    group = "fixture-load-build"
+    try:
+        sc.setJobGroup(group, "build only")
+        frames = {name: load(spark, sf_dir, name) for name in table_names()}
+    finally:
+        sc.setJobGroup(None, None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert len(frames) == 10
+    for name, df in frames.items():
+        assert df.schema == StructType.fromDDL(SCHEMAS[name]), name
+
+
+def _recast(col, pa_type):
+    return lambda t: t.set_column(
+        t.schema.get_field_index(col), col, t[col].cast(pa_type)
+    )
+
+
+@pytest.mark.parametrize(
+    "table,edit,at_load",
+    [
+        pytest.param(
+            "supplier", lambda t: t.drop_columns(["s_acctbal"]), True, id="dropped"
+        ),
+        pytest.param(
+            "supplier",
+            lambda t: t.rename_columns(
+                ["s_suppkey", "s_title", "s_nationkey", "s_acctbal"]
+            ),
+            True,
+            id="renamed",
+        ),
+        pytest.param("supplier", _recast("s_nationkey", pa.int64()), True, id="retyped"),
+        pytest.param("events", _recast("ts", pa.timestamp("ns")), False, id="ts-nanos"),
+        pytest.param(
+            "events",
+            _recast("ts", pa.timestamp("us", tz="UTC")),
+            True,
+            id="ts-utc-instant",
+        ),
+    ],
+)
+def test_load_refuses_drifted_fixture(spark, sf_dir, tmp_path, table, edit, at_load):
+    """A fixture whose footer drifts from the contract never yields rows.
+    A dropped, renamed or retyped column, or an events ``ts`` stored as a
+    UTC instant (TIMESTAMP, not TIMESTAMP_NTZ), fails the driver-side
+    footer check with a ValueError naming the table. An events ``ts``
+    stored as TIMESTAMP(NANOS) maps to the same Spark type, so it passes
+    the footer check and Spark's parquet reader refuses it on the first
+    action instead."""
+    pq.write_table(
+        edit(pq.read_table(f"{sf_dir}/{table}.parquet")),
+        str(tmp_path / f"{table}.parquet"),
+    )
+    if at_load:
+        with pytest.raises(ValueError, match=f"schema drift for table '{table}'"):
+            load(spark, str(tmp_path), table)
+    else:
+        from py4j.protocol import Py4JJavaError
+        from pyspark.errors import PySparkException
+
+        df = load(spark, str(tmp_path), table)
+        # The same read error reached Python as a converted PySparkException
+        # when this test ran alone, and as the raw Py4JJavaError (a
+        # SparkException pyspark does not convert) inside the full suite.
+        with pytest.raises(
+            (PySparkException, Py4JJavaError),
+            match="PARQUET_COLUMN_DATA_TYPE_MISMATCH",
+        ):
+            df.collect()
 
 
 def test_read_version_paths_is_masked_restriction(spark, tmp_path):
