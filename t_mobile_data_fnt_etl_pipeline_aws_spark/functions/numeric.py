@@ -47,11 +47,15 @@ The scheme (each step verified bit-exact between engines at sf0.01):
 Scale choice rule: pick ``s`` with ``|x| * 10^s < 9e15``. Defaults: sums
 s=4 (|sum| < 9e11 — holds through sf1), means/ratios s=6 (|x| < 9e9).
 
+The accumulation type is named only in this module: every exact sum
+is built from ``exact``/``sql_exact`` (the per-row summand) and the
+``finish``/``sql_finish_dec`` pair, or from the ``dsum``/``davg``/``dvar_samp``
+helpers that combine them. Moving the accumulator to another type is a
+change to this module alone.
+
 At 100 TB this costs one decimal accumulator per aggregate in the
 partial-agg buffer — still one shuffle with map-side combine; no extra
-pass. Measured cost of that exactness (flagship, sf0.1, local[32]):
-decimal sums 1.3 s vs plain-double sums 0.4 s — 3.3× on the agg-bound
-query. The premium depends on the precision: Spark sums a decimal(p, s)
+pass. The premium depends on the precision: Spark sums a decimal(p, s)
 in a decimal(p+10, s) buffer, and a sum whose buffer stays within 18
 digits (p <= 8) is long-backed — Catalyst's DecimalAggregates rewrites
 it to a sum over the unscaled long — while a wider buffer accumulates
@@ -67,7 +71,18 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 #: Accumulation type: 20 integer digits + 10 fraction digits.
-DEC = "decimal(30,10)"
+_DEC = "decimal(30,10)"
+
+
+def exact(col: Column) -> Column:
+    """Per-row value in the exact accumulation type: the summand of every
+    exact sum, and the operand of an exact per-row compare."""
+    return col.cast(_DEC)
+
+
+def sql_exact(expr: str) -> str:
+    """DuckDB/Spark SQL twin of ``exact``."""
+    return f"cast(({expr}) as {_DEC})"
 
 
 def finish(col: Column, scale: int = 6) -> Column:
@@ -95,11 +110,11 @@ def sql_finish_dec(expr: str, scale: int = 6) -> str:
 
 def dsum(col: Column, alias: str, scale: int = 4) -> Column:
     """Exact-decimal SUM of a double expression, finished to double."""
-    return finish(F.sum(col.cast(DEC)), scale).alias(alias)
+    return finish(F.sum(exact(col)), scale).alias(alias)
 
 
 def sql_dsum(expr: str, alias: str, scale: int = 4) -> str:
-    return sql_finish_dec(f"sum(cast(({expr}) as {DEC}))", scale) + f" as {alias}"
+    return sql_finish_dec(f"sum({sql_exact(expr)})", scale) + f" as {alias}"
 
 
 def davg(col: Column, alias: str) -> Column:
@@ -110,57 +125,49 @@ def davg(col: Column, alias: str) -> Column:
     bit-identical already — and finishing a quotient is actively unsafe
     (see module docstring rule 5).
     """
-    s1 = finish(F.sum(col.cast(DEC)), 4)
+    s1 = finish(F.sum(exact(col)), 4)
     return (s1 / F.count(col)).alias(alias)
 
 
 def sql_davg(expr: str, alias: str) -> str:
-    s1 = sql_finish_dec(f"sum(cast(({expr}) as {DEC}))", 4)
+    s1 = sql_finish_dec(f"sum({sql_exact(expr)})", 4)
     return f"({s1} / count({expr})) as {alias}"
 
 
-def _moments(col: Column, prescale: int) -> tuple[Column, Column, Column]:
-    """(n, s1, s2) over y = x/prescale, each finished to exact doubles.
+def _var_y(col: Column, prescale: int) -> Column:
+    """Sample variance of y = x/prescale from exact moments n, Σy, Σy².
 
     Prescaling keeps s2 = Σy² small enough for the 2^53 finish rule even at
     large SF; var(x) = var(y)·prescale², stddev(x) = stddev(y)·prescale.
+    No final finish: s1/s2 are identical doubles in both engines, and the
+    remaining expression is fixed IEEE arithmetic (rule 5).
     """
     y = col / F.lit(float(prescale))
     n = F.count(col)
-    s1 = finish(F.sum(y.cast(DEC)), 6)
-    s2 = finish(F.sum((y * y).cast(DEC)), 6)
-    return n, s1, s2
+    s1 = finish(F.sum(exact(y)), 6)
+    s2 = finish(F.sum(exact(y * y)), 6)
+    return (s2 - s1 * s1 / n) / (n - F.lit(1))
 
 
 def dvar_samp(col: Column, alias: str, prescale: int = 10000) -> Column:
-    # no final finish: s1/s2 are identical doubles in both engines, and
-    # the remaining expression is fixed IEEE arithmetic (rule 5).
-    n, s1, s2 = _moments(col, prescale)
-    var_y = (s2 - s1 * s1 / n) / (n - F.lit(1))
-    return (var_y * F.lit(float(prescale) ** 2)).alias(alias)
+    return (_var_y(col, prescale) * F.lit(float(prescale) ** 2)).alias(alias)
 
 
 def dstddev_samp(col: Column, alias: str, prescale: int = 10000) -> Column:
-    n, s1, s2 = _moments(col, prescale)
-    var_y = (s2 - s1 * s1 / n) / (n - F.lit(1))
-    return (F.sqrt(var_y) * F.lit(float(prescale))).alias(alias)
+    return (F.sqrt(_var_y(col, prescale)) * F.lit(float(prescale))).alias(alias)
 
 
-def _sql_moments(expr: str, prescale: int) -> tuple[str, str, str]:
+def _sql_var_y(expr: str, prescale: int) -> str:
     y = f"(({expr}) / {float(prescale)!r})"
     n = f"count({expr})"
-    s1 = sql_finish_dec(f"sum(cast({y} as {DEC}))", 6)
-    s2 = sql_finish_dec(f"sum(cast(({y} * {y}) as {DEC}))", 6)
-    return n, s1, s2
+    s1 = sql_finish_dec(f"sum({sql_exact(y)})", 6)
+    s2 = sql_finish_dec(f"sum({sql_exact(f'{y} * {y}')})", 6)
+    return f"(({s2} - {s1} * {s1} / {n}) / ({n} - 1))"
 
 
 def sql_dvar_samp(expr: str, alias: str, prescale: int = 10000) -> str:
-    n, s1, s2 = _sql_moments(expr, prescale)
-    var_y = f"(({s2} - {s1} * {s1} / {n}) / ({n} - 1))"
-    return f"({var_y} * {float(prescale) ** 2!r}) as {alias}"
+    return f"({_sql_var_y(expr, prescale)} * {float(prescale) ** 2!r}) as {alias}"
 
 
 def sql_dstddev_samp(expr: str, alias: str, prescale: int = 10000) -> str:
-    n, s1, s2 = _sql_moments(expr, prescale)
-    var_y = f"(({s2} - {s1} * {s1} / {n}) / ({n} - 1))"
-    return f"(sqrt({var_y}) * {float(prescale)!r}) as {alias}"
+    return f"(sqrt({_sql_var_y(expr, prescale)}) * {float(prescale)!r}) as {alias}"

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from ..functions.numeric import DEC, sql_finish_dbl, sql_finish_dec
+from ..functions.numeric import sql_dsum, sql_exact, sql_finish_dec
 from ..registry import query
 from ..sources.tables import load
 
@@ -66,8 +66,8 @@ def q_udf_scalar_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=False,
     oracle=f"""
     SELECT l_returnflag,
-           {sql_finish_dec(f'sum(cast(l_extendedprice * l_quantity as {DEC}))', 2)}
-               / {sql_finish_dec(f'sum(cast(l_quantity as {DEC}))', 2)}
+           {sql_finish_dec(f'sum({sql_exact("l_extendedprice * l_quantity")})', 2)}
+               / {sql_finish_dec(f'sum({sql_exact("l_quantity")})', 2)}
                AS weighted_avg_price
     FROM lineitem
     GROUP BY l_returnflag
@@ -224,16 +224,13 @@ def q_udf_registered_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH om AS (
         SELECT year(o_orderdate) * 100 + month(o_orderdate) AS month_id,
                count(*) AS n_orders,
-               {sql_finish_dec(f"sum(cast(o_totalprice as {DEC}))", 2)}
-                   AS order_revenue
+               {sql_dsum("o_totalprice", "order_revenue", 2)}
         FROM orders GROUP BY 1
     ),
     lm AS (
         SELECT year(l_shipdate) * 100 + month(l_shipdate) AS month_id,
                count(*) AS n_lines,
-               {sql_finish_dec(
-                   f"sum(cast(l_extendedprice * (1 - l_discount) as {DEC}))", 2
-               )} AS line_revenue
+               {sql_dsum("l_extendedprice * (1 - l_discount)", "line_revenue", 2)}
         FROM lineitem GROUP BY 1
     )
     SELECT coalesce(om.month_id, lm.month_id) AS month_id,
@@ -456,9 +453,8 @@ def q_udtf_polymorphic(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: …58499999999272 whose ×100 rounds to exactly 11315858.5, so DuckDB's
 #: float-path double→decimal cast says .59 while Spark's exact
 #: BigDecimal route says .58. decimal × decimal is exact in BOTH
-#: engines (…585 → .59 HALF_UP, identical), the standard DEC recipe.
-_SQL_UDF_LADDER = (
-    f"cast({{price}} as {DEC})"
+#: engines (…585 → .59 HALF_UP, identical), the standard exact recipe.
+_SQL_UDF_LADDER = sql_exact("{price}") + (
     " * (1 - CASE WHEN {price} > 200000 THEN 0.10"
     "             WHEN {price} > 100000 THEN 0.05"
     "             ELSE 0.0 END)"
@@ -490,7 +486,7 @@ def q_sql_udf_create_function(spark: SparkSession, sf_dir: str) -> DataFrame:
     Parity: the ladder multiplies in EXACT decimal (see _SQL_UDF_LADDER's
     note — the double-product form misrounds the 113158.585 tie because
     DuckDB's double→decimal cast is float-path while Spark's is exact
-    BigDecimal), finished at 2 dp with the standard DEC recipe
+    BigDecimal), finished at 2 dp with the standard exact recipe
     (Spark decimal downcast rounds HALF_UP; DuckDB round()-before-
     downcast via sql_finish_dec).
     """

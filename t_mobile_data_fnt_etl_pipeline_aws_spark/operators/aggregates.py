@@ -14,17 +14,18 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.numeric import (
-    DEC,
     davg,
     dstddev_samp,
     dsum,
     dvar_samp,
+    exact,
     finish,
     sql_finish_dec,
     sql_davg,
     sql_dstddev_samp,
     sql_dsum,
     sql_dvar_samp,
+    sql_exact,
 )
 from ..registry import query
 from ..sources.tables import load
@@ -122,7 +123,7 @@ def q_agg_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT o_orderpriority,
            count(DISTINCT o_custkey) AS n_custs,
            count(o_custkey) AS n_orders,
-           cast(cast(round(sum(DISTINCT cast(o_totalprice as {DEC})), 4) as decimal(38,4)) as double)
+           {sql_finish_dec(f"sum(DISTINCT {sql_exact('o_totalprice')})", 4)}
                AS sum_distinct_price,
            {sql_dsum('o_totalprice', 'sum_price')}
     FROM orders
@@ -135,7 +136,7 @@ def q_agg_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     return o.groupBy("o_orderpriority").agg(
         F.countDistinct("o_custkey").alias("n_custs"),
         F.count("o_custkey").alias("n_orders"),
-        finish(F.sum_distinct(F.col("o_totalprice").cast(DEC)), 4).alias(
+        finish(F.sum_distinct(exact(F.col("o_totalprice"))), 4).alias(
             "sum_distinct_price"
         ),
         dsum(F.col("o_totalprice"), "sum_price"),
@@ -167,7 +168,7 @@ def q_agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
            count(*) AS n_orders
     FROM orders
     GROUP BY o_custkey
-    HAVING sum(cast(o_totalprice as {DEC})) > 1500000
+    HAVING sum({sql_exact('o_totalprice')}) > 1500000
     """,
 )
 def q_agg_having(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -177,11 +178,10 @@ def q_agg_having(spark: SparkSession, sf_dir: str) -> DataFrame:
     double) so the group membership can't flip at a rounding boundary.
     """
     o = load(spark, sf_dir, "orders")
-    exact = F.sum(F.col("o_totalprice").cast(DEC))
     return (
         o.groupBy("o_custkey")
         .agg(
-            exact.alias("_exact_spend"),
+            F.sum(exact(F.col("o_totalprice"))).alias("_exact_spend"),
             F.count(F.lit(1)).alias("n_orders"),
         )
         .filter(F.col("_exact_spend") > 1500000)
@@ -265,7 +265,7 @@ def q_agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"""
         SELECT o_orderstatus, o_orderpriority,
                count(*) AS n_orders,
-               cast(cast(sum(cast(o_totalprice as {DEC})) as decimal(38,4)) as double) AS sum_price
+               cast(cast(sum({sql_exact('o_totalprice')}) as decimal(38,4)) as double) AS sum_price
         FROM {view}
         GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority), (o_orderstatus), ())
         """
@@ -389,12 +389,12 @@ def q_agg_median_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH ranked AS (
         SELECT l_returnflag, l_extendedprice,
-               cast(l_quantity as {DEC}) AS wq,
-               sum(cast(l_quantity as {DEC})) OVER (
+               {sql_exact('l_quantity')} AS wq,
+               sum({sql_exact('l_quantity')}) OVER (
                    PARTITION BY l_returnflag
                    ORDER BY l_extendedprice, l_orderkey, l_linenumber
                    ROWS UNBOUNDED PRECEDING) AS cumw,
-               sum(cast(l_quantity as {DEC})) OVER (
+               sum({sql_exact('l_quantity')}) OVER (
                    PARTITION BY l_returnflag) AS totw
         FROM lineitem
     )
@@ -421,7 +421,7 @@ def q_agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     (price, orderkey, linenumber) tiebreak the pick is deterministic.
     """
     l = load(spark, sf_dir, "lineitem")
-    wq = F.col("l_quantity").cast(DEC)
+    wq = exact(F.col("l_quantity"))
     w_ord = (
         Window.partitionBy("l_returnflag")
         .orderBy("l_extendedprice", "l_orderkey", "l_linenumber")
@@ -459,18 +459,17 @@ def q_agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem
     GROUP BY l_returnflag
     """.format(
-        sx=sql_finish_dec(f"sum(cast(l_quantity / 100.0 as {DEC}))", 6),
-        sy=sql_finish_dec(f"sum(cast(l_extendedprice / 100000.0 as {DEC}))", 6),
+        sx=sql_finish_dec(f"sum({sql_exact('l_quantity / 100.0')})", 6),
+        sy=sql_finish_dec(f"sum({sql_exact('l_extendedprice / 100000.0')})", 6),
         sxy=sql_finish_dec(
-            f"sum(cast((l_quantity / 100.0) * (l_extendedprice / 100000.0) as {DEC}))",
+            f"sum({sql_exact('(l_quantity / 100.0) * (l_extendedprice / 100000.0)')})",
             6,
         ),
         sxx=sql_finish_dec(
-            f"sum(cast((l_quantity / 100.0) * (l_quantity / 100.0) as {DEC}))", 6
+            f"sum({sql_exact('(l_quantity / 100.0) * (l_quantity / 100.0)')})", 6
         ),
         syy=sql_finish_dec(
-            f"sum(cast((l_extendedprice / 100000.0) * (l_extendedprice / 100000.0)"
-            f" as {DEC}))",
+            f"sum({sql_exact('(l_extendedprice / 100000.0) * (l_extendedprice / 100000.0)')})",
             6,
         ),
     ),
@@ -490,11 +489,11 @@ def q_agg_stats_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     x = F.col("l_quantity") / 100.0
     y = F.col("l_extendedprice") / 100000.0
     n = F.count(F.lit(1))
-    sx = finish(F.sum(x.cast(DEC)), 6)
-    sy = finish(F.sum(y.cast(DEC)), 6)
-    sxy = finish(F.sum((x * y).cast(DEC)), 6)
-    sxx = finish(F.sum((x * x).cast(DEC)), 6)
-    syy = finish(F.sum((y * y).cast(DEC)), 6)
+    sx = finish(F.sum(exact(x)), 6)
+    sy = finish(F.sum(exact(y)), 6)
+    sxy = finish(F.sum(exact(x * y)), 6)
+    sxx = finish(F.sum(exact(x * x)), 6)
+    syy = finish(F.sum(exact(y * y)), 6)
     corr = (n * sxy - sx * sy) / (
         F.sqrt(n * sxx - sx * sx) * F.sqrt(n * syy - sy * sy)
     )
@@ -699,7 +698,7 @@ def q_agg_sketch_reaggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH partial AS (
         SELECT o_orderstatus,
                o_orderdate >= TIMESTAMP '1998-01-01 00:00:00' AS run_b,
-               sum(cast(o_totalprice as {DEC})) AS s,
+               sum({sql_exact('o_totalprice')}) AS s,
                count(*) AS n
         FROM orders
         GROUP BY o_orderstatus, o_orderdate >= TIMESTAMP '1998-01-01 00:00:00'
@@ -736,7 +735,7 @@ def q_agg_incremental_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             >= F.expr("TIMESTAMP_NTZ '1998-01-01 00:00:00'")
         ).alias("run_b"),
     ).agg(
-        F.sum(F.col("o_totalprice").cast(DEC)).alias("s"),
+        F.sum(exact(F.col("o_totalprice"))).alias("s"),
         F.count(F.lit(1)).alias("n"),
     )
     merged = partial.groupBy("o_orderstatus").agg(
@@ -912,12 +911,11 @@ def q_agg_approx_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
            {sql_davg("l_extendedprice", "arith_mean")},
            {sql_finish_dec(
                "exp(" + sql_finish_dec(
-                   "sum(cast("
-                   + sql_finish_dec("ln(l_extendedprice)", 6)
-                   + f" as {DEC}))", 6)
+                   "sum(" + sql_exact(sql_finish_dec("ln(l_extendedprice)", 6))
+                   + ")", 6)
                + " / count(*))", 6)} AS geo_mean,
            count(*) / {sql_finish_dec(
-               f"sum(cast(1.0 / l_extendedprice as {DEC}))", 6)} AS harmonic_mean
+               f"sum({sql_exact('1.0 / l_extendedprice')})", 6)} AS harmonic_mean
     FROM lineitem
     GROUP BY l_returnflag
     """,
@@ -942,14 +940,14 @@ def q_agg_pythagorean_means(spark: SparkSession, sf_dir: str) -> DataFrame:
         davg(x, "arith_mean"),
         finish(
             F.exp(
-                finish(F.sum(finish(F.log(x), 6).cast(DEC)), 6)
+                finish(F.sum(exact(finish(F.log(x), 6))), 6)
                 / F.count(F.lit(1))
             ),
             6,
         ).alias("geo_mean"),
         (
             F.count(F.lit(1))
-            / finish(F.sum((F.lit(1.0) / x).cast(DEC)), 6)
+            / finish(F.sum(exact(F.lit(1.0) / x)), 6)
         ).alias("harmonic_mean"),
     )
 

@@ -20,12 +20,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.numeric import (
-    DEC,
     davg,
     dsum,
+    exact,
     finish,
     sql_davg,
     sql_dsum,
+    sql_exact,
     sql_finish_dec,
 )
 from ..registry import query
@@ -453,7 +454,7 @@ def q_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
            count(*) AS n_segments,
            cast(sum(dur_sec) AS bigint) AS span_sec,
            {sql_dsum('value * dur_sec', 'weighted_sum')},
-           ({sql_finish_dec('sum(cast((value * dur_sec) as decimal(30,10)))', 4)})
+           ({sql_finish_dec(f"sum({sql_exact('value * dur_sec')})", 4)})
                / cast(sum(dur_sec) AS double) AS twap
     FROM seg
     GROUP BY user_id
@@ -493,9 +494,7 @@ def q_timeseries_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("(nxt_us - t_us) div 1000000").alias("dur_sec"),
         )
     )
-    weighted = finish(
-        F.sum((F.col("value") * F.col("dur_sec")).cast(DEC)), 4
-    )
+    weighted = finish(F.sum(exact(F.col("value") * F.col("dur_sec"))), 4)
     return (
         seg.groupBy("user_id")
         .agg(
@@ -514,8 +513,7 @@ def q_timeseries_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH rev AS (
         SELECT n.n_name, s.s_suppkey,
-               sum(cast(l.l_extendedprice * (1 - l.l_discount)
-                        as decimal(30,10))) AS rev_dec
+               sum({sql_exact('l.l_extendedprice * (1 - l.l_discount)')}) AS rev_dec
         FROM lineitem l
         JOIN supplier s ON l.l_suppkey = s.s_suppkey
         JOIN nation n ON s.s_nationkey = n.n_nationkey
@@ -565,7 +563,7 @@ def q_pareto_abc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("n_name", "s_suppkey")
         .agg(
             F.sum(
-                (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(DEC)
+                exact(F.col("l_extendedprice") * (1 - F.col("l_discount")))
             ).alias("rev_dec")
         )
     )
@@ -673,7 +671,7 @@ def q_pattern_error_burst(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(datediff('day', TIMESTAMP '1992-01-01',
                              date_trunc('day', o_orderdate)) % 7
                     AS BIGINT) AS dow,
-               sum(cast(o_totalprice as {DEC})) AS rev_dec
+               sum({sql_exact('o_totalprice')}) AS rev_dec
         FROM orders GROUP BY 1, 2
     ),
     fan AS (
@@ -736,7 +734,7 @@ def q_ts_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("dow"),
         )
-        .agg(F.sum(F.col("o_totalprice").cast(DEC)).alias("rev_dec"))
+        .agg(F.sum(exact(F.col("o_totalprice"))).alias("rev_dec"))
     )
     offsets = F.array([F.lit(i) for i in range(-3, 4)])
     fan = daily.select(
@@ -866,7 +864,7 @@ def q_interval_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
            min(value) AS low,
            max(CASE WHEN rn_d = 1 THEN value END) AS close,
            count(*) AS n_trades,
-           {sql_finish_dec(f'sum(cast(value as {DEC}))', 6)} AS volume
+           {sql_dsum('value', 'volume', 6)}
     FROM r GROUP BY 1, 2
     """,
 )
@@ -913,7 +911,7 @@ def q_timeseries_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("value").alias("low"),
         F.max_by("value", F.col("k")).alias("close"),
         F.count(F.lit(1)).alias("n_trades"),
-        finish(F.sum(F.col("value").cast(DEC)), 6).alias("volume"),
+        dsum(F.col("value"), "volume", 6),
     ).select(
         "event_type", "day", "open", "high", "low", "close",
         "n_trades", "volume",

@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.numeric import DEC, sql_finish_dec
+from ..functions.numeric import exact, finish, sql_exact, sql_finish_dec
 from ..registry import query
 from ..sources.tables import load
 from .dedup import _shingles, _tokens
@@ -502,8 +502,6 @@ def _km_mstep(assigned: DataFrame) -> DataFrame:
     """Per-cluster element-wise mean with exact-decimal accumulation
     (finish at 6 dp — numeric.py), reassembled to arrays. Empty clusters
     simply vanish (no rows), identically in both engines."""
-    from ..functions.numeric import DEC, finish
-
     exploded = assigned.select(
         "c_id", F.posexplode("emb").alias("pos", "val")
     )
@@ -511,7 +509,7 @@ def _km_mstep(assigned: DataFrame) -> DataFrame:
         exploded.groupBy("c_id", "pos")
         .agg(
             (
-                finish(F.sum(F.col("val").cast(DEC)), 6) / F.count(F.lit(1))
+                finish(F.sum(exact(F.col("val"))), 6) / F.count(F.lit(1))
             ).alias("cval")
         )
         .groupBy("c_id")
@@ -546,7 +544,7 @@ def _km_iter_sql(i: int) -> str:
         SELECT c_id, array_agg(cval ORDER BY pos) AS ce
         FROM (
             SELECT c_id, pos,
-                   {sql_finish_dec(f"sum(cast(val as {DEC}))", 6)} / count(*)
+                   {sql_finish_dec(f"sum({sql_exact('val')})", 6)} / count(*)
                        AS cval
             FROM x{i} GROUP BY c_id, pos
         ) GROUP BY c_id
@@ -824,15 +822,13 @@ def _km_blas_round(e: DataFrame, cent_rows):
     Returns the new sorted (c_id, centroid-tuple) rows."""
     from decimal import ROUND_HALF_UP, Decimal
 
-    from ..functions.numeric import DEC
-
     q6 = Decimal("1e-6")
     sums = (
         _km_blas_assign(e, cent_rows)
         .select("c_id", F.posexplode("emb").alias("pos", "val"))
         .groupBy("c_id", "pos")
         .agg(
-            F.sum(F.col("val").cast(DEC)).alias("s"),
+            F.sum(exact(F.col("val"))).alias("s"),
             F.count(F.lit(1)).alias("n"),
         )
         .collect()

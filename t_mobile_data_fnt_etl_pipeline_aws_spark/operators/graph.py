@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.numeric import DEC, finish, sql_finish_dec
+from ..functions.numeric import dsum, sql_exact, sql_finish_dec
 from ..registry import query
 from ..sources.tables import load
 
@@ -30,7 +30,7 @@ _D = 0.85
 _ITERS = 3
 
 _PR_SUM = sql_finish_dec(
-    f"sum(cast((r.r * cast(e.w as double)) / cast(wt.wtot as double) as {DEC}))", 6
+    f"sum({sql_exact('(r.r * cast(e.w as double)) / cast(wt.wtot as double)')})", 6
 )
 
 
@@ -128,15 +128,12 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .groupBy("dst")
             .agg(
-                finish(
-                    F.sum(
-                        (
-                            (F.col("r") * F.col("w").cast("double"))
-                            / F.col("wtot").cast("double")
-                        ).cast(DEC)
-                    ),
+                dsum(
+                    (F.col("r") * F.col("w").cast("double"))
+                    / F.col("wtot").cast("double"),
+                    "s",
                     6,
-                ).alias("s")
+                )
             )
         )
         ranks = (
@@ -206,15 +203,12 @@ def q_graph_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .groupBy("dst")
             .agg(
-                finish(
-                    F.sum(
-                        (
-                            (F.col("r") * F.col("w").cast("double"))
-                            / F.col("wtot").cast("double")
-                        ).cast(DEC)
-                    ),
+                dsum(
+                    (F.col("r") * F.col("w").cast("double"))
+                    / F.col("wtot").cast("double"),
+                    "s",
                     6,
-                ).alias("s")
+                )
             )
         )
         ranks = (

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.numeric import DEC, finish, sql_finish_dbl, sql_finish_dec
+from ..functions.numeric import exact, finish, sql_exact, sql_finish_dbl, sql_finish_dec
 from ..registry import query
 from ..sources.tables import load
 
@@ -488,7 +488,7 @@ _FP_SQL = f"array_to_string(string_split(text, ' ')[1:{_FP_TOKENS}], ' ')"
     )
     SELECT t.doc_id, t.lang,
            count(*) AS n_tokens,
-           {sql_finish_dec(f'sum(cast(s.surprise as {DEC}))', 6)} / count(*)
+           {sql_finish_dec(f'sum({sql_exact("s.surprise")})', 6)} / count(*)
                AS avg_surprise
     FROM toks t JOIN scored s USING (token)
     GROUP BY t.doc_id, t.lang
@@ -534,7 +534,7 @@ def q_text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_tokens"),
             (
-                finish(F.sum(F.col("surprise").cast(DEC)), 6)
+                finish(F.sum(exact(F.col("surprise"))), 6)
                 / F.count(F.lit(1))
             ).alias("avg_surprise"),
         )

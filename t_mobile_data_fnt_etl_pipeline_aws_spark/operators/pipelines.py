@@ -14,10 +14,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.numeric import (
-    DEC,
     dsum,
+    exact,
     finish,
     sql_dsum,
+    sql_exact,
     sql_finish_dbl,
     sql_finish_dec,
 )
@@ -533,25 +534,21 @@ def q_dq_referential(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MS_NUM = sql_dsum(
+_MS_NUM = (
     "CASE WHEN n_name = 'NATION_0' THEN l_extendedprice * (1 - l_discount) "
-    "ELSE 0 END",
-    "mkt_revenue",
+    "ELSE 0 END"
 )
-_MS_DEN = sql_dsum("l_extendedprice * (1 - l_discount)", "total_revenue")
+_MS_DEN = "l_extendedprice * (1 - l_discount)"
 
 
 @query(
     "q_pipeline_market_share",
     oracle=f"""
     SELECT cast(year(o_orderdate) AS bigint) AS o_year,
-           {_MS_NUM}, {_MS_DEN},
-           (cast(cast(round(sum(cast((CASE WHEN n_name = 'NATION_0'
-                 THEN l_extendedprice * (1 - l_discount) ELSE 0 END)
-                 as decimal(30,10))), 4) as decimal(38,4)) as double)
-            / cast(cast(round(sum(cast((l_extendedprice * (1 - l_discount))
-                 as decimal(30,10))), 4) as decimal(38,4)) as double))
-               AS mkt_share
+           {sql_dsum(_MS_NUM, 'mkt_revenue')},
+           {sql_dsum(_MS_DEN, 'total_revenue')},
+           ({sql_finish_dec(f"sum({sql_exact(_MS_NUM)})", 4)}
+            / {sql_finish_dec(f"sum({sql_exact(_MS_DEN)})", 4)}) AS mkt_share
     FROM region
     JOIN nation ON n_regionkey = r_regionkey
     JOIN customer ON c_nationkey = n_nationkey
@@ -1266,8 +1263,8 @@ def q_pipeline_returned_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT date_trunc('month', l.l_shipdate) AS mth,
            coalesce({sql_finish_dec(
-               "sum(cast((CASE WHEN p.p_type = 'PROMO' "
-               "THEN l.l_extendedprice * (1 - l.l_discount) END) as " + DEC + "))",
+               "sum(" + sql_exact("CASE WHEN p.p_type = 'PROMO' "
+               "THEN l.l_extendedprice * (1 - l.l_discount) END") + ")",
                4)}, 0.0) AS promo_rev,
            {sql_dsum('l.l_extendedprice * (1 - l.l_discount)', 'total_rev')},
            count(*) AS n_lines
@@ -1300,9 +1297,7 @@ def q_pipeline_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.date_trunc("month", "l_shipdate").alias("mth"))
         .agg(
             F.coalesce(
-                finish(
-                    F.sum(F.when(F.col("p_type") == "PROMO", rev).cast(DEC)), 4
-                ),
+                finish(F.sum(exact(F.when(F.col("p_type") == "PROMO", rev))), 4),
                 F.lit(0.0),
             ).alias("promo_rev"),
             dsum(rev, "total_rev"),
@@ -1318,7 +1313,7 @@ def q_pipeline_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT l_orderkey
         FROM lineitem
         GROUP BY l_orderkey
-        HAVING sum(cast(l_quantity as {DEC})) > 150
+        HAVING sum({sql_exact('l_quantity')}) > 150
     )
     SELECT c.c_custkey, c.c_name, o.o_orderkey, o.o_orderdate, o.o_totalprice,
            {sql_dsum('l.l_quantity', 'total_qty')}
@@ -1346,7 +1341,7 @@ def q_pipeline_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem")
     big = (
         li.groupBy("l_orderkey")
-        .agg(F.sum(F.col("l_quantity").cast(DEC)).alias("_q"))
+        .agg(F.sum(exact(F.col("l_quantity"))).alias("_q"))
         .filter(F.col("_q") > 150)
         .select(F.col("l_orderkey").alias("big_orderkey"))
     )
@@ -1519,12 +1514,12 @@ def q_pipeline_fulfillment_priority(spark: SparkSession, sf_dir: str) -> DataFra
     oracle=f"""
     WITH avgq AS (
         SELECT l_partkey,
-               ({sql_finish_dec(f"sum(cast(l_quantity as {DEC}))", 4)}
+               ({sql_finish_dec(f"sum({sql_exact('l_quantity')})", 4)}
                 / count(*)) AS avg_qty
         FROM lineitem GROUP BY l_partkey
     )
     SELECT coalesce({sql_finish_dec(
-        f"sum(cast(l.l_extendedprice as {DEC}))", 4)}, 0.0) / 7.0
+        f"sum({sql_exact('l.l_extendedprice')})", 4)}, 0.0) / 7.0
                AS avg_yearly,
            count(*) AS n_lines
     FROM lineitem l
@@ -1551,7 +1546,7 @@ def q_pipeline_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     li = load(spark, sf_dir, "lineitem")
     avgq = li.groupBy("l_partkey").agg(
-        (finish(F.sum(F.col("l_quantity").cast(DEC)), 4) / F.count(F.lit(1)))
+        (finish(F.sum(exact(F.col("l_quantity"))), 4) / F.count(F.lit(1)))
         .alias("avg_qty")
     ).select(F.col("l_partkey").alias("a_partkey"), "avg_qty")
     p = load(spark, sf_dir, "part").filter(F.col("p_type") == "ECONOMY").select(
@@ -1564,7 +1559,7 @@ def q_pipeline_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             (
                 F.coalesce(
-                    finish(F.sum(F.col("l_extendedprice").cast(DEC)), 4),
+                    finish(F.sum(exact(F.col("l_extendedprice"))), 4),
                     F.lit(0.0),
                 )
                 / 7.0
@@ -1846,10 +1841,10 @@ def q_sql_parameterized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     load(spark, sf_dir, "orders").createOrReplaceTempView("param_orders")
     return spark.sql(
-        """
+        f"""
         SELECT o_orderpriority,
                CAST(count(*) AS BIGINT) AS n_orders,
-               cast(cast(sum(cast(o_totalprice as decimal(30,10)))
+               cast(cast(sum({sql_exact('o_totalprice')})
                     as decimal(38,4)) as double) AS revenue
         FROM IDENTIFIER(:tbl)
         WHERE o_totalprice > :min_price AND o_orderstatus = :status
@@ -2072,7 +2067,7 @@ def q_etl_mv_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             df.groupBy("o_custkey")
             .agg(
                 F.count(F.lit(1)).alias("n"),
-                F.sum(F.col("o_totalprice").cast(DEC)).alias("s"),
+                F.sum(exact(F.col("o_totalprice"))).alias("s"),
             )
             .select("o_custkey", "n", "s", F.lit(flag).alias("is_delta"))
         )

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.numeric import DEC, dsum, sql_dsum, sql_finish_dec
+from ..functions.numeric import dsum, exact, sql_dsum, sql_exact, sql_finish_dec
 from ..registry import query
 from ..sources.tables import load
 
@@ -81,7 +81,7 @@ _SHARE = "0.030000"
     oracle=f"""
     WITH rev AS (
         SELECT n.n_name,
-               sum(cast(l.l_extendedprice * (1 - l.l_discount) AS {DEC})) AS val
+               sum({sql_exact("l.l_extendedprice * (1 - l.l_discount)")}) AS val
         FROM lineitem l
         JOIN supplier s ON l.l_suppkey = s.s_suppkey
         JOIN nation n   ON s.s_nationkey = n.n_nationkey
@@ -132,7 +132,7 @@ def q_report_nation_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("n_name")
         .agg(
             F.sum(
-                (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(DEC)
+                exact(F.col("l_extendedprice") * (1 - F.col("l_discount")))
             ).alias("val")
         )
     )
@@ -153,7 +153,7 @@ def q_report_nation_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=False,
     oracle=f"""
     WITH pos AS (
-        SELECT sum(cast(c_acctbal AS {DEC})) AS total_bal,
+        SELECT sum({sql_exact("c_acctbal")}) AS total_bal,
                count(*) AS n_pos
         FROM customer
         WHERE c_acctbal > 0.0
@@ -162,7 +162,7 @@ def q_report_nation_share(spark: SparkSession, sf_dir: str) -> DataFrame:
            count(*) AS numcust,
            {sql_dsum("c.c_acctbal", "totacctbal")}
     FROM customer c, pos
-    WHERE cast(c.c_acctbal AS {DEC}) * pos.n_pos > pos.total_bal
+    WHERE {sql_exact("c.c_acctbal")} * pos.n_pos > pos.total_bal
       AND NOT EXISTS (SELECT 1 FROM orders o
                       WHERE o.o_custkey = c.c_custkey
                         AND o.o_orderpriority = '1-URGENT')
@@ -196,12 +196,12 @@ def q_report_prospects(spark: SparkSession, sf_dir: str) -> DataFrame:
     pos = (
         c.filter(F.col("c_acctbal") > 0.0)
         .agg(
-            F.sum(F.col("c_acctbal").cast(DEC)).alias("total_bal"),
+            F.sum(exact(F.col("c_acctbal"))).alias("total_bal"),
             F.count("*").alias("n_pos"),
         )
     )
     rich = c.join(F.broadcast(pos)).filter(
-        F.col("c_acctbal").cast(DEC) * F.col("n_pos") > F.col("total_bal")
+        exact(F.col("c_acctbal")) * F.col("n_pos") > F.col("total_bal")
     )
     inactive = rich.join(o, rich.c_custkey == o.o_custkey, "left_anti")
     return inactive.groupBy("c_nationkey").agg(

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from ..functions.numeric import dsum, sql_dsum
+from ..functions.numeric import dsum, sql_dsum, sql_exact
 from ..registry import query
 from ..sources.tables import SCHEMAS, load
 
@@ -544,10 +544,10 @@ def q_scan_binaryfile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_sink_dynamic_partition_overwrite",
-    oracle="""
+    oracle=f"""
     SELECT o_orderstatus,
            CAST(count(*) AS BIGINT) AS n_orders,
-           cast(cast(round((sum(cast((CASE WHEN o_orderstatus = 'F' THEN o_totalprice * 0.5 ELSE o_totalprice END) as decimal(30,10)))), 4) as decimal(38,4)) as double) as total_price
+           {sql_dsum("CASE WHEN o_orderstatus = 'F' THEN o_totalprice * 0.5 ELSE o_totalprice END", "total_price", 4)}
     FROM orders
     GROUP BY 1
     """,
@@ -1649,8 +1649,6 @@ def q_sink_parquet_codecs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import uuid
 
-    from ..functions.numeric import DEC, finish
-
     base = load(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     run = uuid.uuid4().hex[:8]
     outs = {}
@@ -1664,9 +1662,7 @@ def q_sink_parquet_codecs(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark.read.parquet(out).agg(
                 F.lit(codec).alias("codec"),
                 F.count(F.lit(1)).alias("n_orders"),
-                finish(F.sum(F.col("o_totalprice").cast(DEC)), 4).alias(
-                    "sum_price"
-                ),
+                dsum(F.col("o_totalprice"), "sum_price", 4),
             )
         )
     df = parts[0]
@@ -2371,7 +2367,7 @@ def q_sql_over_manifest_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(f"""
         SELECT n_name,
                count(*) AS n_orders,
-               CAST(CAST(sum(CAST(o_totalprice AS decimal(30,10)))
+               CAST(CAST(sum({sql_exact("o_totalprice")})
                     AS decimal(38,4)) AS double) AS revenue
         FROM {view} o
         JOIN cust_{view} c ON o.o_custkey = c.c_custkey

@@ -19,7 +19,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.numeric import DEC, finish, sql_finish_dec
+from ..functions.numeric import exact, finish, sql_exact, sql_finish_dec
 from ..registry import query
 from ..sources.tables import load
 
@@ -332,7 +332,7 @@ def q_knn_join_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH cent AS (
         SELECT label,
                pos,
-               {sql_finish_dec(f'sum(cast(val as {DEC}))', 6)} / count(*) AS cval
+               {sql_finish_dec(f'sum({sql_exact("val")})', 6)} / count(*) AS cval
         FROM (
             SELECT label,
                    generate_subscripts(embedding, 1) AS pos,
@@ -384,7 +384,7 @@ def q_sim_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent = (
         exploded.groupBy("label", "pos")
         .agg(
-            (finish(F.sum(F.col("val").cast(DEC)), 6) / F.count(F.lit(1))).alias(
+            (finish(F.sum(exact(F.col("val"))), 6) / F.count(F.lit(1))).alias(
                 "cval"
             )
         )
@@ -427,7 +427,7 @@ def q_sim_search_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_label_centroids",
     oracle=f"""
     SELECT label, pos,
-           {sql_finish_dec(f'sum(cast(val as {DEC}))', 6)} / count(*)
+           {sql_finish_dec(f'sum({sql_exact("val")})', 6)} / count(*)
                AS centroid_val,
            count(*) AS n_vectors
     FROM (
@@ -451,7 +451,7 @@ def q_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
         "label", F.posexplode(_as_dbl("embedding")).alias("pos", "val")
     )
     return exploded.groupBy("label", "pos").agg(
-        (finish(F.sum(F.col("val").cast(DEC)), 6) / F.count(F.lit(1))).alias(
+        (finish(F.sum(exact(F.col("val"))), 6) / F.count(F.lit(1))).alias(
             "centroid_val"
         ),
         F.count(F.lit(1)).alias("n_vectors"),
@@ -540,7 +540,7 @@ def q_sim_search_topk_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent AS (
         SELECT label AS c_label, array_agg(cval ORDER BY pos) AS ce
         FROM (SELECT label, pos,
-                     {sql_finish_dec(f'sum(cast(val as {DEC}))', 6)}
+                     {sql_finish_dec(f'sum({sql_exact("val")})', 6)}
                          / count(*) AS cval
               FROM exploded GROUP BY label, pos)
         GROUP BY label
@@ -588,7 +588,7 @@ def q_topic_assign_nearest_centroid(spark: SparkSession, sf_dir: str) -> DataFra
     cent = (
         exploded.groupBy("label", "pos")
         .agg(
-            (finish(F.sum(F.col("val").cast(DEC)), 6) / F.count(F.lit(1))).alias(
+            (finish(F.sum(exact(F.col("val"))), 6) / F.count(F.lit(1))).alias(
                 "cval"
             )
         )
@@ -636,7 +636,7 @@ def q_topic_assign_nearest_centroid(spark: SparkSession, sf_dir: str) -> DataFra
     cent AS (
         SELECT label AS c_label, array_agg(cval ORDER BY pos) AS ce
         FROM (SELECT label, pos,
-                     {sql_finish_dec(f'sum(cast(val as {DEC}))', 6)}
+                     {sql_finish_dec(f'sum({sql_exact("val")})', 6)}
                          / count(*) AS cval
               FROM (SELECT label,
                            generate_subscripts(embedding, 1) AS pos,
@@ -726,7 +726,7 @@ def q_sim_search_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent = (
         exploded.groupBy("label", "pos")
         .agg(
-            (finish(F.sum(F.col("val").cast(DEC)), 6) / F.count(F.lit(1))).alias(
+            (finish(F.sum(exact(F.col("val"))), 6) / F.count(F.lit(1))).alias(
                 "cval"
             )
         )

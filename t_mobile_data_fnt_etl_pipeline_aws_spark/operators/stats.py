@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.numeric import DEC, finish, sql_finish_dec
+from ..functions.numeric import dsum, exact, finish, sql_dsum, sql_exact, sql_finish_dec
 from ..registry import query
 from ..sources.tables import load
 from .analytics import _epoch_us
@@ -40,7 +40,7 @@ _DAY_US = 86_400_000_000
     WITH pts AS (
         -- DYADIC prescales (2^-10, 2^-20), cast to double: decimal-power
         -- prescales (0.001) made xs*ys terminate at 11 dp, sitting
-        -- EXACTLY on decimal(30,10) quantization ties where Spark
+        -- EXACTLY on 10-dp accumulator quantization ties where Spark
         -- (shortest-string HALF_UP) and DuckDB (exact-binary) round
         -- apart ~3% of rows (caught by the sf0.1 mirror); power-of-two
         -- scaling is exact in IEEE, so products keep full-mantissa
@@ -55,10 +55,10 @@ _DAY_US = 86_400_000_000
     s AS (
         SELECT o_orderpriority,
                count(*) AS n,
-               {sql_finish_dec(f"sum(cast(xs as {DEC}))")} AS sx,
-               {sql_finish_dec(f"sum(cast(ys as {DEC}))")} AS sy,
-               {sql_finish_dec(f"sum(cast(xs * xs as {DEC}))")} AS sxx,
-               {sql_finish_dec(f"sum(cast(xs * ys as {DEC}))")} AS sxy
+               {sql_dsum("xs", "sx", 6)},
+               {sql_dsum("ys", "sy", 6)},
+               {sql_dsum("xs * xs", "sxx", 6)},
+               {sql_dsum("xs * ys", "sxy", 6)}
         FROM pts GROUP BY o_orderpriority
     )
     SELECT o_orderpriority, n,
@@ -95,10 +95,10 @@ def q_agg_linreg_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = o.select("o_orderpriority", xs.alias("xs"), ys.alias("ys"))
     s = pts.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n"),
-        finish(F.sum(F.col("xs").cast(DEC))).alias("sx"),
-        finish(F.sum(F.col("ys").cast(DEC))).alias("sy"),
-        finish(F.sum((F.col("xs") * F.col("xs")).cast(DEC))).alias("sxx"),
-        finish(F.sum((F.col("xs") * F.col("ys")).cast(DEC))).alias("sxy"),
+        dsum(F.col("xs"), "sx", 6),
+        dsum(F.col("ys"), "sy", 6),
+        dsum(F.col("xs") * F.col("xs"), "sxx", 6),
+        dsum(F.col("xs") * F.col("ys"), "sxy", 6),
     )
     slope_s = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")) / (
         F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
@@ -137,7 +137,7 @@ def q_agg_linreg_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM tot
     )
     SELECT event_type, dow, n_obs, n_exp, contrib,
-           {sql_finish_dec(f"sum(cast(contrib as {DEC})) OVER ()")} AS chi2_total
+           {sql_finish_dec(f"sum({sql_exact('contrib')}) OVER ()")} AS chi2_total
     FROM c
     """,
 )
@@ -191,7 +191,7 @@ def q_stats_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_exp",
         "contrib",
         finish(
-            F.sum(F.col("contrib").cast(DEC)).over(Window.partitionBy())
+            F.sum(exact(F.col("contrib"))).over(Window.partitionBy())
         ).alias("chi2_total"),
     )
 
@@ -210,10 +210,10 @@ _MOM_PRESCALE = 200_000.0
     s AS (
         SELECT l_returnflag,
                count(*) AS n,
-               {sql_finish_dec(f"sum(cast(v as {DEC}))")} AS s1,
-               {sql_finish_dec(f"sum(cast(v * v as {DEC}))")} AS s2,
-               {sql_finish_dec(f"sum(cast(v * v * v as {DEC}))")} AS s3,
-               {sql_finish_dec(f"sum(cast(v * v * v * v as {DEC}))")} AS s4
+               {sql_dsum("v", "s1", 6)},
+               {sql_dsum("v * v", "s2", 6)},
+               {sql_dsum("v * v * v", "s3", 6)},
+               {sql_dsum("v * v * v * v", "s4", 6)}
         FROM y GROUP BY l_returnflag
     )
     SELECT l_returnflag, n,
@@ -251,10 +251,10 @@ def q_agg_higher_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = F.col("v")
     s = y.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n"),
-        finish(F.sum(v.cast(DEC))).alias("s1"),
-        finish(F.sum((v * v).cast(DEC))).alias("s2"),
-        finish(F.sum((v * v * v).cast(DEC))).alias("s3"),
-        finish(F.sum((v * v * v * v).cast(DEC))).alias("s4"),
+        dsum(v, "s1", 6),
+        dsum(v * v, "s2", 6),
+        dsum(v * v * v, "s3", 6),
+        dsum(v * v * v * v, "s4", 6),
     )
     m = F.col("s1") / F.col("n")
     r2 = F.col("s2") / F.col("n")
@@ -298,7 +298,7 @@ def q_agg_higher_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT user_id,
            max(tot) AS n_events,
            count(*) AS n_types,
-           {sql_finish_dec(f"sum(cast(t as {DEC}))", 6)} AS entropy_nats
+           {sql_dsum("t", "entropy_nats", 6)}
     FROM term GROUP BY user_id
     """,
 )
@@ -328,7 +328,7 @@ def q_agg_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     return term.groupBy("user_id").agg(
         F.max("tot").alias("n_events"),
         F.count(F.lit(1)).alias("n_types"),
-        finish(F.sum(F.col("t").cast(DEC)), 6).alias("entropy_nats"),
+        dsum(F.col("t"), "entropy_nats", 6),
     )
 
 
@@ -337,7 +337,7 @@ def q_agg_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH daily AS (
         SELECT event_type, epoch_us(ts) // {_DAY_US} AS day,
-               {sql_finish_dec(f"sum(cast(value as {DEC}))", 4)} AS rev
+               {sql_dsum("value", "rev", 4)}
         FROM events GROUP BY 1, 2
     ),
     lagged AS (
@@ -349,11 +349,11 @@ def q_agg_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     s AS (
         SELECT event_type,
                count(*) AS n_pairs,
-               {sql_finish_dec(f"sum(cast(x as {DEC}))")} AS sx,
-               {sql_finish_dec(f"sum(cast(y as {DEC}))")} AS sy,
-               {sql_finish_dec(f"sum(cast(x * x as {DEC}))")} AS sxx,
-               {sql_finish_dec(f"sum(cast(y * y as {DEC}))")} AS syy,
-               {sql_finish_dec(f"sum(cast(x * y as {DEC}))")} AS sxy
+               {sql_dsum("x", "sx", 6)},
+               {sql_dsum("y", "sy", 6)},
+               {sql_dsum("x * x", "sxx", 6)},
+               {sql_dsum("y * y", "syy", 6)},
+               {sql_dsum("x * y", "sxy", 6)}
         FROM pairs GROUP BY event_type
     )
     SELECT event_type, n_pairs,
@@ -384,7 +384,7 @@ def q_window_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
             "value",
         )
         .groupBy("event_type", "day")
-        .agg(finish(F.sum(F.col("value").cast(DEC)), 4).alias("rev"))
+        .agg(dsum(F.col("value"), "rev", 4))
     )
     w = Window.partitionBy("event_type").orderBy("day")
     lagged = daily.select(
@@ -395,11 +395,11 @@ def q_window_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     x, yy = F.col("x"), F.col("y")
     s = lagged.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_pairs"),
-        finish(F.sum(x.cast(DEC))).alias("sx"),
-        finish(F.sum(yy.cast(DEC))).alias("sy"),
-        finish(F.sum((x * x).cast(DEC))).alias("sxx"),
-        finish(F.sum((yy * yy).cast(DEC))).alias("syy"),
-        finish(F.sum((x * yy).cast(DEC))).alias("sxy"),
+        dsum(x, "sx", 6),
+        dsum(yy, "sy", 6),
+        dsum(x * x, "sxx", 6),
+        dsum(yy * yy, "syy", 6),
+        dsum(x * yy, "sxy", 6),
     )
     n = F.col("n_pairs")
     return s.select(
@@ -420,12 +420,12 @@ def q_window_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH daily AS (
         SELECT event_type, epoch_us(ts) // {_DAY_US} AS day,
-               {sql_finish_dec(f"sum(cast(value as {DEC}))", 4)} AS rev
+               {sql_dsum("value", "rev", 4)}
         FROM events GROUP BY 1, 2
     ),
     base AS (
         SELECT event_type, day, rev,
-               {sql_finish_dec(f"sum(cast(rev as {DEC})) OVER (PARTITION BY event_type)", 4)}
+               {sql_finish_dec(f"sum({sql_exact('rev')}) OVER (PARTITION BY event_type)", 4)}
                    / count(*) OVER (PARTITION BY event_type) AS mu,
                count(*) OVER (PARTITION BY event_type) AS n_days
         FROM daily
@@ -433,7 +433,7 @@ def q_window_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     cusum AS (
         SELECT event_type, day, n_days,
                {sql_finish_dec(
-                   f"sum(cast(rev - mu as {DEC})) OVER ("
+                   f"sum({sql_exact('rev - mu')}) OVER ("
                    "PARTITION BY event_type ORDER BY day ROWS UNBOUNDED PRECEDING)",
                    6,
                )} AS s
@@ -472,10 +472,10 @@ def q_pattern_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
             "value",
         )
         .groupBy("event_type", "day")
-        .agg(finish(F.sum(F.col("value").cast(DEC)), 4).alias("rev"))
+        .agg(dsum(F.col("value"), "rev", 4))
     )
     w_t = Window.partitionBy("event_type")
-    mu = finish(F.sum(F.col("rev").cast(DEC)).over(w_t), 4) / F.count(
+    mu = finish(F.sum(exact(F.col("rev"))).over(w_t), 4) / F.count(
         F.lit(1)
     ).over(w_t)
     base = daily.select(
@@ -495,7 +495,7 @@ def q_pattern_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
         "day",
         "n_days",
         finish(
-            F.sum((F.col("rev") - F.col("mu")).cast(DEC)).over(w_run), 6
+            F.sum(exact(F.col("rev") - F.col("mu"))).over(w_run), 6
         ).alias("s"),
     )
     w_rank = Window.partitionBy("event_type").orderBy(
@@ -647,7 +647,7 @@ def q_skyline_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH daily AS (
         SELECT event_type, epoch_us(ts) // {_DAY_US} AS day,
-               {sql_finish_dec(f"sum(cast(value as {DEC}))", 4)} AS rev
+               {sql_dsum("value", "rev", 4)}
         FROM events GROUP BY 1, 2
     ),
     dd AS (
@@ -689,7 +689,7 @@ def q_window_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
             "value",
         )
         .groupBy("event_type", "day")
-        .agg(finish(F.sum(F.col("value").cast(DEC)), 4).alias("rev"))
+        .agg(dsum(F.col("value"), "rev", 4))
     )
     w_peak = (
         Window.partitionBy("event_type")
@@ -724,7 +724,7 @@ _GINI_SCALE = 2.0 ** -30
     oracle=f"""
     WITH spend AS (
         SELECT c.c_mktsegment, o.o_custkey,
-               {sql_finish_dec(f"sum(cast(o.o_totalprice as {DEC}))", 4)}
+               {sql_finish_dec(f"sum({sql_exact('o.o_totalprice')})", 4)}
                    * cast({_GINI_SCALE!r} as double) AS s
         FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
         GROUP BY 1, 2
@@ -739,9 +739,8 @@ _GINI_SCALE = 2.0 ** -30
     g AS (
         SELECT c_mktsegment,
                max(n) AS n,
-               {sql_finish_dec(f"sum(cast((2 * i - n - 1) * s as {DEC}))", 6)}
-                   AS num,
-               {sql_finish_dec(f"sum(cast(s as {DEC}))", 8)} AS den
+               {sql_dsum("(2 * i - n - 1) * s", "num", 6)},
+               {sql_dsum("s", "den", 8)}
         FROM ranked GROUP BY c_mktsegment
     )
     SELECT c_mktsegment, cast(n AS bigint) AS n_customers,
@@ -774,7 +773,7 @@ def q_agg_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_mktsegment", "o_custkey")
         .agg(
             (
-                finish(F.sum(F.col("o_totalprice").cast(DEC)), 4)
+                finish(F.sum(exact(F.col("o_totalprice"))), 4)
                 * F.lit(_GINI_SCALE)
             ).alias("s")
         )
@@ -791,13 +790,8 @@ def q_agg_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     g = ranked.groupBy("c_mktsegment").agg(
         F.max("n").alias("n"),
-        finish(
-            F.sum(
-                ((2 * F.col("i") - F.col("n") - 1) * F.col("s")).cast(DEC)
-            ),
-            6,
-        ).alias("num"),
-        finish(F.sum(F.col("s").cast(DEC)), 8).alias("den"),
+        dsum((2 * F.col("i") - F.col("n") - 1) * F.col("s"), "num", 6),
+        dsum(F.col("s"), "den", 8),
     )
     return g.select(
         "c_mktsegment",
@@ -990,20 +984,20 @@ def q_stats_ab_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
                     AS BIGINT) AS n_a,
                CAST(count(*) FILTER (o_orderpriority = '5-LOW')
                     AS BIGINT) AS n_b,
-               {sql_finish_dec(
-                   "sum(cast(CASE WHEN o_orderpriority = '1-URGENT' THEN"
-                   f" o_totalprice / 1000000.0 END as {DEC}))", 6)} AS sa,
-               {sql_finish_dec(
-                   "sum(cast(CASE WHEN o_orderpriority = '5-LOW' THEN"
-                   f" o_totalprice / 1000000.0 END as {DEC}))", 6)} AS sb,
-               {sql_finish_dec(
-                   "sum(cast(CASE WHEN o_orderpriority = '1-URGENT' THEN"
+               {sql_dsum(
+                   "CASE WHEN o_orderpriority = '1-URGENT' THEN"
+                   " o_totalprice / 1000000.0 END", "sa", 6)},
+               {sql_dsum(
+                   "CASE WHEN o_orderpriority = '5-LOW' THEN"
+                   " o_totalprice / 1000000.0 END", "sb", 6)},
+               {sql_dsum(
+                   "CASE WHEN o_orderpriority = '1-URGENT' THEN"
                    " (o_totalprice / 1000000.0) * (o_totalprice / 1000000.0)"
-                   f" END as {DEC}))", 6)} AS saa,
-               {sql_finish_dec(
-                   "sum(cast(CASE WHEN o_orderpriority = '5-LOW' THEN"
+                   " END", "saa", 6)},
+               {sql_dsum(
+                   "CASE WHEN o_orderpriority = '5-LOW' THEN"
                    " (o_totalprice / 1000000.0) * (o_totalprice / 1000000.0)"
-                   f" END as {DEC}))", 6)} AS sbb
+                   " END", "sbb", 6)}
         FROM orders
     )
     SELECT n_a, n_b,
@@ -1050,10 +1044,10 @@ def q_stats_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = o.agg(
         F.count(F.when(in_a, 1)).alias("n_a"),
         F.count(F.when(in_b, 1)).alias("n_b"),
-        finish(F.sum(F.when(in_a, x).cast(DEC)), 6).alias("sa"),
-        finish(F.sum(F.when(in_b, x).cast(DEC)), 6).alias("sb"),
-        finish(F.sum(F.when(in_a, x * x).cast(DEC)), 6).alias("saa"),
-        finish(F.sum(F.when(in_b, x * x).cast(DEC)), 6).alias("sbb"),
+        dsum(F.when(in_a, x), "sa", 6),
+        dsum(F.when(in_b, x), "sb", 6),
+        dsum(F.when(in_a, x * x), "saa", 6),
+        dsum(F.when(in_b, x * x), "sbb", 6),
     )
     n_a, n_b = F.col("n_a"), F.col("n_b")
     sa, sb = F.col("sa"), F.col("sb")

@@ -18,6 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..functions.numeric import sql_exact
 from ..registry import query
 from ..sources.tables import load
 
@@ -108,11 +109,11 @@ def q_subquery_not_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: scalar-subquery threshold comparison is done in exact integer/decimal
 #: arithmetic (price·n > Σprice as decimal) — an avg() threshold would
 #: hit cross-engine float-division ulps on the boundary.
-_SCALAR_SQL = """
+_SCALAR_SQL = f"""
 SELECT p_brand, count(*) AS n_above
 FROM part
 WHERE p_retailprice * (SELECT count(*) FROM part) >
-      (SELECT sum(cast(p_retailprice as decimal(30,10))) FROM part)
+      (SELECT sum({sql_exact("p_retailprice")}) FROM part)
 GROUP BY p_brand
 """
 

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.numeric import DEC, dsum, finish, sql_dsum, sql_finish_dec
+from ..functions.numeric import dsum, exact, finish, sql_dsum, sql_exact, sql_finish_dec
 from ..registry import query
 from ..sources.tables import load
 
@@ -93,7 +93,7 @@ def q_window_analytic(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=False,
     oracle=f"""
     SELECT o_orderkey, o_custkey, o_orderdate,
-           {sql_finish_dec(f'''sum(cast(o_totalprice as {DEC})) OVER
+           {sql_finish_dec(f'''sum({sql_exact("o_totalprice")}) OVER
                (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)''', 4)}
                AS running_spend,
@@ -116,7 +116,7 @@ def q_window_running(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey",
         "o_custkey",
         "o_orderdate",
-        finish(F.sum(F.col("o_totalprice").cast(DEC)).over(w), 4).alias(
+        finish(F.sum(exact(F.col("o_totalprice"))).over(w), 4).alias(
             "running_spend"
         ),
         F.count(F.lit(1)).over(w).alias("running_orders"),
@@ -127,7 +127,7 @@ def q_window_running(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_window_range_frame",
     oracle=f"""
     SELECT event_id, user_id, ts,
-           {sql_finish_dec(f'''sum(cast(value as {DEC})) OVER
+           {sql_finish_dec(f'''sum({sql_exact("value")}) OVER
                (PARTITION BY user_id ORDER BY epoch_us(ts) // 1000000
                 RANGE BETWEEN 3600 PRECEDING AND CURRENT ROW)''', 6)}
                AS trailing_1h_value,
@@ -154,7 +154,7 @@ def q_window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         "user_id",
         "ts",
-        finish(F.sum(F.col("value").cast(DEC)).over(w), 6).alias("trailing_1h_value"),
+        finish(F.sum(exact(F.col("value"))).over(w), 6).alias("trailing_1h_value"),
         F.count(F.lit(1)).over(w).alias("trailing_1h_events"),
     )
 
@@ -423,10 +423,8 @@ def q_window_cumulative_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH st AS (
         SELECT event_id, user_id, value,
                count(*) OVER w AS n,
-               {sql_finish_dec(f'sum(cast(value as {DEC})) OVER w', 6)} AS s1,
-               {sql_finish_dec(
-                   f'sum(cast(value * value as {DEC})) OVER w', 6
-               )} AS s2
+               {sql_finish_dec(f'sum({sql_exact("value")}) OVER w', 6)} AS s1,
+               {sql_finish_dec(f'sum({sql_exact("value * value")}) OVER w', 6)} AS s2
         FROM events
         WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
                      ROWS BETWEEN 20 PRECEDING AND 1 PRECEDING)
@@ -469,10 +467,8 @@ def q_window_moving_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
         .rowsBetween(-20, -1)
     )
     n = F.count(F.lit(1)).over(w)
-    s1 = finish(F.sum(F.col("value").cast(DEC)).over(w), 6)
-    s2 = finish(
-        F.sum((F.col("value") * F.col("value")).cast(DEC)).over(w), 6
-    )
+    s1 = finish(F.sum(exact(F.col("value"))).over(w), 6)
+    s2 = finish(F.sum(exact(F.col("value") * F.col("value"))).over(w), 6)
     st = e.select(
         "event_id",
         "user_id",

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.numeric import DEC, dsum, finish, sql_dsum, sql_finish_dec
+from ..functions.numeric import dsum, exact, finish, sql_dsum
 from ..operators.scans import _sink_dir
 from ..registry import query
 from ..sources.tables import load
@@ -34,7 +34,7 @@ _EPOCH = "TIMESTAMP '1970-01-01 00:00:00'"
     SELECT date_trunc('day', ts) AS w_start,
            event_type,
            count(*) AS n_events,
-           {sql_finish_dec(f'sum(cast(value as {DEC}))', 6)} AS sum_value
+           {sql_dsum('value', 'sum_value', 6)}
     FROM events
     GROUP BY 1, 2
     """,
@@ -58,7 +58,7 @@ def q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.groupBy(F.window("ts", "1 day").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            finish(F.sum(F.col("value").cast(DEC)), 6).alias("sum_value"),
+            dsum(F.col("value"), "sum_value", 6),
         )
         .select(F.col("w.start").alias("w_start"), "event_type", "n_events", "sum_value")
     )
@@ -73,7 +73,7 @@ def q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
            ) * (INTERVAL 1 SECOND) AS w_start,
            event_type,
            count(*) AS n_events,
-           {sql_finish_dec(f'sum(cast(value as {DEC}))', 6)} AS sum_value
+           {sql_dsum('value', 'sum_value', 6)}
     FROM events CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS i) i
     GROUP BY 1, 2
     """,
@@ -90,7 +90,7 @@ def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.groupBy(F.window("ts", "1 day", "6 hours").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            finish(F.sum(F.col("value").cast(DEC)), 6).alias("sum_value"),
+            dsum(F.col("value"), "sum_value", 6),
         )
         .select(F.col("w.start").alias("w_start"), "event_type", "n_events", "sum_value")
     )
@@ -117,7 +117,7 @@ def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
            min(ts) AS s_start,
            max(ts) + INTERVAL 30 MINUTE AS s_end,
            count(*) AS n_events,
-           {sql_finish_dec(f'sum(cast(value as {DEC}))', 6)} AS sum_value
+           {sql_dsum('value', 'sum_value', 6)}
     FROM numbered
     GROUP BY user_id, session_no
     """,
@@ -135,7 +135,7 @@ def q_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.groupBy(F.session_window("ts", "30 minutes").alias("s"), "user_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            finish(F.sum(F.col("value").cast(DEC)), 6).alias("sum_value"),
+            dsum(F.col("value"), "sum_value", 6),
         )
         .select(
             "user_id",
@@ -302,7 +302,7 @@ def q_stream_stateful_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT date_trunc('day', ts) AS w_start,
            c_mktsegment,
            count(*) AS n_events,
-           {sql_finish_dec(f'sum(cast(value as {DEC}))', 6)} AS sum_value
+           {sql_dsum('value', 'sum_value', 6)}
     FROM events JOIN customer ON c_custkey = user_id
     GROUP BY 1, 2
     """,
@@ -326,7 +326,7 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 day").alias("w"), "c_mktsegment")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            finish(F.sum(F.col("value").cast(DEC)), 6).alias("sum_value"),
+            dsum(F.col("value"), "sum_value", 6),
         )
         .select(
             F.col("w.start").alias("w_start"),
@@ -539,7 +539,7 @@ def q_stream_stream_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT event_type,
            count(*) AS n_events,
-           {sql_finish_dec(f'sum(cast(value as {DEC}))', 6)} AS sum_value
+           {sql_dsum('value', 'sum_value', 6)}
     FROM events
     GROUP BY 1
     """,
@@ -582,7 +582,7 @@ def q_stream_avro_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            finish(F.sum(F.col("value").cast(DEC)), 6).alias("sum_value"),
+            dsum(F.col("value"), "sum_value", 6),
         )
     )
 
@@ -655,7 +655,7 @@ def q_stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT event_type,
            count(*) AS n_events,
-           {sql_finish_dec(f'sum(cast(value as {DEC}))', 6)} AS sum_value
+           {sql_dsum('value', 'sum_value', 6)}
     FROM events
     GROUP BY 1
     """,
@@ -704,7 +704,7 @@ def q_stream_manifest_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            finish(F.sum(F.col("value").cast(DEC)), 6).alias("sum_value"),
+            dsum(F.col("value"), "sum_value", 6),
         )
     )
 
@@ -787,7 +787,7 @@ def q_stream_manifest_dim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT event_type,
            count(*) AS n_events,
-           {sql_finish_dec(f'sum(cast(value as {DEC}))', 6)} AS sum_value
+           {sql_dsum('value', 'sum_value', 6)}
     FROM events
     GROUP BY 1
     """,
@@ -842,7 +842,7 @@ def q_stream_manifest_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("event_type")
             .agg(
                 F.count(F.lit(1)).alias("n_events"),
-                F.sum(F.col("value").cast(DEC)).alias("sum_dec"),
+                F.sum(exact(F.col("value"))).alias("sum_dec"),
             )
         )
         merged = (
@@ -949,7 +949,7 @@ def q_stream_changefeed_apply_retract(
             .agg(
                 F.sum("__sign").alias("n_orders"),
                 F.sum(
-                    F.col("__sign") * F.col("o_totalprice").cast(DEC)
+                    F.col("__sign") * exact(F.col("o_totalprice"))
                 ).alias("sum_dec"),
             )
         )

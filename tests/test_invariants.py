@@ -1877,7 +1877,7 @@ def test_mv_incremental_cutoff_invariant(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from t_mobile_data_fnt_etl_pipeline_aws_spark.functions.numeric import (
-        DEC,
+        exact,
         finish,
     )
     from t_mobile_data_fnt_etl_pipeline_aws_spark.sources.tables import load
@@ -1890,7 +1890,7 @@ def test_mv_incremental_cutoff_invariant(spark, sf_dir):
                 df.groupBy("o_custkey")
                 .agg(
                     F.count(F.lit(1)).alias("n"),
-                    F.sum(F.col("o_totalprice").cast(DEC)).alias("s"),
+                    F.sum(exact(F.col("o_totalprice"))).alias("s"),
                 )
                 .select("o_custkey", "n", "s")
             )
@@ -4282,7 +4282,7 @@ def test_manifest_cdc_apply_every_version(spark, sf_dir, tmp_path):
     (diff cardinality == the slice's file count)."""
     from pyspark.sql import functions as F
 
-    from t_mobile_data_fnt_etl_pipeline_aws_spark.functions.numeric import DEC
+    from t_mobile_data_fnt_etl_pipeline_aws_spark.functions.numeric import exact
     from t_mobile_data_fnt_etl_pipeline_aws_spark.sources.manifest_table import (
         commit_append,
         diff_files,
@@ -4299,7 +4299,7 @@ def test_manifest_cdc_apply_every_version(spark, sf_dir, tmp_path):
             df.groupBy("event_type")
             .agg(
                 F.count(F.lit(1)).alias("n_events"),
-                F.sum(F.col("value").cast(DEC)).alias("sum_dec"),
+                F.sum(exact(F.col("value"))).alias("sum_dec"),
             )
         )
 
@@ -4858,3 +4858,47 @@ def test_local_checkpoints_carry_row_caps():
         "functions.dfutil.materialized for corpus-sized intermediates): "
         f"{offenders}"
     )
+
+
+def test_accumulator_type_named_only_in_numeric():
+    """The exact-sum accumulator type is decided in functions/numeric.py
+    alone: no other package module imports it or spells decimal(30,10)
+    in code (SQL text included; docstrings and comments are prose), so
+    moving the accumulator to another type stays a one-module change.
+    Per-row exact values go through exact()/sql_exact(), sums through
+    dsum/sql_dsum or finish()/sql_finish_dec() over them."""
+    import ast
+    import pathlib
+    import re
+
+    root = (
+        pathlib.Path(__file__).resolve().parents[1]
+        / "t_mobile_data_fnt_etl_pipeline_aws_spark"
+    )
+    spelled = re.compile(r"decimal\s*\(\s*30\s*,\s*10\s*\)", re.IGNORECASE)
+    offenders = []
+    for p in sorted(root.rglob("*.py")):
+        rel = p.relative_to(root).as_posix()
+        if rel == "functions/numeric.py":
+            continue
+        tree = ast.parse(p.read_text())
+        prose = {
+            id(n.value)
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Expr) and isinstance(n.value, ast.Constant)
+        }
+        for n in ast.walk(tree):
+            if isinstance(n, ast.ImportFrom) and any(
+                a.name in ("DEC", "_DEC") for a in n.names
+            ):
+                offenders.append(f"{rel}:{n.lineno} imports the accumulator type")
+            elif isinstance(n, ast.Attribute) and n.attr in ("DEC", "_DEC"):
+                offenders.append(f"{rel}:{n.lineno} reads the accumulator type")
+            elif (
+                isinstance(n, ast.Constant)
+                and isinstance(n.value, str)
+                and id(n) not in prose
+                and spelled.search(n.value)
+            ):
+                offenders.append(f"{rel}:{n.lineno} spells decimal(30,10)")
+    assert not offenders, offenders

@@ -15,18 +15,22 @@ import duckdb
 import pandas as pd
 import pytest
 
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from t_mobile_data_fnt_etl_pipeline_aws_spark.functions.numeric import (
-    DEC,
     davg,
     dstddev_samp,
     dsum,
     dvar_samp,
+    exact,
+    finish,
     sql_davg,
     sql_dstddev_samp,
     sql_dsum,
     sql_dvar_samp,
+    sql_exact,
+    sql_finish_dec,
 )
 from t_mobile_data_fnt_etl_pipeline_aws_spark.oracle import compare_frames
 
@@ -58,14 +62,41 @@ def frames(spark):
 
 
 def test_dsum_davg_parity_on_adversarial_values(frames):
+    """dsum/davg, plus the exact-sum shapes built from exact()/finish()
+    by hand: a DISTINCT sum, a windowed running sum (RANGE frame, so
+    tied x values are peers in both engines), and a partial sum kept
+    unfinished and finished after a second sum."""
     sdf, con = frames
-    got = sdf.groupBy("g").agg(
-        dsum(F.col("x"), "s"), davg(F.col("x"), "a")
-    ).toPandas()
-    want = con.execute(
-        f"SELECT g, {sql_dsum('x', 's')}, {sql_davg('x', 'a')} FROM t GROUP BY g"
-    ).df()
-    assert compare_frames(got, want) is None
+    ex = sql_exact("x")
+    w = Window.partitionBy("g").orderBy("x")
+    partial = sdf.groupBy("g", (F.col("x") > 0).alias("b")).agg(
+        F.sum(exact(F.col("x"))).alias("p")
+    )
+    cases = [
+        (
+            sdf.groupBy("g").agg(
+                dsum(F.col("x"), "s"),
+                davg(F.col("x"), "a"),
+                finish(F.sum_distinct(exact(F.col("x"))), 4).alias("sd"),
+            ),
+            f"SELECT g, {sql_dsum('x', 's')}, {sql_davg('x', 'a')}, "
+            f"{sql_finish_dec(f'sum(DISTINCT {ex})', 4)} AS sd FROM t GROUP BY g",
+        ),
+        (
+            sdf.select(
+                "g", "x", finish(F.sum(exact(F.col("x"))).over(w), 4).alias("run")
+            ),
+            f"SELECT g, x, {sql_finish_dec(f'sum({ex}) OVER (PARTITION BY g ORDER BY x)', 4)}"
+            " AS run FROM t",
+        ),
+        (
+            partial.groupBy("g").agg(finish(F.sum("p"), 4).alias("s2")),
+            f"WITH q AS (SELECT g, x > 0 AS b, sum({ex}) AS p FROM t GROUP BY g, b) "
+            f"SELECT g, {sql_finish_dec('sum(p)', 4)} AS s2 FROM q GROUP BY g",
+        ),
+    ]
+    for got, want in cases:
+        assert compare_frames(got.toPandas(), con.execute(want).df()) is None, want
 
 
 def test_moment_parity_on_adversarial_values(frames):
@@ -140,13 +171,13 @@ def test_decimal_cast_rowwise_parity(frames):
     the foundation every accumulation recipe rests on."""
     sdf, con = frames
     got = (
-        sdf.select(F.col("x").cast(DEC).cast("string").alias("d"))
+        sdf.select(exact(F.col("x")).cast("string").alias("d"))
         .groupBy("d")
         .count()
         .toPandas()
     )
     want = con.execute(
-        f"SELECT cast(cast(x as {DEC}) as varchar) AS d, count(*) AS count "
+        f"SELECT cast({sql_exact('x')} as varchar) AS d, count(*) AS count "
         "FROM t GROUP BY d"
     ).df()
     assert compare_frames(got, want) is None

@@ -13,7 +13,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from t_mobile_data_fnt_etl_pipeline_aws_spark.functions.numeric import DEC, finish
+from t_mobile_data_fnt_etl_pipeline_aws_spark.functions.numeric import dsum
 from t_mobile_data_fnt_etl_pipeline_aws_spark.oracle import canonicalize
 from t_mobile_data_fnt_etl_pipeline_aws_spark.registry import all_queries
 from t_mobile_data_fnt_etl_pipeline_aws_spark.streaming.harness import (
@@ -33,7 +33,7 @@ def test_stream_tumbling_converges_to_batch(spark, sf_dir, tmp_path):
         .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            finish(F.sum(F.col("value").cast(DEC)), 6).alias("sum_value"),
+            dsum(F.col("value"), "sum_value", 6),
         )
         .select(
             F.col("w.start").alias("w_start"), "event_type", "n_events", "sum_value"
@@ -195,7 +195,7 @@ def test_stream_static_join_converges_to_batch(spark, sf_dir, tmp_path):
         .groupBy(F.window("ts", "1 day").alias("w"), "c_mktsegment")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            finish(F.sum(F.col("value").cast(DEC)), 6).alias("sum_value"),
+            dsum(F.col("value"), "sum_value", 6),
         )
         .select(
             F.col("w.start").alias("w_start"),
